@@ -12,7 +12,8 @@ The short line is last so it survives the driver's 2000-char stdout
 tail capture intact and machine-parses even when the full line (~10 KB)
 is truncated at the front; top_movers sits immediately above it so the
 10 largest per-key deltas vs the previous committed bench_full.json
-also land inside the tail.
+also land inside the tail (omitted when the two ran on different core
+counts).
 
 Protocol (BASELINE.md): local[$SPARK_GRAFT_CPUS], AQE on, one warm-up of the
 flagship, then one timed run per registered query (action = noop-format
@@ -23,6 +24,7 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
@@ -44,11 +46,39 @@ from sparkstreamingstateful_spark import registry
 from sparkstreamingstateful_spark.session import get_spark
 
 
-def top_movers(prev: dict, now: dict, k: int = 10) -> dict | None:
+def previous_table() -> dict:
+    """The previous round's full bench line: the COMMITTED
+    bench_full.json (``git show HEAD:``), so runs 2 and 3 of the
+    median-of-3 protocol compare against the previous round, not against
+    run 1's rewrite of the working-tree file. Falls back to the
+    working-tree file outside a git checkout; {} when neither exists."""
+    try:
+        out = subprocess.run(
+            ["git", "show", "HEAD:bench_full.json"],
+            cwd=_REPO, capture_output=True, check=True, text=True,
+        ).stdout
+        return json.loads(out)
+    except (OSError, subprocess.CalledProcessError, ValueError):
+        pass
+    try:
+        with open(os.path.join(_REPO, "bench_full.json")) as f:
+            return json.load(f)
+    except (OSError, ValueError):
+        return {}
+
+
+def top_movers(
+    prev: dict, now: dict, k: int = 10, prev_cpus=None, cpus=None
+) -> dict | None:
     """The <1 KB movers payload (VERDICT r18 item 2): the k largest
     absolute per-key deltas between two per-key timing tables, errored
     keys (negative timings) excluded on either side. None when no keys
-    are comparable (first run / previous table missing)."""
+    are comparable (first run / previous table missing) or when the two
+    tables ran on different core counts (a previous table that recorded
+    no count counts as different): per-key times do not compare across
+    core counts (SCALING_r19.json)."""
+    if prev_cpus != cpus:
+        return None
     common = [
         key for key, t in now.items() if t >= 0 and prev.get(key, -1.0) >= 0
     ]
@@ -98,17 +128,11 @@ def main() -> None:
         # join_multikey 5.9 s solo vs 98 s in a suite run, identical plan).
         df.write.format("noop").mode("overwrite").save()
 
-    # Previous run's per-key table (for the top_movers line below): read
-    # BEFORE this run overwrites bench_full.json. In the driver's flow the
-    # on-disk file is the committed previous round's median run, so the
-    # deltas are exactly the round-over-round per-query comparison PERF
-    # kept reporting as empty (VERDICT r18 item 2).
-    prev_timings: dict[str, float] = {}
-    try:
-        with open(os.path.join(_REPO, "bench_full.json")) as f:
-            prev_timings = json.load(f).get("queries", {}) or {}
-    except Exception:
-        pass
+    # Previous round's per-key table (for the top_movers line below),
+    # read BEFORE this run overwrites bench_full.json, so the deltas are
+    # the round-over-round per-query comparison (VERDICT r18 item 2).
+    prev = previous_table()
+    cpus = spark.sparkContext.defaultParallelism
 
     timings: dict[str, float] = {}
     for key in sorted(queries):
@@ -121,15 +145,6 @@ def main() -> None:
             print(f"# bench error {key}: {exc}", file=sys.stderr)
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
-    try:
-        from sparkstreamingstateful_spark.streaming import queries as sq
-
-        tws_path = sq.TWS_PATH_USED
-    except Exception:
-        # registry.collect() tolerates absent operator modules; neither a
-        # missing streaming module nor any transitive import breakage may
-        # lose the whole bench payload after the suite already ran
-        tws_path = None
 
     # Dict insertion order is deliberate: the driver's BENCH_r* capture
     # keeps only the last 2000 chars of stdout, so with ~290 per-key
@@ -139,10 +154,9 @@ def main() -> None:
     # parsed:null precisely because value sat at the front).
     payload = {
         "queries": timings,
-        # Which stateful API stateful_running_agg_tws actually executed —
-        # the TWS gate is environment-dependent (protobuf health), so each
-        # round's artifact must record which path produced its numbers.
-        "tws_path": tws_path,
+        # core count the timings ran on: top_movers compares only tables
+        # taken at the same count
+        "cpus": cpus,
         "metric": "suite_wall_clock",
         "value": total,
         "unit": "sec",
@@ -180,12 +194,15 @@ def main() -> None:
         print(f"# frozen96 subset not computed: {exc}", file=sys.stderr)
         frozen96 = None
     # Compact per-query movers line (VERDICT r18 item 2): the 10 largest
-    # absolute per-key deltas vs the previous bench_full.json, <1 KB, so
+    # absolute per-key deltas vs the committed bench_full.json, <1 KB, so
     # the driver's 2000-char stdout tail regains per-query visibility.
     # Additions-only — printed ABOVE the summary line, which stays LAST
     # (the machine-parse contract).
     try:
-        movers_line = top_movers(prev_timings, timings)
+        movers_line = top_movers(
+            prev.get("queries") or {}, timings,
+            prev_cpus=prev.get("cpus"), cpus=cpus,
+        )
         if movers_line is not None:
             print(json.dumps(movers_line))
     except Exception as exc:

@@ -115,13 +115,6 @@ def main() -> int:
             failures.append(key)
         print(f"[{i + 1}/{len(keys)}] {key}: {status} [{time.time() - t0:.1f}s]", flush=True)
 
-    try:
-        from sparkstreamingstateful_spark.streaming import queries as sq
-
-        tws_path = sq.TWS_PATH_USED
-    except Exception:  # never lose the run summary to a diagnostic lookup
-        tws_path = None
-    print(f"tws_path: {tws_path}", flush=True)
     print(f"total: {time.time() - t_total:.1f}s, failures: {failures}", flush=True)
     return 1 if failures else 0
 

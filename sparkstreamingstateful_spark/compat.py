@@ -30,9 +30,11 @@ _state: str | None = None
 def ensure_protobuf() -> str:
     """Make ``google.protobuf`` importable; return which runtime won.
 
-    Returns ``"native"`` (real protobuf present), ``"vendored"`` (the
-    minimal runtime from ``vendor/`` was installed on sys.path), or
-    ``"unavailable"`` (vendor tree missing — nothing to do)."""
+    Returns ``"native"`` (real protobuf present) or ``"vendored"`` (the
+    minimal runtime from ``vendor/`` was installed on sys.path). Raises
+    ``ImportError`` when neither resolves: the TWS keys have no other
+    stateful API to run on, so a missing runtime must fail, not switch
+    semantics."""
     global _state
     if _state is not None:
         return _state
@@ -43,9 +45,14 @@ def ensure_protobuf() -> str:
         return _state
     except ImportError:
         pass
+    missing = ImportError(
+        "no google.protobuf runtime: neither a native install nor the "
+        "vendored vendor/google/protobuf (looked in "
+        f"{os.path.join(VENDOR_DIR, 'google', 'protobuf')}) resolves, and "
+        "transformWithStateInPandas needs one for its state-server protocol"
+    )
     if not os.path.isdir(os.path.join(VENDOR_DIR, "google", "protobuf")):
-        _state = "unavailable"
-        return _state
+        raise missing
     if VENDOR_DIR not in sys.path:
         sys.path.append(VENDOR_DIR)  # append: a real install always wins
     existing = os.environ.get("PYTHONPATH", "")
@@ -55,10 +62,9 @@ def ensure_protobuf() -> str:
         )
     try:
         from google.protobuf import descriptor  # noqa: F401
-
-        _state = "vendored"
-    except ImportError:
-        _state = "unavailable"
+    except ImportError as exc:
+        raise missing from exc
+    _state = "vendored"
     return _state
 
 

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, read_stream_events
+from ..compat import ensure_protobuf_session
 from ..registry import query
 from . import feeder, stateful
 from .feeder import chunked_events_dir
@@ -980,54 +981,26 @@ def stateful_sessionize_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     final expiry) and TWO state variables per key (ValueState session
     accumulator + ListState of closed-session starts, surfaced as the
     oracle-checked ``sess_seq`` column — see
-    stateful.make_sessionize_processor). Falls back to the
-    ``applyInPandasWithState`` sessionizer (same session set, seq derived
-    per batch twin semantics is NOT available there, so the fallback
-    recomputes sess_seq from the materialized sessions) where no protobuf
-    runtime resolves."""
-    ev = _stream(spark, sf_dir)
-    if _tws_available(spark):
-        _record_tws_path("stateful_sessionize_tws", "transformWithStateInPandas")
-        sessions = (
-            ev.withWatermark("ts", WATERMARK)
-            .groupBy("user_id")
-            .transformWithStateInPandas(
-                stateful.make_sessionize_processor(),
-                outputStructType=stateful.SESSION_TWS_OUTPUT,
-                outputMode="Append",
-                timeMode="EventTime",
-            )
+    stateful.make_sessionize_processor)."""
+    ensure_protobuf_session(spark)
+    sessions = (
+        _stream(spark, sf_dir)
+        .withWatermark("ts", WATERMARK)
+        .groupBy("user_id")
+        .transformWithStateInPandas(
+            stateful.make_sessionize_processor(),
+            outputStructType=stateful.SESSION_TWS_OUTPUT,
+            outputMode="Append",
+            timeMode="EventTime",
         )
-        res = run_stream(sessions, output_mode="append", state_partitions=_parts(sf_dir))
-        seq = F.col("sess_seq")
-    else:
-        _record_tws_path("stateful_sessionize_tws", "applyInPandasWithState_fallback")
-        sessions = (
-            ev.withWatermark("ts", WATERMARK)
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                stateful.sessionize_fn,
-                stateful.SESSION_OUTPUT,
-                stateful.SESSION_STATE,
-                "append",
-                "EventTimeTimeout",
-            )
-        )
-        res = run_stream(sessions, output_mode="append", state_partitions=_parts(sf_dir))
-        from pyspark.sql import Window
-
-        seq = (
-            F.row_number().over(
-                Window.partitionBy("user_id").orderBy("sess_start_us")
-            )
-            - 1
-        ).cast("bigint")
+    )
+    res = run_stream(sessions, output_mode="append", state_partitions=_parts(sf_dir))
     return res.filter(F.col("user_id") >= 0).select(
         "user_id",
         _ntz(F.expr("timestamp_micros(sess_start_us)")).alias("sess_start"),
         "n_events",
         F.round("sum_value", 2).alias("sum_value"),
-        seq.alias("sess_seq"),
+        "sess_seq",
     )
 
 
@@ -1070,36 +1043,19 @@ def stateful_profile_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     (STATEFUL_PROCESSOR_INCORRECT_TIME_MODE_TO_ASSIGN_TTL, measured) —
     so the auto-expiring MapState (the processor's ``ttl_ms`` knob) runs
     under ``timeMode=ProcessingTime`` in tests/test_streaming.py, which
-    pins actual wall-clock expiry. Falls back to an
-    applyInPandasWithState twin (map as JSON state, same deadline) where
-    no protobuf runtime resolves."""
-    ev = _stream(spark, sf_dir)
-    fin = _finalize_ms(sf_dir)
-    if _tws_available(spark):
-        _record_tws_path("stateful_profile_tws", "transformWithStateInPandas")
-        prof = (
-            ev.withWatermark("ts", WATERMARK)
-            .groupBy("user_id")
-            .transformWithStateInPandas(
-                stateful.make_profile_processor(fin),
-                outputStructType=stateful.PROFILE_TWS_OUTPUT,
-                outputMode="Append",
-                timeMode="EventTime",
-            )
+    pins actual wall-clock expiry."""
+    ensure_protobuf_session(spark)
+    prof = (
+        _stream(spark, sf_dir)
+        .withWatermark("ts", WATERMARK)
+        .groupBy("user_id")
+        .transformWithStateInPandas(
+            stateful.make_profile_processor(_finalize_ms(sf_dir)),
+            outputStructType=stateful.PROFILE_TWS_OUTPUT,
+            outputMode="Append",
+            timeMode="EventTime",
         )
-    else:
-        _record_tws_path("stateful_profile_tws", "applyInPandasWithState_fallback")
-        prof = (
-            ev.withWatermark("ts", WATERMARK)
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                stateful.make_profile_fallback_fn(fin),
-                stateful.PROFILE_TWS_OUTPUT,
-                stateful.PROFILE_FALLBACK_STATE,
-                "append",
-                "EventTimeTimeout",
-            )
-        )
+    )
     res = run_stream(prof, output_mode="append", state_partitions=_parts(sf_dir))
     return (
         res.filter(F.col("user_id") >= 0)
@@ -1109,47 +1065,6 @@ def stateful_profile_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("sum_value"), 2).alias("sum_value"),
         )
     )
-
-
-# Which stateful API each *_tws key actually executed last —
-# "transformWithStateInPandas" or "applyInPandasWithState_fallback". The
-# TWS gate is environment-dependent (protobuf health), so evidence readers
-# need to know which path produced a given green result; markers are set
-# at plan-build time and logged once per (key, path) per process.
-# TWS_PATH_USED stays the single bench/driver summary value (both keys
-# share one gate, so they can only diverge if the environment changes
-# mid-process — TWS_PATHS records per-key provenance for exactly that
-# case).
-TWS_PATH_USED: str | None = None
-TWS_PATHS: dict[str, str] = {}
-_tws_paths_logged: set[tuple[str, str]] = set()
-
-
-def _record_tws_path(key: str, path: str) -> None:
-    global TWS_PATH_USED
-    TWS_PATH_USED = path
-    TWS_PATHS[key] = path
-    if (key, path) not in _tws_paths_logged:
-        import sys
-
-        print(f"[sparkstreamingstateful] {key} path: {path}", file=sys.stderr)
-        _tws_paths_logged.add((key, path))
-
-
-def _tws_available(spark: SparkSession) -> bool:
-    """transformWithStateInPandas needs a google.protobuf runtime (its
-    state-server protocol is protobuf-framed); this container ships none
-    (`import google` fails, verified r4-r6). Since r6 the repo vendors a
-    minimal clean-room runtime (vendor/google/protobuf, wired up by
-    compat.ensure_protobuf_session: sys.path + PYTHONPATH for Spark's
-    Python workers), so the TWS path runs for real here; a native
-    protobuf install is preferred automatically wherever one exists.
-    Falls back to applyInPandasWithState — identical semantics, same
-    oracle (SURVEY §7.2.1 facade) — only if neither runtime resolves.
-    TWS_PATH_USED records which path actually ran."""
-    from ..compat import ensure_protobuf_session
-
-    return ensure_protobuf_session(spark) in ("native", "vendored")
 
 
 @query(
@@ -1164,27 +1079,18 @@ def stateful_running_agg_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running per-user agg on the Spark-4 ``transformWithStateInPandas``
     API (StatefulProcessor + typed value state, RocksDB provider) — same
     semantics and oracle as ``stateful_running_agg``, covering both
-    generations of the Python stateful API. Falls back to
-    ``applyInPandasWithState`` where TWS's protobuf dependency is broken
-    (see _tws_available)."""
-    ev = _stream(spark, sf_dir, sentinels=False)
-    if _tws_available(spark):
-        _record_tws_path("stateful_running_agg_tws", "transformWithStateInPandas")
-        updates = ev.groupBy("user_id").transformWithStateInPandas(
+    generations of the Python stateful API."""
+    ensure_protobuf_session(spark)
+    updates = (
+        _stream(spark, sf_dir, sentinels=False)
+        .groupBy("user_id")
+        .transformWithStateInPandas(
             stateful.make_running_agg_processor(),
             outputStructType=stateful.RUNNING_AGG_OUTPUT,
             outputMode="Update",
             timeMode="None",
         )
-    else:
-        _record_tws_path("stateful_running_agg_tws", "applyInPandasWithState_fallback")
-        updates = ev.groupBy("user_id").applyInPandasWithState(
-            stateful.running_agg_fn,
-            stateful.RUNNING_AGG_OUTPUT,
-            stateful.RUNNING_AGG_STATE,
-            "update",
-            "NoTimeout",
-        )
+    )
     res = run_stream(updates, output_mode="update", state_partitions=_parts(sf_dir))
     final = (
         res.filter(F.col("user_id") >= 0)
@@ -1948,9 +1854,7 @@ def _sessionize_tws_ckpt(spark: SparkSession, sf_dir: str) -> str:
     _dedup_state_ckpt. Changelog checkpointing is pinned OFF for this
     checkpoint: the reader takes the snapshot path (a changelog-only
     version forces coordinator-RPC replay a batch session lacks; see
-    scan_state_store). Requires the TWS runtime — the fallback
-    sessionizer's state layout (applyInPandasWithState tuple rows) is
-    a different physical surface, and S7f exists to pin the TWS one."""
+    scan_state_store)."""
     import os
     import shutil
     import tempfile as _tf
@@ -1959,12 +1863,7 @@ def _sessionize_tws_ckpt(spark: SparkSession, sf_dir: str) -> str:
     from ..session import configure
 
     configure(spark)
-    if not _tws_available(spark):
-        raise RuntimeError(
-            "scan_state_tws_variables needs the transformWithStateInPandas "
-            "runtime (protobuf); the applyInPandasWithState fallback has a "
-            "different state layout and cannot serve this reader"
-        )
+    ensure_protobuf_session(spark)
     prov = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
     ptag = "rocksdb" if "RocksDB" in str(prov) else "hdfs"
     ckpt = os.path.join(
@@ -2150,9 +2049,7 @@ def _profile_tws_ckpt(spark: SparkSession, sf_dir: str) -> str:
     surfaces (S7g map variables, S7h timers) deterministic by
     construction. Cached per (provider, content tag) with the ``_DONE``
     discipline; changelog checkpointing pinned OFF (the batch reader
-    takes the snapshot path — see scan_state_store). Requires the TWS
-    runtime: the fallback twin keeps the map as JSON in ONE value row —
-    a different physical surface that cannot serve this reader."""
+    takes the snapshot path — see scan_state_store)."""
     import os
     import shutil
     import tempfile as _tf
@@ -2161,13 +2058,7 @@ def _profile_tws_ckpt(spark: SparkSession, sf_dir: str) -> str:
     from ..session import configure
 
     configure(spark)
-    if not _tws_available(spark):
-        raise RuntimeError(
-            "scan_state_tws_map/_timers need the transformWithStateInPandas "
-            "runtime (protobuf); the applyInPandasWithState fallback keeps "
-            "the profile map as JSON in a single value row and cannot serve "
-            "the MapState/timer readers"
-        )
+    ensure_protobuf_session(spark)
     prov = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
     ptag = "rocksdb" if "RocksDB" in str(prov) else "hdfs"
     ckpt = os.path.join(
@@ -2404,11 +2295,8 @@ def stateful_running_agg_tws_bootstrap(
     key always carries n strictly greater than its seed. Scale: the
     bootstrap table distributes with the state store's own key
     partitioning (Spark co-partitions initialState by the grouping
-    key); no extra shuffle beyond the one any stateful op pays.
-    Fallback (TWS protobuf broken): applyInPandasWithState has no
-    initial-state surface, so the odd half streams WITHOUT a seed and
-    the seed is merged post-hoc (outer-join sum) — same oracle, weaker
-    API coverage, recorded via TWS_PATHS."""
+    key); no extra shuffle beyond the one any stateful op pays."""
+    ensure_protobuf_session(spark)
     init_df = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_id") % 2 == 0)
@@ -2417,58 +2305,22 @@ def stateful_running_agg_tws_bootstrap(
     )
     _, d_odd = feeder.chunked_events_split_dirs(sf_dir)
     ev = read_stream_events(spark, d_odd)
-    if _tws_available(spark):
-        _record_tws_path(
-            "stateful_running_agg_tws_bootstrap", "transformWithStateInPandas"
-        )
-        updates = ev.groupBy("user_id").transformWithStateInPandas(
-            stateful.make_bootstrap_running_agg_processor(),
-            outputStructType=stateful.RUNNING_AGG_OUTPUT,
-            outputMode="Update",
-            timeMode="None",
-            initialState=init_df.groupBy("user_id"),
-        )
-        res = run_stream(updates, output_mode="update", state_partitions=_parts(sf_dir))
-        merged = res.filter(F.col("user_id") >= 0).unionByName(init_df)
-        final = merged.groupBy("user_id").agg(
-            F.max(F.struct("n", "sum_value")).alias("s")
-        )
-        return final.select(
-            "user_id",
-            F.col("s.n").alias("n"),
-            F.round(F.col("s.sum_value"), 2).alias("sum_value"),
-        )
-    _record_tws_path(
-        "stateful_running_agg_tws_bootstrap", "applyInPandasWithState_fallback"
-    )
-    updates = ev.groupBy("user_id").applyInPandasWithState(
-        stateful.running_agg_fn,
-        stateful.RUNNING_AGG_OUTPUT,
-        stateful.RUNNING_AGG_STATE,
-        "update",
-        "NoTimeout",
+    updates = ev.groupBy("user_id").transformWithStateInPandas(
+        stateful.make_bootstrap_running_agg_processor(),
+        outputStructType=stateful.RUNNING_AGG_OUTPUT,
+        outputMode="Update",
+        timeMode="None",
+        initialState=init_df.groupBy("user_id"),
     )
     res = run_stream(updates, output_mode="update", state_partitions=_parts(sf_dir))
-    odd_final = (
-        res.filter(F.col("user_id") >= 0)
-        .groupBy("user_id")
-        .agg(F.max(F.struct("n", "sum_value")).alias("s"))
-        .select(
-            "user_id",
-            F.col("s.n").alias("n1"),
-            F.col("s.sum_value").alias("v1"),
-        )
+    merged = res.filter(F.col("user_id") >= 0).unionByName(init_df)
+    final = merged.groupBy("user_id").agg(
+        F.max(F.struct("n", "sum_value")).alias("s")
     )
-    seed = init_df.select(
-        "user_id", F.col("n").alias("n0"), F.col("sum_value").alias("v0")
-    )
-    both = odd_final.join(seed, "user_id", "full")
-    return both.select(
+    return final.select(
         "user_id",
-        (F.coalesce("n0", F.lit(0)) + F.coalesce("n1", F.lit(0))).alias("n"),
-        F.round(
-            F.coalesce("v0", F.lit(0.0)) + F.coalesce("v1", F.lit(0.0)), 2
-        ).alias("sum_value"),
+        F.col("s.n").alias("n"),
+        F.round(F.col("s.sum_value"), 2).alias("sum_value"),
     )
 
 

@@ -1,13 +1,20 @@
 """Custom per-key stateful processors (SURVEY.md §2.9, ST7–ST9) — the
 ``updateStateByKey`` / ``mapWithState``-equivalents of the reference domain,
-built on ``applyInPandasWithState`` (PySpark ≥3.4; present in 4.1.2,
-verified at M0).
+on both generations of PySpark's Python stateful API (present in 4.1.2):
 
-Each processor is a plain ``(key, pdf_iter, state) -> iterator[pdf]``
-function plus its output/state schemas, so batch twins and streaming tests
-share one definition. State crosses micro-batch boundaries via the state
-store (RocksDB provider configured in session.py); Arrow moves the
-per-group pandas frames across the JVM↔Python boundary.
+- ``applyInPandasWithState`` functions (``*_fn``): each is a plain
+  ``(key, pdf_iter, state) -> iterator[pdf]`` function plus its
+  output/state schemas, so batch twins and streaming tests share one
+  definition;
+- ``transformWithStateInPandas`` processors (``make_*_processor``): the
+  ``StatefulProcessor`` classes behind the ``*_tws`` keys and the TWS
+  state readers — value, list and map state plus event-time timers.
+  Each TWS key runs only on this API; it needs a ``google.protobuf``
+  runtime (see ``compat.ensure_protobuf``).
+
+State crosses micro-batch boundaries via the state store (RocksDB
+provider configured in session.py); Arrow moves the per-group pandas
+frames across the JVM↔Python boundary.
 
 Scale notes: state is partitioned by the grouping key across executors —
 per-key state is O(1) here (counters, current-session accumulator, day
@@ -19,7 +26,6 @@ wall-clock.
 
 from __future__ import annotations
 
-import json
 from collections.abc import Iterator
 
 import pandas as pd
@@ -397,57 +403,6 @@ def make_profile_processor(finalize_ms: int, ttl_ms: int | None = None):
             pass
 
     return ProfileTws()
-
-
-PROFILE_FALLBACK_STATE = T.StructType([T.StructField("profile_json", T.StringType())])
-
-
-def make_profile_fallback_fn(finalize_ms: int):
-    """``applyInPandasWithState`` twin of :func:`make_profile_processor`
-    (insurance for environments where no protobuf runtime resolves — see
-    queries._tws_available): the per-type map rides in one state row as a
-    JSON object ``{type: [n, sum]}`` (the old API has no MapState; JSON
-    because a delimited encoding silently corrupts on a delimiter-bearing
-    event_type — ADVICE r7), the snapshot is emitted by an event-time
-    timeout at the same data-derived ``finalize_ms`` deadline, and a
-    late-arriving group whose deadline the watermark already passed emits
-    inline (setTimeoutTimestamp on a past timestamp kills the query —
-    same guard as sessionize_fn)."""
-
-    def parse(blob: str) -> dict[str, tuple[int, float]]:
-        return {t: (int(n), float(s)) for t, (n, s) in json.loads(blob).items()}
-
-    def fn(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        def snapshot(cur: dict) -> pd.DataFrame:
-            return pd.DataFrame(
-                [(key[0], t, n, s) for t, (n, s) in cur.items()],
-                columns=["user_id", "event_type", "n", "sum_value"],
-            )
-
-        if state.hasTimedOut:
-            cur = parse(state.get[0])
-            state.remove()
-            yield snapshot(cur)
-            return
-        cur = parse(state.get[0]) if state.exists else {}
-        data = pd.concat(list(pdf_iter), ignore_index=True)
-        for etype, row in data.groupby("event_type")["value"].agg(
-            ["count", "sum"]
-        ).iterrows():
-            n0, s0 = cur.get(etype, (0, 0.0))
-            cur[etype] = (int(n0 + row["count"]), float(s0 + row["sum"]))
-        if finalize_ms <= state.getCurrentWatermarkMs():
-            if state.exists:
-                state.remove()
-            yield snapshot(cur)
-            return
-        # json floats serialize via repr (shortest round-trip) — sums
-        # cross batches bit-exact, same fidelity as the old !r encoding
-        state.update((json.dumps({t: [n, s] for t, (n, s) in cur.items()}),))
-        state.setTimeoutTimestamp(finalize_ms)
-        yield snapshot({})
-
-    return fn
 
 
 def make_sessionize_processor():

@@ -29,6 +29,15 @@ def test_top_movers_empty_prev_is_none():
     assert bench.top_movers({}, {"a": 1.0}) is None
 
 
+def test_top_movers_cpu_mismatch_is_none():
+    # per-key times taken at different core counts do not compare; a
+    # previous table without a recorded count cannot be trusted either
+    prev, now = {"a": 1.0}, {"a": 2.0}
+    assert bench.top_movers(prev, now, prev_cpus=32, cpus=8) is None
+    assert bench.top_movers(prev, now, prev_cpus=None, cpus=8) is None
+    assert bench.top_movers(prev, now, prev_cpus=8, cpus=8) is not None
+
+
 def test_top_movers_line_under_1kb():
     # worst realistic case: 10 movers with long key names
     keys = ["stateful_running_agg_tws_bootstrap_%02d" % i for i in range(40)]

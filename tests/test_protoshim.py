@@ -5,15 +5,18 @@ encoding spec (protobuf.dev/programming-guides/encoding) and the state
 protocol's field numbers — NOT produced by the implementation under test,
 so an encoder and decoder that are wrong in the same way cannot pass.
 The end-to-end proof (a real transformWithStateInPandas query whose
-worker speaks this runtime to the JVM state server) lives in
-test_streaming.py::test_tws_path_marker + the stateful_running_agg_tws
-oracle row.
+worker speaks this runtime to the JVM state server) is the
+stateful_running_agg_tws oracle row
+(test_inventory.py::test_oracle_match[stateful_running_agg_tws]).
 """
 
 from __future__ import annotations
 
+import sys
+
 import pytest
 
+from sparkstreamingstateful_spark import compat
 from sparkstreamingstateful_spark.compat import ensure_protobuf
 
 
@@ -30,6 +33,29 @@ def test_runtime_resolves():
     # native protobuf must always win when importable; the vendored shim
     # only fills a void (this container: no google package at all)
     assert ensure_protobuf() in ("native", "vendored")
+
+
+def test_no_runtime_raises(monkeypatch, tmp_path):
+    # neither runtime resolves: the gate must raise, not report a state a
+    # caller could route around, and every TWS key must hit it before
+    # building a plan (spark=None: the gate runs before any session use)
+    from sparkstreamingstateful_spark.streaming import queries as sq
+
+    monkeypatch.setattr(compat, "_state", None)
+    monkeypatch.setattr(compat, "VENDOR_DIR", str(tmp_path))
+    monkeypatch.setitem(sys.modules, "google", None)
+    monkeypatch.setitem(sys.modules, "google.protobuf", None)
+    match = r"vendor/google/protobuf.*transformWithStateInPandas"
+    with pytest.raises(ImportError, match=match):
+        ensure_protobuf()
+    for key in (
+        sq.stateful_sessionize_tws,
+        sq.stateful_profile_tws,
+        sq.stateful_running_agg_tws,
+        sq.stateful_running_agg_tws_bootstrap,
+    ):
+        with pytest.raises(ImportError, match=match):
+            key(None, "unused")
 
 
 def test_golden_set_handle_state(sm):
@@ -297,3 +323,17 @@ def test_copyfrom_matches_wire_roundtrip(sm):
     rt = sm.ListStateCall()
     rt.MergeFromString(outer.SerializeToString())
     assert rt.SerializeToString() == outer.SerializeToString()
+
+
+def test_copyfrom_self_keeps_message(sm):
+    # x.CopyFrom(x) is a no-op in the real runtime; clearing before the
+    # copy would wipe the source and the destination at once
+    msg = sm.StateRequest(
+        stateVariableRequest=sm.StateVariableRequest(
+            valueStateCall=sm.ValueStateCall(stateName="sess", get=sm.Get())
+        )
+    )
+    wire = msg.SerializeToString()
+    msg.CopyFrom(msg)
+    assert wire and msg.SerializeToString() == wire
+    assert msg.stateVariableRequest.valueStateCall.stateName == "sess"

@@ -179,21 +179,6 @@ def test_stateful_kill_restart_recovery(spark):
     assert got == want, "recovered final state diverges from the batch twin"
 
 
-def test_tws_path_marker(spark):
-    """The TWS facade must RECORD which stateful API it executed — the gate
-    is environment-dependent, so a green stateful_running_agg_tws row is
-    only interpretable alongside this marker."""
-    from sparkstreamingstateful_spark.streaming import queries as sq
-
-    QUERIES["stateful_running_agg_tws"](spark, SF_UNIT)
-    expect = (
-        "transformWithStateInPandas"
-        if sq._tws_available(spark)
-        else "applyInPandasWithState_fallback"
-    )
-    assert sq.TWS_PATH_USED == expect
-
-
 def test_events_ts_unit_duality(spark, tmp_path):
     """The events loader must read BOTH physical ts generations —
     timestamp[ns] (legacy, long-nanos + div-1000 conversion) and
@@ -1038,11 +1023,6 @@ def test_tws_mapstate_ttl_expiry(spark):
     import time
     import uuid
 
-    from sparkstreamingstateful_spark.streaming import queries as sq
-
-    if not sq._tws_available(spark):
-        pytest.skip("transformWithStateInPandas unavailable (protobuf gate)")
-
     feed = chunked_events_dir(SF_UNIT, n_chunks=2, sentinels=False)
     ev = read_stream_events(spark, feed)
     probes = ev.groupBy("user_id").transformWithStateInPandas(
@@ -1117,11 +1097,6 @@ def test_tws_mapstate_no_ttl_retains(spark):
     Poll-then-stop, like the TTL test."""
     import time
     import uuid
-
-    from sparkstreamingstateful_spark.streaming import queries as sq
-
-    if not sq._tws_available(spark):
-        pytest.skip("transformWithStateInPandas unavailable (protobuf gate)")
 
     feed = chunked_events_dir(SF_UNIT, n_chunks=2, sentinels=False)
     ev = read_stream_events(spark, feed)
@@ -1275,24 +1250,6 @@ def test_sink_dirs_self_heal_partial(spark, duck):
     assert spark.catalog.tableExists(name)
 
 
-def test_profile_fallback_twin_matches_oracle(spark, duck, monkeypatch):
-    """The applyInPandasWithState fallback of stateful_profile_tws (taken
-    only when no protobuf runtime resolves, so the default suite never
-    executes it) must hash-match the same oracle as the native path. This
-    also pins the JSON map-state encoding (ADVICE r7: the old '|'-joined
-    CSV silently corrupted on delimiter-bearing event types) across a
-    multi-batch merge."""
-    from sparkstreamingstateful_spark.streaming import queries as sq
-
-    from .conftest import compare
-
-    monkeypatch.setattr(sq, "_tws_available", lambda _s: False)
-    df = QUERIES["stateful_profile_tws"](spark, SF_UNIT)
-    assert sq.TWS_PATHS["stateful_profile_tws"] == "applyInPandasWithState_fallback"
-    _, oracles = registry.collect()
-    compare(df, duck, oracles["stateful_profile_tws"], name="profile_fallback")
-
-
 def test_tws_processing_time_timer(spark, tmp_path):
     """TWS PROCESSING-TIME timers (``timeMode=ProcessingTime`` +
     ``registerTimer(now + Δ)``): armed in the first micro-batch, the
@@ -1307,11 +1264,6 @@ def test_tws_processing_time_timer(spark, tmp_path):
 
     import pandas as pd
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    from sparkstreamingstateful_spark.streaming import queries as sq
-
-    if not sq._tws_available(spark):
-        pytest.skip("transformWithStateInPandas unavailable (protobuf gate)")
 
     class PtTimer(StatefulProcessor):
         def init(self, handle):
@@ -1387,11 +1339,7 @@ def test_tws_skew_stress(spark, tmp_path):
     (newly executable in r6): TWS pays a state-server round-trip per KEY
     per batch, so a hot key concentrates pandas work but NOT protocol
     cost — same correctness and sub-linear bound as the twin."""
-    from sparkstreamingstateful_spark.streaming import queries as sq
     from sparkstreamingstateful_spark.streaming import stateful
-
-    if not sq._tws_available(spark):
-        pytest.skip("transformWithStateInPandas unavailable (protobuf gate)")
 
     def updates(ev):
         return ev.groupBy("user_id").transformWithStateInPandas(
@@ -1646,13 +1594,8 @@ def test_tws_state_schema_evolution_default_encoding_rejects(spark, tmp_path):
     (The error's own suggestion, stateSchemaCheck=false, is the unsafe
     override; the supported path is the avro encoding pinned in the
     sibling test.)"""
-    from pyspark.sql import types as T
-
-    from sparkstreamingstateful_spark.streaming import queries as sq
-
-    if not sq._tws_available(spark):
-        pytest.skip("transformWithStateInPandas unavailable (protobuf gate)")
     import pyarrow.parquet as pq
+    from pyspark.sql import types as T
 
     feed, t, ckpt = _evolution_fixture(tmp_path)
     s1 = T.StructType([T.StructField("n", T.LongType())])
@@ -1681,13 +1624,8 @@ def test_tws_state_schema_evolution_avro_accepts(spark, tmp_path):
     production deploy can widen its state record without replaying the
     stream. Conf must be set before BOTH runs: the encoding is a
     checkpoint property, not a per-run choice."""
-    from pyspark.sql import types as T
-
-    from sparkstreamingstateful_spark.streaming import queries as sq
-
-    if not sq._tws_available(spark):
-        pytest.skip("transformWithStateInPandas unavailable (protobuf gate)")
     import pyarrow.parquet as pq
+    from pyspark.sql import types as T
 
     feed, t, ckpt = _evolution_fixture(tmp_path)
     s1 = T.StructType([T.StructField("n", T.LongType())])
