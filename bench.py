@@ -72,18 +72,20 @@ def top_movers(
 ) -> dict | None:
     """The <1 KB movers payload (VERDICT r18 item 2): the k largest
     absolute per-key deltas between two per-key timing tables, errored
-    keys (negative timings) excluded on either side. None when no keys
-    are comparable (first run / previous table missing) or when the two
-    tables ran on different core counts (a previous table that recorded
-    no count counts as different): per-key times do not compare across
-    core counts (SCALING_r19.json)."""
+    keys (negative timings) and unmoved keys (zero delta) excluded. None
+    when no key moved (first run / previous table missing / nothing
+    changed) or when the two tables ran on different core counts (a
+    previous table that recorded no count counts as different): per-key
+    times do not compare across core counts (SCALING_r19.json)."""
     if prev_cpus != cpus:
         return None
     common = [
         key for key, t in now.items() if t >= 0 and prev.get(key, -1.0) >= 0
     ]
     movers = sorted(
-        common, key=lambda key: abs(now[key] - prev[key]), reverse=True
+        (key for key in common if now[key] != prev[key]),
+        key=lambda key: abs(now[key] - prev[key]),
+        reverse=True,
     )[:k]
     if not movers:
         return None

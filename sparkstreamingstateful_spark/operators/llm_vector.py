@@ -1222,19 +1222,46 @@ def _km_oracle() -> str:
     """
 
 
+def _sql_array(v) -> str:
+    """A nested list of ints as Spark SQL ``array(...)`` text: the whole
+    centroid table crosses to the JVM as one expression to parse, not
+    as one py4j call per ``F.lit`` element."""
+    if isinstance(v, list):
+        return f"array({', '.join(map(_sql_array, v))})"
+    return str(v)
+
+
 def kmeans_fixed_plan(
     e: DataFrame, k: int = _KM_K, iters: int = _KM_ITERS, dim: int = _KM_DIM
 ):
-    """`kmeans_fixed_train` minus the trained codebook — the assignment
-    DataFrame only (see that function's docstring for the contract)."""
-    return kmeans_fixed_train(e, k, iters, dim)[0]
+    """`kmeans_fixed_train` over the whole vector, codebook dropped and
+    each cluster's size added: ``(vec_id, cluster, dist_fixed,
+    cluster_size)`` (see that function's docstring for the contract)."""
+    assigned = kmeans_fixed_train(e, k, iters, dim)[0]
+    sizes = assigned.groupBy("cluster").agg(
+        F.count(F.lit(1)).cast("bigint").alias("cluster_size")
+    )
+    return assigned.join(F.broadcast(sizes), "cluster").select(
+        "vec_id", "cluster", "dist_fixed", "cluster_size"
+    )
 
 
 def kmeans_fixed_train(
-    e: DataFrame, k: int = _KM_K, iters: int = _KM_ITERS, dim: int = _KM_DIM
+    e: DataFrame,
+    k: int = _KM_K,
+    iters: int = _KM_ITERS,
+    dim: int = _KM_DIM,
+    parts: int = 1,
 ):
     """Lloyd's k-means over the embedding table in EXACT FIXED-POINT
-    arithmetic → ``(vec_id, cluster, dist_fixed, cluster_size)``.
+    arithmetic → ``(part, vec_id, cluster, dist_fixed)`` plus the
+    trained codebooks ``{part: {cid: cv}}``.
+
+    ``parts`` cuts each ``dim``-long embedding into that many consecutive
+    slices and trains one independent codebook per slice (product
+    quantization's subspaces); ``parts=1`` is plain k-means over the
+    whole vector. Each part's result is exactly what a ``parts=1`` run
+    over that slice alone would return.
 
     Float k-means cannot hash-match across engines (centroid means are
     order-dependent float sums), so every quantity is integer:
@@ -1247,47 +1274,51 @@ def kmeans_fixed_train(
     (T11) applied to an ML training loop.
 
     Distributed shape per round (the standard scalable k-means, e.g.
-    MLlib's): centroids live on the DRIVER (k×dim ints — tiny by
-    definition), assignment is an embarrassingly-parallel map with the
-    centroid matrix broadcast as literals, and the update is one
-    posexplode + (cluster, dim) hash agg whose output is k×dim rows —
-    collected to the driver regardless of corpus size. No iteration
-    ever shuffles the corpus; lineage stays flat because each round
-    reads the one materialized quantized input."""
-    q = e.select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda x: F.floor(x.cast("double") * _KM_SCALE).cast("bigint"),
-        ).alias("qv"),
-    ).localCheckpoint()  # read k·iters times: quantize exactly once
+    MLlib's): centroids live on the DRIVER (parts×k×subdim ints, with
+    subdim = dim/parts — tiny by definition), assignment is an
+    embarrassingly-parallel map over (part, vec_id) rows with every
+    part's centroids broadcast as one literal table indexed by
+    ``part``, and the update is one posexplode + (part, cluster, i)
+    hash agg whose output is parts·k·subdim rows — collected to the
+    driver in ONE job per round for all parts, regardless of corpus
+    size. No iteration ever shuffles the corpus; lineage stays flat
+    because each round reads the one materialized quantized input."""
+    sub = dim // parts
+    slices = [F.slice("embedding", p * sub + 1, sub) for p in range(parts)]
+    q = (
+        e.select("vec_id", F.posexplode(F.array(*slices)).alias("part", "x"))
+        .select(
+            "part",
+            "vec_id",
+            F.transform(
+                "x", lambda x: F.floor(x.cast("double") * _KM_SCALE).cast("bigint")
+            ).alias("qv"),
+        )
+        .localCheckpoint()  # read k·iters times: quantize exactly once
+    )
 
-    init = q.filter(F.col("vec_id") < k).orderBy("vec_id").collect()
-    cents = {cid: list(r.qv) for cid, r in enumerate(init)}
+    cents = {p: {} for p in range(parts)}
+    for r in q.filter(F.col("vec_id") < k).orderBy("part", "vec_id").collect():
+        cents[r.part][len(cents[r.part])] = list(r.qv)
 
     def assign():
-        dists = F.array(
-            *[
-                F.struct(
+        books = [[cv for _, cv in sorted(cents[p].items())] for p in range(parts)]
+        table = F.expr(f"CAST({_sql_array(books)} AS array<array<array<bigint>>>)")
+        best = F.array_min(
+            F.transform(
+                table[F.col("part")],
+                lambda cv, cid: F.struct(
                     F.aggregate(
-                        F.zip_with(
-                            "qv",
-                            F.array(*[F.lit(v) for v in cv]).cast(
-                                "array<bigint>"
-                            ),
-                            lambda x, y: (x - y) * (x - y),
-                        ),
+                        F.zip_with("qv", cv, lambda x, y: (x - y) * (x - y)),
                         F.lit(0).cast("bigint"),
                         lambda acc, d: acc + d,
                     ).alias("dist"),
-                    F.lit(cid).cast("bigint").alias("cid"),
-                )
-                for cid, cv in sorted(cents.items())
-            ]
+                    cid.cast("bigint").alias("cid"),
+                ),
+            )
         )
-        best = F.array_min(dists)
         return q.select(
-            "vec_id", "qv",
+            "part", "vec_id", "qv",
             best["cid"].alias("cluster"),
             best["dist"].alias("dist_fixed"),
         )
@@ -1297,27 +1328,21 @@ def kmeans_fixed_train(
         if it == iters - 1:
             break
         upd = (
-            assigned.select("cluster", F.posexplode("qv").alias("i", "v"))
-            .groupBy("cluster", "i")
+            assigned.select(
+                "part", "cluster", F.posexplode("qv").alias("i", "v")
+            )
+            .groupBy("part", "cluster", "i")
             .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
             .collect()
         )
         new = {}
         for r in upd:
-            new.setdefault(r.cluster, [0] * dim)[r.i] = _tdiv(r.s, r.n)
-        cents = {cid: new.get(cid, cv) for cid, cv in cents.items()}
+            new.setdefault((r.part, r.cluster), [0] * sub)[r.i] = _tdiv(r.s, r.n)
+        for (p, cid), cv in new.items():  # unpicked clusters keep theirs
+            cents[p][cid] = cv
 
-    sizes = assigned.groupBy("cluster").agg(
-        F.count(F.lit(1)).alias("cluster_size")
-    )
-    out = assigned.join(F.broadcast(sizes), "cluster").select(
-        "vec_id",
-        "cluster",
-        "dist_fixed",
-        F.col("cluster_size").cast("bigint").alias("cluster_size"),
-    )
-    # cents here = the codebook the FINAL assignment used (trained model)
-    return out, cents
+    # cents here = the codebooks the FINAL assignment used (trained model)
+    return assigned.drop("qv"), cents
 
 
 @query("cluster_kmeans_fixed", oracle=_km_oracle())
@@ -1383,48 +1408,24 @@ _PQ_MODEL_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
 
 def _pq_train_cached(spark: SparkSession, sf_dir: str, e: DataFrame):
     """Train the 4 subspace codebooks ONCE per (session, corpus content)
-    and memoize (codes DataFrames are localCheckpoint-materialized, so
-    reuse costs nothing). Train-once / use-many is the production PQ
-    shape: L21 (encode) and L22 (ADC search) share the model, exactly
-    as a vector store shares its trained quantizer across queries.
-    Session-weak keying per the repo idempotence rule (never id())."""
+    and memoize ``(codes, cents)``: the stacked ``kmeans_fixed_train``
+    assignment frame (one row per (part, vec_id), localCheckpoint-
+    materialized, so reuse costs nothing) and the codebooks
+    ``{part: {cid: cv}}``. All four subspaces train in one grouped
+    k-means, one update job per Lloyd round. Train-once / use-many is
+    the production PQ shape: L21 (encode) and L22 (ADC search) share
+    the model, exactly as a vector store shares its trained quantizer
+    across queries. Session-weak keying per the repo idempotence rule
+    (never id())."""
     from .scans import _dir_tag
 
     tag = _dir_tag(sf_dir, "embeddings")
     per_session = _PQ_MODEL_CACHE.setdefault(spark, {})
     if tag not in per_session:
-        # The 4 subspace trainings are mutually independent Lloyd loops
-        # whose per-round jobs are tiny (k×subdim update aggregates), so
-        # the wall-clock cost is driver round-trips, not compute. Run
-        # them from a small thread pool so each training's next job
-        # back-fills executors idled by the others' stragglers — the
-        # guide's overlap-independent-jobs pattern. Each training is
-        # internally sequential and deterministic, so results are
-        # byte-identical to the serial loop.
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        def train(s: int):
-            sub = e.select(
-                "vec_id",
-                F.slice(
-                    "embedding", s * _PQ_SUBDIM + 1, _PQ_SUBDIM
-                ).alias("embedding"),
-            )
-            res, cents = kmeans_fixed_train(
-                sub, k=_PQ_K, iters=_PQ_ITERS, dim=_PQ_SUBDIM
-            )
-            return res.localCheckpoint(), cents
-
-        # Pass the SESSION to inheritable_thread_target (ADVICE r18):
-        # the callable-only form emits "Spark session is not provided.
-        # Tags will not be inherited" and drops job tags/descriptions in
-        # the training threads; the session form inherits both.
-        with ThreadPoolExecutor(max_workers=_PQ_M) as pool:
-            per_session[tag] = list(
-                pool.map(inheritable_thread_target(spark)(train), range(_PQ_M))
-            )
+        codes, cents = kmeans_fixed_train(
+            e, k=_PQ_K, iters=_PQ_ITERS, dim=_KM_DIM, parts=_PQ_M
+        )
+        per_session[tag] = (codes.localCheckpoint(), cents)
     return per_session[tag]
 
 
@@ -1433,36 +1434,32 @@ def embed_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PRODUCT QUANTIZATION codes (L21) — the memory-bound ANN
     workhorse (Jégou, Douze & Schmid, TPAMI'11): split each 64-dim
     embedding into 4 subspaces of 16 dims, train an independent k=8
-    codebook per subspace (2 Lloyd rounds each, `kmeans_fixed_plan` —
-    the L20 core re-used verbatim on slices), and emit each vector's
-    4-byte code word plus its exact reconstruction error (sum of the
-    four subspace distances). 4 codes × 3 bits compress 256 bytes of
-    float32 to under 2 bytes — the compression/recall dial real vector
-    stores ship; the reconstruction error column is the training-
-    quality diagnostic.
+    codebook per subspace (2 Lloyd rounds each, `kmeans_fixed_train`
+    with ``parts=4`` — the L20 core re-used on stacked slices), and
+    emit each vector's 4-byte code word plus its exact reconstruction
+    error (sum of the four subspace distances). 4 codes × 3 bits
+    compress 256 bytes of float32 to under 2 bytes — the
+    compression/recall dial real vector stores ship; the reconstruction
+    error column is the training-quality diagnostic.
 
     Everything inherits the fixed-point discipline, so the oracle —
     four unrolled `_km_rounds_ctes` chains over `embedding[lo:hi]`
     slices joined on vec_id — hash-matches codes AND errors bit for
-    bit. Subspaces are independent by construction: four small driver
-    loops (k×subdim ints each), each scanning the same materialized
-    quantized input; the per-subspace update aggregates are k×16 rows
-    regardless of corpus size."""
+    bit. Subspaces are independent by construction: the four codebooks
+    train as one grouped driver loop over the stacked (part, vec_id)
+    rows of one materialized quantized input, one k×16-row update
+    aggregate per subspace per round regardless of corpus size; the
+    code word is one ``groupBy("vec_id")`` pivot of the stacked
+    assignments."""
     e = load_table(spark, sf_dir, "embeddings")
-    out = None
-    for s, (res, _cents) in enumerate(_pq_train_cached(spark, sf_dir, e)):
-        res = res.select(
-            "vec_id",
-            F.col("cluster").alias(f"code_{s}"),
-            F.col("dist_fixed").alias(f"_err_{s}"),
-        )
-        out = res if out is None else out.join(res, "vec_id")
-    return out.select(
-        "vec_id",
-        *[F.col(f"code_{s}") for s in range(_PQ_M)],
-        sum(F.col(f"_err_{s}") for s in range(_PQ_M))
-        .cast("bigint")
-        .alias("err_fixed"),
+    codes, _cents = _pq_train_cached(spark, sf_dir, e)
+    part = F.col("part")
+    return codes.groupBy("vec_id").agg(
+        *[
+            F.max(F.when(part == s, F.col("cluster"))).alias(f"code_{s}")
+            for s in range(_PQ_M)
+        ],
+        F.sum("dist_fixed").cast("bigint").alias("err_fixed"),
     )
 
 
@@ -1541,29 +1538,21 @@ def embed_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     AND ranking bit for bit; no recall flag needed, ADC is
     deterministic given the codebooks.
 
-    Spark shape: codebooks train via `kmeans_fixed_train` (k×subdim
-    ints on the driver — the model); the 10-probe × 4×8 lookup table
+    Spark shape: the four codebooks train as one grouped
+    `kmeans_fixed_train` (4×k×subdim ints on the driver — the model),
+    whose stacked assignment frame already holds each code word as
+    (vec_id, subspace, code) rows; the 10-probe × 4×8 lookup table
     builds driver-side in exact ints and BROADCASTS (320 rows at any
-    corpus size); the corpus side explodes each code word to
-    (vec_id, subspace, code) and equi-joins the lookup — one narrow
-    broadcast join + one (probe, vec) sum-agg + a top-k window. The
-    corpus is scanned once; nothing pairwise touches raw vectors."""
+    corpus size) and equi-joins those rows — one narrow broadcast join
+    + one (probe, vec) sum-agg + a top-k window. The corpus is scanned
+    once; nothing pairwise touches raw vectors."""
     e = load_table(spark, sf_dir, "embeddings")
     import math
 
-    code_parts, cents_by_s = [], {}
-    for s, (res, cents) in enumerate(_pq_train_cached(spark, sf_dir, e)):
-        cents_by_s[s] = cents
-        code_parts.append(
-            res.select(
-                "vec_id",
-                F.lit(s).alias("s"),
-                F.col("cluster").alias("cid"),
-            )
-        )
-    codes = code_parts[0]
-    for part in code_parts[1:]:
-        codes = codes.unionByName(part)
+    codes, cents_by_s = _pq_train_cached(spark, sf_dir, e)
+    codes = codes.select(
+        "vec_id", F.col("part").alias("s"), F.col("cluster").alias("cid")
+    )
 
     probe_rows = (
         e.filter(F.col("vec_id").isin(*PROBE_IDS))

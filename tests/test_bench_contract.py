@@ -18,15 +18,21 @@ def test_top_movers_payload():
     prev = {"a": 1.0, "b": 2.0, "err_prev": -1.0, "gone": 5.0}
     now = {"a": 1.5, "b": 2.0, "err_prev": 3.0, "err_now": -1.0, "new": 9.9}
     m = bench.top_movers(prev, now)
-    # errored keys (either side) and non-common keys are excluded
+    # errored keys (either side), non-common keys and unmoved keys are
+    # excluded; n_common still counts the unmoved ones
     assert m["n_common"] == 2
-    assert m["movers"] == {"a": [1.0, 1.5], "b": [2.0, 2.0]}
-    # biggest absolute delta first
-    assert list(m["movers"]) == ["a", "b"]
+    assert m["movers"] == {"a": [1.0, 1.5]}
+
+
+def test_top_movers_biggest_delta_first():
+    m = bench.top_movers({"a": 1.0, "b": 2.0}, {"a": 1.5, "b": 0.5})
+    assert list(m["movers"]) == ["b", "a"]
 
 
 def test_top_movers_empty_prev_is_none():
     assert bench.top_movers({}, {"a": 1.0}) is None
+    # nothing moved: no line rather than a list of zero deltas
+    assert bench.top_movers({"a": 1.0}, {"a": 1.0}) is None
 
 
 def test_top_movers_cpu_mismatch_is_none():

@@ -585,6 +585,44 @@ def test_kmeans_fixed_known_clusters(spark):
     assert all(got[v].dist_fixed < 10**10 for v in got)
 
 
+def test_kmeans_fixed_parts_match_sliced_runs(spark):
+    """kmeans_fixed_train with parts=4 trains the four subspace codebooks
+    in one grouped loop; each part must return exactly the codebook and
+    the (vec_id, cluster, dist_fixed) rows of a parts=1 run over that
+    F.slice'd subspace alone — the guarantee PQ training relies on."""
+    import random
+
+    from sparkstreamingstateful_spark.operators.llm_vector import (
+        _KM_DIM,
+        kmeans_fixed_train,
+    )
+
+    parts, sub, k, iters = 4, _KM_DIM // 4, 3, 3
+    rng = random.Random(11)
+    rows = [
+        (v, [rng.uniform(-1.0, 1.0) for _ in range(_KM_DIM)])
+        for v in range(24)
+    ]
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    stacked, cents = kmeans_fixed_train(
+        e, k=k, iters=iters, dim=_KM_DIM, parts=parts
+    )
+    got = {p: set() for p in range(parts)}
+    for r in stacked.collect():
+        got[r.part].add((r.vec_id, r.cluster, r.dist_fixed))
+    assert sorted(cents) == list(range(parts))
+    for p in range(parts):
+        sliced = e.select(
+            "vec_id", F.slice("embedding", p * sub + 1, sub).alias("embedding")
+        )
+        res, one = kmeans_fixed_train(sliced, k=k, iters=iters, dim=sub)
+        assert cents[p] == one[0]
+        assert got[p] == {
+            (r.vec_id, r.cluster, r.dist_fixed) for r in res.collect()
+        }
+        assert len(got[p]) == len(rows)
+
+
 def test_holt_linear_replay(spark):
     """events_holt_linear's recurrence replayed in pure Python (with
     truncating division) over one event type's hourly series — pins the
