@@ -305,12 +305,12 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("node", F.lit(0).cast("bigint").alias("dist"))
         .localCheckpoint()
     )
-    from .scans import _conf_guard
+    from ..session import conf_guard
 
     # iteration shuffles sized to the pair graph, not the session default
     # (the pagerank_fixed_point rationale: k eager rounds x 32 mostly-
     # empty tasks is pure scheduler overhead on a near-dup-sized graph)
-    with _conf_guard(spark, "spark.sql.shuffle.partitions", "2"):
+    with conf_guard(spark, {"spark.sql.shuffle.partitions": "2"}):
         for i in range(_BFS_MAX_HOPS):
             stepped = (
                 sym.join(dist, sym.src == dist.node)
@@ -418,12 +418,12 @@ def bounded_weighted_sp(
     <= hops edges. Separated from graph_shortest_path so tests can pin
     hand-computed path weights on known graphs (the triangle_counts /
     pagerank_fixed_point device)."""
-    from .scans import _conf_guard
+    from ..session import conf_guard
 
     dist = seeds.withColumn(
         "dist", F.lit(0).cast("bigint")
     ).localCheckpoint()
-    with _conf_guard(spark, "spark.sql.shuffle.partitions", "2"):
+    with conf_guard(spark, {"spark.sql.shuffle.partitions": "2"}):
         for i in range(hops):
             stepped = (
                 sym.join(dist, sym.src == dist.node)

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
+from ..session import conf_guard
 
 
 @query(
@@ -406,18 +407,8 @@ def join_skew_aqe(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized eagerly inside the window — AQE reads these confs at
     execution, so a lazily-returned frame would re-plan under restored
     session defaults (the scan_state_store lesson)."""
-    confs = _skew_confs(spark, sf_dir)
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with conf_guard(spark, _skew_confs(spark, sf_dir)):
         return skew_join_frame(spark, sf_dir).localCheckpoint(eager=True)
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 # ----------------------------------------------------- binned range join
@@ -583,17 +574,8 @@ def join_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     lesson: a lazily-returned frame would re-plan under restored
     session defaults); tests/test_plans.py pins the injected filter in
     the optimized plan."""
-    prev = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    try:
-        for k, v in _BLOOM_CONFS.items():
-            spark.conf.set(k, v)
+    with conf_guard(spark, _BLOOM_CONFS):
         return bloom_join_frame(spark, sf_dir).localCheckpoint(eager=True)
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 # ---------------------------------------------------- as-of with tolerance

@@ -1565,9 +1565,9 @@ def pagerank_fixed_point(
     # magnitude smaller than the corpus. At real scale this constant is
     # sized to the pair-graph volume the LSH stage reports, exactly
     # like any iterative-graph job.
-    from .scans import _conf_guard
+    from ..session import conf_guard
 
-    with _conf_guard(spark, "spark.sql.shuffle.partitions", "2"):
+    with conf_guard(spark, {"spark.sql.shuffle.partitions": "2"}):
         for i in range(iters):
             contrib = ranks.join(deg, "node").select(
                 F.col("node").alias("src_node"), F.expr("r div d").alias("c")
@@ -2177,7 +2177,8 @@ def _bpe_words(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bpe_train_cached(spark: SparkSession, sf_dir: str) -> list:
     """Train the merge table ONCE per (session, corpus content) and
     memoize (content-fingerprint + session-weakref keying)."""
-    from .scans import _conf_guard, _dir_tag
+    from ..session import conf_guard
+    from .scans import _dir_tag
 
     tag = _dir_tag(sf_dir, "documents")
     per_session = _BPE_MODEL_CACHE.setdefault(spark, {})
@@ -2198,7 +2199,7 @@ def _bpe_train_cached(spark: SparkSession, sf_dir: str) -> list:
         # default: 8 rounds × (pair-agg + argmax) × 32 mostly-empty
         # tasks is pure scheduler overhead on distinct-word-sized data
         # (the pagerank_fixed_point rationale)
-        with _conf_guard(spark, "spark.sql.shuffle.partitions", "2"):
+        with conf_guard(spark, {"spark.sql.shuffle.partitions": "2"}):
             per_session[tag] = _bpe_rounds(cur)
     return per_session[tag]
 

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import TABLE_NAMES, load_table, table_path
 from ..registry import query
+from ..session import conf_guard
 
 
 def _src_fingerprint(sf_dir: str, *tables: str) -> str:
@@ -877,28 +878,6 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # that span schema versions, and idempotent partition-level reloads.
 # ---------------------------------------------------------------------------
 
-import contextlib
-
-
-@contextlib.contextmanager
-def _conf_guard(spark: SparkSession, key: str, value: str):
-    """Set a session conf for the duration of a write, restoring the prior
-    value (or unsetting) afterwards — a leaked overwrite mode would
-    silently change every later writer's semantics in this session."""
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
 _EVOLVE_SPLIT_MOD = 3  # o_orderkey % 3: rows 0/1 -> v1 drop, row 2 -> v2 drop
 
 
@@ -1019,7 +998,8 @@ def write_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataF
                 "o_orderstatus",
             )
         )
-        with _conf_guard(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
+        dynamic = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+        with conf_guard(spark, dynamic):
             patch.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
         open(os.path.join(out, "_DONE"), "w").write("ok")
     back = spark.read.parquet(out)

@@ -16,6 +16,7 @@ same code runs unchanged from local[32] to a 1000-executor cluster; only
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -59,6 +60,26 @@ def configure(spark: SparkSession) -> SparkSession:
             # A conf may be static on some builds; the factory path covers it.
             pass
     return spark
+
+
+@contextlib.contextmanager
+def conf_guard(spark: SparkSession, confs: dict[str, str]):
+    """Hold session confs for the body, then put each key back as it was:
+    its prior value, or unset if it had none (so a default stays a
+    default). A leaked conf would silently change every later query in
+    the session — an overwrite mode, a partition count pinned into the
+    next stream's checkpoint."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def get_spark(

@@ -10,11 +10,11 @@ Variants:
   advances the watermark past all real event time; the no-data flush
   micro-batch that ``availableNow`` runs after the last file (watermark
   changed + stateful ops pending ⇒ ``noDataMicroBatches``, on by
-  default and asserted in runner.py) then evicts/times-out all
-  remaining real state. (r1–r4 used TWO sentinels — the second existed
-  only to host that final batch; the flush batch provides it for free,
-  one micro-batch cheaper per sentinel feed — verified against all
-  watermark-dependent oracles at sf0.01.) Queries must NOT filter
+  default and asserted by the runner before every stream starts) then
+  evicts/times-out all remaining real state. (r1–r4 used TWO sentinels
+  — the second existed only to host that final batch; the flush batch
+  provides it for free, one micro-batch cheaper per sentinel feed —
+  verified against all watermark-dependent oracles at sf0.01.) Queries must NOT filter
   sentinels inside the streaming plan — Catalyst pushes such filters
   below the EventTimeWatermark node and the watermark never advances
   (measured); filter the materialized result instead.

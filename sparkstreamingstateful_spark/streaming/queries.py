@@ -1,7 +1,8 @@
 """Streaming & stateful registered queries (SURVEY.md §2.9, ST1–ST10).
 
-Each query executes a real Structured Streaming pipeline (chunked feed →
-availableNow → memory sink; see package docstring) and returns the
+Each query executes a real Structured Streaming pipeline through
+``runner.run_stream`` (chunked feed → availableNow → memory sink, or the
+key's own sink read back; see package docstring) and returns the
 materialized result. Sentinel rows (user_id < 0, far-future event time —
 see feeder.py) flow through the streaming plan to drive watermark
 progression and are filtered from the *materialized* result, never inside
@@ -26,6 +27,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table, read_stream_events
 from ..compat import ensure_protobuf_session
 from ..registry import query
+from ..session import conf_guard
 from . import feeder, stateful
 from .feeder import chunked_events_dir
 from .runner import run_stream
@@ -920,28 +922,26 @@ def stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out_dir)
         )
 
-    from .runner import require_no_data_batches
-
-    # this key drives its own writeStream (foreachBatch sink), so it owes
-    # the same sentinel-flush guard run_stream applies — without it a
-    # disabled no-data batch would silently drop the final windows
-    require_no_data_batches(spark)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            agg.writeStream.foreachBatch(rank_batch)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="sss_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_stream(agg, sink=lambda w: w.foreachBatch(rank_batch).start())
     res = spark.read.parquet(out_dir)
     return res.filter(F.col("event_type") != "__sentinel__").select(
         _ntz(F.col("w.start")).alias("win_start"), "event_type", "n", "rk"
+    )
+
+
+def _sessionize_tws_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ST16's TWS sessionization stream (stateful.make_sessionize_processor),
+    shared by the key and its state-reader checkpoint."""
+    return (
+        _stream(spark, sf_dir)
+        .withWatermark("ts", WATERMARK)
+        .groupBy("user_id")
+        .transformWithStateInPandas(
+            stateful.make_sessionize_processor(),
+            outputStructType=stateful.SESSION_TWS_OUTPUT,
+            outputMode="Append",
+            timeMode="EventTime",
+        )
     )
 
 
@@ -983,18 +983,9 @@ def stateful_sessionize_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked ``sess_seq`` column — see
     stateful.make_sessionize_processor)."""
     ensure_protobuf_session(spark)
-    sessions = (
-        _stream(spark, sf_dir)
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            stateful.make_sessionize_processor(),
-            outputStructType=stateful.SESSION_TWS_OUTPUT,
-            outputMode="Append",
-            timeMode="EventTime",
-        )
+    res = run_stream(
+        _sessionize_tws_frame(spark, sf_dir), state_partitions=_parts(sf_dir)
     )
-    res = run_stream(sessions, output_mode="append", state_partitions=_parts(sf_dir))
     return res.filter(F.col("user_id") >= 0).select(
         "user_id",
         _ntz(F.expr("timestamp_micros(sess_start_us)")).alias("sess_start"),
@@ -1016,6 +1007,23 @@ def _finalize_ms(sf_dir: str) -> int:
     return (
         int((dt - datetime.datetime(1970, 1, 1)).total_seconds() * 1000)
         + 86_400_000
+    )
+
+
+def _profile_tws_frame(spark: SparkSession, sf_dir: str, deadline_ms: int) -> DataFrame:
+    """ST19's TWS profile stream (stateful.make_profile_processor) with its
+    snapshot timer at ``deadline_ms``, shared by the key and its
+    never-snapshotted state-reader twin."""
+    return (
+        _stream(spark, sf_dir)
+        .withWatermark("ts", WATERMARK)
+        .groupBy("user_id")
+        .transformWithStateInPandas(
+            stateful.make_profile_processor(deadline_ms),
+            outputStructType=stateful.PROFILE_TWS_OUTPUT,
+            outputMode="Append",
+            timeMode="EventTime",
+        )
     )
 
 
@@ -1045,18 +1053,10 @@ def stateful_profile_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     under ``timeMode=ProcessingTime`` in tests/test_streaming.py, which
     pins actual wall-clock expiry."""
     ensure_protobuf_session(spark)
-    prof = (
-        _stream(spark, sf_dir)
-        .withWatermark("ts", WATERMARK)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            stateful.make_profile_processor(_finalize_ms(sf_dir)),
-            outputStructType=stateful.PROFILE_TWS_OUTPUT,
-            outputMode="Append",
-            timeMode="EventTime",
-        )
+    res = run_stream(
+        _profile_tws_frame(spark, sf_dir, _finalize_ms(sf_dir)),
+        state_partitions=_parts(sf_dir),
     )
-    res = run_stream(prof, output_mode="append", state_partitions=_parts(sf_dir))
     return (
         res.filter(F.col("user_id") >= 0)
         .groupBy("user_id", "event_type")
@@ -1215,6 +1215,30 @@ def sink_cache_paths(sf_dir: str) -> list[str]:
     ]
 
 
+def _fill_once(path: str, fill) -> bool:
+    """The ``_DONE`` completion contract of every marker-cached streaming
+    output (sink dirs and state checkpoints): a dir holding the marker is
+    complete and kept; any other dir is a partial attempt and is wiped
+    before ``fill()`` rebuilds it, and the marker is written only after
+    ``fill`` returns. The marker — not a sink's own commit log, which
+    exists from the FIRST micro-batch commit — is the key: a rerun's
+    fresh checkpoint restarts batch ids at 0, so a kept partial
+    ``_COMMITTED`` log would discard its batches as replays and the dir
+    could never self-heal (ADVICE r6). Returns whether it filled."""
+    import os
+    import shutil
+
+    if os.path.exists(os.path.join(path, "_DONE")):
+        return False
+    if os.path.isdir(path):
+        shutil.rmtree(path)
+    os.makedirs(path)
+    fill()
+    with open(os.path.join(path, "_DONE"), "w"):
+        pass
+    return True
+
+
 @query(
     "stream_sink_python_datasource",
     oracle="""
@@ -1235,39 +1259,20 @@ def stream_sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame
     the H-check proves per-batch promotion delivered every row exactly
     once. ``ts`` stays out of the projection — the JSONL sink documents
     itself as long/double/string-only (datetimes have no JSON form)."""
-    import os
-    import shutil
-    import tempfile as _tf
-
     from ..sources import pyds
 
     pyds.register(spark)
     out = stream_jsonl_sink_path(sf_dir)
-    # Skip-rerun keys on _DONE, written only after awaitTermination —
-    # NOT on _COMMITTED, which exists from the FIRST micro-batch commit:
-    # an interrupted run would otherwise read back as complete forever
-    # (a rerun's fresh checkpoint restarts batchIds at 0, colliding with
-    # the partial _COMMITTED log and getting discarded as replays, so it
-    # could never self-heal — ADVICE r6). A dir without _DONE is a
-    # partial attempt: wipe it (including _COMMITTED) so the rerun's
-    # batch 0 promotes cleanly.
-    if not os.path.exists(os.path.join(out, "_DONE")):
-        if os.path.isdir(out):
-            shutil.rmtree(out)
+
+    def fill() -> None:
         feed = chunked_events_dir(sf_dir, sentinels=False)
         ev = read_stream_events(spark, feed).select(
             "event_id", "user_id", "event_type", "value"
         )
-        q = (
-            ev.writeStream.format("sss_jsonl")
-            .option("path", out)
-            .option("checkpointLocation", _tf.mkdtemp(prefix="sss_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        with open(os.path.join(out, "_DONE"), "w") as f:
-            f.write("")
+        run_stream(ev, sink=lambda w: w.format("sss_jsonl").option("path", out).start())
+
+    # keyed on _DONE, not on the sink's own _COMMITTED log (see _fill_once)
+    _fill_once(out, fill)
     back = spark.read.schema(
         "event_id long, user_id long, event_type string, value double"
     ).json(out)
@@ -1293,38 +1298,26 @@ def stream_sink_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     same ``_dir_tag`` content-fingerprint cache discipline as the other
     derived layouts) so the sink never writes into an arbitrary CWD's
     spark-warehouse. Completion follows the jsonl sink's ``_DONE``
-    contract: the marker is written only after ``awaitTermination``, a
-    dir without it is a partial attempt and is wiped (table dropped)
+    contract (_fill_once): the marker is written only after the stream
+    completes, a dir without it is a partial attempt and is wiped (table dropped)
     so the rerun's fresh checkpoint promotes cleanly; a complete dir
     from an EARLIER session re-registers the external table instead of
     re-running the stream. H-check proves the file-sink transaction log
     (_spark_metadata) + catalog round-trip delivered every purchase
     exactly once."""
-    import os
-    import shutil
-    import tempfile as _tf
-
     name, out = totable_sink_cache(sf_dir)
-    if not os.path.exists(os.path.join(out, "_DONE")):
+
+    def fill() -> None:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-        if os.path.isdir(out):
-            shutil.rmtree(out)
         feed = chunked_events_dir(sf_dir, sentinels=False)
         ev = (
             read_stream_events(spark, feed)
             .filter(F.col("event_type") == "purchase")
             .select("event_id", "user_id", "value")
         )
-        q = (
-            ev.writeStream.option("path", out)
-            .option("checkpointLocation", _tf.mkdtemp(prefix="sss_ckpt_"))
-            .trigger(availableNow=True)
-            .toTable(name)
-        )
-        q.awaitTermination()
-        with open(os.path.join(out, "_DONE"), "w") as f:
-            f.write("")
-    elif not spark.catalog.tableExists(name):
+        run_stream(ev, sink=lambda w: w.option("path", out).toTable(name))
+
+    if not _fill_once(out, fill) and not spark.catalog.tableExists(name):
         # complete data dir cached from an earlier session — re-attach
         spark.sql(
             f"CREATE TABLE {name} (event_id BIGINT, user_id BIGINT, "
@@ -1417,18 +1410,9 @@ def stream_sink_foreach(spark: SparkSession, sf_dir: str) -> DataFrame:
     completion contract matches the jsonl sink. H-check proves the
     per-(epoch, partition) promotion delivered every finalized window
     exactly once."""
-    import os
-    import shutil
-    import tempfile as _tf
-
-    from .runner import require_no_data_batches
-
-    require_no_data_batches(spark)
     out = foreach_sink_path(sf_dir)
-    if not os.path.exists(os.path.join(out, "_DONE")):
-        if os.path.isdir(out):
-            shutil.rmtree(out)
-        os.makedirs(out)
+
+    def fill() -> None:
         ev = _stream(spark, sf_dir)  # sentinels=True
         agg = (
             ev.withWatermark("ts", WATERMARK)
@@ -1443,25 +1427,10 @@ def stream_sink_foreach(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sum_v_raw",
             )
         )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
-            q = (
-                agg.writeStream.foreach(
-                    JsonlForeachWriter(
-                        out, ["win_start", "event_type", "n", "sum_v_raw"]
-                    )
-                )
-                .outputMode("append")
-                .option("checkpointLocation", _tf.mkdtemp(prefix="sss_ckpt_"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        with open(os.path.join(out, "_DONE"), "w") as f:
-            f.write("")
+        writer = JsonlForeachWriter(out, ["win_start", "event_type", "n", "sum_v_raw"])
+        run_stream(agg, sink=lambda w: w.foreach(writer).start())
+
+    _fill_once(out, fill)
     back = spark.read.schema(
         "win_start string, event_type string, n long, sum_v_raw double"
     ).json(out)
@@ -1525,12 +1494,64 @@ def scan_state_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_CHANGELOG = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+
+
+def _state_ckpt(
+    spark: SparkSession,
+    sf_dir: str,
+    cache: str,
+    frame,
+    *,
+    parts: int = 4,
+    changelog: bool | None = False,
+) -> str:
+    """Build (or reuse) a completed state checkpoint for the state-store
+    reader keys: the streaming frame ``frame()`` (built only on a cache
+    miss) runs to completion into the noop sink against the fixed
+    checkpoint ``<tmp>/<cache><provider>_<content tag>``, under the
+    ``_DONE`` contract of _fill_once, with ``parts`` state partitions.
+
+    The path carries the session's state-store PROVIDER because state
+    files are provider-physical and the reader loads with the current
+    provider (see scan_state_store); ``configure`` runs FIRST so the tag
+    reflects the provider the setup stream will actually run with (a
+    plain driver session is configured lazily by load_table — if a key
+    runs before any table load, an unconfigured conf.get would mis-tag
+    the cache dir). ``changelog`` pins RocksDB changelog checkpointing
+    for this checkpoint's stream (captured at query start); None keeps
+    the session's setting."""
+    import os
+    import tempfile as _tf
+
+    from ..operators.scans import _dir_tag
+    from ..session import configure
+
+    configure(spark)
+    prov = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
+    ptag = "rocksdb" if "RocksDB" in str(prov) else "hdfs"
+    ckpt = os.path.join(
+        _tf.gettempdir(), f"{cache}{ptag}_{_dir_tag(sf_dir, 'events')}"
+    )
+    conf = None if changelog is None else {_CHANGELOG: str(changelog).lower()}
+    _fill_once(
+        ckpt,
+        lambda: run_stream(
+            frame(),
+            state_partitions=parts,
+            sink=lambda w: w.format("noop").start(),
+            checkpoint=ckpt,
+            conf=conf,
+        ),
+    )
+    return ckpt
+
+
 def _dedup_state_ckpt(
     spark: SparkSession, sf_dir: str, *, changelog: bool = False
 ) -> str:
-    """Build (or reuse) a completed keyed-dropDuplicates checkpoint for
-    the state-store reader keys — cached per (provider, changelog mode,
-    content tag) with the ``_DONE`` discipline. Two physical flavors
+    """A completed keyed-dropDuplicates checkpoint for the state-store
+    reader keys (see _state_ckpt), one per changelog mode. Two flavors
     exist because the two read paths need OPPOSITE RocksDB layouts:
     the SNAPSHOT read (S7) wants changelog checkpointing OFF
     (snapshot-per-version — a changelog-only version forces the reader
@@ -1539,57 +1560,19 @@ def _dedup_state_ckpt(
     RocksDB replays the per-batch ``.changelog`` files themselves, and a
     snapshot-only checkpoint has none (measured:
     CANNOT_READ_STREAMING_STATE_FILE .../1.changelog does not exist)."""
-    import os
-    import shutil
-    import tempfile as _tf
 
-    from ..operators.scans import _dir_tag
-    from ..session import configure
-
-    # Self-configure FIRST: the provider tag must reflect the provider the
-    # setup stream will actually run with (a plain driver session is
-    # configured lazily by load_table — if this key runs before any table
-    # load, an unconfigured conf.get here would mis-tag the cache dir).
-    configure(spark)
-    prov = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    ptag = "rocksdb" if "RocksDB" in str(prov) else "hdfs"
-    flavor = "cf_" if changelog else ""
-    ckpt = os.path.join(
-        _tf.gettempdir(),
-        f"sss_statestore_{flavor}{ptag}_{_dir_tag(sf_dir, 'events')}",
-    )
-    if not os.path.exists(os.path.join(ckpt, "_DONE")):
-        if os.path.isdir(ckpt):
-            shutil.rmtree(ckpt)
+    def dedup() -> DataFrame:
         feed = chunked_events_dir(sf_dir, sentinels=False)
-        dedup = (
+        return (
             read_stream_events(spark, feed)
             .select("event_id")
             .dropDuplicates(["event_id"])
         )
-        cl_key = (
-            "spark.sql.streaming.stateStore.rocksdb"
-            ".changelogCheckpointing.enabled"
-        )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        prev_cl = spark.conf.get(cl_key, "false")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        spark.conf.set(cl_key, "true" if changelog else "false")
-        try:
-            q = (
-                dedup.writeStream.format("noop")
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-            spark.conf.set(cl_key, prev_cl)
-        with open(os.path.join(ckpt, "_DONE"), "w") as f:
-            f.write("")
-    return ckpt
+
+    flavor = "cf_" if changelog else ""
+    return _state_ckpt(
+        spark, sf_dir, f"sss_statestore_{flavor}", dedup, changelog=changelog
+    )
 
 
 def _statestore_read(spark: SparkSession, ckpt: str, project, **options) -> DataFrame:
@@ -1599,15 +1582,11 @@ def _statestore_read(spark: SparkSession, ckpt: str, project, **options) -> Data
     EAGERLY materialize via localCheckpoint so the scan executes while the
     conf still holds."""
     lag_key = "spark.sql.streaming.stateStore.coordinatorReportSnapshotUploadLag"
-    prev_lag = spark.conf.get(lag_key, "true")
-    spark.conf.set(lag_key, "false")
-    try:
+    with conf_guard(spark, {lag_key: "false"}):
         rd = spark.read.format("statestore").option("path", ckpt)
         for k, v in options.items():
             rd = rd.option(k, v)
         return project(rd.load()).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set(lag_key, prev_lag)
 
 
 # The S7b/S7c oracles predict per-batch state attribution from the feeder's
@@ -1736,25 +1715,11 @@ def scan_state_join_side(spark: SparkSession, sf_dir: str) -> DataFrame:
     setup is the anti-pattern at 100 TB (state = full history — exactly
     what this reader lets an operator catch); the read itself is one
     partition-parallel scan per side of one state version."""
-    import os
-    import shutil
-    import tempfile as _tf
 
-    from ..operators.scans import _dir_tag
-    from ..session import configure
-
-    configure(spark)
-    prov = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    ptag = "rocksdb" if "RocksDB" in str(prov) else "hdfs"
-    ckpt = os.path.join(
-        _tf.gettempdir(),
-        f"sss_statejoin_{ptag}_{_dir_tag(sf_dir, 'events')}",
-    )
-    if not os.path.exists(os.path.join(ckpt, "_DONE")):
-        if os.path.isdir(ckpt):
-            shutil.rmtree(ckpt)
-        feed = chunked_events_dir(sf_dir, sentinels=False)
-        stream = read_stream_events(spark, feed)
+    def joined() -> DataFrame:
+        stream = read_stream_events(
+            spark, chunked_events_dir(sf_dir, sentinels=False)
+        )
         purchases = stream.filter(F.col("event_type") == "purchase").select(
             F.col("event_id").alias("purchase_id"),
             F.col("user_id").alias("p_user"),
@@ -1763,24 +1728,10 @@ def scan_state_join_side(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_id").alias("click_id"),
             F.col("user_id").alias("c_user"),
         )
-        joined = purchases.join(
-            clicks, F.col("p_user") == F.col("c_user")
-        )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
-            q = (
-                joined.writeStream.format("noop")
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        with open(os.path.join(ckpt, "_DONE"), "w") as f:
-            f.write("")
+        return purchases.join(clicks, F.col("p_user") == F.col("c_user"))
+
+    # changelog=None: the join checkpoint keeps the session's setting
+    ckpt = _state_ckpt(spark, sf_dir, "sss_statejoin_", joined, changelog=None)
     left = _statestore_read(
         spark,
         ckpt,
@@ -1850,68 +1801,19 @@ def _sessionize_tws_ckpt(spark: SparkSession, sf_dir: str) -> str:
     """Build (or reuse) a completed ``transformWithStateInPandas``
     sessionization checkpoint for the TWS state-variable reader (S7f)
     — the ST16 pipeline run against a FIXED checkpoint with the
-    ``_DONE`` discipline, cached per (provider, content tag) like
-    _dedup_state_ckpt. Changelog checkpointing is pinned OFF for this
+    ``_DONE`` discipline, cached per (provider, content tag) by
+    _state_ckpt. Changelog checkpointing is pinned OFF for this
     checkpoint: the reader takes the snapshot path (a changelog-only
     version forces coordinator-RPC replay a batch session lacks; see
     scan_state_store)."""
-    import os
-    import shutil
-    import tempfile as _tf
-
-    from ..operators.scans import _dir_tag
-    from ..session import configure
-
-    configure(spark)
     ensure_protobuf_session(spark)
-    prov = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    ptag = "rocksdb" if "RocksDB" in str(prov) else "hdfs"
-    ckpt = os.path.join(
-        _tf.gettempdir(),
-        f"sss_statestore_tws_{ptag}_{_dir_tag(sf_dir, 'events')}",
+    return _state_ckpt(
+        spark,
+        sf_dir,
+        "sss_statestore_tws_",
+        lambda: _sessionize_tws_frame(spark, sf_dir),
+        parts=_parts(sf_dir),
     )
-    if not os.path.exists(os.path.join(ckpt, "_DONE")):
-        if os.path.isdir(ckpt):
-            shutil.rmtree(ckpt)
-        ev = _stream(spark, sf_dir)
-        sess = (
-            ev.withWatermark("ts", WATERMARK)
-            .groupBy("user_id")
-            .transformWithStateInPandas(
-                stateful.make_sessionize_processor(),
-                outputStructType=stateful.SESSION_TWS_OUTPUT,
-                outputMode="Append",
-                timeMode="EventTime",
-            )
-        )
-        cl_key = (
-            "spark.sql.streaming.stateStore.rocksdb"
-            ".changelogCheckpointing.enabled"
-        )
-        from .runner import require_no_data_batches
-
-        # sentinel-fed stream driving its own writeStream: owes the
-        # no-data-batch guard (final timer expiry rides the flush batch)
-        require_no_data_batches(spark)
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        prev_cl = spark.conf.get(cl_key, "false")
-        spark.conf.set("spark.sql.shuffle.partitions", str(_parts(sf_dir)))
-        spark.conf.set(cl_key, "false")
-        try:
-            q = (
-                sess.writeStream.format("noop")
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-            spark.conf.set(cl_key, prev_cl)
-        with open(os.path.join(ckpt, "_DONE"), "w") as f:
-            f.write("")
-    return ckpt
 
 
 @query(
@@ -2050,61 +1952,14 @@ def _profile_tws_ckpt(spark: SparkSession, sf_dir: str) -> str:
     construction. Cached per (provider, content tag) with the ``_DONE``
     discipline; changelog checkpointing pinned OFF (the batch reader
     takes the snapshot path — see scan_state_store)."""
-    import os
-    import shutil
-    import tempfile as _tf
-
-    from ..operators.scans import _dir_tag
-    from ..session import configure
-
-    configure(spark)
     ensure_protobuf_session(spark)
-    prov = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    ptag = "rocksdb" if "RocksDB" in str(prov) else "hdfs"
-    ckpt = os.path.join(
-        _tf.gettempdir(),
-        f"sss_statestore_twsmap_{ptag}_{_dir_tag(sf_dir, 'events')}",
+    return _state_ckpt(
+        spark,
+        sf_dir,
+        "sss_statestore_twsmap_",
+        lambda: _profile_tws_frame(spark, sf_dir, _profile_never_ms(sf_dir)),
+        parts=_parts(sf_dir),
     )
-    if not os.path.exists(os.path.join(ckpt, "_DONE")):
-        if os.path.isdir(ckpt):
-            shutil.rmtree(ckpt)
-        ev = _stream(spark, sf_dir)
-        prof = (
-            ev.withWatermark("ts", WATERMARK)
-            .groupBy("user_id")
-            .transformWithStateInPandas(
-                stateful.make_profile_processor(_profile_never_ms(sf_dir)),
-                outputStructType=stateful.PROFILE_TWS_OUTPUT,
-                outputMode="Append",
-                timeMode="EventTime",
-            )
-        )
-        cl_key = (
-            "spark.sql.streaming.stateStore.rocksdb"
-            ".changelogCheckpointing.enabled"
-        )
-        from .runner import require_no_data_batches
-
-        require_no_data_batches(spark)
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        prev_cl = spark.conf.get(cl_key, "false")
-        spark.conf.set("spark.sql.shuffle.partitions", str(_parts(sf_dir)))
-        spark.conf.set(cl_key, "false")
-        try:
-            q = (
-                prof.writeStream.format("noop")
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-            spark.conf.set(cl_key, prev_cl)
-        with open(os.path.join(ckpt, "_DONE"), "w") as f:
-            f.write("")
-    return ckpt
 
 
 @query(
@@ -2453,31 +2308,17 @@ def stream_merge_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard the target by key range so each batch rewrites only touched
     shards, or use a merge-on-read format; the epoch-log idempotence
     and the latest-wins algebra carry over unchanged)."""
+    import functools
     import os
-    import shutil
-    import tempfile as _tf
 
-    from .runner import require_no_data_batches
-
-    require_no_data_batches(spark)
     root = merge_table_path(sf_dir)
-    if not os.path.exists(os.path.join(root, "_DONE")):
-        if os.path.isdir(root):
-            shutil.rmtree(root)
-        os.makedirs(root)
-
-        ev = _stream(spark, sf_dir, sentinels=False)
-        q = (
-            ev.writeStream.foreachBatch(
-                lambda batch, epoch_id: merge_epoch(root, batch, epoch_id)
-            )
-            .option("checkpointLocation", _tf.mkdtemp(prefix="sss_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        with open(os.path.join(root, "_DONE"), "w") as f:
-            f.write("")
+    _fill_once(
+        root,
+        lambda: run_stream(
+            _stream(spark, sf_dir, sentinels=False),
+            sink=lambda w: w.foreachBatch(functools.partial(merge_epoch, root)).start(),
+        ),
+    )
     committed = _merge_committed_epochs(root)
     final = spark.read.schema(_MERGE_TABLE_SCHEMA).parquet(
         os.path.join(root, f"v{max(committed):05d}")

@@ -1,10 +1,19 @@
-"""Streaming-query runner: execute a streaming DataFrame to completion
-(``availableNow`` trigger) into a memory sink and hand back the materialized
-result table.
+"""Streaming-query runner: the one place a streaming DataFrame is started.
 
-The memory sink is the test/driver surface; production sinks (foreachBatch →
-parquet with exactly-once via checkpoint, console) are exercised in
-tests/test_streaming.py (S5, ST11).
+Every stream in the engine goes through :func:`run_stream` (run to
+completion under ``availableNow``) or :func:`run_stream_drain` (custom
+Python sources, see its docstring). Both are thin entry points over one
+private core that owns the no-data-batch guard, the session-conf window
+(state partition count plus any extra confs, restored afterwards), the
+checkpoint (a fresh temp dir or a caller's fixed path), the start, the
+wait and the :data:`LAST_QUERY_PROGRESS` capture.
+
+The default sink is an in-memory table, returned as a DataFrame — the
+test/driver surface. Callers with a production sink pass ``sink``, a
+callable that finishes the ``DataStreamWriter``: foreachBatch (parquet
+top-k, MERGE), row-level foreach, noop (state-checkpoint setup), the
+``sss_jsonl`` Python data source and ``toTable``. Recovery from a fixed
+checkpoint is exercised in tests/test_streaming.py.
 """
 
 from __future__ import annotations
@@ -14,11 +23,14 @@ import uuid
 
 from pyspark.sql import DataFrame
 
-# Progress snapshots of the most recent run_stream() execution (list of
-# per-micro-batch progress dicts, driver-side metadata only — a few KB).
-# Tests read state-operator metrics from here (e.g. asserting
-# dropDuplicatesWithinWatermark actually EVICTS state rows) without the
-# queries having to thread a query handle through their return value.
+from ..session import conf_guard
+
+# Progress snapshots of the most recent stream (list of per-micro-batch
+# progress dicts, driver-side metadata only — a few KB). Tests, perfbench
+# and scripts/stream_probe.py read state-operator metrics from here (e.g.
+# asserting dropDuplicatesWithinWatermark actually EVICTS state rows)
+# without the queries having to thread a query handle through their
+# return value.
 LAST_QUERY_PROGRESS: list[dict] = []
 
 
@@ -29,9 +41,8 @@ def require_no_data_batches(spark) -> None:
     can't silently turn sentinel feeds into never-emitting streams.
     Explicit raise (not assert — stripped under python -O) and
     case-insensitive (Spark parses boolean confs case-insensitively).
-    Every sentinel-fed streaming execution must call this — including
-    queries that drive their own writeStream instead of run_stream
-    (stream_topk_per_window's foreachBatch pipeline)."""
+    The runner core calls it before every start, so no stream in the
+    engine runs without it."""
     no_data = spark.conf.get(
         "spark.sql.streaming.noDataMicroBatches.enabled", "true"
     )
@@ -41,6 +52,37 @@ def require_no_data_batches(spark) -> None:
             "spark.sql.streaming.noDataMicroBatches.enabled=true "
             f"(found {no_data!r}); see streaming/feeder.py"
         )
+
+
+def _run(df, sink, wait, *, trigger, output_mode, state_partitions, checkpoint, conf):
+    """Start ``df`` through ``sink`` and ``wait`` on it inside the conf
+    window; always stop the query and keep its progress, so a failed
+    run never leaves an earlier query's batches in LAST_QUERY_PROGRESS."""
+    global LAST_QUERY_PROGRESS
+    spark = df.sparkSession
+    require_no_data_batches(spark)
+    confs = {"spark.sql.shuffle.partitions": str(state_partitions), **(conf or {})}
+    with conf_guard(spark, confs):
+        q = sink(
+            df.writeStream.outputMode(output_mode)
+            .option(
+                "checkpointLocation",
+                checkpoint or tempfile.mkdtemp(prefix="sss_ckpt_"),
+            )
+            .trigger(**trigger)
+        )
+        try:
+            wait(q)
+        finally:
+            # a timeout/exception path must not leak a running query (it
+            # would hold executor slots against every later query)
+            q.stop()
+            LAST_QUERY_PROGRESS = [dict(p) for p in q.recentProgress]
+
+
+def _memory_sink():
+    name = "sss_mem_" + uuid.uuid4().hex[:12]
+    return name, lambda w: w.format("memory").queryName(name).start()
 
 
 def run_stream_drain(
@@ -63,64 +105,66 @@ def run_stream_drain(
     end offset from query progress until the caller's predicate holds.
     ``done`` receives the parsed ``endOffset`` dict of source 0.
     """
+    import ast
     import json
     import time
 
-    spark = df.sparkSession
-    name = "sss_mem_" + uuid.uuid4().hex[:12]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="sss_ckpt_"))
-            .start()
-        )
-        try:
-            deadline = time.monotonic() + timeout_s
-            while True:
-                if q.exception() is not None:
-                    raise q.exception()
-                p = q.lastProgress
-                if p:
-                    end = (p.get("sources") or [{}])[0].get("endOffset")
-                    if isinstance(end, str):
-                        # Python-source offsets surface in progress as the
-                        # dict's repr (single quotes), not JSON — measured
-                        # "{'split': 1}". Accept both.
-                        try:
-                            end = json.loads(end)
-                        except json.JSONDecodeError:
-                            import ast
+    def poll(q) -> None:
+        deadline = time.monotonic() + timeout_s
+        while True:
+            if q.exception() is not None:
+                raise q.exception()
+            p = q.lastProgress
+            if p:
+                end = (p.get("sources") or [{}])[0].get("endOffset")
+                if isinstance(end, str):
+                    # Python-source offsets surface in progress as the
+                    # dict's repr (single quotes), not JSON — measured
+                    # "{'split': 1}". Accept both.
+                    try:
+                        end = json.loads(end)
+                    except json.JSONDecodeError:
+                        end = ast.literal_eval(end)
+                if end is not None and done(end):
+                    return
+            if time.monotonic() > deadline:
+                raise TimeoutError(
+                    f"stream not drained after {timeout_s}s; last progress: {p}"
+                )
+            time.sleep(0.05)
 
-                            end = ast.literal_eval(end)
-                    if end is not None and done(end):
-                        break
-                if time.monotonic() > deadline:
-                    raise TimeoutError(
-                        f"stream not drained after {timeout_s}s; "
-                        f"last progress: {p}"
-                    )
-                time.sleep(0.05)
-        finally:
-            # the timeout/exception paths must not leak a forever-running
-            # query (it would keep polling latestOffset and hold executor
-            # slots against every later query in the session)
-            q.stop()
-        q.awaitTermination()
-        global LAST_QUERY_PROGRESS
-        LAST_QUERY_PROGRESS = [dict(pr) for pr in (q.recentProgress or [])]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
+    name, sink = _memory_sink()
+    _run(
+        df,
+        sink,
+        poll,
+        trigger={"processingTime": "0 seconds"},
+        output_mode=output_mode,
+        state_partitions=state_partitions,
+        checkpoint=None,
+        conf=None,
+    )
+    return df.sparkSession.table(name)
 
 
 def run_stream(
-    df: DataFrame, *, output_mode: str = "append", state_partitions: int = 4
-) -> DataFrame:
-    """Run a streaming DataFrame to completion; return the memory table.
+    df: DataFrame,
+    *,
+    output_mode: str = "append",
+    state_partitions: int = 4,
+    sink=None,
+    checkpoint: str | None = None,
+    conf: dict[str, str] | None = None,
+) -> DataFrame | None:
+    """Run a streaming DataFrame to completion under ``availableNow``.
+
+    Returns the memory table, or None when ``sink`` is given: ``sink``
+    finishes the ``DataStreamWriter`` and returns the started query
+    (``lambda w: w.foreachBatch(f).start()``, ``lambda w:
+    w.toTable(name)``), and the caller reads its own output back.
+    ``checkpoint`` is a fixed checkpoint path (default: a fresh temp
+    dir); ``conf`` holds extra session confs for the run, restored
+    afterwards like the partition count.
 
     ``state_partitions`` caps the stateful-operator partition count for
     this query (picked up from the session conf at query start and then
@@ -132,23 +176,17 @@ def run_stream(
     sweep in its docstring). A production deployment with real key
     cardinality would pin O(cores) once for the checkpoint's lifetime.
     """
-    spark = df.sparkSession
-    require_no_data_batches(spark)
-    name = "sss_mem_" + uuid.uuid4().hex[:12]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="sss_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        global LAST_QUERY_PROGRESS
-        LAST_QUERY_PROGRESS = [dict(p) for p in (q.recentProgress or [])]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
+    name = None
+    if sink is None:
+        name, sink = _memory_sink()
+    _run(
+        df,
+        sink,
+        lambda q: q.awaitTermination(),
+        trigger={"availableNow": True},
+        output_mode=output_mode,
+        state_partitions=state_partitions,
+        checkpoint=checkpoint,
+        conf=conf,
+    )
+    return None if name is None else df.sparkSession.table(name)

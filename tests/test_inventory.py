@@ -274,3 +274,25 @@ def test_driver_window_is_r19_rotation():
         "udtf_table_arg",
     ]
     assert list(QUERIES)[:50] == expected
+
+
+def test_only_the_runner_starts_streams():
+    """Every stream goes through streaming/runner.py: no other module of
+    the package may touch ``.writeStream`` or ``.awaitTermination``.
+    Checked on the AST, because docstrings mention writeStream."""
+    import ast
+    import pathlib
+
+    import sparkstreamingstateful_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    runner = root / "streaming" / "runner.py"
+    hits = [
+        f"{path.relative_to(root)}:{node.lineno} .{node.attr}"
+        for path in sorted(root.rglob("*.py"))
+        if path != runner
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Attribute)
+        and node.attr in ("writeStream", "awaitTermination")
+    ]
+    assert not hits, f"streams started outside streaming/runner.py: {hits}"

@@ -258,7 +258,7 @@ def test_partition_overwrite_mode_contrast(spark, tmp_path):
     TRUNCATES every other partition first — the failure mode dynamic
     mode exists to prevent. Pinned on a tiny frame so the semantics, not
     the data, are the subject."""
-    from sparkstreamingstateful_spark.operators.scans import _conf_guard
+    from sparkstreamingstateful_spark.session import conf_guard
 
     out = str(tmp_path / "dpo_contrast")
     base = spark.createDataFrame(
@@ -267,12 +267,12 @@ def test_partition_overwrite_mode_contrast(spark, tmp_path):
     base.write.mode("overwrite").partitionBy("p").parquet(out)
     patch = spark.createDataFrame([(99, "a")], "v int, p string")
 
-    with _conf_guard(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
+    with conf_guard(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         patch.write.mode("overwrite").partitionBy("p").parquet(out)
     got = {(r.v, r.p) for r in spark.read.parquet(out).collect()}
     assert got == {(99, "a"), (2, "b"), (3, "c")}, got
 
-    with _conf_guard(spark, "spark.sql.sources.partitionOverwriteMode", "static"):
+    with conf_guard(spark, {"spark.sql.sources.partitionOverwriteMode": "static"}):
         patch.write.mode("overwrite").partitionBy("p").parquet(out)
     got = {(r.v, r.p) for r in spark.read.parquet(out).collect()}
     assert got == {(99, "a")}, got  # static truncated b and c

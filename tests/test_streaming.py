@@ -92,6 +92,7 @@ def test_stateful_kill_restart_recovery(spark):
     per-key state equals the batch twin. Replayed update-mode emissions are
     identical rows, so the arg-max materialization is idempotent under
     at-least-once batch replay."""
+    import json
     import time
     import uuid
 
@@ -152,9 +153,29 @@ def test_stateful_kill_restart_recovery(spark):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
+    def ckpt_listing() -> str:
+        # what each phase left behind: offsets/ and commits/, plus the
+        # feed files each offset batch was planned to read (the file
+        # source's per-batch log under sources/0)
+        def ls(sub):
+            d = os.path.join(ckpt, sub)
+            names = os.listdir(d) if os.path.isdir(d) else []
+            names = [f for f in names if not f.startswith(".")]
+            return sorted(names, key=lambda f: (len(f), f))
+
+        lines = [f"offsets/: {ls('offsets')}", f"commits/: {ls('commits')}"]
+        for b in ls("sources/0"):
+            with open(os.path.join(ckpt, "sources", "0", b)) as f:
+                entries = [json.loads(x) for x in f.read().splitlines()[1:] if x]
+            read = [os.path.basename(e["path"]) for e in entries]
+            lines.append(f"batch {b} read {read}")
+        return "\n".join(lines)
+
     # all 4 micro-batches committed exactly once across both phases
     done = [f for f in os.listdir(commits) if not f.startswith(".")]
-    assert len(done) == 4, f"expected 4 committed batches, got {sorted(done)}"
+    assert len(done) == 4, (
+        f"expected 4 committed batches, got {sorted(done)}\n{ckpt_listing()}"
+    )
 
     sink = spark.read.parquet(os.path.join(out, "b*"))
     final = (
@@ -605,6 +626,62 @@ def test_console_sink(spark):
         .start()
     )
     q.awaitTermination()
+
+
+def test_progress_belongs_to_last_query(spark):
+    """runner.LAST_QUERY_PROGRESS describes the stream that ran last, also
+    when that stream has its own sink: after a memory-sink key, the
+    foreachBatch top-k key must leave ITS batches there, not the earlier
+    key's (perfbench and scripts/stream_probe.py read this list)."""
+    from sparkstreamingstateful_spark.streaming import runner
+
+    QUERIES["stream_window_tumbling"](spark, SF_UNIT)
+    assert runner.LAST_QUERY_PROGRESS
+    QUERIES["stream_topk_per_window"](spark, SF_UNIT)
+    sinks = {p["sink"]["description"] for p in runner.LAST_QUERY_PROGRESS}
+    assert sinks and all("ForeachBatch" in d for d in sinks), sinks
+
+
+def test_runner_guards_hold_on_every_path(spark):
+    """The runner core's guards: with no-data micro-batches disabled,
+    run_stream and a custom-sink key both refuse before any query starts;
+    a failing sink's error reaches the caller; and the partition count
+    and extra confs held for the run are restored after that failure."""
+    from sparkstreamingstateful_spark.session import conf_guard
+    from sparkstreamingstateful_spark.streaming import runner
+
+    ev = read_stream_events(
+        spark, chunked_events_dir(SF_UNIT, n_chunks=2, sentinels=False)
+    )
+    before = runner.LAST_QUERY_PROGRESS
+    no_data = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
+    with conf_guard(spark, no_data):
+        with pytest.raises(RuntimeError, match="noDataMicroBatches"):
+            runner.run_stream(ev)
+        with pytest.raises(RuntimeError, match="noDataMicroBatches"):
+            QUERIES["stream_topk_per_window"](spark, SF_UNIT)
+    assert runner.LAST_QUERY_PROGRESS is before  # no query ran
+    assert not spark.streams.active
+
+    def boom(batch_df, batch_id):
+        raise ValueError("sink failed on purpose")
+
+    extra = "spark.sss.test.runner_extra"
+    spark.conf.set(extra, "prior")
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        with pytest.raises(Exception, match="sink failed on purpose"):
+            runner.run_stream(
+                ev,
+                state_partitions=3,
+                sink=lambda w: w.foreachBatch(boom).start(),
+                conf={extra: "held"},
+            )
+        assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+        assert spark.conf.get(extra) == "prior"
+        assert not spark.streams.active
+    finally:
+        spark.conf.unset(extra)
 
 
 def test_dedup_watermarked_state_evicted(spark):
