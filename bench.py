@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 import time
@@ -44,6 +45,7 @@ os.environ["PYTHONPATH"] = (
 
 from sparkstreamingstateful_spark import registry
 from sparkstreamingstateful_spark.session import get_spark
+from sparkstreamingstateful_spark.streaming.queries import sink_cache_paths
 
 
 def previous_table() -> dict:
@@ -105,22 +107,15 @@ def main() -> None:
     # Warm-up: JVM / codegen / parquet footer caches.
     queries["agg_hash_q1"](spark, sf_dir).collect()
 
-    # Completion-marker-cached sink dirs (_DONE/_SUCCESS) exist for the
+    # Completion-marker-cached sink dirs (catalog.fill_once) exist for the
     # correctness gate's repeated executions; a benchmark must never time
     # the cached no-op re-read in their place (the exact weakness VERDICT
     # r6 flagged on the jsonl sink). Wipe them so every run — including
-    # runs 2 and 3 of the median-of-3 protocol — times the real sink.
-    try:
-        import shutil
-
-        from sparkstreamingstateful_spark.streaming.queries import (
-            sink_cache_paths,
-        )
-
-        for p in sink_cache_paths(sf_dir):
-            shutil.rmtree(p, ignore_errors=True)
-    except Exception as exc:
-        print(f"# sink cache wipe skipped: {exc}", file=sys.stderr)
+    # runs 2 and 3 of the median-of-3 protocol — times the real sink; a
+    # wipe that fails stops the run.
+    for p in sink_cache_paths(sf_dir):
+        if os.path.exists(p):
+            shutil.rmtree(p)
 
     def run(df) -> None:
         # noop sink: executes the complete physical plan (scan → shuffle →

@@ -20,6 +20,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import statistics
 import sys
 import time
@@ -34,6 +35,7 @@ os.environ["PYTHONPATH"] = (
 
 from sparkstreamingstateful_spark import registry
 from sparkstreamingstateful_spark.session import get_spark
+from sparkstreamingstateful_spark.streaming.queries import sink_cache_paths
 
 
 def main() -> None:
@@ -58,23 +60,13 @@ def main() -> None:
 
     # Keys whose sinks are completion-marker cached must re-run the real
     # sink every iteration, exactly as bench.py wipes them per suite run.
-    try:
-        import shutil
-
-        from sparkstreamingstateful_spark.streaming.queries import (
-            sink_cache_paths,
-        )
-
-        wipe = list(sink_cache_paths(args.sf))
-    except Exception:
-        wipe = []
-
     out: dict[str, dict] = {}
     for k in keys:
         times = []
         for i in range(args.n):
-            for p in wipe:
-                shutil.rmtree(p, ignore_errors=True)
+            for p in sink_cache_paths(args.sf):
+                if os.path.exists(p):
+                    shutil.rmtree(p)
             spark.sparkContext.setJobDescription(f"probe:{k}#{i}")
             t0 = time.perf_counter()
             df = queries[k](spark, args.sf)

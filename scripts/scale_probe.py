@@ -1,8 +1,9 @@
 """Scale probe: measure how the scale-sensitive operators behave on a K×
 corpus, as evidence for the 100 TB posture claims (SCALING.md).
 
-Builds /tmp derived tables that are K structure-preserving replicas of the
-sf0.1 tables — "more data of the same shape", not noise:
+Builds derived tables (``catalog.cache_dir``, keyed by source content)
+that are K structure-preserving replicas of the sf0.1 tables — "more
+data of the same shape", not noise:
 
 * ``documents``: replica i keeps doc structure but suffixes every token
   with ``_ri`` — token sets are renamed CONSISTENTLY within a replica, so
@@ -32,6 +33,7 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
 import sys
 import time
 
@@ -42,7 +44,14 @@ import pyarrow.parquet as pq
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from sparkstreamingstateful_spark import registry
+from sparkstreamingstateful_spark.catalog import (
+    TABLE_NAMES,
+    cache_dir,
+    fill_once,
+    table_path,
+)
 from sparkstreamingstateful_spark.session import get_spark
+from sparkstreamingstateful_spark.streaming.queries import sink_cache_paths
 
 SRC = "/root/testdata/sf0.1"
 # (key, table it scales with) — batch keys whose cost is corpus-driven;
@@ -84,8 +93,9 @@ PROBES = [
     # over rows once past fixed cost); the stream union feeds 2×(3+1)
     # files at every K, isolating per-batch growth like the other
     # streaming probes. SQL-surface r8 keys (q2like/q16like) are not
-    # probeable here: the replica dirs carry only the four big tables,
-    # and their plans hinge on part/supplier joins.
+    # probeable here: the replica dirs scale only the four big tables
+    # (the rest are 1x links), and their plans hinge on part/supplier
+    # joins.
     ("events_gap_fill", "events"),
     ("text_unigram_logprob", "documents"),
     ("embed_quantize_int8", "embeddings"),
@@ -115,7 +125,7 @@ PROBES = [
     # query terms miss renamed replicas — language_id's caveat, except
     # here the scan/stats cost is still the honest scale signal).
     # agg_histogram / join_bloom_runtime_filter are not probeable:
-    # they read `orders`, which the replica dirs don't carry.
+    # they read `orders`, which the replica dirs carry only at 1x.
     ("events_interpolate_linear", "events"),
     ("events_resample_ohlc", "events"),
     ("events_anomaly_zscore", "events"),
@@ -282,25 +292,15 @@ PROBES = [
 
 # keys whose first run at a given dir includes a ONE-TIME source-layout
 # build (content-fingerprint caches) — run once untimed so the probe
-# measures the operator, not the fixture write. write_python_datasource
-# is deliberately NOT here: the sink write IS its operator, so the probe
-# clears its cache before timing instead (below).
+# measures the operator, not the fixture write (maintenance_rebalance's
+# fixture is the fragmented lineitem layout). Sink dirs are never part
+# of that warm-up: every timed run starts with sink_cache_paths wiped,
+# so a write key times its real write, never a _DONE-marker no-op.
 WARM_FIRST = {
     "scan_python_datasource",
     "stream_python_datasource",
+    "maintenance_rebalance",
 }
-
-
-def _clear_sink_cache(d: str) -> None:
-    """Drop write_python_datasource's cached sink dir for source dir
-    ``d`` so its timed run includes the actual sink write. The path
-    comes from the operator's own ``jsonl_sink_path`` — a hand-rolled
-    copy here could drift and silently time a cached no-op."""
-    import shutil
-
-    from sparkstreamingstateful_spark.operators.scans import jsonl_sink_path
-
-    shutil.rmtree(jsonl_sink_path(d), ignore_errors=True)
 
 
 def _suffix_tokens(col: pa.ChunkedArray, tag: str) -> pa.Array:
@@ -312,18 +312,27 @@ def _suffix_tokens(col: pa.ChunkedArray, tag: str) -> pa.Array:
 
 
 def build(k: int) -> str:
-    # content-fingerprinted cache dir (never key a
-    # derived layout by path alone) — a regenerated /root/testdata
-    # source must invalidate the replicas, or the probe would compare
-    # fresh 1x numbers against stale Kx replicas and report bogus ratios
-    from sparkstreamingstateful_spark.operators.scans import _src_fingerprint
+    # content-fingerprinted cache dir (never key a derived layout by path
+    # alone) — a regenerated source must invalidate the replicas, or the
+    # probe would compare fresh 1x numbers against stale Kx replicas and
+    # report bogus ratios
+    out = cache_dir(
+        f"sss_scale_{k}x", SRC, "lineitem", "events", "documents", "embeddings"
+    )
+    fill_once(out, lambda: _fill_replicas(out, k))
+    return out
 
-    fp = _src_fingerprint(SRC, "lineitem", "events", "documents", "embeddings")
-    out = f"/tmp/sss_scale_{k}x_{fp}"
-    if os.path.isdir(out) and os.path.exists(f"{out}/.done"):
-        return out
-    os.makedirs(out, exist_ok=True)
 
+def _link_unscaled(out: str) -> None:
+    """Link every source table a replica dir does not scale at 1x: the
+    sink wipe before each timed run (sink_cache_paths) keys each sink
+    dir on its source table's content, so every table must resolve."""
+    for t in TABLE_NAMES:
+        if not os.path.exists(table_path(out, t)):
+            os.symlink(table_path(SRC, t), table_path(out, t))
+
+
+def _fill_replicas(out: str, k: int) -> None:
     li = pq.read_table(f"{SRC}/lineitem.parquet")
     okey = li.column("l_orderkey")
     span = pc.max(okey).as_py() + 1
@@ -394,9 +403,7 @@ def build(k: int) -> str:
         t = t.set_column(t.schema.get_field_index("embedding"), "embedding", emb)
         reps.append(t)
     pq.write_table(pa.concat_tables(reps), f"{out}/embeddings.parquet")
-
-    open(f"{out}/.done", "w").write("ok")
-    return out
+    _link_unscaled(out)
 
 
 def _suffix_tokens_except(col: pa.ChunkedArray, tag: str, keep: tuple) -> pa.Array:
@@ -414,27 +421,26 @@ def build_bm25(k: int) -> str:
     """Match-preserving documents replicas: all tokens renamed per replica
     EXCEPT the BM25 query terms, so term matches scale exactly ×K."""
     from sparkstreamingstateful_spark.operators.llm_text import _BM25_TERMS
-    from sparkstreamingstateful_spark.operators.scans import _src_fingerprint
 
-    fp = _src_fingerprint(SRC, "documents")
-    out = f"/tmp/sss_scale_bm25_{k}x_{fp}"
-    if os.path.isdir(out) and os.path.exists(f"{out}/.done"):
-        return out
-    os.makedirs(out, exist_ok=True)
-    d = pq.read_table(f"{SRC}/documents.parquet")
-    did = d.column("doc_id")
-    dspan = pc.max(did).as_py() + 1
-    reps = []
-    for i in range(k):
-        toks = _suffix_tokens_except(d.column("text"), f"_r{i}", _BM25_TERMS)
-        text = pc.binary_join(toks, " ")
-        t = d.set_column(
-            d.schema.get_field_index("doc_id"), "doc_id", pc.add(did, i * dspan)
-        )
-        t = t.set_column(t.schema.get_field_index("text"), "text", text)
-        reps.append(t)
-    pq.write_table(pa.concat_tables(reps), f"{out}/documents.parquet")
-    open(f"{out}/.done", "w").write("ok")
+    out = cache_dir(f"sss_scale_bm25_{k}x", SRC, "documents")
+
+    def fill() -> None:
+        d = pq.read_table(f"{SRC}/documents.parquet")
+        did = d.column("doc_id")
+        dspan = pc.max(did).as_py() + 1
+        reps = []
+        for i in range(k):
+            toks = _suffix_tokens_except(d.column("text"), f"_r{i}", _BM25_TERMS)
+            text = pc.binary_join(toks, " ")
+            t = d.set_column(
+                d.schema.get_field_index("doc_id"), "doc_id", pc.add(did, i * dspan)
+            )
+            t = t.set_column(t.schema.get_field_index("text"), "text", text)
+            reps.append(t)
+        pq.write_table(pa.concat_tables(reps), f"{out}/documents.parquet")
+        _link_unscaled(out)
+
+    fill_once(out, fill)
     return out
 
 
@@ -449,32 +455,30 @@ def build_rj(k: int) -> str:
     densification)."""
     from datetime import timedelta
 
-    from sparkstreamingstateful_spark.operators.scans import _src_fingerprint
+    out = cache_dir(f"sss_scale_rj_{k}x", SRC, "orders", "lineitem")
 
-    fp = _src_fingerprint(SRC, "orders", "lineitem")
-    out = f"/tmp/sss_scale_rj_{k}x_{fp}"
-    if os.path.isdir(out) and os.path.exists(f"{out}/.done"):
-        return out
-    os.makedirs(out, exist_ok=True)
-    for tbl, keycol, datecol in (
-        ("orders", "o_orderkey", "o_orderdate"),
-        ("lineitem", "l_orderkey", "l_shipdate"),
-    ):
-        t0 = pq.read_table(f"{SRC}/{tbl}.parquet")
-        key = t0.column(keycol)
-        span = pc.max(key).as_py() + 1
-        reps = []
-        for i in range(k):
-            t = t0.set_column(
-                t0.schema.get_field_index(keycol), keycol, pc.add(key, i * span)
-            )
-            shifted = pc.add(
-                t0.column(datecol), pa.scalar(timedelta(days=i * _RJ_SHIFT_DAYS))
-            )
-            t = t.set_column(t.schema.get_field_index(datecol), datecol, shifted)
-            reps.append(t)
-        pq.write_table(pa.concat_tables(reps), f"{out}/{tbl}.parquet")
-    open(f"{out}/.done", "w").write("ok")
+    def fill() -> None:
+        for tbl, keycol, datecol in (
+            ("orders", "o_orderkey", "o_orderdate"),
+            ("lineitem", "l_orderkey", "l_shipdate"),
+        ):
+            t0 = pq.read_table(f"{SRC}/{tbl}.parquet")
+            key = t0.column(keycol)
+            span = pc.max(key).as_py() + 1
+            reps = []
+            for i in range(k):
+                t = t0.set_column(
+                    t0.schema.get_field_index(keycol), keycol, pc.add(key, i * span)
+                )
+                shifted = pc.add(
+                    t0.column(datecol), pa.scalar(timedelta(days=i * _RJ_SHIFT_DAYS))
+                )
+                t = t.set_column(t.schema.get_field_index(datecol), datecol, shifted)
+                reps.append(t)
+            pq.write_table(pa.concat_tables(reps), f"{out}/{tbl}.parquet")
+        _link_unscaled(out)
+
+    fill_once(out, fill)
     return out
 
 
@@ -513,31 +517,9 @@ def main() -> None:
         for k, d in kdirs.items():
             if base in WARM_FIRST:
                 queries[base](spark, d).count()
-            elif base == "write_python_datasource":
-                _clear_sink_cache(d)
-            elif base == "maintenance_rebalance":
-                # warm once untimed: builds the fragmented-layout
-                # FIXTURE (content-fingerprint cached) — then drop the
-                # rebalance sink so the timed run performs the real
-                # shuffle+write, never a _DONE-marker no-op
-                import shutil
-
-                from sparkstreamingstateful_spark.operators.scans import (
-                    rebalance_sink_path,
-                )
-
-                queries[base](spark, d).count()
-                shutil.rmtree(rebalance_sink_path(d), ignore_errors=True)
-            elif base == "stream_merge_to_table":
-                # the stream+merge IS the operator — never time a
-                # completion-marker cache hit (same rule as bench.py)
-                import shutil
-
-                from sparkstreamingstateful_spark.streaming.queries import (
-                    merge_table_path,
-                )
-
-                shutil.rmtree(merge_table_path(d), ignore_errors=True)
+            for p in sink_cache_paths(d):
+                if os.path.exists(p):
+                    shutil.rmtree(p)
             t0 = time.perf_counter()
             df = queries[base](spark, d)
             n = df.count()

@@ -18,7 +18,10 @@ unit can never silently skew ``ts`` by 1000×.
 from __future__ import annotations
 
 import glob as _glob
+import hashlib
 import os
+import shutil
+import tempfile
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -201,6 +204,57 @@ def events_ts_unit(path: str) -> str:
 
 def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir}/{name}.parquet"
+
+
+def _src_fingerprint(sf_dir: str, *tables: str) -> str:
+    """Content fingerprint (mtime_ns + size) of source parquet files: a
+    regenerated source under the SAME path invalidates every cache built
+    from it instead of silently serving stale data."""
+    parts = []
+    for t in tables:
+        st_ = os.stat(table_path(sf_dir, t))
+        parts.append(f"{t}:{st_.st_mtime_ns}:{st_.st_size}")
+    return hashlib.md5("|".join(parts).encode()).hexdigest()[:10]
+
+
+def cache_tag(sf_dir: str, *tables: str) -> str:
+    """Key of everything derived from ``tables`` of ``sf_dir``: the dir
+    basename plus the tables' content fingerprint, never the path alone."""
+    base = os.path.basename(os.path.normpath(sf_dir)) or "sf"
+    return f"{base}_{_src_fingerprint(sf_dir, *tables)}"
+
+
+def cache_dir(prefix: str, sf_dir: str | None = None, *tables: str) -> str:
+    """The one home of content-keyed caches (derived layouts, sink dirs,
+    state checkpoints): ``<tmp>/<prefix>_<cache_tag(sf_dir, *tables)>``.
+    Without ``sf_dir`` it is ``<tmp>/<prefix>``, for callers that build
+    the tag themselves (a cache that is also a catalog table needs a tag
+    without dots, which would parse as a table qualifier)."""
+    name = prefix if sf_dir is None else f"{prefix}_{cache_tag(sf_dir, *tables)}"
+    return os.path.join(tempfile.gettempdir(), name)
+
+
+def fill_once(path: str, fill) -> bool:
+    """The completion contract of every marker-cached output: a dir
+    holding ``_DONE`` is complete and kept; any other dir is a partial
+    attempt and is wiped before ``fill()`` rebuilds it, and the marker is
+    written only after ``fill`` returns. ``fill`` writes its whole output
+    into ``path`` (Spark writers need ``mode("overwrite")``: the dir
+    exists). Readers skip ``_``-prefixed files, so the marker is invisible
+    to them. The marker, not a sink's own commit log (which exists from
+    the FIRST micro-batch commit), is the key: a rerun's fresh checkpoint
+    restarts batch ids at 0, so a kept partial ``_COMMITTED`` log would
+    discard its batches as replays and the dir could never self-heal.
+    Returns whether it filled."""
+    if os.path.exists(os.path.join(path, "_DONE")):
+        return False
+    if os.path.isdir(path):
+        shutil.rmtree(path)
+    os.makedirs(path)
+    fill()
+    with open(os.path.join(path, "_DONE"), "w"):
+        pass
+    return True
 
 
 def physical_schema(name: str, *, sf_dir: str | None = None) -> T.StructType:

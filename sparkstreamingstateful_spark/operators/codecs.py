@@ -31,7 +31,7 @@ import struct
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import cache_dir, fill_once, load_table
 from ..compat import VENDOR_DIR
 from ..registry import query
 
@@ -213,6 +213,27 @@ def codec_protobuf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------- streaming decode
+def _events_columns(sf_dir: str) -> tuple[dict[str, list], int]:
+    """events.parquet as plain Python column lists plus its row count,
+    with ``ts`` as epoch micros (``ts_us``) under the catalog's unit
+    duality: raw int64 ts columns are NANOS, timestamp columns cast
+    exactly."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{sf_dir}/events.parquet")
+    ts = t.column("ts")
+    if pa.types.is_integer(ts.type):
+        ts_us = [v // 1000 for v in ts.to_pylist()]
+    else:
+        ts_us = ts.cast(pa.timestamp("us")).cast(pa.int64()).to_pylist()
+    cols = {
+        c: t.column(c).to_pylist()
+        for c in ("event_id", "user_id", "event_type", "value")
+    }
+    return {**cols, "ts_us": ts_us}, t.num_rows
+
+
 def _proto_blob_feed(sf_dir: str) -> str:
     """Chunked protobuf-blob feed for the streaming decode key, cached per
     content fingerprint (the derived-layout discipline): the events table
@@ -220,37 +241,16 @@ def _proto_blob_feed(sf_dir: str) -> str:
     driver-side into ONE delimited proto3 blob row — exactly the shape a
     Kafka topic hands a consumer (one binary value per record batch),
     replayed as one micro-batch per file via mtime ordering."""
-    import os
-    import tempfile
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from ..streaming.feeder import DEFAULT_CHUNKS
-    from .scans import _dir_tag
 
-    out = os.path.join(
-        tempfile.gettempdir(), f"sss_protoblobs_{_dir_tag(sf_dir, 'events')}"
-    )
-    if not os.path.exists(os.path.join(out, "_DONE")):
+    out = cache_dir("sss_protoblobs", sf_dir, "events")
+
+    def fill() -> None:
         wire = _load_wire()
-        t = pq.read_table(f"{sf_dir}/events.parquet")
-        ts = t.column("ts")
-        # epoch micros, same unit duality handling as the catalog: raw
-        # int64 ts columns are NANOS, timestamp columns cast exactly
-        if pa.types.is_integer(ts.type):
-            ts_us = [v // 1000 for v in ts.to_pylist()]
-        else:
-            ts_us = ts.cast(pa.timestamp("us")).cast(pa.int64()).to_pylist()
-        cols = {
-            "event_id": t.column("event_id").to_pylist(),
-            "user_id": t.column("user_id").to_pylist(),
-            "event_type": t.column("event_type").to_pylist(),
-            "value": t.column("value").to_pylist(),
-            "ts_us": ts_us,
-        }
-        n = t.num_rows
-        os.makedirs(out, exist_ok=True)
+        cols, n = _events_columns(sf_dir)
         base = 1_600_000_000
         for i in range(DEFAULT_CHUNKS):
             lo, hi = i * n // DEFAULT_CHUNKS, (i + 1) * n // DEFAULT_CHUNKS
@@ -267,8 +267,8 @@ def _proto_blob_feed(sf_dir: str) -> str:
                 path,
             )
             os.utime(path, (base + i, base + i))
-        with open(os.path.join(out, "_DONE"), "w") as f:
-            f.write("")
+
+    fill_once(out, fill)
     return out
 
 
@@ -481,42 +481,20 @@ def _decode_avro_batches(it):
 def _avro_layout(sf_dir: str) -> str:
     """events as a directory of null-codec Avro container files (one per
     feeder chunk, multi-block), cached per content fingerprint."""
-    import os
-    import tempfile
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from ..streaming.feeder import DEFAULT_CHUNKS
-    from .scans import _dir_tag
 
-    out = os.path.join(
-        tempfile.gettempdir(), f"sss_avro_{_dir_tag(sf_dir, 'events')}"
-    )
-    if not os.path.exists(os.path.join(out, "_DONE")):
-        t = pq.read_table(f"{sf_dir}/events.parquet")
-        ts = t.column("ts")
-        if pa.types.is_integer(ts.type):
-            ts_us = [v // 1000 for v in ts.to_pylist()]
-        else:
-            ts_us = ts.cast(pa.timestamp("us")).cast(pa.int64()).to_pylist()
-        cols = {
-            "event_id": t.column("event_id").to_pylist(),
-            "user_id": t.column("user_id").to_pylist(),
-            "event_type": t.column("event_type").to_pylist(),
-            "value": t.column("value").to_pylist(),
-            "ts_us": ts_us,
-        }
-        n = t.num_rows
-        os.makedirs(out, exist_ok=True)
+    out = cache_dir("sss_avro", sf_dir, "events")
+
+    def fill() -> None:
+        cols, n = _events_columns(sf_dir)
         for i in range(DEFAULT_CHUNKS):
             lo, hi = i * n // DEFAULT_CHUNKS, (i + 1) * n // DEFAULT_CHUNKS
             chunk = {k: v[lo:hi] for k, v in cols.items()}
             write_avro_container(
                 os.path.join(out, f"{i:04d}.avro"), chunk, hi - lo
             )
-        with open(os.path.join(out, "_DONE"), "w") as f:
-            f.write("")
+
+    fill_once(out, fill)
     return out
 
 

@@ -18,12 +18,11 @@ Join-strategy posture for 100 TB:
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import cache_dir, fill_once, load_table
 from ..registry import query
 from ..session import conf_guard
 
@@ -274,7 +273,7 @@ def join_multikey(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------------------- skew (AQE)
 def _skewed_fact_layout(sf_dir: str) -> str:
     """Multi-file lineitem layout for the AQE skew key, cached per content
-    fingerprint (the derived-layout discipline from operators/scans.py).
+    fingerprint (``catalog.cache_dir`` / ``catalog.fill_once``).
 
     AQE's OptimizeSkewedJoin can only split a skewed reduce partition at
     MAP-TASK granularity (ShufflePartitionsUtil.createSkewPartitionSpecs
@@ -288,21 +287,17 @@ def _skewed_fact_layout(sf_dir: str) -> str:
     files (8..64 of them), one mapper each."""
     import pyarrow.parquet as pq
 
-    from .scans import _dir_tag
+    out = cache_dir("sss_skewfact", sf_dir, "lineitem")
 
-    out = os.path.join(
-        tempfile.gettempdir(), f"sss_skewfact_{_dir_tag(sf_dir, 'lineitem')}"
-    )
-    if not os.path.exists(os.path.join(out, "_DONE")):
+    def fill() -> None:
         t = pq.read_table(f"{sf_dir}/lineitem.parquet")
         n = t.num_rows
         k = min(64, max(8, n // 4000))
-        os.makedirs(out, exist_ok=True)
         for i in range(k):
             lo, hi = i * n // k, (i + 1) * n // k
             pq.write_table(t.slice(lo, hi - lo), os.path.join(out, f"{i:04d}.parquet"))
-        with open(os.path.join(out, "_DONE"), "w") as f:
-            f.write("")
+
+    fill_once(out, fill)
     return out
 
 

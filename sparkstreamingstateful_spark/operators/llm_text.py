@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import SCHEMAS, load_table
+from ..catalog import SCHEMAS, cache_tag, load_table
 from ..registry import query
 
 
@@ -1285,9 +1285,7 @@ def lsh_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     millionth-grid point on both engines, so round-to-nearest-integer of
     jaccard·10^6 is cross-engine exact and downstream weighted-path sums
     stay in integer arithmetic (the E17 fixed-point discipline)."""
-    from .scans import _dir_tag
-
-    tag = _dir_tag(sf_dir, "documents")
+    tag = cache_tag(sf_dir, "documents")
     per_session = _LSH_SYM_CACHE.setdefault(spark, {})
     if tag not in per_session:
         pairs = dedup_minhash_lsh(spark, sf_dir).select(
@@ -2178,9 +2176,7 @@ def _bpe_train_cached(spark: SparkSession, sf_dir: str) -> list:
     """Train the merge table ONCE per (session, corpus content) and
     memoize (content-fingerprint + session-weakref keying)."""
     from ..session import conf_guard
-    from .scans import _dir_tag
-
-    tag = _dir_tag(sf_dir, "documents")
+    tag = cache_tag(sf_dir, "documents")
     per_session = _BPE_MODEL_CACHE.setdefault(spark, {})
     if tag not in per_session:
         chars = F.array_join(

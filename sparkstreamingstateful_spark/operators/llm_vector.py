@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import cache_tag, load_table
 from ..registry import query
 PROBE_IDS = tuple(range(10))  # fixed probe set for top-k queries
 _PROBES_SQL = ", ".join(str(i) for i in PROBE_IDS)
@@ -1417,9 +1417,7 @@ def _pq_train_cached(spark: SparkSession, sf_dir: str, e: DataFrame):
     the model, exactly as a vector store shares its trained quantizer
     across queries. Session-weak keying per the repo idempotence rule
     (never id())."""
-    from .scans import _dir_tag
-
-    tag = _dir_tag(sf_dir, "embeddings")
+    tag = cache_tag(sf_dir, "embeddings")
     per_session = _PQ_MODEL_CACHE.setdefault(spark, {})
     if tag not in per_session:
         codes, cents = kmeans_fixed_train(

@@ -13,21 +13,10 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import TABLE_NAMES, load_table, table_path
+from ..catalog import TABLE_NAMES, cache_dir, cache_tag, fill_once, load_table
 from ..registry import query
 from ..session import conf_guard
 
-
-def _src_fingerprint(sf_dir: str, *tables: str) -> str:
-    """Content fingerprint (mtime_ns + size) of source parquet files, used
-    to key derived layout caches — a regenerated source under the SAME
-    path invalidates the cached partitioned/bucketed copy instead of
-    silently serving stale data."""
-    parts = []
-    for t in tables:
-        st_ = os.stat(table_path(sf_dir, t))
-        parts.append(f"{t}:{st_.st_mtime_ns}:{st_.st_size}")
-    return hashlib.md5("|".join(parts).encode()).hexdigest()[:10]
 
 _S1_ORACLE = "\nUNION ALL\n".join(
     f"SELECT '{t}' AS tbl, count(*) AS n FROM {t}" for t in TABLE_NAMES
@@ -96,16 +85,15 @@ def scan_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _partitioned_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """Build (or reuse) the Hive-style day-partitioned events layout both
     pruning keys read (cache keyed by content fingerprint)."""
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"sss_part_events_{_dir_tag(sf_dir, 'events')}",
-        "by_day",
+    out = os.path.join(cache_dir("sss_part_events", sf_dir, "events"), "by_day")
+    fill_once(
+        out,
+        lambda: load_table(spark, sf_dir, "events")
+        .withColumn("day", F.date_trunc("day", F.col("ts")).cast("date"))
+        .write.mode("overwrite")
+        .partitionBy("day")
+        .parquet(out),
     )
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        ev = load_table(spark, sf_dir, "events")
-        ev.withColumn(
-            "day", F.date_trunc("day", F.col("ts")).cast("date")
-        ).write.mode("overwrite").partitionBy("day").parquet(out)
     return out
 
 
@@ -179,13 +167,8 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     subsequent join/aggregation on that key skips its shuffle. Tables
     are external (data under tmp, names keyed by sf) in the session
     catalog; creation is idempotent per (sf_dir, session)."""
-    tag = "_".join(
-        [
-            (os.path.basename(os.path.normpath(sf_dir)) or "sf").replace(".", "_"),
-            _src_fingerprint(sf_dir, "orders", "lineitem"),
-        ]
-    )
-    base = os.path.join(tempfile.gettempdir(), f"sss_bucketed_{tag}")
+    tag = cache_tag(sf_dir, "orders", "lineitem").replace(".", "_")
+    base = cache_dir(f"sss_bucketed_{tag}")
     specs = {
         "orders": ("o_orderkey", ["o_orderkey", "o_custkey"]),
         "lineitem": ("l_orderkey", ["l_orderkey", "l_extendedprice"]),
@@ -214,17 +197,6 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dir_tag(sf_dir: str, table: str) -> str:
-    """Shared cache-tag for per-(sf_dir, table-content) derived layouts:
-    dir basename + content fingerprint. One definition — the partitioned
-    /text/pyds/sink layout caches all key on it, and a drifted copy
-    would serve stale content."""
-    return (
-        f"{os.path.basename(os.path.normpath(sf_dir)) or 'sf'}_"
-        f"{_src_fingerprint(sf_dir, table)}"
-    )
-
-
 def _text_layout(
     spark: SparkSession, sf_dir: str, table: str, cols: list[str], fmt: str
 ) -> str:
@@ -235,9 +207,9 @@ def _text_layout(
     schema POSITIONALLY, so serving a stale layout with different/
     reordered columns would silently mis-assign values, not error."""
     spec = hashlib.md5(",".join(cols).encode()).hexdigest()[:6]
-    tag = f"{_dir_tag(sf_dir, table)}_{spec}"
-    out = os.path.join(tempfile.gettempdir(), f"sss_{fmt}_{table}_{tag}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    out = f"{cache_dir(f'sss_{fmt}_{table}', sf_dir, table)}_{spec}"
+
+    def fill() -> None:
         w = load_table(spark, sf_dir, table).select(*cols).write.mode("overwrite")
         if fmt == "csv":
             w.option("header", True).csv(out)
@@ -247,6 +219,8 @@ def _text_layout(
             w.format("xml").option("rowTag", "row").save(out)
         else:
             w.json(out)
+
+    fill_once(out, fill)
     return out
 
 
@@ -323,12 +297,14 @@ def pyds_documents_layout(spark: SparkSession, sf_dir: str) -> str:
     """documents laid out once as a 4-file parquet directory (content-
     fingerprint cached like the other layouts) — the multi-split substrate
     for both the batch and streaming custom Python data source keys."""
-    tag = _dir_tag(sf_dir, "documents")
-    out = os.path.join(tempfile.gettempdir(), f"sss_pyds_documents_{tag}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        load_table(spark, sf_dir, "documents").repartition(4).write.mode(
-            "overwrite"
-        ).parquet(out)
+    out = cache_dir("sss_pyds_documents", sf_dir, "documents")
+    fill_once(
+        out,
+        lambda: load_table(spark, sf_dir, "documents")
+        .repartition(4)
+        .write.mode("overwrite")
+        .parquet(out),
+    )
     return out
 
 
@@ -374,11 +350,10 @@ def scan_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def jsonl_sink_path(sf_dir: str) -> str:
     """THE cache location for write_python_datasource's sink output — a
-    single definition shared with scripts/scale_probe.py, whose timing
-    depends on DELETING this exact path before a run (a drifted copy
-    would silently time a cached no-op instead of the write)."""
-    tag = _dir_tag(sf_dir, "documents")
-    return os.path.join(tempfile.gettempdir(), f"sss_jsonlsink_documents_{tag}")
+    single definition shared with ``sink_cache_paths``, whose callers'
+    timing depends on DELETING this exact path before a run (a drifted
+    copy would silently time a cached no-op instead of the write)."""
+    return cache_dir("sss_jsonlsink_documents", sf_dir, "documents")
 
 
 @query(
@@ -405,15 +380,15 @@ def write_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pyds.register(spark)
     out = jsonl_sink_path(sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", "source", "n_chars")
-            .write.format("sss_jsonl")
-            .mode("overwrite")
-            .option("path", out)
-            .save()
-        )
+    fill_once(
+        out,
+        lambda: load_table(spark, sf_dir, "documents")
+        .select("doc_id", "source", "n_chars")
+        .write.format("sss_jsonl")
+        .mode("overwrite")
+        .option("path", out)
+        .save(),
+    )
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
@@ -524,9 +499,9 @@ def scan_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-line stats aggregated by token-count bucket. The oracle computes
     the same stats from the documents view, so the H-check proves the
     text write→read cycle preserves every character of every line."""
-    tag = _dir_tag(sf_dir, "documents")
-    out = os.path.join(tempfile.gettempdir(), f"sss_text_documents_{tag}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    out = cache_dir("sss_text_documents", sf_dir, "documents")
+
+    def fill() -> None:
         docs = load_table(spark, sf_dir, "documents").select("text")
         n_bad = docs.filter(
             F.col("text").contains("\n") | F.col("text").contains("\r")
@@ -537,6 +512,8 @@ def scan_text(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "layout would silently split them; use JSON/parquet"
             )
         docs.write.mode("overwrite").text(out)
+
+    fill_once(out, fill)
     back = spark.read.text(out)
     toks = F.size(F.split(F.col("value"), " "))
     return (
@@ -701,9 +678,9 @@ def dirty_json_layout(spark: SparkSession, sf_dir: str) -> str:
     """orders projected to (key, status, price) as JSON lines, with rows
     matching the modular rule truncated mid-object (guaranteed
     unparseable). Written once per (sf_dir, orders content)."""
-    tag = _dir_tag(sf_dir, "orders")
-    out = os.path.join(tempfile.gettempdir(), f"sss_dirty_json_orders_{tag}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    out = cache_dir("sss_dirty_json_orders", sf_dir, "orders")
+
+    def fill() -> None:
         o = load_table(spark, sf_dir, "orders")
         line = F.to_json(
             F.struct("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -714,6 +691,8 @@ def dirty_json_layout(spark: SparkSession, sf_dir: str) -> str:
             corrupt,
         ).otherwise(line)
         o.select(dirty.alias("value")).write.mode("overwrite").text(out)
+
+    fill_once(out, fill)
     return out
 
 
@@ -721,9 +700,9 @@ def dirty_csv_layout(spark: SparkSession, sf_dir: str) -> str:
     """customer projected to (key, segment, acctbal) as headerless CSV,
     with rows matching the modular rule carrying 'N/A' in the DOUBLE
     acctbal field (type-malformed under an explicit schema)."""
-    tag = _dir_tag(sf_dir, "customer")
-    out = os.path.join(tempfile.gettempdir(), f"sss_dirty_csv_customer_{tag}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    out = cache_dir("sss_dirty_csv_customer", sf_dir, "customer")
+
+    def fill() -> None:
         c = load_table(spark, sf_dir, "customer")
         bal = F.when(
             F.col("c_custkey") % _CSV_BAD_MOD == _CSV_BAD_RES, F.lit("N/A")
@@ -736,6 +715,8 @@ def dirty_csv_layout(spark: SparkSession, sf_dir: str) -> str:
                 bal,
             ).alias("value")
         ).write.mode("overwrite").text(out)
+
+    fill_once(out, fill)
     return out
 
 
@@ -886,9 +867,9 @@ def evolved_parquet_layout(spark: SparkSession, sf_dir: str) -> str:
     schemas: v1 (key, status, price) then v2 adding o_orderpriority —
     the additive-column evolution every long-lived dataset accretes.
     Split is deterministic on the key; content-fingerprint cached."""
-    tag = _dir_tag(sf_dir, "orders")
-    out = os.path.join(tempfile.gettempdir(), f"sss_evolved_orders_{tag}")
-    if not os.path.exists(os.path.join(out, "_DONE")):
+    out = cache_dir("sss_evolved_orders", sf_dir, "orders")
+
+    def fill() -> None:
         o = load_table(spark, sf_dir, "orders")
         v1 = o.filter(F.col("o_orderkey") % _EVOLVE_SPLIT_MOD < 2).select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -898,7 +879,8 @@ def evolved_parquet_layout(spark: SparkSession, sf_dir: str) -> str:
         )
         v1.write.mode("overwrite").parquet(os.path.join(out, "v1"))
         v2.write.mode("overwrite").parquet(os.path.join(out, "v2"))
-        open(os.path.join(out, "_DONE"), "w").write("ok")
+
+    fill_once(out, fill)
     return out
 
 
@@ -952,8 +934,7 @@ def dpo_sink_path(sf_dir: str) -> str:
     """write_dynamic_partition_overwrite's sink dir — marker-cached for
     the correctness gate, listed in streaming.queries.sink_cache_paths so
     bench.py times the real two-phase write, not a cached re-read."""
-    tag = _dir_tag(sf_dir, "orders")
-    return os.path.join(tempfile.gettempdir(), f"sss_dpo_orders_{tag}")
+    return cache_dir("sss_dpo_orders", sf_dir, "orders")
 
 
 @query(
@@ -987,7 +968,8 @@ def write_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataF
     out = dpo_sink_path(sf_dir)
     o = load_table(spark, sf_dir, "orders")
     cents = F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-    if not os.path.exists(os.path.join(out, "_DONE")):
+
+    def fill() -> None:
         base = o.select("o_orderkey", cents.alias("cents"), "o_orderstatus")
         base.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
         patch = (
@@ -1001,7 +983,8 @@ def write_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataF
         dynamic = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
         with conf_guard(spark, dynamic):
             patch.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
-        open(os.path.join(out, "_DONE"), "w").write("ok")
+
+    fill_once(out, fill)
     back = spark.read.parquet(out)
     return back.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
@@ -1026,13 +1009,15 @@ _COMPACT_TARGET_BYTES = 4 * 1024 * 1024
 def fragmented_lineitem_layout(spark: SparkSession, sf_dir: str) -> str:
     """lineitem written once as an over-fragmented directory (64 files
     regardless of size) — the 'after a month of micro-batches' state."""
-    tag = _dir_tag(sf_dir, "lineitem")
-    out = os.path.join(tempfile.gettempdir(), f"sss_frag_lineitem_{tag}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_returnflag", "l_extendedprice"
-        )
-        li.repartition(_FRAG_FILES).write.mode("overwrite").parquet(out)
+    out = cache_dir("sss_frag_lineitem", sf_dir, "lineitem")
+    fill_once(
+        out,
+        lambda: load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_returnflag", "l_extendedprice")
+        .repartition(_FRAG_FILES)
+        .write.mode("overwrite")
+        .parquet(out),
+    )
     return out
 
 
@@ -1040,8 +1025,7 @@ def compact_sink_path(sf_dir: str) -> str:
     """maintenance_compact_files' sink dir — marker-cached for the
     correctness gate, listed in sink_cache_paths so bench times the real
     compaction write."""
-    tag = _dir_tag(sf_dir, "lineitem")
-    return os.path.join(tempfile.gettempdir(), f"sss_compact_lineitem_{tag}")
+    return cache_dir("sss_compact_lineitem", sf_dir, "lineitem")
 
 
 @query(
@@ -1072,7 +1056,8 @@ def maintenance_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     only worth it under severe skew, which listing detects first."""
     frag = fragmented_lineitem_layout(spark, sf_dir)
     out = compact_sink_path(sf_dir)
-    if not os.path.exists(os.path.join(out, "_DONE")):
+
+    def fill() -> None:
         total = sum(
             os.path.getsize(os.path.join(frag, f))
             for f in os.listdir(frag)
@@ -1082,7 +1067,8 @@ def maintenance_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.parquet(frag).coalesce(int(n_out)).write.mode(
             "overwrite"
         ).parquet(out)
-        open(os.path.join(out, "_DONE"), "w").write("ok")
+
+    fill_once(out, fill)
     back = spark.read.parquet(out)
     return back.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
@@ -1103,11 +1089,9 @@ def _recursive_layout(spark: SparkSession, sf_dir: str) -> str:
     inherited directory trees."""
     import shutil
 
-    tag = _dir_tag(sf_dir, "orders")
-    root = os.path.join(tempfile.gettempdir(), f"sss_rfl_{tag}")
-    done = os.path.join(root, ".done")
-    if not os.path.exists(done):
-        shutil.rmtree(root, ignore_errors=True)
+    root = cache_dir("sss_rfl", sf_dir, "orders")
+
+    def fill() -> None:
         o = load_table(spark, sf_dir, "orders")
         dests = {
             "F": os.path.join(root, "deep", "f"),
@@ -1131,8 +1115,8 @@ def _recursive_layout(spark: SparkSession, sf_dir: str) -> str:
             os.path.join(dests["F"], "orders_F.parquet"),
             os.path.join(dests["F"], "orders_F.bin"),
         )
-        with open(done, "w") as fh:
-            fh.write("ok")
+
+    fill_once(root, fill)
     return root
 
 
@@ -1181,8 +1165,7 @@ def rebalance_sink_path(sf_dir: str) -> str:
     """maintenance_rebalance's sink dir — marker-cached for the
     correctness gate, listed in sink_cache_paths so bench times the
     real rebalanced write."""
-    tag = _dir_tag(sf_dir, "lineitem")
-    return os.path.join(tempfile.gettempdir(), f"sss_rebal_lineitem_{tag}")
+    return cache_dir("sss_rebal_lineitem", sf_dir, "lineitem")
 
 
 @query(
@@ -1219,11 +1202,13 @@ def maintenance_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebalance shuffle moves each byte once, same as the write itself."""
     frag = fragmented_lineitem_layout(spark, sf_dir)
     out = rebalance_sink_path(sf_dir)
-    if not os.path.exists(os.path.join(out, "_DONE")):
-        spark.read.parquet(frag).hint("rebalance", "l_returnflag").write.mode(
-            "overwrite"
-        ).parquet(out)
-        open(os.path.join(out, "_DONE"), "w").write("ok")
+    fill_once(
+        out,
+        lambda: spark.read.parquet(frag)
+        .hint("rebalance", "l_returnflag")
+        .write.mode("overwrite")
+        .parquet(out),
+    )
     back = spark.read.parquet(out)
     return back.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_rows"),

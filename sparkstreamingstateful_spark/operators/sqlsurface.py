@@ -15,7 +15,7 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import register_views
+from ..catalog import cache_dir, cache_tag, register_views
 from ..registry import query
 
 # last sf_dir whose views were registered, per session (weak-keyed: the
@@ -644,17 +644,13 @@ def sql_ctas_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: CTAS/INSERT are ordinary distributed writes (one narrow scan
     each, no shuffle); the catalog entry is metadata-only."""
-    import os
     import shutil
-    import tempfile
-
-    from .scans import _dir_tag
 
     _views(spark, sf_dir)
-    tag = _dir_tag(sf_dir, "orders").replace(".", "_")
+    tag = cache_tag(sf_dir, "orders").replace(".", "_")
     name = f"sss_ctas_orders_{tag}"
     if not spark.catalog.tableExists(name):
-        loc = os.path.join(tempfile.gettempdir(), f"sss_ctas_{tag}")
+        loc = cache_dir(f"sss_ctas_{tag}")
         shutil.rmtree(loc, ignore_errors=True)
         # The table is "built" only once BOTH statements succeed: if the
         # INSERT dies after the CTAS landed, drop the half-populated

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import cache_tag, load_table
 from ..registry import query
 
 
@@ -669,9 +669,7 @@ def _mk_hourly_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
         import weakref
 
         _HOURLY_SPINE_CACHE = weakref.WeakKeyDictionary()
-    from .scans import _dir_tag
-
-    tag = _dir_tag(sf_dir, "events")
+    tag = cache_tag(sf_dir, "events")
     per_session = _HOURLY_SPINE_CACHE.setdefault(spark, {})
     if tag not in per_session:
         ev = load_table(spark, sf_dir, "events")

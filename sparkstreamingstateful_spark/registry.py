@@ -387,9 +387,9 @@ _KEY_PRIORITY = [
 
 
 def _ordered(d: dict) -> dict:
-    # Tolerant of priority keys whose module didn't import (incremental
-    # milestones — mirrors collect()'s ModuleNotFoundError tolerance);
-    # typos in _KEY_PRIORITY are caught by tests/test_inventory.py instead.
+    # A priority key can be missing from ``d``: the rows-only key
+    # (sample_seeded) has no oracle. Typos in _KEY_PRIORITY are caught by
+    # tests/test_inventory.py.
     pri = {k: d[k] for k in _KEY_PRIORITY if k in d}
     rest = {k: v for k, v in d.items() if k not in pri}
     return {**pri, **rest}
@@ -397,11 +397,8 @@ def _ordered(d: dict) -> dict:
 
 def collect() -> tuple[dict[str, QueryFn], dict[str, str]]:
     """Import all operator modules (idempotent) and return the inventory,
-    highest-evidence-value keys first (see _KEY_PRIORITY)."""
+    highest-evidence-value keys first (see _KEY_PRIORITY). A module that
+    fails to import raises: a skipped module would silently drop its keys."""
     for mod in _MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError:
-            # Module not built yet (incremental milestones) — skip.
-            pass
+        importlib.import_module(mod)
     return _ordered(_QUERIES), _ordered(_ORACLES)

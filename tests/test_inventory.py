@@ -296,3 +296,29 @@ def test_only_the_runner_starts_streams():
         and node.attr in ("writeStream", "awaitTermination")
     ]
     assert not hits, f"streams started outside streaming/runner.py: {hits}"
+
+
+def test_only_the_catalog_builds_cache_paths():
+    """Every content-keyed cache takes its path from ``catalog.cache_dir``:
+    no other module of the package may call ``gettempdir``. Checked on
+    the AST, because docstrings mention it."""
+    import ast
+    import pathlib
+
+    import sparkstreamingstateful_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    catalog = root / "catalog.py"
+    hits = [
+        f"{path.relative_to(root)}:{node.lineno}"
+        for path in sorted(root.rglob("*.py"))
+        if path != catalog
+        for node in ast.walk(ast.parse(path.read_text()))
+        if (isinstance(node, ast.Attribute) and node.attr == "gettempdir")
+        or (isinstance(node, ast.Name) and node.id == "gettempdir")
+        or (
+            isinstance(node, ast.ImportFrom)
+            and any(a.name == "gettempdir" for a in node.names)
+        )
+    ]
+    assert not hits, f"gettempdir outside catalog.py: {hits}"

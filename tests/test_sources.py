@@ -306,3 +306,67 @@ def test_compaction_reduces_files(spark):
     assert n_out < n_frag  # the point of the exercise
     n_src = spark.read.parquet(frag).count()
     assert spark.read.parquet(out).count() == n_src
+
+
+def test_fill_once_contract(tmp_path):
+    """catalog.fill_once, the one completion contract of every cached
+    output: a marked dir is kept, a partial dir is wiped before the fill,
+    and a fill that raises leaves no marker, so the next call refills."""
+    import os
+
+    from sparkstreamingstateful_spark.catalog import fill_once
+
+    out = tmp_path / "cache"
+    fills = []
+
+    def fill():
+        fills.append(1)
+        (out / "part-0").write_text("data")
+
+    def listing():
+        return sorted(os.listdir(out))
+
+    assert fill_once(str(out), fill)
+    assert listing() == ["_DONE", "part-0"]
+    # a marked dir is not refilled
+    assert not fill_once(str(out), fill)
+    assert len(fills) == 1
+    # a partial dir holding a stray file is wiped before the fill
+    (out / "_DONE").unlink()
+    (out / "stray").write_text("from a dead attempt")
+    assert fill_once(str(out), fill)
+    assert listing() == ["_DONE", "part-0"]
+
+    # a fill that raises leaves no marker; the next call refills
+    def dies():
+        (out / "half").write_text("half-written")
+        raise RuntimeError("fill died")
+
+    (out / "_DONE").unlink()
+    with pytest.raises(RuntimeError, match="fill died"):
+        fill_once(str(out), dies)
+    assert "_DONE" not in listing()
+    assert fill_once(str(out), fill)
+    assert listing() == ["_DONE", "part-0"]
+
+
+def test_skewed_fact_layout_wipes_partial(tmp_path, monkeypatch):
+    """A real batch layout site under the same contract: a layout dir
+    without its marker is a partial attempt, so a stray file in it is
+    gone after the rebuild instead of being read as part of the fact."""
+    import os
+    import tempfile
+
+    from sparkstreamingstateful_spark.operators import joins
+
+    from .conftest import SF_UNIT
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out = joins._skewed_fact_layout(SF_UNIT)
+    assert out.startswith(str(tmp_path))
+    built = sorted(os.listdir(out))
+    os.remove(os.path.join(out, "_DONE"))
+    with open(os.path.join(out, "9999.parquet"), "w") as f:
+        f.write("stray")
+    assert joins._skewed_fact_layout(SF_UNIT) == out
+    assert sorted(os.listdir(out)) == built
