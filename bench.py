@@ -17,16 +17,28 @@ counts).
 
 Protocol (BASELINE.md): local[$SPARK_GRAFT_CPUS], AQE on, one warm-up of the
 flagship, then one timed run per registered query (action = noop-format
-write: full physical plan executes, no rows cross Py4J — see run()).
+write: full physical plan executes, no rows cross Py4J — see
+measure_key()).
+
+Each key's layers land in bench_layers.json next to bench_full.json, one
+flat record per key built from Spark's own signals by perfbench.parsers:
+``wall_s``, ``engine.*`` (jobs, stages, tasks, executor run/CPU/GC time,
+shuffle, spill, Python bytes, driver gap) from the event log, whose jobs
+carry the key as their tag, and for a key that ran a stream its
+``runner.*``/``state.*`` numbers and per-batch ``trigger_ms`` from
+StreamingQueryProgress. scripts/key_probe.py measures through the same
+functions.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
 import subprocess
 import sys
+import tempfile
 import time
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
@@ -43,9 +55,117 @@ os.environ["PYTHONPATH"] = (
     else _REPO
 )
 
+from perfbench.parsers import (
+    TAG_PROPERTY,
+    engine_summary,
+    parse_event_log,
+    summarize_progress,
+)
 from sparkstreamingstateful_spark import registry
 from sparkstreamingstateful_spark.session import get_spark
+from sparkstreamingstateful_spark.streaming import runner
 from sparkstreamingstateful_spark.streaming.queries import sink_cache_paths
+
+
+@contextlib.contextmanager
+def open_session(app_name: str):
+    """The bench session, with Spark's event log written uncompressed into
+    a temp dir that is deleted on exit, also when a key errors. Yields
+    ``(spark, log_dir)``; stop the session before reading the log, so
+    every event is on disk. The event-log confs are static, so they
+    reach the JVM through PYSPARK_SUBMIT_ARGS before it starts, ahead of
+    whatever submit args were already set (``--driver-memory`` etc.)."""
+    log_dir = tempfile.mkdtemp(prefix="sss_eventlog_")
+    try:
+        confs = {
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.compress": "false",
+            # one file: Spark 4 otherwise rolls it into events_<n> parts
+            "spark.eventLog.rolling.enabled": "false",
+            "spark.eventLog.dir": "file://" + log_dir,
+        }
+        os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
+            [f"--conf {k}={v}" for k, v in confs.items()]
+            + [os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")]
+        )
+        spark = get_spark(app_name=app_name)
+        spark.sparkContext.setLogLevel("ERROR")
+        yield spark, log_dir
+    finally:
+        shutil.rmtree(log_dir)
+
+
+def warm_up(spark, queries, sf_dir: str) -> None:
+    """Warm the JVM, codegen and parquet footer caches, then wipe the
+    completion-marker-cached sink dirs (catalog.fill_once). Those exist
+    for the correctness gate's repeated executions; a benchmark must
+    never time the cached no-op re-read in their place (the exact
+    weakness VERDICT r6 flagged on the jsonl sink), so every run —
+    including runs 2 and 3 of the median-of-3 protocol — times the real
+    sink. A wipe that fails stops the run."""
+    queries["agg_hash_q1"](spark, sf_dir).collect()
+    wipe_sink_caches(sf_dir)
+
+
+def wipe_sink_caches(sf_dir: str) -> None:
+    for p in sink_cache_paths(sf_dir):
+        if os.path.exists(p):
+            shutil.rmtree(p)
+
+
+def measure_key(spark, tag: str, fn, sf_dir: str) -> tuple[float, list | None]:
+    """Run one key under ``tag`` and time it. Returns its wall seconds and
+    the ``StreamingQueryProgress`` list of the stream it ran, or None
+    when it ran none; a key's error propagates.
+
+    Every job the key runs carries ``tag`` (a local property, which
+    micro-batch jobs inherit, and the job description), so the event log
+    attributes them. The action is a noop-format write: it executes the
+    complete physical plan (scan → shuffle → agg/join/sort) but moves no
+    rows to Python. Py4J row transfer is driver-environment overhead,
+    not engine work, and it added up to 15× run-to-run noise on large
+    outputs (measured: join_multikey 5.9 s solo vs 98 s in a suite run,
+    identical plan). The runner rebinds LAST_QUERY_PROGRESS
+    for every stream, so an unchanged object means no stream ran here
+    and a batch key never inherits the previous key's batches."""
+    sc = spark.sparkContext
+    sc.setLocalProperty(TAG_PROPERTY, tag)
+    sc.setJobDescription(tag)
+    before = runner.LAST_QUERY_PROGRESS
+    try:
+        t0 = time.perf_counter()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        wall_s = round(time.perf_counter() - t0, 3)
+    finally:
+        sc.setLocalProperty(TAG_PROPERTY, None)
+        sc.setJobDescription(None)
+    progress = runner.LAST_QUERY_PROGRESS
+    return wall_s, (progress if progress is not before else None)
+
+
+def read_event_log(log_dir: str):
+    """Every event of the (stopped) session's event log, decoded."""
+    for name in sorted(os.listdir(log_dir)):
+        with open(os.path.join(log_dir, name)) as f:
+            for line in f:
+                yield json.loads(line)
+
+
+def layer_records(events, runs: dict) -> dict:
+    """One flat record per tag of ``runs`` (``{tag: (wall_s, progress)}``):
+    ``wall_s``, the ``engine.*`` numbers of the jobs ``events`` tagged
+    with it, and for a tag that ran a stream its ``runner.*`` and
+    ``state.*`` numbers plus the per-batch ``trigger_ms`` list."""
+    engine = parse_event_log(events)
+    out = {}
+    for tag, (wall_s, progress) in runs.items():
+        rec = {"wall_s": wall_s}
+        if tag in engine:
+            rec.update(engine_summary(engine[tag], wall_s))
+        if progress is not None:
+            rec.update(summarize_progress(progress))
+        out[tag] = rec
+    return out
 
 
 def previous_table() -> dict:
@@ -101,46 +221,39 @@ def top_movers(
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     queries, _ = registry.collect()
-    spark = get_spark(app_name="sss-spark-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # Warm-up: JVM / codegen / parquet footer caches.
-    queries["agg_hash_q1"](spark, sf_dir).collect()
-
-    # Completion-marker-cached sink dirs (catalog.fill_once) exist for the
-    # correctness gate's repeated executions; a benchmark must never time
-    # the cached no-op re-read in their place (the exact weakness VERDICT
-    # r6 flagged on the jsonl sink). Wipe them so every run — including
-    # runs 2 and 3 of the median-of-3 protocol — times the real sink; a
-    # wipe that fails stops the run.
-    for p in sink_cache_paths(sf_dir):
-        if os.path.exists(p):
-            shutil.rmtree(p)
-
-    def run(df) -> None:
-        # noop sink: executes the complete physical plan (scan → shuffle →
-        # agg/join/sort) but transfers no rows to Python. Py4J row transfer
-        # is driver-environment overhead, not engine work, and on this VM
-        # it adds up to 15× run-to-run noise on large outputs (measured:
-        # join_multikey 5.9 s solo vs 98 s in a suite run, identical plan).
-        df.write.format("noop").mode("overwrite").save()
-
-    # Previous round's per-key table (for the top_movers line below),
-    # read BEFORE this run overwrites bench_full.json, so the deltas are
-    # the round-over-round per-query comparison (VERDICT r18 item 2).
-    prev = previous_table()
-    cpus = spark.sparkContext.defaultParallelism
-
-    timings: dict[str, float] = {}
-    for key in sorted(queries):
+    with open_session("sss-spark-bench") as (spark, log_dir):
+        # Previous round's per-key table (for the top_movers line below),
+        # read BEFORE this run overwrites bench_full.json, so the deltas
+        # are the round-over-round per-query comparison (VERDICT r18
+        # item 2).
+        prev = previous_table()
+        cpus = spark.sparkContext.defaultParallelism
+        warm_up(spark, queries, sf_dir)
+        runs: dict[str, tuple[float, list | None]] = {}
+        for key in sorted(queries):
+            try:
+                runs[key] = measure_key(spark, key, queries[key], sf_dir)
+            except Exception as exc:  # record, don't abort the suite
+                runs[key] = (-1.0, None)
+                print(f"# bench error {key}: {exc}", file=sys.stderr)
+        timings = {key: wall_s for key, (wall_s, _) in runs.items()}
+        report(timings, prev, cpus, sf_dir)
+        spark.stop()
         t0 = time.perf_counter()
-        try:
-            run(queries[key](spark, sf_dir))
-            timings[key] = round(time.perf_counter() - t0, 3)
-        except Exception as exc:  # record, don't abort the suite
-            timings[key] = -1.0
-            print(f"# bench error {key}: {exc}", file=sys.stderr)
+        layers = layer_records(read_event_log(log_dir), runs)
+        log_mb = sum(
+            os.path.getsize(os.path.join(log_dir, n)) for n in os.listdir(log_dir)
+        ) / 2**20
+        print(f"# event log: {log_mb:.1f} MB parsed in "
+              f"{time.perf_counter() - t0:.1f} s", file=sys.stderr)
+    # Per-key layers next to bench_full.json: wall, engine.* from the
+    # tagged jobs, and runner.*/state.* for the keys that ran a stream.
+    with open(os.path.join(_REPO, "bench_layers.json"), "w") as f:
+        json.dump(layers, f, indent=1, sort_keys=True)
 
+
+def report(timings: dict, prev: dict, cpus: int, sf_dir: str) -> None:
+    """Print the three stdout lines and persist bench_full.json."""
     total = round(sum(t for t in timings.values() if t >= 0), 3)
 
     # Dict insertion order is deliberate: the driver's BENCH_r* capture
@@ -220,12 +333,10 @@ def main() -> None:
     # truncates the alphabetically-early keys (agg_*, dedup_*, embed_*) —
     # persist the complete per-key table so the flagship numbers survive.
     try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "bench_full.json"), "w") as f:
+        with open(os.path.join(_REPO, "bench_full.json"), "w") as f:
             json.dump(payload, f, indent=1, sort_keys=True)
     except OSError as exc:
         print(f"# bench_full.json not written: {exc}", file=sys.stderr)
-    spark.stop()
 
 
 if __name__ == "__main__":

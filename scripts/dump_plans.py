@@ -14,7 +14,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from sparkstreamingstateful_spark import registry
 from sparkstreamingstateful_spark.plans import executed_plan, shuffle_count
-from sparkstreamingstateful_spark.session import get_spark
+from sparkstreamingstateful_spark.session import conf_guard, get_spark
 
 SF = "/root/testdata/sf0.01"
 
@@ -272,16 +272,9 @@ def main() -> None:
         skew_join_frame,
     )
 
-    confs = _skew_confs(spark, SF)
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with conf_guard(spark, _skew_confs(spark, SF)):
         df = skew_join_frame(spark, SF)
         plan = executed_plan(df, execute=True)
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v) if v is not None else spark.conf.unset(k)
     out.append(
         "## join_skew_aqe\n\n*AQE runtime skew split (r10): the hot "
         "fact partition (~80% of rows on one key) is carved into "
@@ -300,16 +293,10 @@ def main() -> None:
         bloom_join_frame,
     )
 
-    prev = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    try:
-        for k, v in _BLOOM_CONFS.items():
-            spark.conf.set(k, v)
+    with conf_guard(spark, _BLOOM_CONFS):
         bdf = bloom_join_frame(spark, SF)
         bplan = bdf._jdf.queryExecution().optimizedPlan().toString()
         bshuffles = shuffle_count(bdf)
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v) if v is not None else spark.conf.unset(k)
     out.append(
         "## join_bloom_runtime_filter\n\n*runtime bloom-filter join "
         "pruning (r10): InjectRuntimeFilter wraps the fact scan in "

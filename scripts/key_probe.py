@@ -1,10 +1,13 @@
 """Per-key A/B measurement probe for optimization work.
 
-Times individual registered keys with the bench's exact methodology
-(noop sink, same session factory) N times each in one session, so a
-candidate optimization can be judged per-key without the ±35% suite-
-level VM drift: run `--n 5`, compare medians, and trust only deltas
-that clear the run-to-run spread printed alongside.
+Runs individual registered keys N times each in one session through
+bench.py's own session opener and per-key function (same warm-up, sink
+wipe, noop write, job tag and layered record), so a candidate
+optimization can be judged per-key without the ±35% suite-level VM
+drift: run `--n 5`, compare medians, and trust only deltas that clear
+the run-to-run spread printed alongside. The RESULT line carries each
+run's bench_layers.json-shaped record (engine.*, and runner.*/state.*
+for stream keys), so a moved key also shows which layer moved.
 
 Also dumps `.explain("formatted")` per key when `--plan-dir` is given
 (the OPTIMIZATION_r* before/after plan evidence).
@@ -20,22 +23,13 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import shutil
 import statistics
 import sys
-import time
 
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, _REPO)
-os.environ["PYTHONPATH"] = (
-    _REPO + os.pathsep + os.environ["PYTHONPATH"]
-    if os.environ.get("PYTHONPATH")
-    else _REPO
-)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from sparkstreamingstateful_spark import registry
-from sparkstreamingstateful_spark.session import get_spark
-from sparkstreamingstateful_spark.streaming.queries import sink_cache_paths
+import bench  # noqa: E402  (exports PYTHONPATH for the Python workers)
+from sparkstreamingstateful_spark import registry  # noqa: E402
 
 
 def main() -> None:
@@ -53,45 +47,40 @@ def main() -> None:
         if k not in queries:
             sys.exit(f"unknown key: {k}")
 
-    spark = get_spark(app_name="sss-key-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    # Same warm-up as bench.py (JVM / codegen / parquet footers).
-    queries["agg_hash_q1"](spark, args.sf).collect()
-
-    # Keys whose sinks are completion-marker cached must re-run the real
-    # sink every iteration, exactly as bench.py wipes them per suite run.
     out: dict[str, dict] = {}
+    runs: dict[str, tuple[float, list | None]] = {}
+    with bench.open_session("sss-key-probe") as (spark, log_dir):
+        bench.warm_up(spark, queries, args.sf)
+        for k in keys:
+            # Marker-cached sinks must re-run the real sink every time.
+            for i in range(args.n):
+                bench.wipe_sink_caches(args.sf)
+                runs[f"{k}#{i}"] = bench.measure_key(
+                    spark, f"{k}#{i}", queries[k], args.sf
+                )
+            times = [runs[f"{k}#{i}"][0] for i in range(args.n)]
+            out[k] = {
+                "runs": times,
+                "median": round(statistics.median(times), 3),
+                "min": min(times),
+                "max": max(times),
+            }
+            print(json.dumps({k: out[k]}), flush=True)
+            if args.plan_dir:
+                os.makedirs(args.plan_dir, exist_ok=True)
+                df = queries[k](spark, args.sf)
+                mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                    "formatted"
+                )
+                plan = df._jdf.queryExecution().explainString(mode)
+                with open(
+                    os.path.join(args.plan_dir, f"{k}_{args.tag}.txt"), "w"
+                ) as f:
+                    f.write(plan)
+        spark.stop()
+        layers = bench.layer_records(bench.read_event_log(log_dir), runs)
     for k in keys:
-        times = []
-        for i in range(args.n):
-            for p in sink_cache_paths(args.sf):
-                if os.path.exists(p):
-                    shutil.rmtree(p)
-            spark.sparkContext.setJobDescription(f"probe:{k}#{i}")
-            t0 = time.perf_counter()
-            df = queries[k](spark, args.sf)
-            df.write.format("noop").mode("overwrite").save()
-            times.append(round(time.perf_counter() - t0, 3))
-        spark.sparkContext.setJobDescription(None)
-        out[k] = {
-            "runs": times,
-            "median": round(statistics.median(times), 3),
-            "min": min(times),
-            "max": max(times),
-        }
-        print(json.dumps({k: out[k]}), flush=True)
-        if args.plan_dir:
-            os.makedirs(args.plan_dir, exist_ok=True)
-            df = queries[k](spark, args.sf)
-            mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-            plan = df._jdf.queryExecution().explainString(mode)
-            with open(
-                os.path.join(args.plan_dir, f"{k}_{args.tag}.txt"), "w"
-            ) as f:
-                f.write(plan)
-
+        out[k]["layers"] = [layers[f"{k}#{i}"] for i in range(args.n)]
     print("RESULT " + json.dumps(out))
 
 

@@ -21,8 +21,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Confs we rely on that are runtime-settable. Applied defensively to any
-# session that reaches the engine (ours or the driver's).
+# Confs we rely on that are runtime-settable. Applied to any session that
+# reaches the engine (ours or the driver's).
 RUNTIME_CONFS: dict[str, str] = {
     # events.parquet carries timestamp[ns]; Spark 4 rejects it outright
     # unless read as long nanos (we convert to micros in catalog.load_table,
@@ -52,13 +52,11 @@ RUNTIME_CONFS: dict[str, str] = {
 
 
 def configure(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to an existing session (idempotent, cheap)."""
+    """Apply runtime confs to an existing session (idempotent, cheap).
+    A conf that fails to set raises: running on without nanosAsLong, UTC
+    or the RocksDB state store would silently change results."""
     for k, v in RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            # A conf may be static on some builds; the factory path covers it.
-            pass
+        spark.conf.set(k, v)
     return spark
 
 
@@ -116,12 +114,6 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        # RocksDB state store: required for transformWithStateInPandas and
-        # the right default for large stateful streaming state (SURVEY §4.2).
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

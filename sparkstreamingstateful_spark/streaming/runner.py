@@ -27,7 +27,7 @@ from ..session import conf_guard
 
 # Progress snapshots of the most recent stream (list of per-micro-batch
 # progress dicts, driver-side metadata only — a few KB). Tests, perfbench
-# and scripts/stream_probe.py read state-operator metrics from here (e.g.
+# and bench.py's per-key record read state-operator metrics from here (e.g.
 # asserting dropDuplicatesWithinWatermark actually EVICTS state rows)
 # without the queries having to thread a query handle through their
 # return value.

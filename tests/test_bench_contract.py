@@ -6,12 +6,15 @@ under 1 KB so both land inside the driver's 2000-char tail capture.
 """
 
 import json
+import shutil
 import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import bench  # noqa: E402
+
+FIXTURES = Path(__file__).resolve().parents[1] / "perfbench" / "tests" / "fixtures"
 
 
 def test_top_movers_payload():
@@ -52,3 +55,29 @@ def test_top_movers_line_under_1kb():
     m = bench.top_movers(prev, now)
     assert len(m["movers"]) == 10
     assert len(json.dumps(m)) < 1000
+
+
+def test_layer_records_from_recorded_signals(tmp_path):
+    # The recorded event log tags its jobs fx:p1:<key>; progress.json holds
+    # both keys' batches. Tumbling is fed as if it ran no stream, so its
+    # record must carry engine numbers only.
+    shutil.copy(FIXTURES / "eventlog.jsonl", tmp_path / "local-1")
+    with open(FIXTURES / "progress.json") as f:
+        progress = json.load(f)
+    runs = {
+        "fx:p1:stream_window_tumbling": (2.0, None),
+        "fx:p1:stateful_sessionize_tws": (9.0, progress["stateful_sessionize_tws"]),
+    }
+    recs = bench.layer_records(bench.read_event_log(str(tmp_path)), runs)
+    assert set(recs) == set(runs)
+    for tag, rec in recs.items():
+        assert rec["wall_s"] == runs[tag][0]
+        assert rec["engine.jobs"] >= 1 and rec["engine.cpu_s"] > 0
+    tumbling = recs["fx:p1:stream_window_tumbling"]
+    assert tumbling["engine.jobs"] == 2
+    assert not [k for k in tumbling if k.split(".")[0] in ("runner", "state")]
+    assert "trigger_ms" not in tumbling
+    tws = recs["fx:p1:stateful_sessionize_tws"]
+    assert tws["engine.jobs"] == 1
+    assert tws["runner.batches"] == len(progress["stateful_sessionize_tws"])
+    assert len(tws["trigger_ms"]) == tws["runner.batches"]

@@ -322,3 +322,29 @@ def test_only_the_catalog_builds_cache_paths():
         )
     ]
     assert not hits, f"gettempdir outside catalog.py: {hits}"
+
+
+def test_one_progress_parser():
+    """StreamingQueryProgress is parsed in one place,
+    ``perfbench.parsers.summarize_progress``: no .py file of bench.py,
+    scripts/ or the package may hold the ``"durationMs"`` string literal
+    a second parser would need. Checked on the AST, because comments and
+    docstrings may name the field."""
+    import ast
+    import pathlib
+
+    import sparkstreamingstateful_spark as pkg
+
+    repo = pathlib.Path(pkg.__file__).parent.parent
+    paths = [
+        repo / "bench.py",
+        *sorted((repo / "scripts").rglob("*.py")),
+        *sorted(pathlib.Path(pkg.__file__).parent.rglob("*.py")),
+    ]
+    hits = [
+        f"{path.relative_to(repo)}:{node.lineno}"
+        for path in paths
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Constant) and node.value == "durationMs"
+    ]
+    assert not hits, f"second progress parser: {hits}"

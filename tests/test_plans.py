@@ -5,6 +5,7 @@ answer, is part of the contract — these guard the 100 TB posture claims
 from __future__ import annotations
 
 from sparkstreamingstateful_spark import registry
+from sparkstreamingstateful_spark.session import conf_guard
 
 from .conftest import SF_UNIT
 
@@ -230,16 +231,9 @@ def test_skew_join_plan(spark):
     )
     from sparkstreamingstateful_spark.plans import executed_plan
 
-    confs = _skew_confs(spark, SF_UNIT)
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with conf_guard(spark, _skew_confs(spark, SF_UNIT)):
         df = skew_join_frame(spark, SF_UNIT)
         plan = executed_plan(df, execute=True)
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v) if v is not None else spark.conf.unset(k)
     assert "skew=true" in plan, "OptimizeSkewedJoin did not split the hot partition"
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
 
@@ -270,15 +264,9 @@ def test_bloom_runtime_filter_plan(spark):
         bloom_join_frame,
     )
 
-    prev = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    try:
-        for k, v in _BLOOM_CONFS.items():
-            spark.conf.set(k, v)
+    with conf_guard(spark, _BLOOM_CONFS):
         df = bloom_join_frame(spark, SF_UNIT)
         plan = df._jdf.queryExecution().optimizedPlan().toString()
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v) if v is not None else spark.conf.unset(k)
     assert "bloom_filter_agg" in plan, "runtime bloom filter not injected"
     assert "might_contain" in plan
 

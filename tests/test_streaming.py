@@ -632,7 +632,7 @@ def test_progress_belongs_to_last_query(spark):
     """runner.LAST_QUERY_PROGRESS describes the stream that ran last, also
     when that stream has its own sink: after a memory-sink key, the
     foreachBatch top-k key must leave ITS batches there, not the earlier
-    key's (perfbench and scripts/stream_probe.py read this list)."""
+    key's (perfbench and bench.py's per-key record read this list)."""
     from sparkstreamingstateful_spark.streaming import runner
 
     QUERIES["stream_window_tumbling"](spark, SF_UNIT)
@@ -640,6 +640,21 @@ def test_progress_belongs_to_last_query(spark):
     QUERIES["stream_topk_per_window"](spark, SF_UNIT)
     sinks = {p["sink"]["description"] for p in runner.LAST_QUERY_PROGRESS}
     assert sinks and all("ForeachBatch" in d for d in sinks), sinks
+
+
+def test_bench_record_keeps_only_its_own_stream(spark):
+    """bench.measure_key hands back a key's progress only when that key
+    ran a stream: a batch key right after a stream key must not inherit
+    the stream's batches, and the job tag is cleared afterwards."""
+    import bench
+
+    _, progress = bench.measure_key(
+        spark, "t:stream", QUERIES["stream_window_tumbling"], SF_UNIT
+    )
+    assert progress
+    _, progress = bench.measure_key(spark, "t:batch", QUERIES["agg_hash_q1"], SF_UNIT)
+    assert progress is None
+    assert spark.sparkContext.getLocalProperty(bench.TAG_PROPERTY) is None
 
 
 def test_runner_guards_hold_on_every_path(spark):
