@@ -181,8 +181,9 @@ def events_ts_unit(path: str) -> str:
             # regenerated chunks would be silently read under one schema
             # and skew downstream, so reject mixed units loudly instead.
             # (Checked once per path per process — the verdict is cached
-            # below; the feeder never mutates a dir after creating it, so
-            # first-read validation is the meaningful window.)
+            # below; a feed is complete once it holds ``_DONE`` and
+            # fill_once never touches a complete dir again, so first-read
+            # validation is the meaningful window.)
             member_types = [pq.read_schema(m).field("ts").type for m in members]
             if len({str(t_) for t_ in member_types}) > 1:
                 raise TypeError(

@@ -235,41 +235,35 @@ def _events_columns(sf_dir: str) -> tuple[dict[str, list], int]:
 
 
 def _proto_blob_feed(sf_dir: str) -> str:
-    """Chunked protobuf-blob feed for the streaming decode key, cached per
-    content fingerprint (the derived-layout discipline): the events table
-    sliced into feeder.DEFAULT_CHUNKS row-order chunks, each encoded
-    driver-side into ONE delimited proto3 blob row — exactly the shape a
-    Kafka topic hands a consumer (one binary value per record batch),
-    replayed as one micro-batch per file via mtime ordering."""
+    """Chunked protobuf-blob feed for the streaming decode key, written
+    by the feeder's one writer: the events table sliced into
+    feeder.DEFAULT_CHUNKS row-order chunks, each encoded driver-side into
+    ONE delimited proto3 blob row — exactly the shape a Kafka topic hands
+    a consumer (one binary value per record batch), replayed as one
+    micro-batch per file."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    from ..streaming.feeder import DEFAULT_CHUNKS
+    from ..streaming.feeder import DEFAULT_CHUNKS, cached_feed
 
-    out = cache_dir("sss_protoblobs", sf_dir, "events")
-
-    def fill() -> None:
+    def build() -> list[pa.Table]:
         wire = _load_wire()
         cols, n = _events_columns(sf_dir)
-        base = 1_600_000_000
+        tables = []
         for i in range(DEFAULT_CHUNKS):
             lo, hi = i * n // DEFAULT_CHUNKS, (i + 1) * n // DEFAULT_CHUNKS
             chunk = {k: v[lo:hi] for k, v in cols.items()}
             blob = _encode_delimited(wire, chunk, hi - lo)
-            path = os.path.join(out, f"{i:04d}.parquet")
-            pq.write_table(
+            tables.append(
                 pa.table(
                     {
                         "blob": pa.array([blob], pa.binary()),
                         "n_msgs": pa.array([hi - lo], pa.int64()),
                     }
-                ),
-                path,
+                )
             )
-            os.utime(path, (base + i, base + i))
+        return tables
 
-    fill_once(out, fill)
-    return out
+    return cached_feed("sss_protoblobs", sf_dir, "events", build)
 
 
 @query(

@@ -2,6 +2,9 @@
 streaming file source replays them as K micro-batches
 (``maxFilesPerTrigger=1``), preserving global event-time order.
 
+Every feed is a ``catalog.fill_once`` cache under ``catalog.cache_dir``
+(keyed by the source table's content), written by ``cached_feed`` alone.
+
 Variants:
 
 * ``sentinels=True`` appends ONE far-future marker event (user_id=-1).
@@ -11,10 +14,7 @@ Variants:
   micro-batch that ``availableNow`` runs after the last file (watermark
   changed + stateful ops pending ⇒ ``noDataMicroBatches``, on by
   default and asserted by the runner before every stream starts) then
-  evicts/times-out all remaining real state. (r1–r4 used TWO sentinels
-  — the second existed only to host that final batch; the flush batch
-  provides it for free, one micro-batch cheaper per sentinel feed —
-  verified against all watermark-dependent oracles at sf0.01.) Queries must NOT filter
+  evicts/times-out all remaining real state. Queries must NOT filter
   sentinels inside the streaming plan — Catalyst pushes such filters
   below the EventTimeWatermark node and the watermark never advances
   (measured); filter the materialized result instead.
@@ -26,13 +26,17 @@ Variants:
 
 from __future__ import annotations
 
+import datetime
 import os
-import tempfile
+from collections.abc import Callable, Sequence
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-SENTINEL_DAYS = (30,)
+from ..catalog import cache_dir, fill_once
+
+# The sentinel's event time: this many days past the last real event.
+SENTINEL_DAYS = 30
 
 # Default micro-batch count for every chunked feed. The state-store
 # changefeed / time-travel oracles (streaming/queries.py) predict per-batch
@@ -42,10 +46,9 @@ SENTINEL_DAYS = (30,)
 # batch-id arithmetic (ADVICE r9).
 DEFAULT_CHUNKS = 3
 
-_cache: dict[tuple, str] = {}
+_MTIME_BASE = 1_600_000_000
+
 _max_ts_us: dict[str, int] = {}
-
-
 _num_rows: dict[str, int] = {}
 
 
@@ -58,20 +61,23 @@ def events_num_rows(sf_dir: str) -> int:
     return _num_rows[sf_dir]
 
 
-def events_max_ts(sf_dir: str):
-    """Max real event time (µs-truncated, naive UTC datetime) for ``sf_dir``.
+def events_max_us(sf_dir: str) -> int:
+    """Max real event time of ``sf_dir`` as integer epoch µs (truncated).
 
-    The sentinel cutoff for stripping far-future marker windows from
-    materialized streaming results. Read via a single-column pyarrow scan —
-    never a Spark batch action inside a streaming query function (an extra
-    full scan of events per query otherwise)."""
+    The feeds' sentinels and the streaming queries' cutoffs and timer
+    deadlines all read this one value. Read via a single-column pyarrow
+    scan — never a Spark batch action inside a streaming query function
+    (an extra full scan of events per query otherwise)."""
     if sf_dir not in _max_ts_us:
         ts = pq.read_table(f"{sf_dir}/events.parquet", columns=["ts"]).column("ts")
         _max_ts_us[sf_dir] = _to_us(pa.compute.max(ts), ts.type)
-    import datetime
+    return _max_ts_us[sf_dir]
 
+
+def events_max_ts(sf_dir: str) -> datetime.datetime:
+    """``events_max_us`` as a naive UTC datetime."""
     return datetime.datetime(1970, 1, 1) + datetime.timedelta(
-        microseconds=_max_ts_us[sf_dir]
+        microseconds=events_max_us(sf_dir)
     )
 
 
@@ -87,11 +93,12 @@ def _to_us(scalar, ts_type) -> int:
     return scalar.cast(pa.timestamp("us")).cast(pa.int64()).as_py()
 
 
-def _sentinel_table(max_ts_us: int, day_offset: int, idx: int, ts_type) -> pa.Table:
-    """Far-future marker row whose ts column matches the source table's
-    physical type (the streaming source declares ONE schema for the whole
-    chunk dir, so sentinel files must not diverge from data files)."""
-    us = max_ts_us + day_offset * 86_400 * 1_000_000
+def _sentinel_table(sf_dir: str, ts_type) -> pa.Table:
+    """The far-future marker row, ``SENTINEL_DAYS`` past the last real
+    event, whose ts column matches the source table's physical type (the
+    streaming source declares ONE schema for the whole chunk dir, so the
+    sentinel file must not diverge from data files)."""
+    us = events_max_us(sf_dir) + SENTINEL_DAYS * 86_400 * 1_000_000
     if pa.types.is_integer(ts_type):
         # Raw-integer ts columns hold NANOS (catalog.events_ts_unit's 'ns'
         # classification); a µs-valued int64 sentinel would sit 1000x in
@@ -101,7 +108,7 @@ def _sentinel_table(max_ts_us: int, day_offset: int, idx: int, ts_type) -> pa.Ta
         ts_arr = pa.array([us], pa.timestamp("us")).cast(ts_type)
     return pa.table(
         {
-            "event_id": pa.array([-1 - idx], pa.int64()),
+            "event_id": pa.array([-1], pa.int64()),
             "ts": ts_arr,
             "user_id": pa.array([-1], pa.int64()),
             "event_type": pa.array(["__sentinel__"]),
@@ -109,6 +116,34 @@ def _sentinel_table(max_ts_us: int, day_offset: int, idx: int, ts_type) -> pa.Ta
             "props": pa.array(["{}"]),
         }
     )
+
+
+def _chunks(table: pa.Table, n_chunks: int) -> list[pa.Table]:
+    """``table`` cut at the ``i * n // n_chunks`` row boundaries."""
+    bounds = [i * table.num_rows // n_chunks for i in range(n_chunks + 1)]
+    return [table.slice(lo, hi - lo) for lo, hi in zip(bounds, bounds[1:])]
+
+
+def cached_feed(
+    prefix: str, sf_dir: str, table: str, build: Callable[[], Sequence[pa.Table]]
+) -> str:
+    """The one writer of a feed: the micro-batch tables ``build()``
+    returns, in arrival order, as ``NNNN.parquet`` files with strictly
+    increasing mtimes (the file source replays in mtime order), under
+    ``catalog.cache_dir(prefix, sf_dir, table)``. ``build`` runs only
+    when that dir lacks its ``catalog.fill_once`` marker."""
+    # The cache is keyed by source content only: a change to the files
+    # written for the same arguments must change the prefix.
+    out = cache_dir(prefix, sf_dir, table)
+
+    def fill() -> None:
+        for i, t in enumerate(build()):
+            path = os.path.join(out, f"{i:04d}.parquet")
+            pq.write_table(t, path)
+            os.utime(path, (_MTIME_BASE + i, _MTIME_BASE + i))
+
+    fill_once(out, fill)
+    return out
 
 
 def chunked_events_dir(
@@ -119,65 +154,35 @@ def chunked_events_dir(
     replay: tuple[int, ...] = (),
     late_chunk: int | None = None,
 ) -> str:
-    """Build (or reuse) a chunk directory for the given variant."""
-    key = (sf_dir, n_chunks, sentinels, replay, late_chunk)
-    if key in _cache and os.path.isdir(_cache[key]):
-        return _cache[key]
+    """The events feed for the given variant."""
 
-    table = pq.read_table(f"{sf_dir}/events.parquet")
-    n = table.num_rows
-    chunks = []
-    for i in range(n_chunks):
-        lo, hi = i * n // n_chunks, (i + 1) * n // n_chunks
-        chunks.append(table.slice(lo, hi - lo))
+    def build() -> list[pa.Table]:
+        table = pq.read_table(f"{sf_dir}/events.parquet")
+        chunks = _chunks(table, n_chunks)
+        order = [c for i, c in enumerate(chunks) if i != late_chunk]
+        order += [chunks[i] for i in replay]
+        if late_chunk is not None:
+            order.append(chunks[late_chunk])  # arrives last → late vs the watermark
+        if sentinels:
+            order.append(_sentinel_table(sf_dir, table.schema.field("ts").type))
+        return order
 
-    order: list[pa.Table] = []
-    held = None
-    for i, c in enumerate(chunks):
-        if i == late_chunk:
-            held = c
-            continue
-        order.append(c)
-    for i in replay:
-        order.append(chunks[i])
-    if held is not None:
-        order.append(held)  # arrives last → late vs the advanced watermark
-    if sentinels:
-        ts_col = table.column("ts")
-        max_us = _to_us(pa.compute.max(ts_col), ts_col.type)
-        for j, days in enumerate(SENTINEL_DAYS):
-            order.append(_sentinel_table(max_us, days, j, ts_col.type))
-
-    out = tempfile.mkdtemp(prefix="sss_feed_")
-    base = 1_600_000_000
-    for i, c in enumerate(order):
-        path = os.path.join(out, f"{i:04d}.parquet")
-        pq.write_table(c, path)
-        os.utime(path, (base + i, base + i))  # file source processes in mtime order
-    _cache[key] = out
-    return out
+    prefix = f"sss_feed_k{n_chunks}_s{int(sentinels)}"
+    prefix += "".join(f"_r{i}" for i in replay)
+    if late_chunk is not None:
+        prefix += f"_l{late_chunk}"
+    return cached_feed(prefix, sf_dir, "events", build)
 
 
 def chunked_table_dir(sf_dir: str, table: str, n_chunks: int = DEFAULT_CHUNKS) -> str:
     """Chunk an arbitrary table into K parquet files (generic micro-batch
     feed for streams without event time — no sentinels needed)."""
-    key = (sf_dir, table, n_chunks)
-    if key in _cache and os.path.isdir(_cache[key]):
-        return _cache[key]
-    t = pq.read_table(f"{sf_dir}/{table}.parquet")
-    n = t.num_rows
-    out = tempfile.mkdtemp(prefix=f"sss_feed_{table}_")
-    base = 1_600_000_000
-    for i in range(n_chunks):
-        lo, hi = i * n // n_chunks, (i + 1) * n // n_chunks
-        path = os.path.join(out, f"{i:04d}.parquet")
-        pq.write_table(t.slice(lo, hi - lo), path)
-        os.utime(path, (base + i, base + i))
-    _cache[key] = out
-    return out
-
-
-_split_cache: dict[tuple, tuple[str, str]] = {}
+    return cached_feed(
+        f"sss_feed_{table}_k{n_chunks}",
+        sf_dir,
+        table,
+        lambda: _chunks(pq.read_table(f"{sf_dir}/{table}.parquet"), n_chunks),
+    )
 
 
 def chunked_events_split_dirs(
@@ -192,32 +197,16 @@ def chunked_events_split_dirs(
     twin of the filter-pushdown stall documented above). Both sentinels
     are built from the FULL table's max event time so the two sources
     advance in lockstep."""
-    key = (sf_dir, n_chunks)
-    hit = _split_cache.get(key)
-    if hit and all(os.path.isdir(p) for p in hit):
-        return hit
 
-    table = pq.read_table(f"{sf_dir}/events.parquet")
-    ts_col = table.column("ts")
-    max_us = _to_us(pa.compute.max(ts_col), ts_col.type)
-    base = 1_600_000_000
-    outs: list[str] = []
-    for parity in (0, 1):
-        mask = pa.compute.equal(
-            pa.compute.bit_wise_and(table.column("event_id"), 1), parity
-        )
-        sub = table.filter(mask)
-        n = sub.num_rows
-        out = tempfile.mkdtemp(prefix=f"sss_feed_p{parity}_")
-        for i in range(n_chunks):
-            lo, hi = i * n // n_chunks, (i + 1) * n // n_chunks
-            path = os.path.join(out, f"{i:04d}.parquet")
-            pq.write_table(sub.slice(lo, hi - lo), path)
-            os.utime(path, (base + i, base + i))
-        for j, days in enumerate(SENTINEL_DAYS):
-            path = os.path.join(out, f"{n_chunks + j:04d}.parquet")
-            pq.write_table(_sentinel_table(max_us, days, j, ts_col.type), path)
-            os.utime(path, (base + n_chunks + j,) * 2)
-        outs.append(out)
-    _split_cache[key] = (outs[0], outs[1])
-    return _split_cache[key]
+    def feed(parity: int) -> str:
+        def build() -> list[pa.Table]:
+            table = pq.read_table(f"{sf_dir}/events.parquet")
+            mask = pa.compute.equal(
+                pa.compute.bit_wise_and(table.column("event_id"), 1), parity
+            )
+            sentinel = _sentinel_table(sf_dir, table.schema.field("ts").type)
+            return _chunks(table.filter(mask), n_chunks) + [sentinel]
+
+        return cached_feed(f"sss_feed_p{parity}_k{n_chunks}", sf_dir, "events", build)
+
+    return feed(0), feed(1)

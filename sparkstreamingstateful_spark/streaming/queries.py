@@ -29,15 +29,53 @@ from ..compat import ensure_protobuf_session
 from ..registry import query
 from ..session import conf_guard
 from . import feeder, stateful
-from .feeder import chunked_events_dir
 from .runner import run_stream
 
 WATERMARK = "10 minutes"
 
 
-def _stream(spark: SparkSession, sf_dir: str, **feed_kwargs) -> DataFrame:
-    feed = chunked_events_dir(sf_dir, **feed_kwargs)
-    return read_stream_events(spark, feed)
+def _stream(spark: SparkSession, sf_dir: str, **variant) -> DataFrame:
+    """The events feed of ``variant`` (feeder.chunked_events_dir) as a
+    stream: every events-feed query reads through here."""
+    return read_stream_events(spark, feeder.chunked_events_dir(sf_dir, **variant))
+
+
+def _interval_join(stream: DataFrame, how: str) -> DataFrame:
+    """The purchases⨝clicks interval join of the stream_stream_join keys:
+    a click joins a purchase of the same user it preceded by at most 10
+    minutes (``purchase_id``/``click_id`` out). Watermarks on both sides
+    plus the time bound let Spark evict join state
+    (StreamingSymmetricHashJoin) — without them state grows unboundedly
+    (SURVEY §7.2). ``user_id < 0`` keeps the sentinel in both sides (a
+    plain event_type filter would drop it below the watermark node and
+    stall eviction — feeder.py); on a sentinel-free feed it matches
+    nothing. One source, self-joined: both sides share its file listing
+    and offsets per trigger."""
+    purchases = (
+        stream.filter((F.col("event_type") == "purchase") | (F.col("user_id") < 0))
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("p_user"),
+            F.col("ts").alias("p_ts"),
+        )
+        .withWatermark("p_ts", WATERMARK)
+    )
+    clicks = (
+        stream.filter((F.col("event_type") == "click") | (F.col("user_id") < 0))
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id").alias("c_user"),
+            F.col("ts").alias("c_ts"),
+        )
+        .withWatermark("c_ts", WATERMARK)
+    )
+    return purchases.join(
+        clicks,
+        (F.col("p_user") == F.col("c_user"))
+        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 10 MINUTES"))
+        & (F.col("c_ts") <= F.col("p_ts")),
+        how,
+    )
 
 
 def _parts(sf_dir: str) -> int:
@@ -349,40 +387,11 @@ def stream_static_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval self-join (click→purchase correlation within
-    10 minutes). Watermarks on both sides + the time-bound condition let
-    Spark evict join state (StreamingSymmetricHashJoin) — without them
-    state grows unboundedly (SURVEY §7.2). Inner-join matches emit the
+    10 minutes, see _interval_join). Inner-join matches emit the
     micro-batch both sides are present (the watermark only gates state
     EVICTION, never output), so sentinel batches are skipped."""
-    feed = chunked_events_dir(sf_dir, sentinels=False)
-    # one stream source, self-joined (Spark supports stream self-joins):
-    # both branches share the source's file listing/offsets per trigger
-    stream = read_stream_events(spark, feed)
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", WATERMARK)
-    )
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", WATERMARK)
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 10 MINUTES"))
-        & (F.col("c_ts") <= F.col("p_ts")),
-    ).select("purchase_id", "click_id")
-    return run_stream(joined, output_mode="append")
+    joined = _interval_join(_stream(spark, sf_dir, sentinels=False), "inner")
+    return run_stream(joined.select("purchase_id", "click_id"), output_mode="append")
 
 
 @query(
@@ -594,40 +603,14 @@ def stream_stream_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     unmatched purchases can only be emitted once the click-side watermark
     proves no match can still arrive, so this feed needs the sentinel: it
     drives the watermark past all real event time and the availableNow
-    no-data flush batch emits the final null-extended rows. The side
-    filters keep the sentinel row flowing (a plain event_type filter would
-    drop it below the watermark node and stall eviction — feeder.py); the
+    no-data flush batch emits the final null-extended rows. The
     sentinel self-match is stripped from the materialized result."""
-    feed = chunked_events_dir(sf_dir)  # sentinels=True
-    stream = read_stream_events(spark, feed)
-    purchases = (
-        stream.filter((F.col("event_type") == "purchase") | (F.col("user_id") < 0))
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", WATERMARK)
+    # click_id goes out as DOUBLE on both engines: the oracle is fetched
+    # through pandas, where a NULL-bearing BIGINT column coerces to
+    # float64 — matched ids would hash "537" vs "537.0".
+    joined = _interval_join(_stream(spark, sf_dir), "left_outer").select(
+        "purchase_id", F.col("click_id").cast("double").alias("click_id")
     )
-    clicks = (
-        stream.filter((F.col("event_type") == "click") | (F.col("user_id") < 0))
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", WATERMARK)
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 10 MINUTES"))
-        & (F.col("c_ts") <= F.col("p_ts")),
-        "left_outer",
-        # click_id goes out as DOUBLE on both engines: the driver fetches
-        # the oracle through pandas, where a NULL-bearing BIGINT column
-        # coerces to float64 — matched ids would hash "537" vs "537.0".
-    ).select("purchase_id", F.col("click_id").cast("double").alias("click_id"))
     res = run_stream(joined, output_mode="append")
     return res.filter(F.col("purchase_id") >= 0)
 
@@ -657,36 +640,10 @@ def stream_stream_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     null-extended row; its self-match is stripped from the materialized
     result (NULL-tolerant guard: a plain ``>= 0`` would also drop every
     legitimate null-extended row)."""
-    feed = chunked_events_dir(sf_dir)  # sentinels=True
-    stream = read_stream_events(spark, feed)
-    purchases = (
-        stream.filter((F.col("event_type") == "purchase") | (F.col("user_id") < 0))
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", WATERMARK)
-    )
-    clicks = (
-        stream.filter((F.col("event_type") == "click") | (F.col("user_id") < 0))
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", WATERMARK)
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 10 MINUTES"))
-        & (F.col("c_ts") <= F.col("p_ts")),
-        "full_outer",
-        # both ids go out as DOUBLE: each side is nullable in full outer,
-        # and the driver's oracle fetch coerces NULL-bearing BIGINT
-        # columns to float64 (same contract as stream_stream_join_left).
-    ).select(
+    # both ids go out as DOUBLE: each side is nullable in full outer,
+    # and the pandas oracle fetch coerces NULL-bearing BIGINT columns
+    # to float64 (same contract as stream_stream_join_left).
+    joined = _interval_join(_stream(spark, sf_dir), "full_outer").select(
         F.col("purchase_id").cast("double").alias("purchase_id"),
         F.col("click_id").cast("double").alias("click_id"),
     )
@@ -720,33 +677,7 @@ def stream_stream_join_right(spark: SparkSession, sf_dir: str) -> DataFrame:
     roles for each side — a user reaching for ``right_outer`` should not
     discover an untested path. Only ``purchase_id`` needs the DOUBLE
     cast (the only nullable side here)."""
-    feed = chunked_events_dir(sf_dir)  # sentinels=True
-    stream = read_stream_events(spark, feed)
-    purchases = (
-        stream.filter((F.col("event_type") == "purchase") | (F.col("user_id") < 0))
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", WATERMARK)
-    )
-    clicks = (
-        stream.filter((F.col("event_type") == "click") | (F.col("user_id") < 0))
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", WATERMARK)
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 10 MINUTES"))
-        & (F.col("c_ts") <= F.col("p_ts")),
-        "right_outer",
-    ).select(
+    joined = _interval_join(_stream(spark, sf_dir), "right_outer").select(
         F.col("purchase_id").cast("double").alias("purchase_id"),
         F.col("click_id"),
     )
@@ -783,33 +714,8 @@ def stream_stream_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     which leave silently — no null extension), so like the inner
     variant the feed needs no sentinel. The output carries ONLY left
     columns and no NULLs, so the id needs no DOUBLE cast."""
-    feed = chunked_events_dir(sf_dir, sentinels=False)
-    stream = read_stream_events(spark, feed)
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", WATERMARK)
-    )
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", WATERMARK)
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 10 MINUTES"))
-        & (F.col("c_ts") <= F.col("p_ts")),
-        "left_semi",
-    ).select("purchase_id")
-    return run_stream(joined, output_mode="append")
+    joined = _interval_join(_stream(spark, sf_dir, sentinels=False), "left_semi")
+    return run_stream(joined.select("purchase_id"), output_mode="append")
 
 
 @query(
@@ -1001,13 +907,7 @@ def _finalize_ms(sf_dir: str) -> int:
     beyond it, so the finalize timer always fires during the availableNow
     flush batch; real batches never reach it (feed is time-ordered, so
     the watermark trails max real ts by the 10-min delay)."""
-    import datetime
-
-    dt = feeder.events_max_ts(sf_dir)
-    return (
-        int((dt - datetime.datetime(1970, 1, 1)).total_seconds() * 1000)
-        + 86_400_000
-    )
+    return feeder.events_max_us(sf_dir) // 1000 + 86_400_000
 
 
 def _profile_tws_frame(spark: SparkSession, sf_dir: str, deadline_ms: int) -> DataFrame:
@@ -1223,8 +1123,7 @@ def stream_sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame
     out = stream_jsonl_sink_path(sf_dir)
 
     def fill() -> None:
-        feed = chunked_events_dir(sf_dir, sentinels=False)
-        ev = read_stream_events(spark, feed).select(
+        ev = _stream(spark, sf_dir, sentinels=False).select(
             "event_id", "user_id", "event_type", "value"
         )
         run_stream(ev, sink=lambda w: w.format("sss_jsonl").option("path", out).start())
@@ -1267,9 +1166,8 @@ def stream_sink_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def fill() -> None:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-        feed = chunked_events_dir(sf_dir, sentinels=False)
         ev = (
-            read_stream_events(spark, feed)
+            _stream(spark, sf_dir, sentinels=False)
             .filter(F.col("event_type") == "purchase")
             .select("event_id", "user_id", "value")
         )
@@ -1515,9 +1413,8 @@ def _dedup_state_ckpt(
     CANNOT_READ_STREAMING_STATE_FILE .../1.changelog does not exist)."""
 
     def dedup() -> DataFrame:
-        feed = chunked_events_dir(sf_dir, sentinels=False)
         return (
-            read_stream_events(spark, feed)
+            _stream(spark, sf_dir, sentinels=False)
             .select("event_id")
             .dropDuplicates(["event_id"])
         )
@@ -1670,9 +1567,7 @@ def scan_state_join_side(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-parallel scan per side of one state version."""
 
     def joined() -> DataFrame:
-        stream = read_stream_events(
-            spark, chunked_events_dir(sf_dir, sentinels=False)
-        )
+        stream = _stream(spark, sf_dir, sentinels=False)
         purchases = stream.filter(F.col("event_type") == "purchase").select(
             F.col("event_id").alias("purchase_id"),
             F.col("user_id").alias("p_user"),
@@ -1882,15 +1777,9 @@ _NEVER_FINALIZE_OFFSET_MS = 365 * 86_400_000
 
 def _profile_never_ms(sf_dir: str) -> int:
     """The never-reachable profile deadline as EXACT integer epoch ms:
-    feeder.events_max_ts is µs-truncated, and µs→ms must floor the same
-    way DuckDB's ``epoch_ms(max(ts))`` does for the timer oracle to
-    hash-match — so integer floor-div, never ``total_seconds()*1000``
-    (float multiplication can mis-round the last ms)."""
-    import datetime
-
-    td = feeder.events_max_ts(sf_dir) - datetime.datetime(1970, 1, 1)
-    ms = td.days * 86_400_000 + td.seconds * 1_000 + td.microseconds // 1_000
-    return ms + _NEVER_FINALIZE_OFFSET_MS
+    µs→ms must floor the same way DuckDB's ``epoch_ms(max(ts))`` does
+    for the timer oracle to hash-match."""
+    return feeder.events_max_us(sf_dir) // 1000 + _NEVER_FINALIZE_OFFSET_MS
 
 
 def _profile_tws_ckpt(spark: SparkSession, sf_dir: str) -> str:

@@ -324,6 +324,32 @@ def test_only_the_catalog_builds_cache_paths():
     assert not hits, f"gettempdir outside catalog.py: {hits}"
 
 
+def test_only_the_feeder_writes_feeds():
+    """Every micro-batch feed is written by ``feeder.cached_feed``: no
+    other .py file of the package or tests/ may set file mtimes (the
+    replay order of a feed). Checked on the AST, because docstrings
+    mention it."""
+    import ast
+    import pathlib
+
+    import sparkstreamingstateful_spark as pkg
+
+    repo = pathlib.Path(pkg.__file__).parent.parent
+    feeder = repo / "sparkstreamingstateful_spark" / "streaming" / "feeder.py"
+    paths = [
+        *sorted((repo / "sparkstreamingstateful_spark").rglob("*.py")),
+        *sorted((repo / "tests").rglob("*.py")),
+    ]
+    hits = [
+        f"{path.relative_to(repo)}:{node.lineno}"
+        for path in paths
+        if path != feeder
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Attribute) and node.attr == "utime"
+    ]
+    assert not hits, f"feed files written outside feeder.py: {hits}"
+
+
 def test_one_progress_parser():
     """StreamingQueryProgress is parsed in one place,
     ``perfbench.parsers.summarize_progress``: no .py file of bench.py,

@@ -157,9 +157,37 @@ def test_split_feed_dirs_disjoint_union_with_sentinels():
     all_ids = set(src.column("event_id").to_pylist())
     assert tables["even"] | tables["odd"] == all_ids
 
-    # same-session reuse must hit the cache (feeds are tempdirs; a fresh
-    # pair per call would leak disk and defeat mtime-ordered replay)
+    # a repeat call reuses the cached pair (test_feeds_are_fill_once_caches)
     assert feeder.chunked_events_split_dirs(SF001) == (d_even, d_odd)
+
+
+def test_feeds_are_fill_once_caches():
+    """Every feed is a catalog.fill_once cache under catalog.cache_dir,
+    keyed by the events table's content: a complete feed holds _DONE and
+    is reused as is; a dir without _DONE is a partial write and is
+    rebuilt in full (a stray file does not survive)."""
+    import os
+
+    from sparkstreamingstateful_spark import catalog
+    from sparkstreamingstateful_spark.streaming import feeder
+
+    home = catalog.cache_dir("x", SF001, "events")
+    tag = "_" + catalog.cache_tag(SF001, "events")
+    feed = feeder.chunked_events_dir(SF001)
+    for d in (feed, *feeder.chunked_events_split_dirs(SF001)):
+        assert os.path.dirname(d) == os.path.dirname(home) and d.endswith(tag), d
+        assert os.path.exists(os.path.join(d, "_DONE")), d
+
+    listing = sorted(os.listdir(feed))
+    os.remove(os.path.join(feed, "_DONE"))
+    open(os.path.join(feed, "9999.parquet"), "w").close()
+    assert feeder.chunked_events_dir(SF001) == feed
+    assert sorted(os.listdir(feed)) == listing
+
+    first = os.path.join(feed, "0000.parquet")
+    ino = os.stat(first).st_ino
+    assert feeder.chunked_events_dir(SF001) == feed
+    assert os.stat(first).st_ino == ino
 
 
 def test_xml_roundtrip_special_chars(spark, tmp_path):

@@ -14,10 +14,7 @@ from pyspark.sql import functions as F
 
 from sparkstreamingstateful_spark import registry
 from sparkstreamingstateful_spark.catalog import load_table, read_stream_events
-from sparkstreamingstateful_spark.streaming.feeder import (
-    SENTINEL_DAYS,
-    chunked_events_dir,
-)
+from sparkstreamingstateful_spark.streaming.feeder import chunked_events_dir
 
 from .conftest import SF_UNIT
 
@@ -394,8 +391,8 @@ def test_sessionize_kill_restart_unsorted_10x(spark, tmp_path):
             q = start()
         q.awaitTermination()
         done = [f for f in os.listdir(commits) if not f.startswith(".")]
-        # one batch per feed file (5 chunks + sentinel(s)) + a flush batch
-        n_files = 5 + len(SENTINEL_DAYS)
+        # one batch per feed file (5 chunks + sentinel) + a flush batch
+        n_files = 5 + 1
         assert len(done) >= n_files, (
             f"expected >={n_files} committed batches, got {sorted(done)}"
         )
@@ -471,7 +468,7 @@ def test_windowed_agg_sentinel_after_restart(spark, tmp_path):
 
     src_feed = chunked_events_dir(SF_UNIT, n_chunks=3, sentinels=True)
     files = sorted(glob.glob(os.path.join(src_feed, "*.parquet")))
-    n_sent = len(SENTINEL_DAYS)
+    n_sent = 1
     data_files, sentinel_files = files[:-n_sent], files[-n_sent:]
 
     feed = tmp_path / "feed"
@@ -578,7 +575,7 @@ def test_feeder_raw_int64_nanos_ts(tmp_path):
 
     feed = feeder.chunked_events_dir(str(d), n_chunks=2, sentinels=True)
     files = sorted(glob.glob(os.path.join(feed, "*.parquet")))
-    n_sent = len(feeder.SENTINEL_DAYS)
+    n_sent = 1
     assert len(files) == 2 + n_sent
     max_data_ns = pc.max(ns_ints).as_py()
     for f in files[-n_sent:]:
@@ -737,38 +734,14 @@ def test_left_join_nulls_require_watermark(spark):
     pending at end-of-stream; the sentinel (registered key) closes them.
     This pins the emission timing: missing rows are exactly a suffix of
     event time, never sprinkled."""
+    from sparkstreamingstateful_spark.streaming.queries import _interval_join
     from sparkstreamingstateful_spark.streaming.runner import run_stream
 
     def left_join(feed):
-        stream = read_stream_events(spark, feed)
-        purchases = (
-            stream.filter((F.col("event_type") == "purchase") | (F.col("user_id") < 0))
-            .select(
-                F.col("event_id").alias("purchase_id"),
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("p_ts"),
-            )
-            .withWatermark("p_ts", "10 minutes")
-        )
-        clicks = (
-            stream.filter((F.col("event_type") == "click") | (F.col("user_id") < 0))
-            .select(
-                F.col("event_id").alias("click_id"),
-                F.col("user_id").alias("c_user"),
-                F.col("ts").alias("c_ts"),
-            )
-            .withWatermark("c_ts", "10 minutes")
-        )
-        joined = purchases.join(
-            clicks,
-            (F.col("p_user") == F.col("c_user"))
-            & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 10 MINUTES"))
-            & (F.col("c_ts") <= F.col("p_ts")),
-            "left_outer",
-        ).select("purchase_id", "click_id")
-        return run_stream(joined, output_mode="append").filter(
-            F.col("purchase_id") >= 0
-        )
+        joined = _interval_join(read_stream_events(spark, feed), "left_outer")
+        return run_stream(
+            joined.select("purchase_id", "click_id"), output_mode="append"
+        ).filter(F.col("purchase_id") >= 0)
 
     no_sentinel = left_join(chunked_events_dir(SF_UNIT, sentinels=False))
     purchases = load_table(spark, SF_UNIT, "events").filter(
@@ -840,12 +813,8 @@ def _skew_stress(spark, tmp_path, make_updates, label):
     def feed_of(table, sub):
         d = tmp_path / sub
         d.mkdir()
-        for i in range(3):
-            lo, hi = i * n // 3, (i + 1) * n // 3
-            p = str(d / f"{i:04d}.parquet")
-            pq.write_table(table.slice(lo, hi - lo), p)
-            os.utime(p, (1_600_000_000 + i, 1_600_000_000 + i))
-        return str(d)
+        pq.write_table(table, str(d / "events.parquet"))
+        return chunked_events_dir(str(d), 3, sentinels=False)
 
     def run(feed):
         ev = read_stream_events(spark, feed)
@@ -1529,34 +1498,13 @@ def test_join_side_watermarked_evicts(spark, tmp_path):
     reader fidelity on the unwatermarked join whose state IS the full
     history; this pins that the eviction path the audit exists for
     actually runs)."""
-    from sparkstreamingstateful_spark.streaming.queries import _statestore_read
+    from sparkstreamingstateful_spark.streaming.queries import (
+        _interval_join,
+        _statestore_read,
+    )
 
     feed = chunked_events_dir(SF_UNIT, sentinels=False)
-    stream = read_stream_events(spark, feed)
-    p = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "10 minutes")
-    )
-    c = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "10 minutes")
-    )
-    j = p.join(
-        c,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 10 MINUTES"))
-        & (F.col("c_ts") <= F.col("p_ts")),
-    )
+    j = _interval_join(read_stream_events(spark, feed), "inner")
     ckpt = str(tmp_path / "wm_join_ck")
     q = (
         j.writeStream.format("noop")
