@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .compat import ensure_protobuf_session
 from .session import configure
 
 TABLE_NAMES = [
@@ -331,7 +332,13 @@ def read_stream_events(spark: SparkSession, events_dir: str) -> DataFrame:
     session timezone the µs instants are identical to the batch NTZ values;
     streaming queries cast their event-time outputs back to NTZ (an
     identity cast under UTC) so results compare exactly with batch/oracle.
+
+    This is also the one TWS runtime hook: every
+    ``transformWithStateInPandas`` frame is built on this read, so the
+    protobuf runtime reaches the workers before the operator captures
+    their environment; batch reads never pass here.
     """
+    ensure_protobuf_session(spark)
     configure(spark)
     unit = events_ts_unit(events_dir)
     schema = SCHEMAS["events"] if unit == "us" else EVENTS_PHYSICAL_SCHEMA_NS

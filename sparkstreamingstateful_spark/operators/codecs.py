@@ -46,20 +46,12 @@ from ..registry import query
 
 
 def _load_wire():
-    """Resolve the vendored wire module on a worker.
+    """Load the vendored wire module by path, on the driver or a worker.
 
-    When the vendored runtime owns ``google.protobuf`` (this sandbox),
-    the normal import works via the PYTHONPATH propagation compat.py
-    already does for TWS. When a REAL protobuf install wins the import
-    race, it has no ``internal.wire`` — fall back to loading the vendor
-    file directly by path, so the codec works under either runtime."""
-    try:
-        from google.protobuf.internal import wire  # type: ignore
-
-        if hasattr(wire, "decode_varint"):
-            return wire
-    except ImportError:
-        pass
+    A real protobuf install has no ``internal.wire`` and may own the
+    ``google.protobuf`` import, so the file is never imported by package
+    name; it imports only ``__future__``, so the by-path load serves
+    either runtime."""
     path = os.path.join(VENDOR_DIR, "google", "protobuf", "internal", "wire.py")
     spec = importlib.util.spec_from_file_location("sss_vendor_wire", path)
     mod = importlib.util.module_from_spec(spec)

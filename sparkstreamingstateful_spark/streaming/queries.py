@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import cache_dir, cache_tag, fill_once, load_table, read_stream_events
-from ..compat import ensure_protobuf_session
 from ..registry import query
 from ..session import conf_guard
 from . import feeder, stateful
@@ -836,14 +835,14 @@ def stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sessionize_tws_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ST16's TWS sessionization stream (stateful.make_sessionize_processor),
+    """ST16's TWS sessionization stream (stateful.SessionizeTws),
     shared by the key and its state-reader checkpoint."""
     return (
         _stream(spark, sf_dir)
         .withWatermark("ts", WATERMARK)
         .groupBy("user_id")
         .transformWithStateInPandas(
-            stateful.make_sessionize_processor(),
+            stateful.SessionizeTws(),
             outputStructType=stateful.SESSION_TWS_OUTPUT,
             outputMode="Append",
             timeMode="EventTime",
@@ -887,8 +886,7 @@ def stateful_sessionize_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     final expiry) and TWO state variables per key (ValueState session
     accumulator + ListState of closed-session starts, surfaced as the
     oracle-checked ``sess_seq`` column — see
-    stateful.make_sessionize_processor)."""
-    ensure_protobuf_session(spark)
+    stateful.SessionizeTws)."""
     res = run_stream(
         _sessionize_tws_frame(spark, sf_dir), state_partitions=_parts(sf_dir)
     )
@@ -911,7 +909,7 @@ def _finalize_ms(sf_dir: str) -> int:
 
 
 def _profile_tws_frame(spark: SparkSession, sf_dir: str, deadline_ms: int) -> DataFrame:
-    """ST19's TWS profile stream (stateful.make_profile_processor) with its
+    """ST19's TWS profile stream (stateful.ProfileTws) with its
     snapshot timer at ``deadline_ms``, shared by the key and its
     never-snapshotted state-reader twin."""
     return (
@@ -919,7 +917,7 @@ def _profile_tws_frame(spark: SparkSession, sf_dir: str, deadline_ms: int) -> Da
         .withWatermark("ts", WATERMARK)
         .groupBy("user_id")
         .transformWithStateInPandas(
-            stateful.make_profile_processor(deadline_ms),
+            stateful.ProfileTws(deadline_ms),
             outputStructType=stateful.PROFILE_TWS_OUTPUT,
             outputMode="Append",
             timeMode="EventTime",
@@ -940,7 +938,7 @@ def stateful_profile_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user attribute profile on ``transformWithStateInPandas`` MAP
     STATE — the last TWS state primitive the engine had never executed
     (ValueState/ListState/event-time timers: ST16; see
-    stateful.make_profile_processor): an ``event_type → (count, sum)``
+    stateful.ProfileTws): an ``event_type → (count, sum)``
     map per user, folded incrementally each micro-batch and exported by
     a scheduled-snapshot event-time timer at a data-derived deadline.
     The materialized result SUMS the emitted snapshot partials per
@@ -949,10 +947,9 @@ def stateful_profile_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     legal here — Spark rejects a TTL on any state variable under
     ``timeMode=EventTime``
     (STATEFUL_PROCESSOR_INCORRECT_TIME_MODE_TO_ASSIGN_TTL, measured) —
-    so the auto-expiring MapState (the processor's ``ttl_ms`` knob) runs
-    under ``timeMode=ProcessingTime`` in tests/test_streaming.py, which
-    pins actual wall-clock expiry."""
-    ensure_protobuf_session(spark)
+    so ``ProfileTws`` carries no TTL, and tests/test_streaming.py pins
+    auto-expiring MapState (actual wall-clock expiry) under
+    ``timeMode=ProcessingTime`` on its own probe processor."""
     res = run_stream(
         _profile_tws_frame(spark, sf_dir, _finalize_ms(sf_dir)),
         state_partitions=_parts(sf_dir),
@@ -980,12 +977,11 @@ def stateful_running_agg_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     API (StatefulProcessor + typed value state, RocksDB provider) — same
     semantics and oracle as ``stateful_running_agg``, covering both
     generations of the Python stateful API."""
-    ensure_protobuf_session(spark)
     updates = (
         _stream(spark, sf_dir, sentinels=False)
         .groupBy("user_id")
         .transformWithStateInPandas(
-            stateful.make_running_agg_processor(),
+            stateful.RunningAgg(),
             outputStructType=stateful.RUNNING_AGG_OUTPUT,
             outputMode="Update",
             timeMode="None",
@@ -1654,7 +1650,6 @@ def _sessionize_tws_ckpt(spark: SparkSession, sf_dir: str) -> str:
     checkpoint: the reader takes the snapshot path (a changelog-only
     version forces coordinator-RPC replay a batch session lacks; see
     scan_state_store)."""
-    ensure_protobuf_session(spark)
     return _state_ckpt(
         spark,
         sf_dir,
@@ -1785,7 +1780,7 @@ def _profile_never_ms(sf_dir: str) -> int:
 def _profile_tws_ckpt(spark: SparkSession, sf_dir: str) -> str:
     """Build (or reuse) a completed profile-TWS checkpoint whose
     MapState is NEVER exported: ST19's exact processor
-    (stateful.make_profile_processor — MapState ``profile`` +
+    (stateful.ProfileTws — MapState ``profile`` +
     one event-time finalize timer per key) run with the deadline pushed
     a year past the sentinel, so at the final batch every key still
     holds (a) its complete ``event_type → (n, sum)`` map and (b) one
@@ -1794,7 +1789,6 @@ def _profile_tws_ckpt(spark: SparkSession, sf_dir: str) -> str:
     construction. Cached per (provider, content tag) with the ``_DONE``
     discipline; changelog checkpointing pinned OFF (the batch reader
     takes the snapshot path — see scan_state_store)."""
-    ensure_protobuf_session(spark)
     return _state_ckpt(
         spark,
         sf_dir,
@@ -1993,17 +1987,16 @@ def stateful_running_agg_tws_bootstrap(
     bootstrap table distributes with the state store's own key
     partitioning (Spark co-partitions initialState by the grouping
     key); no extra shuffle beyond the one any stateful op pays."""
-    ensure_protobuf_session(spark)
+    _, d_odd = feeder.chunked_events_split_dirs(sf_dir)
+    ev = read_stream_events(spark, d_odd)
     init_df = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_id") % 2 == 0)
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value"))
     )
-    _, d_odd = feeder.chunked_events_split_dirs(sf_dir)
-    ev = read_stream_events(spark, d_odd)
     updates = ev.groupBy("user_id").transformWithStateInPandas(
-        stateful.make_bootstrap_running_agg_processor(),
+        stateful.RunningAgg(),
         outputStructType=stateful.RUNNING_AGG_OUTPUT,
         outputMode="Update",
         timeMode="None",

@@ -6,11 +6,17 @@ on both generations of PySpark's Python stateful API (present in 4.1.2):
   ``(key, pdf_iter, state) -> iterator[pdf]`` function plus its
   output/state schemas, so batch twins and streaming tests share one
   definition;
-- ``transformWithStateInPandas`` processors (``make_*_processor``): the
-  ``StatefulProcessor`` classes behind the ``*_tws`` keys and the TWS
-  state readers — value, list and map state plus event-time timers.
-  Each TWS key runs only on this API; it needs a ``google.protobuf``
-  runtime (see ``compat.ensure_protobuf``).
+- ``transformWithStateInPandas`` processors: the module-level
+  ``StatefulProcessor`` classes ``RunningAgg``, ``ProfileTws`` and
+  ``SessionizeTws`` behind the ``*_tws`` keys and the TWS state
+  readers — value, list and map state, initial state and event-time
+  timers. Each TWS key runs only on this API; its workers need a
+  ``google.protobuf`` runtime (see ``compat.ensure_protobuf``).
+
+A semantics served on both APIs has ONE fold — ``_running_fold`` (the
+running count+sum) and ``_split_sessions`` (the idle-gap session split)
+— and each API only maps it onto its own state, timeout/timer and
+emission calls, so the two can never disagree on an answer.
 
 State crosses micro-batch boundaries via the state store (RocksDB
 provider configured in session.py); Arrow moves the per-group pandas
@@ -30,6 +36,10 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import types as T
+from pyspark.sql.streaming.stateful_processor import (
+    StatefulProcessor,
+    StatefulProcessorHandle,
+)
 
 GAP_US = 30 * 60 * 1_000_000  # 30-minute session gap, microseconds
 GAP_MS = GAP_US // 1000
@@ -47,13 +57,19 @@ RUNNING_AGG_STATE = T.StructType(
 )
 
 
+def _running_fold(n: int, s: float, pdfs: Iterator[pd.DataFrame]) -> tuple[int, float]:
+    """The running count+sum fold of both APIs: per frame, ``sum()`` then
+    add — one order, so ``sum_value`` is bit-identical on either API."""
+    for pdf in pdfs:
+        n += len(pdf)
+        s += float(pdf["value"].sum())
+    return n, s
+
+
 def running_agg_fn(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
     """Running per-user count+sum, maintained across micro-batches
     (updateStateByKey-equivalent). Emits the updated state each batch."""
-    n, s = state.get if state.exists else (0, 0.0)
-    for pdf in pdf_iter:
-        n += len(pdf)
-        s += float(pdf["value"].sum())
+    n, s = _running_fold(*(state.get if state.exists else (0, 0.0)), pdf_iter)
     state.update((n, s))
     yield pd.DataFrame({"user_id": [key[0]], "n": [n], "sum_value": [s]})
 
@@ -77,6 +93,38 @@ SESSION_STATE = T.StructType(
 )
 
 
+def _split_sessions(
+    pdfs: Iterator[pd.DataFrame], open_session: tuple | None
+) -> tuple[list[tuple], tuple]:
+    """The session split of both APIs: fold one key's batch, sorted by
+    ``(ts, event_id)``, into ``open_session`` — ``(start_us, last_us, n,
+    sum)`` or None. Returns the sessions the batch closed, as ``(start_us,
+    n, sum)`` in event order, and the session left open (always one: the
+    batch's last row belongs to it). Each API keeps its own idle
+    timeout/timer and the inline close of a group behind the watermark."""
+    rows = pd.concat(list(pdfs), ignore_index=True).sort_values(["ts", "event_id"])
+    closed: list[tuple] = []
+    if open_session is None:
+        start_us = None
+    else:
+        start_us, last_us, n, s = open_session
+    for r in rows.itertuples():
+        ts_us = r.ts.value // 1000  # pandas ns → µs
+        if start_us is None:
+            start_us, last_us, n, s = ts_us, ts_us, 1, float(r.value)
+        elif ts_us - last_us >= GAP_US:
+            closed.append((start_us, n, s))
+            start_us, last_us, n, s = ts_us, ts_us, 1, float(r.value)
+        else:
+            # max(): a within-watermark LATE row (older than the open
+            # session's last event, delivered in a later batch) merges
+            # but must not REWIND the idle deadline — a rewound last_us
+            # makes the next on-time row see an inflated gap and falsely
+            # split the session the globally-sorted oracle keeps whole
+            last_us, n, s = max(last_us, ts_us), n + 1, s + float(r.value)
+    return closed, (start_us, last_us, n, s)
+
+
 def sessionize_fn(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
     """Sessionization with 30-min idle timeout (mapWithState+timeout
     equivalent): closed sessions emit (start, n_events, total value); the
@@ -95,27 +143,9 @@ def sessionize_fn(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.D
         )
         return
 
-    rows = pd.concat(list(pdf_iter), ignore_index=True)
-    rows = rows.sort_values(["ts", "event_id"])
-    closed: list[tuple] = []
-    if state.exists:
-        start_us, last_us, n, s = state.get
-    else:
-        start_us = None
-    for r in rows.itertuples():
-        ts_us = r.ts.value // 1000  # pandas ns → µs
-        if start_us is None:
-            start_us, last_us, n, s = ts_us, ts_us, 1, float(r.value)
-        elif ts_us - last_us >= GAP_US:
-            closed.append((key[0], start_us, n, s))
-            start_us, last_us, n, s = ts_us, ts_us, 1, float(r.value)
-        else:
-            # max(): a within-watermark LATE row (older than the open
-            # session's last event, delivered in a later batch) merges
-            # but must not REWIND the idle deadline — a rewound last_us
-            # makes the next on-time row see an inflated gap and falsely
-            # split the session the globally-sorted oracle keeps whole
-            last_us, n, s = max(last_us, ts_us), n + 1, s + float(r.value)
+    closed, (start_us, last_us, n, s) = _split_sessions(
+        pdf_iter, state.get if state.exists else None
+    )
     timeout_ms = last_us // 1000 + GAP_MS
     if timeout_ms <= state.getCurrentWatermarkMs():
         # Late-arriving group (out-of-order file feeds deliver rows older
@@ -125,14 +155,15 @@ def sessionize_fn(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.D
         # extend it. Close it inline — setTimeoutTimestamp would throw
         # INVALID_TIMEOUT_TIMESTAMP for a past timestamp and kill the
         # query.
-        closed.append((key[0], start_us, n, s))
+        closed.append((start_us, n, s))
         if state.exists:
             state.remove()
     else:
         state.update((int(start_us), int(last_us), int(n), float(s)))
         state.setTimeoutTimestamp(timeout_ms)
     yield pd.DataFrame(
-        closed, columns=["user_id", "sess_start_us", "n_events", "sum_value"]
+        [(key[0], *c) for c in closed],
+        columns=["user_id", "sess_start_us", "n_events", "sum_value"],
     )
 
 
@@ -217,78 +248,40 @@ def latest_wins_fn(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.
 
 
 # ---------------------------------------------------------------- ST7 (TWS)
-def make_running_agg_processor():
+class RunningAgg(StatefulProcessor):
     """Spark-4 ``transformWithStateInPandas`` flavor of the running agg —
     the modern StatefulProcessor API (typed value state via a handle,
-    RocksDB-backed). Same semantics as running_agg_fn; registered as its
-    own query so both stateful APIs stay covered.
+    RocksDB-backed). Same semantics and fold as running_agg_fn;
+    registered as its own query so both stateful APIs stay covered.
 
-    Built lazily so importing this module never requires the TWS API.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningAgg(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("agg", RUNNING_AGG_STATE)
-
-        def handleInputRows(self, key, rows, timerValues):
-            # every state call is a socket round-trip to the JVM state
-            # server, paid PER KEY PER BATCH — get() returns None when
-            # absent, so never pay for a separate exists()
-            n, s = self._state.get() or (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf["value"].sum())
-            self._state.update((n, s))
-            yield pd.DataFrame({"user_id": [key[0]], "n": [n], "sum_value": [s]})
-
-        def close(self) -> None:
-            pass
-
-    return RunningAgg()
-
-
-def make_bootstrap_running_agg_processor():
-    """ST24: the running agg with INITIAL STATE — the
+    ST24 runs it with INITIAL STATE — the
     ``transformWithStateInPandas(initialState=...)`` surface that
     migrates a batch-computed table into live streaming state (the
     "start the stream where the backfill left off" handoff every
     lambda-architecture replacement needs). ``handleInitialState`` is
     invoked once per bootstrapped key in the FIRST batch, before that
-    key's ``handleInputRows``; keys absent from the bootstrap skip it
-    (state starts empty), and bootstrapped keys that never receive a
-    stream row keep their seeded state but emit nothing — the caller's
-    materialization must union the bootstrap table for those (see
+    key's ``handleInputRows``, and never without an ``initialState``;
+    keys absent from the bootstrap skip it (state starts empty), and
+    bootstrapped keys that never receive a stream row keep their seeded
+    state but emit nothing — the caller's materialization must union
+    the bootstrap table for those (see
     queries.stateful_running_agg_tws_bootstrap)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
 
-    class BootstrapRunningAgg(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("agg", RUNNING_AGG_STATE)
+    def init(self, handle: StatefulProcessorHandle) -> None:
+        self._state = handle.getValueState("agg", RUNNING_AGG_STATE)
 
-        def handleInitialState(self, key, initialState, timerValues) -> None:
-            # one seed row per key (the bootstrap table is a GROUP BY)
-            row = initialState.iloc[0]
-            self._state.update((int(row["n"]), float(row["sum_value"])))
+    def handleInitialState(self, key, initialState, timerValues) -> None:
+        # one seed row per key (the bootstrap table is a GROUP BY)
+        row = initialState.iloc[0]
+        self._state.update((int(row["n"]), float(row["sum_value"])))
 
-        def handleInputRows(self, key, rows, timerValues):
-            n, s = self._state.get() or (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf["value"].sum())
-            self._state.update((n, s))
-            yield pd.DataFrame({"user_id": [key[0]], "n": [n], "sum_value": [s]})
-
-        def close(self) -> None:
-            pass
-
-    return BootstrapRunningAgg()
+    def handleInputRows(self, key, rows, timerValues):
+        # every state call is a socket round-trip to the JVM state
+        # server, paid PER KEY PER BATCH — get() returns None when
+        # absent, so never pay for a separate exists()
+        n, s = _running_fold(*(self._state.get() or (0, 0.0)), rows)
+        self._state.update((n, s))
+        yield pd.DataFrame({"user_id": [key[0]], "n": [n], "sum_value": [s]})
 
 
 # ------------------------------------------------------------ ST8 (TWS)
@@ -332,16 +325,15 @@ PROFILE_TWS_OUTPUT = T.StructType(
 )
 
 
-def make_profile_processor(finalize_ms: int, ttl_ms: int | None = None):
+class ProfileTws(StatefulProcessor):
     """``transformWithStateInPandas`` per-user profile on MAP STATE — the
     one TWS state primitive the other processors don't touch: a per-key
-    ``event_type → (count, sum)`` attribute map, optionally TTL-bounded
-    (``ttl_ms`` → ``getMapState(..., ttlDurationMs=...)``, the Spark-4
-    auto-expiring-state API). Spark only permits a TTL under
-    ``timeMode=ProcessingTime`` — EventTime raises
-    STATEFUL_PROCESSOR_INCORRECT_TIME_MODE_TO_ASSIGN_TTL (measured) —
-    so the H-checked key passes no TTL and the TTL path runs under
-    ProcessingTime in tests/test_streaming.py.
+    ``event_type → (count, sum)`` attribute map. It carries no TTL:
+    Spark only permits a TTL under ``timeMode=ProcessingTime`` —
+    EventTime raises STATEFUL_PROCESSOR_INCORRECT_TIME_MODE_TO_ASSIGN_TTL
+    (measured) — so the auto-expiring-state API runs under
+    ProcessingTime in tests/test_streaming.py, on that test's own probe
+    processor.
 
     Round-trip budget (same discipline as SessionizeTws): per key-batch
     the hot path pays ONE streamed ``iterator()`` read of the whole map +
@@ -355,191 +347,139 @@ def make_profile_processor(finalize_ms: int, ttl_ms: int | None = None):
     materialized SUM of emitted partials equals the batch GROUP BY
     whatever the expiry timing — correctness never depends on the timer
     firing exactly once."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
 
-    class ProfileTws(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._profile = handle.getMapState(
-                "profile",
-                "event_type STRING",
-                "n BIGINT, sum_value DOUBLE",
-                ttlDurationMs=ttl_ms,
+    def __init__(self, finalize_ms: int) -> None:
+        self._finalize_ms = finalize_ms
+
+    def init(self, handle: StatefulProcessorHandle) -> None:
+        self._handle = handle
+        self._profile = handle.getMapState(
+            "profile", "event_type STRING", "n BIGINT, sum_value DOUBLE"
+        )
+
+    def handleInputRows(self, key, rows, timerValues):
+        data = pd.concat(list(rows), ignore_index=True)
+        cur = {k[0]: v for k, v in self._profile.iterator()}
+        if not cur:
+            # empty map = first sight of this key (or re-accumulation
+            # after a snapshot): (re-)arm the finalize timer. A
+            # deadline already behind the watermark fires on the next
+            # batch — the SUM-merge materialization absorbs the extra
+            # snapshot.
+            self._handle.registerTimer(self._finalize_ms)
+        grp = data.groupby("event_type")["value"].agg(["count", "sum"])
+        for etype, row in grp.iterrows():
+            n0, s0 = cur.get(etype, (0, 0.0))
+            self._profile.updateValue(
+                (etype,), (int(n0 + row["count"]), float(s0 + row["sum"]))
+            )
+        return iter(())  # emission happens only on timer expiry
+
+    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
+        entries = [
+            (key[0], k[0], int(v[0]), float(v[1]))
+            for k, v in self._profile.iterator()
+        ]
+        self._profile.clear()
+        if entries:
+            yield pd.DataFrame(
+                entries, columns=["user_id", "event_type", "n", "sum_value"]
             )
 
-        def handleInputRows(self, key, rows, timerValues):
-            data = pd.concat(list(rows), ignore_index=True)
-            cur = {k[0]: v for k, v in self._profile.iterator()}
-            if not cur:
-                # empty map = first sight of this key (or re-accumulation
-                # after a snapshot): (re-)arm the finalize timer. A
-                # deadline already behind the watermark fires on the next
-                # batch — the SUM-merge materialization absorbs the extra
-                # snapshot.
-                self._handle.registerTimer(finalize_ms)
-            grp = data.groupby("event_type")["value"].agg(["count", "sum"])
-            for etype, row in grp.iterrows():
-                n0, s0 = cur.get(etype, (0, 0.0))
-                self._profile.updateValue(
-                    (etype,), (int(n0 + row["count"]), float(s0 + row["sum"]))
-                )
-            return iter(())  # emission happens only on timer expiry
 
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            entries = [
-                (key[0], k[0], int(v[0]), float(v[1]))
-                for k, v in self._profile.iterator()
-            ]
-            self._profile.clear()
-            if entries:
-                yield pd.DataFrame(
-                    entries, columns=["user_id", "event_type", "n", "sum_value"]
-                )
-
-        def close(self) -> None:
-            pass
-
-    return ProfileTws()
-
-
-def make_sessionize_processor():
+class SessionizeTws(StatefulProcessor):
     """``transformWithStateInPandas`` sessionization — the TWS feature-
-    coverage twin of ``sessionize_fn``, deliberately exercising the parts
-    of the new API the running-agg processor cannot: EVENT-TIME TIMERS
-    (``registerTimer`` / ``deleteTimer`` / ``listTimers`` +
-    ``handleExpiredTimer`` close idle sessions when the watermark passes
-    ``last_ts + gap``) and MULTIPLE STATE VARIABLES per key (the open
-    session in a ValueState, the starts of closed sessions in a
-    ListState). The ListState is load-bearing, not decorative: each
+    coverage twin of ``sessionize_fn`` (same ``_split_sessions`` fold),
+    deliberately exercising the parts of the new API the running-agg
+    processor cannot: EVENT-TIME TIMERS (``registerTimer`` /
+    ``deleteTimer`` + ``handleExpiredTimer`` close idle sessions when the
+    watermark passes ``last_ts + gap``) and MULTIPLE STATE VARIABLES per
+    key (the open session in a ValueState, the starts of closed sessions
+    in a ListState). The ListState is load-bearing, not decorative: each
     emitted session carries ``sess_seq`` — how many sessions this user
     had closed before it — which the DuckDB oracle recomputes as
     ``row_number() - 1`` over session starts, so a broken list append or
     read shows up as a hash mismatch, not just a missing metric.
 
-    Built lazily so importing this module never requires the TWS API.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
+    Round-trip budget (r6 rework): every state/timer call is a socket
+    round-trip to the JVM state server, paid per key per batch — the r6
+    bench measured the original 9-call shape at 3.6 ms/key-batch (27 s
+    at sf0.1) vs 1.2 ms for the applyInPandasWithState twin. This
+    version holds the hot path at get + update + (deleteTimer? +
+    registerTimer) + (appendList?): the registered timer and the
+    closed-session count ride in the value state, so listTimers scans
+    and per-close ListState length reads are gone, and all of a batch's
+    closed-session starts go to the ListState in ONE appendList call
+    (r19 — per-close appendValue was 95k calls / ~2 ms each at sf0.1,
+    two thirds of the operator's in-worker time). The EXPIRY path
+    derives sess_seq from the list's length instead of the counter —
+    the two bookkeeping sources must agree or the oracle hash
+    mismatches, so the list stays load-bearing on the H-checked path
+    (every key's final session closes via timer expiry)."""
 
-    class SessionizeTws(StatefulProcessor):
-        """Round-trip budget (r6 rework): every state/timer call is a
-        socket round-trip to the JVM state server, paid per key per
-        batch — the r6 bench measured the original 9-call shape at
-        3.6 ms/key-batch (27 s at sf0.1) vs 1.2 ms for the
-        applyInPandasWithState twin. This version holds the hot path at
-        get + update + (deleteTimer? + registerTimer) + (appendList?):
-        the registered timer and the closed-session count ride in the
-        value state, so listTimers scans and per-close ListState length
-        reads are gone, and all of a batch's closed-session starts go to
-        the ListState in ONE appendList call (r19 — per-close
-        appendValue was 95k calls / ~2 ms each at sf0.1, two thirds of
-        the operator's in-worker time). The EXPIRY path
-        derives sess_seq from the list's length instead of the counter —
-        the two bookkeeping sources must agree or the oracle hash
-        mismatches, so the list stays load-bearing on the H-checked
-        path (every key's final session closes via timer expiry)."""
+    def init(self, handle: StatefulProcessorHandle) -> None:
+        self._handle = handle
+        self._sess = handle.getValueState("sess", SESSION_TWS_STATE)
+        self._starts = handle.getListState("closed_starts", "start_us BIGINT")
 
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._sess = handle.getValueState("sess", SESSION_TWS_STATE)
-            self._starts = handle.getListState("closed_starts", "start_us BIGINT")
+    def handleInputRows(self, key, rows, timerValues):
+        cur = self._sess.get()
+        timer_ms, n_closed = cur[4:] if cur else (-1, 0)
+        closed, (start_us, last_us, n, s) = _split_sessions(
+            rows, tuple(cur[:4]) if cur and cur[0] >= 0 else None
+        )
+        deadline_ms = last_us // 1000 + GAP_MS
+        if deadline_ms <= timerValues.getCurrentWatermarkInMs():
+            # watermark already past this session's idle deadline: no
+            # on-time event can extend it — close inline (mirror of
+            # sessionize_fn's late-group branch). The stale timer (if
+            # any) may fire later; handleExpiredTimer sees start_us=-1
+            # and ignores it, so no deleteTimer round-trip is owed.
+            closed.append((start_us, n, s))
+            open_sess = (-1, -1, 0, 0.0, -1)
+        else:
+            if timer_ms != deadline_ms:
+                if timer_ms > 0:
+                    self._handle.deleteTimer(timer_ms)
+                self._handle.registerTimer(deadline_ms)
+            open_sess = (int(start_us), int(last_us), int(n), float(s), int(deadline_ms))
+        self._sess.update((*open_sess, int(n_closed + len(closed))))
+        if closed:
+            # ONE appendList round-trip for the whole batch's closes
+            # instead of one appendValue per close (r19, measured:
+            # this corpus closes ~a session per event, so per-close
+            # appendValue was 95,465 state-server calls ≈ 160 s of
+            # 236 s total in-worker time at sf0.1; appendList is one
+            # call per key-batch). List contents and order unchanged:
+            # closes are appended in event order, and nothing reads
+            # the list between closes inside a batch — the expiry
+            # path still derives sess_seq from the list's length.
+            self._starts.appendList([(int(c[0]),) for c in closed])
+        # the i-th close of this batch had n_closed + i closes before it
+        yield pd.DataFrame(
+            [
+                (key[0], int(st), int(k), float(v), int(n_closed + i))
+                for i, (st, k, v) in enumerate(closed)
+            ],
+            columns=SESSION_TWS_OUTPUT.fieldNames(),
+        )
 
-        def _close(self, key, start_us, n, s, seq):
-            self._starts.appendValue((int(start_us),))
-            return (key[0], int(start_us), int(n), float(s), int(seq))
-
-        def handleInputRows(self, key, rows, timerValues):
-            data = pd.concat(list(rows), ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            cur = self._sess.get()
-            if cur and cur[0] >= 0:
-                start_us, last_us, n, s, timer_ms, n_closed = cur
-            else:
-                start_us = None
-                timer_ms = cur[4] if cur else -1
-                n_closed = cur[5] if cur else 0
-            closed: list[tuple] = []
-            for r in data.itertuples():
-                ts_us = r.ts.value // 1000
-                if start_us is None:
-                    start_us, last_us, n, s = ts_us, ts_us, 1, float(r.value)
-                elif ts_us - last_us >= GAP_US:
-                    closed.append((key[0], int(start_us), int(n), float(s),
-                                   int(n_closed)))
-                    n_closed += 1
-                    start_us, last_us, n, s = ts_us, ts_us, 1, float(r.value)
-                else:
-                    # max(): same no-rewind rule as sessionize_fn — a
-                    # late merged row must not shorten the idle deadline
-                    last_us, n, s = max(last_us, ts_us), n + 1, s + float(r.value)
-            deadline_ms = last_us // 1000 + GAP_MS
-            if deadline_ms <= timerValues.getCurrentWatermarkInMs():
-                # watermark already past this session's idle deadline: no
-                # on-time event can extend it — close inline (mirror of
-                # sessionize_fn's late-group branch). The stale timer (if
-                # any) may fire later; handleExpiredTimer sees start_us=-1
-                # and ignores it, so no deleteTimer round-trip is owed.
-                closed.append((key[0], int(start_us), int(n), float(s),
-                               int(n_closed)))
-                n_closed += 1
-                self._sess.update((-1, -1, 0, 0.0, -1, int(n_closed)))
-            else:
-                if timer_ms != deadline_ms:
-                    if timer_ms > 0:
-                        self._handle.deleteTimer(timer_ms)
-                    self._handle.registerTimer(deadline_ms)
-                self._sess.update(
-                    (
-                        int(start_us),
-                        int(last_us),
-                        int(n),
-                        float(s),
-                        int(deadline_ms),
-                        int(n_closed),
-                    )
-                )
-            if closed:
-                # ONE appendList round-trip for the whole batch's closes
-                # instead of one appendValue per close (r19, measured:
-                # this corpus closes ~a session per event, so per-close
-                # appendValue was 95,465 state-server calls ≈ 160 s of
-                # 236 s total in-worker time at sf0.1; appendList is one
-                # call per key-batch). List contents and order unchanged:
-                # closes are appended in event order, and nothing reads
-                # the list between closes inside a batch — the expiry
-                # path still derives sess_seq from the list's length.
-                self._starts.appendList([(c[1],) for c in closed])
-            yield pd.DataFrame(
-                closed,
-                columns=["user_id", "sess_start_us", "n_events", "sum_value", "sess_seq"],
-            )
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            cur = self._sess.get()
-            if not cur or cur[0] < 0:
-                return  # stale timer from an inline close
-            start_us, last_us, n, s, timer_ms, n_closed = cur
-            if expiredTimerInfo.getExpiryTimeInMs() < last_us // 1000 + GAP_MS:
-                return  # stale timer for an already-extended session
-            # seq from the LIST's length, not the counter: cross-checks
-            # the append bookkeeping against the oracle on every key
-            seq = sum(1 for _ in self._starts.get())
-            self._sess.update((-1, -1, 0, 0.0, -1, int(n_closed) + 1))
-            yield pd.DataFrame(
-                [self._close(key, start_us, n, s, seq)],
-                columns=["user_id", "sess_start_us", "n_events", "sum_value", "sess_seq"],
-            )
-
-        def close(self) -> None:
-            pass
-
-    return SessionizeTws()
+    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
+        cur = self._sess.get()
+        if not cur or cur[0] < 0:
+            return  # stale timer from an inline close
+        start_us, last_us, n, s, timer_ms, n_closed = cur
+        if expiredTimerInfo.getExpiryTimeInMs() < last_us // 1000 + GAP_MS:
+            return  # stale timer for an already-extended session
+        # seq from the LIST's length, not the counter: cross-checks
+        # the append bookkeeping against the oracle on every key
+        seq = sum(1 for _ in self._starts.get())
+        self._sess.update((-1, -1, 0, 0.0, -1, int(n_closed) + 1))
+        self._starts.appendValue((int(start_us),))
+        yield pd.DataFrame(
+            [(key[0], int(start_us), int(n), float(s), int(seq))],
+            columns=SESSION_TWS_OUTPUT.fieldNames(),
+        )
 
 
 # ---------------------------------------------------------------- ST29

@@ -1,8 +1,6 @@
 """Protobuf wire codec (codec_protobuf_roundtrip) edge cases the corpus
 can't exercise: negative int64s (10-byte varints through to_signed),
-proto3 zero-default omission, and the vendor-file fallback loader."""
-
-import os
+proto3 zero-default omission, and the by-path vendor wire loader."""
 
 from pyspark.sql import functions as F
 
@@ -38,16 +36,12 @@ def test_codec_negative_and_default_roundtrip(spark):
 
 
 def test_codec_wire_fallback_loader():
-    """The by-path loader (used when a real protobuf install shadows the
-    vendored tree) must yield a working wire module."""
-    import importlib.util
+    """The codec's one wire resolution, a by-path load of the vendored
+    file (a real protobuf install has no ``internal.wire``), must yield a
+    working wire module whichever runtime owns ``google.protobuf``."""
+    from sparkstreamingstateful_spark.operators.codecs import _load_wire
 
-    from sparkstreamingstateful_spark.compat import VENDOR_DIR
-
-    path = os.path.join(VENDOR_DIR, "google", "protobuf", "internal", "wire.py")
-    spec = importlib.util.spec_from_file_location("sss_vendor_wire_test", path)
-    wire = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(wire)
+    wire = _load_wire()
     buf = bytearray()
     wire.encode_varint(buf, -5)  # negatives mask to 64-bit → 10 bytes
     assert len(buf) == 10

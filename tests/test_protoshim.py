@@ -38,8 +38,12 @@ def test_runtime_resolves():
 def test_no_runtime_raises(monkeypatch, tmp_path):
     # neither runtime resolves: the gate must raise, not report a state a
     # caller could route around, and every TWS key must hit it before
-    # building a plan (spark=None: the gate runs before any session use)
+    # building a plan (spark=None: the gate, which every TWS key reaches
+    # through catalog.read_stream_events, runs before any session use;
+    # the feed it reads is built from the real unit-scale tables)
     from sparkstreamingstateful_spark.streaming import queries as sq
+
+    from .conftest import SF_UNIT
 
     monkeypatch.setattr(compat, "_state", None)
     monkeypatch.setattr(compat, "VENDOR_DIR", str(tmp_path))
@@ -55,7 +59,7 @@ def test_no_runtime_raises(monkeypatch, tmp_path):
         sq.stateful_running_agg_tws_bootstrap,
     ):
         with pytest.raises(ImportError, match=match):
-            key(None, "unused")
+            key(None, SF_UNIT)
 
 
 def test_golden_set_handle_state(sm):

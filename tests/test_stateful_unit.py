@@ -1,4 +1,5 @@
-"""Unit pins for the TWS sessionizer's state round-trip shape (r19).
+"""Unit pins for the TWS sessionizer's state round-trip shape (r19), and
+for the agreement of the two Python stateful APIs on one fold.
 
 The r19 optimization replaced per-close ``appendValue`` (one state-server
 round-trip per closed session — 95k calls at sf0.1) with ONE
@@ -11,6 +12,11 @@ round-trip per closed session — 95k calls at sf0.1) with ONE
 
 The on-cluster contract is separately H-checked by
 ``scan_state_tws_variables`` (ListState read back against the oracle).
+
+The agreement tests drive an ``applyInPandasWithState`` function (against
+a fake ``GroupState``) and its ``transformWithStateInPandas`` processor
+with the same batches, and pin that both emit the same answer and leave
+the same open state.
 """
 
 import pandas as pd
@@ -82,6 +88,37 @@ class FakeExpiredTimerInfo:
         return self._ms
 
 
+class FakeGroupState:
+    """The ``applyInPandasWithState`` GroupState surface the ``*_fn``s use."""
+
+    hasTimedOut = False
+
+    def __init__(self, value=None, wm_ms=-1):
+        self.value = value
+        self.wm_ms = wm_ms
+        self.timeout_ms = None
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, v):
+        self.value = tuple(v)
+
+    def remove(self):
+        self.value = None
+
+    def getCurrentWatermarkMs(self):
+        return self.wm_ms
+
+    def setTimeoutTimestamp(self, ms):
+        self.timeout_ms = ms
+
+
 def _pdf(ts_us_list):
     return pd.DataFrame(
         {
@@ -95,7 +132,7 @@ def _pdf(ts_us_list):
 
 
 def test_multi_close_batch_is_one_append_list():
-    proc = stateful.make_sessionize_processor()
+    proc = stateful.SessionizeTws()
     h = FakeHandle()
     proc.init(h)
     gap = stateful.GAP_US
@@ -118,7 +155,7 @@ def test_multi_close_batch_is_one_append_list():
 
 
 def test_expiry_seq_agrees_with_batched_list():
-    proc = stateful.make_sessionize_processor()
+    proc = stateful.SessionizeTws()
     h = FakeHandle()
     proc.init(h)
     gap = stateful.GAP_US
@@ -141,7 +178,7 @@ def test_expiry_seq_agrees_with_batched_list():
 
 
 def test_no_close_batch_appends_nothing():
-    proc = stateful.make_sessionize_processor()
+    proc = stateful.SessionizeTws()
     h = FakeHandle()
     proc.init(h)
     out = list(
@@ -151,3 +188,87 @@ def test_no_close_batch_appends_nothing():
     assert pd.concat(out, ignore_index=True).empty
     assert h.list_state.append_list_calls == 0
     assert h.list_state.append_calls == 0
+
+
+def _rows(key, ts_values):
+    """One key's frame of ``(ts_us, value)`` rows."""
+    return pd.DataFrame(
+        {
+            "ts": pd.to_datetime([us * 1000 for us, _ in ts_values]),
+            "event_id": range(len(ts_values)),
+            "user_id": [key] * len(ts_values),
+            "event_type": ["view"] * len(ts_values),
+            "value": [v for _, v in ts_values],
+        }
+    )
+
+
+def test_sessionize_apis_agree():
+    gap = stateful.GAP_US
+    minute = 60 * 1_000_000
+    last = 2 * gap + 5 * minute - 1
+    batches = [
+        # key 7: an exact-gap (== GAP_US) split, then an open session
+        (-1, {
+            7: [(0, 1.0), (gap, 2.0), (gap + minute, 3.0), (gap + 5 * minute, 4.0)],
+            8: [(0, 5.0)],
+        }),
+        # key 7: a late row older than the open session's last event, then
+        # one GAP_US - 1 after that last event — it merges only if the late
+        # row did not rewind the deadline. Key 8: its session's deadline is
+        # behind the watermark, so the batch closes it inline.
+        (2 * stateful.GAP_MS, {
+            7: [(gap + 2 * minute, 6.0), (last, 7.0)],
+            8: [(1000, 8.0)],
+        }),
+    ]
+    states = {k: FakeGroupState() for k in (7, 8)}
+    handles = {k: FakeHandle() for k in (7, 8)}
+    procs = {k: stateful.SessionizeTws() for k in (7, 8)}
+    for k in procs:
+        procs[k].init(handles[k])
+    fn_out, tws_out = [], []
+    for wm_ms, by_key in batches:
+        for k, rows in by_key.items():
+            states[k].wm_ms = wm_ms
+            for pdf in stateful.sessionize_fn((k,), iter([_rows(k, rows)]), states[k]):
+                fn_out += pdf.itertuples(index=False, name=None)
+            for pdf in procs[k].handleInputRows(
+                (k,), iter([_rows(k, rows)]), FakeTimerValues(wm_ms)
+            ):
+                tws_out += [r[:4] for r in pdf.itertuples(index=False, name=None)]
+                assert list(pdf["sess_seq"]) == [0] * len(pdf)
+    assert fn_out == tws_out == [(7, 0, 1, 1.0), (8, 0, 2, 13.0)]
+    fn_open = {k: s.value for k, s in states.items()}
+    tws_open = {
+        k: h.value_state.value[:4] if h.value_state.value[0] >= 0 else None
+        for k, h in handles.items()
+    }
+    assert fn_open == tws_open == {7: (gap, last, 5, 22.0), 8: None}
+
+
+def test_running_agg_apis_agree():
+    # values whose float sum depends on the order they are added in
+    batches = [
+        [_rows(7, [(0, 0.1), (1, 0.2)]), _rows(7, [(2, 0.7)])],
+        [_rows(7, [(3, 1e16), (4, 1.0), (5, -1e16)])],
+    ]
+    for seed in (None, (3, 0.3)):
+        state = FakeGroupState(seed)
+        h = FakeHandle()
+        proc = stateful.RunningAgg()
+        proc.init(h)
+        if seed is not None:
+            proc.handleInitialState(
+                (7,),
+                pd.DataFrame({"user_id": [7], "n": [seed[0]], "sum_value": [seed[1]]}),
+                FakeTimerValues(-1),
+            )
+        for frames in batches:
+            fn = pd.concat(list(stateful.running_agg_fn((7,), iter(frames), state)))
+            tws = pd.concat(
+                list(proc.handleInputRows((7,), iter(frames), FakeTimerValues(-1)))
+            )
+            assert fn.to_dict("records") == tws.to_dict("records")
+        assert state.value == h.value_state.value
+        assert state.value[0] == (seed or (0,))[0] + 6

@@ -30,6 +30,35 @@ def test_late_data_dropped(spark):
     assert n_late >= n_all * 0.5, "only the late chunk should be missing"
 
 
+_CRASH = "deliberate crash between the batch-1 sink write and its commit"
+
+
+def _crash_after_batch_1(write_batch):
+    """Phase-1 foreachBatch of the restart tests: run ``write_batch``, and
+    after batch 1's output is written raise, so the query dies between
+    that sink write and the commit log — at the same boundary every run
+    (stopping the query once ``commits/`` shows up races the next batch)."""
+
+    def crash(df, batch_id):
+        write_batch(df, batch_id)
+        if batch_id == 1:
+            raise RuntimeError(_CRASH)
+
+    return crash
+
+
+def _await_crash(q, ckpt):
+    """Phase 1 must end in the crash above: batch 1 planned, only batch 0
+    committed."""
+    with pytest.raises(Exception, match=_CRASH):
+        q.awaitTermination()
+
+    def ls(sub):
+        return sorted(f for f in os.listdir(os.path.join(ckpt, sub)) if f[0] != ".")
+
+    assert (ls("offsets"), ls("commits")) == (["0", "1"], ["0"])
+
+
 def test_foreachbatch_parquet_sink_and_recovery(spark):
     """S5 + ST11: foreachBatch→parquet with checkpointing; kill after the
     first batches, restart from the same checkpoint, assert exactly-once
@@ -45,35 +74,20 @@ def test_foreachbatch_parquet_sink_and_recovery(spark):
         # that batch's rows on restart
         df.write.mode("overwrite").parquet(os.path.join(out, f"b{batch_id}"))
 
-    def start():
+    def start(sink):
         ev = read_stream_events(spark, feed)
         return (
-            ev.writeStream.foreachBatch(write_batch)
+            ev.writeStream.foreachBatch(sink)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
 
-    # phase 1: stop mid-stream after ≥1 batch commits
-    import time
-
-    q = start()
-    commits = os.path.join(ckpt, "commits")
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        if os.path.isdir(commits) and any(
-            not f.startswith(".") for f in os.listdir(commits)
-        ):
-            break
-        time.sleep(0.05)
-    q.stop()
-    try:
-        q.awaitTermination()
-    except Exception:
-        pass  # a query killed mid-batch may surface the interrupt
+    # phase 1: crash after batch 1's sink write, before its commit
+    _await_crash(start(_crash_after_batch_1(write_batch)), ckpt)
 
     # phase 2: restart from the same checkpoint → finish the feed
-    q = start()
+    q = start(write_batch)
     q.awaitTermination()
 
     sink = spark.read.parquet(os.path.join(out, "b*"))
@@ -90,7 +104,6 @@ def test_stateful_kill_restart_recovery(spark):
     identical rows, so the arg-max materialization is idempotent under
     at-least-once batch replay."""
     import json
-    import time
     import uuid
 
     from sparkstreamingstateful_spark.streaming import stateful
@@ -110,7 +123,7 @@ def test_stateful_kill_restart_recovery(spark):
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
 
-        def start():
+        def start(sink):
             ev = read_stream_events(spark, feed)
             updates = ev.groupBy("user_id").applyInPandasWithState(
                 stateful.running_agg_fn,
@@ -120,7 +133,7 @@ def test_stateful_kill_restart_recovery(spark):
                 "NoTimeout",
             )
             return (
-                updates.writeStream.foreachBatch(write_batch)
+                updates.writeStream.foreachBatch(sink)
                 .outputMode("update")
                 .queryName("strec_" + uuid.uuid4().hex[:8])
                 .option("checkpointLocation", ckpt)
@@ -128,24 +141,12 @@ def test_stateful_kill_restart_recovery(spark):
                 .start()
             )
 
-        # phase 1: kill after ≥1 batch has committed (state crossed a batch)
-        q = start()
-        commits = os.path.join(ckpt, "commits")
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            if os.path.isdir(commits) and any(
-                not f.startswith(".") for f in os.listdir(commits)
-            ):
-                break
-            time.sleep(0.05)
-        q.stop()
-        try:
-            q.awaitTermination()
-        except Exception:
-            pass  # interrupt surfacing from a mid-batch kill is expected
+        # phase 1: crash in batch 1, after batch 0 committed (state
+        # crossed a batch)
+        _await_crash(start(_crash_after_batch_1(write_batch)), ckpt)
 
         # phase 2: restart from the same checkpoint → drain the feed
-        q = start()
+        q = start(write_batch)
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
@@ -169,6 +170,7 @@ def test_stateful_kill_restart_recovery(spark):
         return "\n".join(lines)
 
     # all 4 micro-batches committed exactly once across both phases
+    commits = os.path.join(ckpt, "commits")
     done = [f for f in os.listdir(commits) if not f.startswith(".")]
     assert len(done) == 4, (
         f"expected 4 committed batches, got {sorted(done)}\n{ckpt_listing()}"
@@ -316,7 +318,6 @@ def test_sessionize_kill_restart_unsorted_10x(spark, tmp_path):
       keeps at-least-once replay exactly-once).
     * (user, sess_start) is never emitted twice, and the query
       completes on both paths."""
-    import time
     import uuid
 
     import pyarrow as pa
@@ -351,7 +352,7 @@ def test_sessionize_kill_restart_unsorted_10x(spark, tmp_path):
             # dir, so the sink is exactly-once under at-least-once replay
             df.write.mode("overwrite").parquet(os.path.join(out, f"b{batch_id}"))
 
-        def start():
+        def start(sink):
             ev = read_stream_events(spark, feed)
             sessions = (
                 ev.withWatermark("ts", "10 minutes")
@@ -365,7 +366,7 @@ def test_sessionize_kill_restart_unsorted_10x(spark, tmp_path):
                 )
             )
             return (
-                sessions.writeStream.foreachBatch(write_batch)
+                sessions.writeStream.foreachBatch(sink)
                 .outputMode("append")
                 .queryName("sess10x_" + uuid.uuid4().hex[:8])
                 .option("checkpointLocation", ckpt)
@@ -373,23 +374,11 @@ def test_sessionize_kill_restart_unsorted_10x(spark, tmp_path):
                 .start()
             )
 
-        q = start()
-        commits = os.path.join(ckpt, "commits")
         if kill:
-            deadline = time.time() + 120
-            while time.time() < deadline:
-                if os.path.isdir(commits) and any(
-                    not f.startswith(".") for f in os.listdir(commits)
-                ):
-                    break
-                time.sleep(0.05)
-            q.stop()
-            try:
-                q.awaitTermination()
-            except Exception:
-                pass  # interrupt surfacing from a mid-batch kill is expected
-            q = start()
+            _await_crash(start(_crash_after_batch_1(write_batch)), ckpt)
+        q = start(write_batch)
         q.awaitTermination()
+        commits = os.path.join(ckpt, "commits")
         done = [f for f in os.listdir(commits) if not f.startswith(".")]
         # one batch per feed file (5 chunks + sentinel) + a flush batch
         n_files = 5 + 1
@@ -875,7 +864,6 @@ def test_rocksdb_changelog_checkpointing(spark):
     per-key state — i.e. changelog REPLAY works, not just changelog
     WRITE."""
     import glob
-    import time
     import uuid
 
     from sparkstreamingstateful_spark.streaming import stateful
@@ -897,7 +885,7 @@ def test_rocksdb_changelog_checkpointing(spark):
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
 
-        def start():
+        def start(sink):
             ev = read_stream_events(spark, feed)
             updates = ev.groupBy("user_id").applyInPandasWithState(
                 stateful.running_agg_fn,
@@ -907,7 +895,7 @@ def test_rocksdb_changelog_checkpointing(spark):
                 "NoTimeout",
             )
             return (
-                updates.writeStream.foreachBatch(write_batch)
+                updates.writeStream.foreachBatch(sink)
                 .outputMode("update")
                 .queryName("chlog_" + uuid.uuid4().hex[:8])
                 .option("checkpointLocation", ckpt)
@@ -915,20 +903,7 @@ def test_rocksdb_changelog_checkpointing(spark):
                 .start()
             )
 
-        q = start()
-        commits = os.path.join(ckpt, "commits")
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            if os.path.isdir(commits) and any(
-                not f.startswith(".") for f in os.listdir(commits)
-            ):
-                break
-            time.sleep(0.05)
-        q.stop()
-        try:
-            q.awaitTermination()
-        except Exception:
-            pass  # interrupt surfacing from a mid-batch kill is expected
+        _await_crash(start(_crash_after_batch_1(write_batch)), ckpt)
 
         # the kill-phase checkpoint must already hold changelog files —
         # the restart below then REPLAYS them to rebuild state
@@ -940,7 +915,7 @@ def test_rocksdb_changelog_checkpointing(spark):
             "changelog checkpointing did not engage"
         )
 
-        q = start()
+        q = start(write_batch)
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
@@ -1404,7 +1379,7 @@ def test_tws_skew_stress(spark, tmp_path):
 
     def updates(ev):
         return ev.groupBy("user_id").transformWithStateInPandas(
-            stateful.make_running_agg_processor(),
+            stateful.RunningAgg(),
             outputStructType=stateful.RUNNING_AGG_OUTPUT,
             outputMode="Update",
             timeMode="None",
