@@ -48,6 +48,19 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": (
         "true"
     ),
+    # Atomic checkpoint writes (offsets, commits, sources, state
+    # changelogs) by FileSystem.rename — File.renameTo, a POSIX rename on
+    # the local FS — instead of the default FileContext manager, whose
+    # rename asks for the link status and, without libhadoop, forks
+    # `readlink` 8 times per file (~1,500 forks per stream_stateful
+    # pass, 0 with this manager). Spark falls back to this manager
+    # itself when FileContext is unavailable. Hadoop's .crc sidecars and
+    # Spark's own state-file checksums are written as before (pinned by
+    # tests/test_streaming.py::test_checkpoint_manager_keeps_checksums).
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
 }
 
 

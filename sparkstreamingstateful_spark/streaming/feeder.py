@@ -7,21 +7,27 @@ Every feed is a ``catalog.fill_once`` cache under ``catalog.cache_dir``
 
 Variants:
 
-* ``sentinels=True`` appends ONE far-future marker event (user_id=-1).
-  In append mode, windows/sessions only emit once the watermark passes
-  them; end-of-stream alone never closes the final windows. The sentinel
-  advances the watermark past all real event time; the no-data flush
-  micro-batch that ``availableNow`` runs after the last file (watermark
-  changed + stateful ops pending ⇒ ``noDataMicroBatches``, on by
-  default and asserted by the runner before every stream starts) then
-  evicts/times-out all remaining real state. Queries must NOT filter
-  sentinels inside the streaming plan — Catalyst pushes such filters
-  below the EventTimeWatermark node and the watermark never advances
-  (measured); filter the materialized result instead.
+* ``sentinels=True`` appends ONE far-future marker event (user_id=-1)
+  to the last data file. In append mode, windows/sessions only emit once
+  the watermark passes them; end-of-stream alone never closes the final
+  windows. The sentinel advances the watermark past all real event time
+  without a micro-batch of its own: Spark filters late rows and evicts
+  state against the watermark of the PREVIOUS batch, so the rows that
+  share its file are not late. The no-data flush micro-batch that
+  ``availableNow`` runs after the last file (watermark changed +
+  stateful ops pending ⇒ ``noDataMicroBatches``, on by default and
+  asserted by the runner before every stream starts) then
+  evicts/times-out all remaining real state: K chunks run K data
+  batches plus that flush. Queries must NOT filter sentinels inside the
+  streaming plan — Catalyst pushes such filters below the
+  EventTimeWatermark node and the watermark never advances (measured);
+  filter the materialized result instead.
 * ``replay=(i, ...)`` re-appends chunks after the originals — duplicate
   delivery for dedup tests (at-least-once source simulation).
 * ``late_chunk=i`` holds chunk i back until the end — out-of-order arrival
-  for watermark late-drop tests.
+  for watermark late-drop tests. Its sentinel stays a file of its own,
+  after the held chunk, so the late rows meet a watermark set by real
+  data alone.
 """
 
 from __future__ import annotations
@@ -93,12 +99,13 @@ def _to_us(scalar, ts_type) -> int:
     return scalar.cast(pa.timestamp("us")).cast(pa.int64()).as_py()
 
 
-def _sentinel_table(sf_dir: str, ts_type) -> pa.Table:
+def _sentinel_table(sf_dir: str, schema: pa.Schema) -> pa.Table:
     """The far-future marker row, ``SENTINEL_DAYS`` past the last real
-    event, whose ts column matches the source table's physical type (the
-    streaming source declares ONE schema for the whole chunk dir, so the
-    sentinel file must not diverge from data files)."""
+    event, cast to ``schema`` — the events table's, so the row can ride
+    in a data file (the streaming source declares ONE schema for the
+    whole chunk dir; a sentinel must not diverge from the data)."""
     us = events_max_us(sf_dir) + SENTINEL_DAYS * 86_400 * 1_000_000
+    ts_type = schema.field("ts").type
     if pa.types.is_integer(ts_type):
         # Raw-integer ts columns hold NANOS (catalog.events_ts_unit's 'ns'
         # classification); a µs-valued int64 sentinel would sit 1000x in
@@ -115,7 +122,7 @@ def _sentinel_table(sf_dir: str, ts_type) -> pa.Table:
             "value": pa.array([0.0], pa.float64()),
             "props": pa.array(["{}"]),
         }
-    )
+    ).select(schema.names).cast(schema)
 
 
 def _chunks(table: pa.Table, n_chunks: int) -> list[pa.Table]:
@@ -164,10 +171,14 @@ def chunked_events_dir(
         if late_chunk is not None:
             order.append(chunks[late_chunk])  # arrives last → late vs the watermark
         if sentinels:
-            order.append(_sentinel_table(sf_dir, table.schema.field("ts").type))
+            sentinel = _sentinel_table(sf_dir, table.schema)
+            if late_chunk is None:
+                order[-1] = pa.concat_tables([order[-1], sentinel])
+            else:
+                order.append(sentinel)
         return order
 
-    prefix = f"sss_feed_k{n_chunks}_s{int(sentinels)}"
+    prefix = f"sss_feed2_k{n_chunks}_s{int(sentinels)}"
     prefix += "".join(f"_r{i}" for i in replay)
     if late_chunk is not None:
         prefix += f"_l{late_chunk}"
@@ -189,14 +200,14 @@ def chunked_events_split_dirs(
     sf_dir: str, n_chunks: int = DEFAULT_CHUNKS
 ) -> tuple[str, str]:
     """Two DISJOINT feeds (even / odd ``event_id``), each chunked and
-    carrying its own sentinel — the substrate for the multi-source union
-    topology (ST23). Each source needs its own sentinel because Spark's
-    global watermark is the MIN across all sources' event-time maxima: a
-    sentinel in only one feed leaves the other source's watermark at its
-    last real event and the final windows never close (the multi-source
-    twin of the filter-pushdown stall documented above). Both sentinels
-    are built from the FULL table's max event time so the two sources
-    advance in lockstep."""
+    carrying its own sentinel in its last file — the substrate for the
+    multi-source union topology (ST23). Each source needs its own
+    sentinel because Spark's global watermark is the MIN across all
+    sources' event-time maxima: a sentinel in only one feed leaves the
+    other source's watermark at its last real event and the final
+    windows never close (the multi-source twin of the filter-pushdown
+    stall documented above). Both sentinels are built from the FULL
+    table's max event time so the two sources advance in lockstep."""
 
     def feed(parity: int) -> str:
         def build() -> list[pa.Table]:
@@ -204,9 +215,12 @@ def chunked_events_split_dirs(
             mask = pa.compute.equal(
                 pa.compute.bit_wise_and(table.column("event_id"), 1), parity
             )
-            sentinel = _sentinel_table(sf_dir, table.schema.field("ts").type)
-            return _chunks(table.filter(mask), n_chunks) + [sentinel]
+            chunks = _chunks(table.filter(mask), n_chunks)
+            chunks[-1] = pa.concat_tables(
+                [chunks[-1], _sentinel_table(sf_dir, table.schema)]
+            )
+            return chunks
 
-        return cached_feed(f"sss_feed_p{parity}_k{n_chunks}", sf_dir, "events", build)
+        return cached_feed(f"sss_feed2_p{parity}_k{n_chunks}", sf_dir, "events", build)
 
     return feed(0), feed(1)

@@ -11,12 +11,15 @@ node and stalls it — measured in M5).
 
 Micro-batch budget: every chunk file is one micro-batch at a fixed
 multi-hundred-ms cost (state-store + Python-worker round-trip), so each
-query feeds only the batches its semantics need — the sentinel is reserved
-for append-mode watermark eviction (windows/sessions/late-drop); update-mode
-stateful queries, the stateless join, and the inner stream-stream join emit
-without it and skip the sentinel batch entirely. Three data chunks
-(≥2 state-crossing micro-batches) prove cross-batch state everywhere except
-late-drop, which pins the 4-chunk layout its oracle encodes.
+query feeds only the batches its semantics need. The sentinel rides in the
+last data file and costs no batch of its own; it is reserved for
+append-mode watermark eviction (windows/sessions/late-drop), whose final
+state the no-data flush batch then evicts. Update-mode stateful queries,
+the stateless join, and the inner stream-stream join emit without it, and
+a watermark-free feed runs no flush batch. Three data chunks (≥2
+state-crossing micro-batches) prove cross-batch state everywhere except
+late-drop, which pins the 4-chunk layout its oracle encodes (its sentinel
+stays a file of its own, after the held-back chunk).
 """
 
 from __future__ import annotations
@@ -291,7 +294,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream enriched against a static dim — the static side is planned as
     a broadcast per micro-batch (stateless, no watermark needed — rows emit
-    the batch they arrive, so sentinel batches are skipped)."""
+    the batch they arrive, so the feed carries no sentinel)."""
     ev = _stream(spark, sf_dir, sentinels=False)
     cust = load_table(spark, sf_dir, "customer")
     joined = ev.join(cust, ev.user_id == cust.c_custkey).select(
@@ -388,7 +391,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval self-join (click→purchase correlation within
     10 minutes, see _interval_join). Inner-join matches emit the
     micro-batch both sides are present (the watermark only gates state
-    EVICTION, never output), so sentinel batches are skipped."""
+    EVICTION, never output), so the feed carries no sentinel."""
     joined = _interval_join(_stream(spark, sf_dir, sentinels=False), "inner")
     return run_stream(joined.select("purchase_id", "click_id"), output_mode="append")
 
@@ -406,7 +409,7 @@ def stateful_running_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     updated every micro-batch. The memory sink holds one update row per
     (user, batch); the final state per user must equal the batch GROUP BY —
     the H-check asserts exactly that. Update mode emits every batch without
-    watermark help, so sentinel batches are skipped."""
+    watermark help, so the feed carries no sentinel."""
     ev = _stream(spark, sf_dir, sentinels=False)
     updates = ev.groupBy("user_id").applyInPandasWithState(
         stateful.running_agg_fn,
@@ -451,7 +454,7 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     (latest record = 'error') are dropped after materialization, exactly
     like the batch MERGE. State is O(1) per key; at scale this is the
     continuously-maintained upsert view a lakehouse streams into. Update
-    mode emits every batch without watermark help → no sentinel batches."""
+    mode emits every batch without watermark help → no sentinel."""
     ev = _stream(spark, sf_dir, sentinels=False)
     updates = ev.groupBy("user_id").applyInPandasWithState(
         stateful.latest_wins_fn,
@@ -540,7 +543,7 @@ def stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stateful_dedup_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyed first-seen filter (ST9): first event per user per day, the
     seen-day set carried in keyed state across micro-batches. NoTimeout
-    append emits in-batch (no watermark dependency) → no sentinel batches."""
+    append emits in-batch (no watermark dependency) → no sentinel."""
     ev = _stream(spark, sf_dir, sentinels=False)
     firsts = ev.groupBy("user_id").applyInPandasWithState(
         stateful.first_seen_fn,
@@ -882,11 +885,11 @@ def stateful_sessionize_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization on the Spark-4 ``transformWithStateInPandas`` API,
     exercising the TWS features the running-agg key cannot: EVENT-TIME
     TIMERS (idle sessions close via ``handleExpiredTimer`` when the
-    watermark passes ``last_ts + 30 min``; the sentinel batch drives the
-    final expiry) and TWO state variables per key (ValueState session
-    accumulator + ListState of closed-session starts, surfaced as the
-    oracle-checked ``sess_seq`` column — see
-    stateful.SessionizeTws)."""
+    watermark passes ``last_ts + 30 min``; the no-data flush batch,
+    under the watermark the sentinel advanced, drives the final expiry)
+    and TWO state variables per key (ValueState session accumulator +
+    ListState of closed-session starts, surfaced as the oracle-checked
+    ``sess_seq`` column — see stateful.SessionizeTws)."""
     res = run_stream(
         _sessionize_tws_frame(spark, sf_dir), state_partitions=_parts(sf_dir)
     )

@@ -35,10 +35,12 @@ LAST_QUERY_PROGRESS: list[dict] = []
 
 
 def require_no_data_batches(spark) -> None:
-    """The single-sentinel feed design (feeder.py) relies on the no-data
-    flush micro-batch to apply the final watermark and evict remaining
-    state; it is on by default, but pin it so a cluster-side override
-    can't silently turn sentinel feeds into never-emitting streams.
+    """The sentinel feeds (feeder.py) carry the far-future sentinel in
+    their last data file, and that batch still filters and evicts against
+    the previous watermark: only the no-data flush micro-batch after it
+    applies the final watermark and evicts the remaining state. It is on
+    by default, but pin it so a cluster-side override can't silently
+    turn sentinel feeds into never-emitting streams.
     Explicit raise (not assert — stripped under python -O) and
     case-insensitive (Spark parses boolean confs case-insensitively).
     The runner core calls it before every start, so no stream in the

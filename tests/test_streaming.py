@@ -380,10 +380,11 @@ def test_sessionize_kill_restart_unsorted_10x(spark, tmp_path):
         q.awaitTermination()
         commits = os.path.join(ckpt, "commits")
         done = [f for f in os.listdir(commits) if not f.startswith(".")]
-        # one batch per feed file (5 chunks + sentinel) + a flush batch
-        n_files = 5 + 1
-        assert len(done) >= n_files, (
-            f"expected >={n_files} committed batches, got {sorted(done)}"
+        # one batch per feed file (5 chunks, the last one carrying the
+        # sentinel) + a flush batch
+        n_batches = 5 + 1
+        assert len(done) >= n_batches, (
+            f"expected >={n_batches} committed batches, got {sorted(done)}"
         )
         return sorted(
             map(
@@ -442,23 +443,26 @@ def test_sessionize_kill_restart_unsorted_10x(spark, tmp_path):
 def test_windowed_agg_sentinel_after_restart(spark, tmp_path):
     """ST11d — the r5 single-sentinel design across a restart boundary:
     run 1 drains ONLY the data chunks (append-mode windows stay unemitted
-    in the state store), then the sentinel file lands in the feed dir and
-    a NEW run from the same checkpoint must discover it, advance the
+    in the state store), then a sentinel-only file lands in the feed dir
+    and a NEW run from the same checkpoint must discover it, advance the
     watermark, and emit every real window in its flush batch. Guards the
     interaction the sentinel cut depends on: watermark state recovered
     from the checkpoint + noDataMicroBatches flush after the last file of
     a LATER availableNow run — i.e. continuous ingestion where stream
-    closure happens in a different process than stream start."""
+    closure happens in a different process than stream start. (The
+    sentinel feeds fold the sentinel into their last data file, so run 1
+    copies the sentinel-free chunks and the restart adds the row as a
+    file of its own.)"""
     import glob
     import shutil
     import uuid
 
     import pyarrow.parquet as pq
 
-    src_feed = chunked_events_dir(SF_UNIT, n_chunks=3, sentinels=True)
-    files = sorted(glob.glob(os.path.join(src_feed, "*.parquet")))
-    n_sent = 1
-    data_files, sentinel_files = files[:-n_sent], files[-n_sent:]
+    from sparkstreamingstateful_spark.streaming import feeder
+
+    src_feed = chunked_events_dir(SF_UNIT, n_chunks=3, sentinels=False)
+    data_files = sorted(glob.glob(os.path.join(src_feed, "*.parquet")))
 
     feed = tmp_path / "feed"
     feed.mkdir()
@@ -498,8 +502,8 @@ def test_windowed_agg_sentinel_after_restart(spark, tmp_path):
         else 0
     )
 
-    for f in sentinel_files:
-        shutil.copy2(f, feed / os.path.basename(f))
+    sentinel = feeder._sentinel_table(SF_UNIT, pq.read_schema(data_files[0]))
+    pq.write_table(sentinel, str(feed / f"{len(data_files):04d}.parquet"))
     run_once()  # restart: discovers sentinel, flush batch evicts state
 
     res = (
@@ -564,16 +568,15 @@ def test_feeder_raw_int64_nanos_ts(tmp_path):
 
     feed = feeder.chunked_events_dir(str(d), n_chunks=2, sentinels=True)
     files = sorted(glob.glob(os.path.join(feed, "*.parquet")))
-    n_sent = 1
-    assert len(files) == 2 + n_sent
+    assert len(files) == 2  # the sentinel rides in the last data file
     max_data_ns = pc.max(ns_ints).as_py()
-    for f in files[-n_sent:]:
-        t = pq.read_table(f)
-        assert t.column("ts").type == pa.int64()  # schema matches data files
-        sent_ns = t.column("ts")[0].as_py()
-        assert sent_ns > max_data_ns, "sentinel must be ahead of all data"
-        days = (sent_ns - max_data_ns) / (86_400 * 1e9)
-        assert 29 < days < 32, f"sentinel offset {days} days — unit skew"
+    t = pq.read_table(files[-1])
+    assert t.column("ts").type == pa.int64()  # schema matches data files
+    assert t.column("user_id")[-1].as_py() == -1
+    sent_ns = t.column("ts")[-1].as_py()
+    assert sent_ns > max_data_ns, "sentinel must be ahead of all data"
+    days = (sent_ns - max_data_ns) / (86_400 * 1e9)
+    assert 29 < days < 32, f"sentinel offset {days} days — unit skew"
 
 
 def test_events_ts_unit_rejects_mixed_dir(tmp_path):
@@ -932,6 +935,37 @@ def test_rocksdb_changelog_checkpointing(spark):
         .agg(F.count(F.lit(1)).alias("n"))
     )
     assert sorted(map(tuple, final.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_checkpoint_manager_keeps_checksums(spark):
+    """Checkpoint files are renamed into place by the FileSystem-based
+    manager (session.RUNTIME_CONFS: no `readlink` fork per rename), and
+    both checksum layers survive the switch: Hadoop's `.<name>.crc`
+    sidecar on every checkpoint file, and Spark's own `<name>.crc` state
+    checksum next to each RocksDB changelog. The restart tests above run
+    under the same manager, so recovery through it is covered there."""
+    from sparkstreamingstateful_spark.streaming.runner import run_stream
+
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    ckpt = tempfile.mkdtemp(prefix="sss_cfm_ckpt_")
+    ev = read_stream_events(
+        spark, chunked_events_dir(SF_UNIT, n_chunks=2, sentinels=False)
+    )
+    res = run_stream(
+        ev.dropDuplicates(["event_id"]), state_partitions=4, checkpoint=ckpt
+    )
+    assert res.count() == load_table(spark, SF_UNIT, "events").count()
+
+    def ls(*sub):
+        return set(os.listdir(os.path.join(ckpt, *sub)))
+
+    assert {"0", ".0.crc"} <= ls("offsets")
+    assert {"1.changelog", ".1.changelog.crc", "1.changelog.crc"} <= ls(
+        "state", "0", "0"
+    )
 
 
 def test_processing_time_trigger_equivalence(spark):
