@@ -48,6 +48,12 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": (
         "true"
     ),
+}
+
+# Confs applied only to a session that has no value of its own: a
+# deployment's setting (say, an object-store checkpoint manager that
+# avoids renames) is left as it is.
+DEFAULT_CONFS: dict[str, str] = {
     # Atomic checkpoint writes (offsets, commits, sources, state
     # changelogs) by FileSystem.rename — File.renameTo, a POSIX rename on
     # the local FS — instead of the default FileContext manager, whose
@@ -56,7 +62,7 @@ RUNTIME_CONFS: dict[str, str] = {
     # pass, 0 with this manager). Spark falls back to this manager
     # itself when FileContext is unavailable. Hadoop's .crc sidecars and
     # Spark's own state-file checksums are written as before (pinned by
-    # tests/test_streaming.py::test_checkpoint_manager_keeps_checksums).
+    # tests/test_streaming.py::test_rocksdb_changelog_checkpointing).
     "spark.sql.streaming.checkpointFileManagerClass": (
         "org.apache.spark.sql.execution.streaming.checkpointing."
         "FileSystemBasedCheckpointFileManager"
@@ -65,11 +71,16 @@ RUNTIME_CONFS: dict[str, str] = {
 
 
 def configure(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to an existing session (idempotent, cheap).
-    A conf that fails to set raises: running on without nanosAsLong, UTC
-    or the RocksDB state store would silently change results."""
+    """Apply runtime confs to an existing session (idempotent, cheap):
+    every ``RUNTIME_CONFS`` entry, and each ``DEFAULT_CONFS`` entry the
+    session has no value for. A conf that fails to set raises: running
+    on without nanosAsLong, UTC or the RocksDB state store would
+    silently change results."""
     for k, v in RUNTIME_CONFS.items():
         spark.conf.set(k, v)
+    for k, v in DEFAULT_CONFS.items():
+        if spark.conf.get(k, None) is None:
+            spark.conf.set(k, v)
     return spark
 
 

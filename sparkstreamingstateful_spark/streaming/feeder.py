@@ -25,9 +25,9 @@ Variants:
 * ``replay=(i, ...)`` re-appends chunks after the originals — duplicate
   delivery for dedup tests (at-least-once source simulation).
 * ``late_chunk=i`` holds chunk i back until the end — out-of-order arrival
-  for watermark late-drop tests. Its sentinel stays a file of its own,
-  after the held chunk, so the late rows meet a watermark set by real
-  data alone.
+  for watermark late-drop tests. The sentinel rides in the held chunk's
+  file: its rows meet the watermark of earlier batches, set by real data
+  alone.
 """
 
 from __future__ import annotations
@@ -171,14 +171,12 @@ def chunked_events_dir(
         if late_chunk is not None:
             order.append(chunks[late_chunk])  # arrives last → late vs the watermark
         if sentinels:
-            sentinel = _sentinel_table(sf_dir, table.schema)
-            if late_chunk is None:
-                order[-1] = pa.concat_tables([order[-1], sentinel])
-            else:
-                order.append(sentinel)
+            order[-1] = pa.concat_tables(
+                [order[-1], _sentinel_table(sf_dir, table.schema)]
+            )
         return order
 
-    prefix = f"sss_feed2_k{n_chunks}_s{int(sentinels)}"
+    prefix = f"sss_feed3_k{n_chunks}_s{int(sentinels)}"
     prefix += "".join(f"_r{i}" for i in replay)
     if late_chunk is not None:
         prefix += f"_l{late_chunk}"

@@ -18,8 +18,7 @@ state the no-data flush batch then evicts. Update-mode stateful queries,
 the stateless join, and the inner stream-stream join emit without it, and
 a watermark-free feed runs no flush batch. Three data chunks (≥2
 state-crossing micro-batches) prove cross-batch state everywhere except
-late-drop, which pins the 4-chunk layout its oracle encodes (its sentinel
-stays a file of its own, after the held-back chunk).
+late-drop, which pins the 4-chunk layout its oracle encodes.
 """
 
 from __future__ import annotations

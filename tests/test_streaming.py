@@ -865,7 +865,11 @@ def test_rocksdb_changelog_checkpointing(spark):
     (b) a run writes .changelog files into the checkpoint's state dir,
     and (c) a kill/restart from that checkpoint recovers the exact
     per-key state — i.e. changelog REPLAY works, not just changelog
-    WRITE."""
+    WRITE. The checkpoint files are renamed into place by the
+    FileSystem-based manager (session.DEFAULT_CONFS: no `readlink` fork
+    per rename), and both checksum layers survive it: Hadoop's
+    `.<name>.crc` sidecar on every checkpoint file, and Spark's own
+    `<name>.crc` state checksum next to each RocksDB changelog."""
     import glob
     import uuid
 
@@ -876,6 +880,10 @@ def test_rocksdb_changelog_checkpointing(spark):
             "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
         )
         == "true"
+    )
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
     )
     feed = chunked_events_dir(SF_UNIT, n_chunks=4, sentinels=False)
     ckpt = tempfile.mkdtemp(prefix="sss_chlog_ckpt_")
@@ -923,6 +931,14 @@ def test_rocksdb_changelog_checkpointing(spark):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
+    def ls(*sub):
+        return set(os.listdir(os.path.join(ckpt, *sub)))
+
+    assert {"0", ".0.crc"} <= ls("offsets")
+    assert {"1.changelog", ".1.changelog.crc", "1.changelog.crc"} <= ls(
+        "state", "0", "0"
+    )
+
     final = (
         spark.read.parquet(os.path.join(out, "b*"))
         .groupBy("user_id")
@@ -937,35 +953,27 @@ def test_rocksdb_changelog_checkpointing(spark):
     assert sorted(map(tuple, final.collect())) == sorted(map(tuple, want.collect()))
 
 
-def test_checkpoint_manager_keeps_checksums(spark):
-    """Checkpoint files are renamed into place by the FileSystem-based
-    manager (session.RUNTIME_CONFS: no `readlink` fork per rename), and
-    both checksum layers survive the switch: Hadoop's `.<name>.crc`
-    sidecar on every checkpoint file, and Spark's own `<name>.crc` state
-    checksum next to each RocksDB changelog. The restart tests above run
-    under the same manager, so recovery through it is covered there."""
-    from sparkstreamingstateful_spark.streaming.runner import run_stream
+def test_configure_keeps_session_checkpoint_manager(spark):
+    """configure() sets the checkpoint manager only where the session
+    has none: a deployment's own manager (say, an object-store one that
+    avoids renames) is left as it is."""
+    from sparkstreamingstateful_spark.session import (
+        DEFAULT_CONFS,
+        conf_guard,
+        configure,
+    )
 
-    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == (
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    own = (
         "org.apache.spark.sql.execution.streaming.checkpointing."
-        "FileSystemBasedCheckpointFileManager"
+        "FileContextBasedCheckpointFileManager"
     )
-    ckpt = tempfile.mkdtemp(prefix="sss_cfm_ckpt_")
-    ev = read_stream_events(
-        spark, chunked_events_dir(SF_UNIT, n_chunks=2, sentinels=False)
-    )
-    res = run_stream(
-        ev.dropDuplicates(["event_id"]), state_partitions=4, checkpoint=ckpt
-    )
-    assert res.count() == load_table(spark, SF_UNIT, "events").count()
-
-    def ls(*sub):
-        return set(os.listdir(os.path.join(ckpt, *sub)))
-
-    assert {"0", ".0.crc"} <= ls("offsets")
-    assert {"1.changelog", ".1.changelog.crc", "1.changelog.crc"} <= ls(
-        "state", "0", "0"
-    )
+    with conf_guard(spark, {key: own}):
+        configure(spark)
+        assert spark.conf.get(key) == own
+        spark.conf.unset(key)
+        configure(spark)
+        assert spark.conf.get(key) == DEFAULT_CONFS[key]
 
 
 def test_processing_time_trigger_equivalence(spark):
