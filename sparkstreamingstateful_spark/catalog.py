@@ -275,38 +275,49 @@ def _normalize_events(df: DataFrame) -> DataFrame:
     )
 
 
-# DataFrame handles are cheap logical plans, but each spark.read.parquet()
-# builds a fresh file index (a driver-side listing + footer RPC that measures
-# in seconds on slow metadata stores, and in minutes on a 100 TB lake) —
-# cache the handle per (session, sf_dir, table). Weak-keyed by the
-# SparkSession object itself: an id()-keyed dict is vulnerable to CPython
-# id recycling (a new session allocated at a stopped session's address
-# would be served DataFrames bound to the dead session), and the weak
-# entry dies with the session instead of accumulating.
-_df_cache: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
+# Per-session memos, weak-keyed by the SparkSession object itself: an
+# id()-keyed dict is vulnerable to CPython id recycling (a new session
+# allocated at a stopped session's address would be served objects bound
+# to the dead session), and the entry dies with the session instead of
+# accumulating.
+_session_memos: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
+
+
+def session_memo(spark: SparkSession, build, name: str, sf_dir: str, *tables: str):
+    """``build()`` once per (session, ``name``, content of ``tables`` of
+    ``sf_dir``) and return the kept result after that: the one memo for
+    DataFrame handles, trained models and localCheckpoint-ed shared
+    inputs. Keyed by ``cache_tag``, so a source regenerated under the
+    same path builds afresh."""
+    memo = _session_memos.setdefault(spark, {})
+    key = (name, cache_tag(sf_dir, *tables))
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table as a DataFrame with its declared (logical) schema.
 
     The schema is passed to the reader explicitly: no inference job runs,
-    and the scan's ReadSchema starts from the declared types.
+    and the scan's ReadSchema starts from the declared types. The handle
+    is memoized per session: it is a cheap logical plan, but each
+    ``spark.read.parquet()`` builds a fresh file index (a driver-side
+    listing + footer RPC that measures in seconds on slow metadata
+    stores, and in minutes on a 100 TB lake).
     """
-    per_session = _df_cache.setdefault(spark, {})
-    key = (sf_dir, name)
-    cached = per_session.get(key)
-    if cached is not None:
-        return cached
-    configure(spark)
-    df = spark.read.schema(physical_schema(name, sf_dir=sf_dir)).parquet(
-        table_path(sf_dir, name)
-    )
-    if name == "events" and events_ts_unit(table_path(sf_dir, name)) == "ns":
-        df = _normalize_events(df)
-    per_session[key] = df
-    return df
+    path = table_path(sf_dir, name)
+
+    def build():
+        configure(spark)
+        df = spark.read.schema(physical_schema(name, sf_dir=sf_dir)).parquet(path)
+        if name == "events" and events_ts_unit(path) == "ns":
+            df = _normalize_events(df)
+        return df
+
+    return session_memo(spark, build, path, sf_dir, name)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

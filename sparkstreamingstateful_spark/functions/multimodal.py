@@ -160,6 +160,46 @@ def extract_features(df: DataFrame, *, fake_decode: bool = True) -> DataFrame:
     return df.mapInPandas(run, FEATURE_SCHEMA)
 
 
+def synthesize_stage(docs: DataFrame, synthesize) -> DataFrame:
+    """(doc_id) → (doc_id, media: binary), one ``synthesize(doc_id)``
+    file per row via Arrow-batched mapInPandas: the first stage of the
+    decode keys, which build genuine media files from closed-form
+    content."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "media": [synthesize(int(i)) for i in pdf["doc_id"]],
+                }
+            )
+
+    return docs.mapInPandas(run, "doc_id long, media binary")
+
+
+def decode_stage(media: DataFrame, decode, schema: T.StructType) -> DataFrame:
+    """(doc_id, media: binary) → doc_id plus ``decode(bytes)``'s tuple
+    spread over ``schema``'s fields, via Arrow-batched mapInPandas. The
+    stage consumes ONLY the bytes: it never sees the generation
+    arithmetic, which is what makes an oracle replay of the expected
+    stats an independent check of the parser."""
+    names = schema.fieldNames()
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = [decode(bytes(b)) for b in pdf["media"]]
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    **{n: [o[i] for o in out] for i, n in enumerate(names)},
+                }
+            )
+
+    doc_id = T.StructField("doc_id", T.LongType())
+    return media.mapInPandas(run, T.StructType([doc_id, *schema.fields]))
+
+
 # ----------------------------------------------------------------- BMP
 # A REAL decode path (with PNG below): uncompressed 24-bit BMP is
 # a pure-struct public format (Windows BITMAPINFOHEADER layout), so it
@@ -251,10 +291,8 @@ def decode_bmp(data: bytes):
 
 BMP_STATS_SCHEMA = T.StructType(
     [
-        T.StructField("doc_id", T.LongType()),
         T.StructField("width", T.IntegerType()),
         T.StructField("height", T.IntegerType()),
-        T.StructField("n_pixels", T.LongType()),
         T.StructField("mean_b", T.DoubleType()),
         T.StructField("mean_g", T.DoubleType()),
         T.StructField("mean_r", T.DoubleType()),
@@ -263,33 +301,6 @@ BMP_STATS_SCHEMA = T.StructType(
         T.StructField("tl_r", T.LongType()),
     ]
 )
-
-
-def decode_bmp_stats(df: DataFrame) -> DataFrame:
-    """(doc_id, media: binary) → per-image stats via Arrow-batched
-    mapInPandas, consuming ONLY the bytes (the decode stage never sees
-    the generation arithmetic — that's what makes the oracle replay an
-    independent check of the parser)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [decode_bmp(bytes(b)) for b in pdf["media"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": [o[0] for o in out],
-                    "height": [o[1] for o in out],
-                    "n_pixels": [o[0] * o[1] for o in out],
-                    "mean_b": [o[2] for o in out],
-                    "mean_g": [o[3] for o in out],
-                    "mean_r": [o[4] for o in out],
-                    "tl_b": [o[5] for o in out],
-                    "tl_g": [o[6] for o in out],
-                    "tl_r": [o[7] for o in out],
-                }
-            )
-
-    return df.mapInPandas(run, BMP_STATS_SCHEMA)
 
 
 # ----------------------------------------------------------------- PNG
@@ -465,10 +476,8 @@ def decode_png(data: bytes):
 
 PNG_STATS_SCHEMA = T.StructType(
     [
-        T.StructField("doc_id", T.LongType()),
         T.StructField("width", T.IntegerType()),
         T.StructField("height", T.IntegerType()),
-        T.StructField("n_pixels", T.LongType()),
         T.StructField("mean_r", T.DoubleType()),
         T.StructField("mean_g", T.DoubleType()),
         T.StructField("mean_b", T.DoubleType()),
@@ -477,31 +486,6 @@ PNG_STATS_SCHEMA = T.StructType(
         T.StructField("tl_b", T.LongType()),
     ]
 )
-
-
-def decode_png_stats(df: DataFrame) -> DataFrame:
-    """(doc_id, media: binary) → per-image stats via Arrow-batched
-    mapInPandas — the PNG twin of decode_bmp_stats."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [decode_png(bytes(b)) for b in pdf["media"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": [o[0] for o in out],
-                    "height": [o[1] for o in out],
-                    "n_pixels": [o[0] * o[1] for o in out],
-                    "mean_r": [o[2] for o in out],
-                    "mean_g": [o[3] for o in out],
-                    "mean_b": [o[4] for o in out],
-                    "tl_r": [o[5] for o in out],
-                    "tl_g": [o[6] for o in out],
-                    "tl_b": [o[7] for o in out],
-                }
-            )
-
-    return df.mapInPandas(run, PNG_STATS_SCHEMA)
 
 
 # ----------------------------------------------------------------- WAV
@@ -595,7 +579,6 @@ def decode_wav(data: bytes):
 
 WAV_STATS_SCHEMA = T.StructType(
     [
-        T.StructField("doc_id", T.LongType()),
         T.StructField("n_channels", T.IntegerType()),
         T.StructField("sample_rate", T.IntegerType()),
         T.StructField("n_frames", T.LongType()),
@@ -605,29 +588,6 @@ WAV_STATS_SCHEMA = T.StructType(
         T.StructField("rms_ch0", T.DoubleType()),
     ]
 )
-
-
-def decode_wav_stats(df: DataFrame) -> DataFrame:
-    """(doc_id, media: binary) → per-file audio stats via Arrow-batched
-    mapInPandas, consuming ONLY the bytes (the BMP/PNG discipline)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [decode_wav(bytes(b)) for b in pdf["media"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_channels": [o[0] for o in out],
-                    "sample_rate": [o[1] for o in out],
-                    "n_frames": [o[2] for o in out],
-                    "first_ch0": [o[3] for o in out],
-                    "mean_ch0": [o[4] for o in out],
-                    "peak": [o[5] for o in out],
-                    "rms_ch0": [o[6] for o in out],
-                }
-            )
-
-    return df.mapInPandas(run, WAV_STATS_SCHEMA)
 
 
 # ----------------------------------------------------------------- JPEG
@@ -916,7 +876,6 @@ def decode_jpeg(data: bytes):
 
 JPEG_STATS_SCHEMA = T.StructType(
     [
-        T.StructField("doc_id", T.LongType()),
         T.StructField("width", T.IntegerType()),
         T.StructField("height", T.IntegerType()),
         T.StructField("mean_gray", T.DoubleType()),
@@ -925,25 +884,3 @@ JPEG_STATS_SCHEMA = T.StructType(
         T.StructField("max_gray", T.LongType()),
     ]
 )
-
-
-def decode_jpeg_stats(df: DataFrame) -> DataFrame:
-    """(doc_id, media: binary) → per-image stats via Arrow-batched
-    mapInPandas, consuming ONLY the bytes (the BMP/PNG/WAV discipline)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [decode_jpeg(bytes(b)) for b in pdf["media"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": [o[0] for o in out],
-                    "height": [o[1] for o in out],
-                    "mean_gray": [o[2] for o in out],
-                    "tl_gray": [o[3] for o in out],
-                    "min_gray": [o[4] for o in out],
-                    "max_gray": [o[5] for o in out],
-                }
-            )
-
-    return df.mapInPandas(run, JPEG_STATS_SCHEMA)

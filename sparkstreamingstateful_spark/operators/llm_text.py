@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import SCHEMAS, cache_tag, load_table
+from ..catalog import SCHEMAS, load_table, session_memo
 from ..registry import query
 
 
@@ -979,6 +979,16 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _synthesized_media_stats(spark, sf_dir, synthesize, decode, schema):
+    """The codec keys' two-stage plan: one stage synthesizes each
+    document's media file from closed-form content, a second decodes it
+    FROM BYTES ALONE into the stats of ``schema``."""
+    from ..functions.multimodal import decode_stage, synthesize_stage
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    return decode_stage(synthesize_stage(docs, synthesize), decode, schema)
+
+
 @query(
     "multimodal_decode_bmp",
     oracle="""
@@ -1023,22 +1033,13 @@ def multimodal_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two narrow Arrow stages, zero shuffles, constant memory per
     partition — the same posture as the other L8 keys, but with a real
     parser in the decode slot."""
-    import pandas as pd
+    from ..functions.multimodal import BMP_STATS_SCHEMA, decode_bmp, synthesize_bmp
 
-    from ..functions.multimodal import decode_bmp_stats, synthesize_bmp
-
-    def synth(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media": [synthesize_bmp(int(i)) for i in pdf["doc_id"]],
-                }
-            )
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-    media = d.mapInPandas(synth, "doc_id long, media binary")
-    return decode_bmp_stats(media)
+    return _synthesized_media_stats(
+        spark, sf_dir, synthesize_bmp, decode_bmp, BMP_STATS_SCHEMA
+    ).withColumn(
+        "n_pixels", (F.col("width") * F.col("height")).cast("long")
+    )
 
 
 @query(
@@ -1089,22 +1090,13 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode cost is per-row Python+numpy, the honest shape for codec
     work (production swaps the same mapInPandas slot for a native
     decoder)."""
-    import pandas as pd
+    from ..functions.multimodal import PNG_STATS_SCHEMA, decode_png, synthesize_png
 
-    from ..functions.multimodal import decode_png_stats, synthesize_png
-
-    def synth(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media": [synthesize_png(int(i)) for i in pdf["doc_id"]],
-                }
-            )
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-    media = d.mapInPandas(synth, "doc_id long, media binary")
-    return decode_png_stats(media)
+    return _synthesized_media_stats(
+        spark, sf_dir, synthesize_png, decode_png, PNG_STATS_SCHEMA
+    ).withColumn(
+        "n_pixels", (F.col("width") * F.col("height")).cast("long")
+    )
 
 
 @query(
@@ -1154,22 +1146,11 @@ def multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: two narrow Arrow stages, zero shuffles — the BMP/PNG
     posture on the audio modality."""
-    import pandas as pd
+    from ..functions.multimodal import WAV_STATS_SCHEMA, decode_wav, synthesize_wav
 
-    from ..functions.multimodal import decode_wav_stats, synthesize_wav
-
-    def synth(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media": [synthesize_wav(int(i)) for i in pdf["doc_id"]],
-                }
-            )
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-    media = d.mapInPandas(synth, "doc_id long, media binary")
-    return decode_wav_stats(media)
+    return _synthesized_media_stats(
+        spark, sf_dir, synthesize_wav, decode_wav, WAV_STATS_SCHEMA
+    )
 
 
 @query(
@@ -1216,22 +1197,11 @@ def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: two narrow Arrow stages, zero shuffles — the BMP/PNG/WAV
     posture, now covering the dominant real-world image container."""
-    import pandas as pd
+    from ..functions.multimodal import JPEG_STATS_SCHEMA, decode_jpeg, synthesize_jpeg
 
-    from ..functions.multimodal import decode_jpeg_stats, synthesize_jpeg
-
-    def synth(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media": [synthesize_jpeg(int(i)) for i in pdf["doc_id"]],
-                }
-            )
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-    media = d.mapInPandas(synth, "doc_id long, media binary")
-    return decode_jpeg_stats(media)
+    return _synthesized_media_stats(
+        spark, sf_dir, synthesize_jpeg, decode_jpeg, JPEG_STATS_SCHEMA
+    )
 
 
 # One shared shingle-pair derivation feeds BOTH oracle edge constants
@@ -1261,13 +1231,6 @@ _EDGES_SQL = (
 )
 
 
-import weakref
-
-_LSH_SYM_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def lsh_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetrized LSH near-dup pair graph ``(src, dst, w)``, built ONCE
     per (session, corpus content) and memoized — the `_pq_train_cached`
@@ -1276,18 +1239,16 @@ def lsh_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     `graph_shortest_path` all iterate over the SAME edge list, and the
     MinHash+LSH pipeline that produces it (~5 s of each key's cost) is
     pure shared setup, not the operator under test. The edge list is
-    localCheckpoint-materialized, so reuse costs nothing; keying is
-    content-fingerprint + session-weakref per the repo idempotence rule
-    (never id()).
+    localCheckpoint-materialized, so reuse costs nothing
+    (``catalog.session_memo``).
 
     ``w`` is the DISSIMILARITY weight 10^6·(1 - jaccard) as an exact
     BIGINT: the H-checked 6-decimal jaccard is within one ulp of a
     millionth-grid point on both engines, so round-to-nearest-integer of
     jaccard·10^6 is cross-engine exact and downstream weighted-path sums
     stay in integer arithmetic (the E17 fixed-point discipline)."""
-    tag = cache_tag(sf_dir, "documents")
-    per_session = _LSH_SYM_CACHE.setdefault(spark, {})
-    if tag not in per_session:
+
+    def build():
         pairs = dedup_minhash_lsh(spark, sf_dir).select(
             "a_id",
             "b_id",
@@ -1296,7 +1257,7 @@ def lsh_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
                 - F.round(F.col("jaccard") * 1_000_000, 0).cast("bigint")
             ).alias("w"),
         )
-        per_session[tag] = (
+        return (
             pairs.union(
                 pairs.select(
                     F.col("b_id").alias("a_id"),
@@ -1309,7 +1270,8 @@ def lsh_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-    return per_session[tag]
+
+    return session_memo(spark, build, "lsh_sym_edges", sf_dir, "documents")
 
 
 # Weighted twin of _EDGES_SQL: same >=0.7 shingle-Jaccard pair graph with
@@ -2155,11 +2117,6 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BPE_MODEL_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def _bpe_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus word-frequency table both BPE keys derive from (one
     hash agg; lower + space-split, the repo's document tokenization)."""
@@ -2174,11 +2131,10 @@ def _bpe_words(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bpe_train_cached(spark: SparkSession, sf_dir: str) -> list:
     """Train the merge table ONCE per (session, corpus content) and
-    memoize (content-fingerprint + session-weakref keying)."""
+    memoize it (``catalog.session_memo``)."""
     from ..session import conf_guard
-    tag = cache_tag(sf_dir, "documents")
-    per_session = _BPE_MODEL_CACHE.setdefault(spark, {})
-    if tag not in per_session:
+
+    def build():
         chars = F.array_join(
             F.transform(
                 F.sequence(F.lit(1), F.length("w")),
@@ -2196,8 +2152,9 @@ def _bpe_train_cached(spark: SparkSession, sf_dir: str) -> list:
         # tasks is pure scheduler overhead on distinct-word-sized data
         # (the pagerank_fixed_point rationale)
         with conf_guard(spark, {"spark.sql.shuffle.partitions": "2"}):
-            per_session[tag] = _bpe_rounds(cur)
-    return per_session[tag]
+            return _bpe_rounds(cur)
+
+    return session_memo(spark, build, "bpe_model", sf_dir, "documents")
 
 
 def _bpe_rounds(cur: DataFrame, merges: int = _BPE_MERGES) -> list:

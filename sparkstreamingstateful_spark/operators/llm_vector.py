@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import cache_tag, load_table
+from ..catalog import load_table, session_memo
 from ..registry import query
 PROBE_IDS = tuple(range(10))  # fixed probe set for top-k queries
 _PROBES_SQL = ", ".join(str(i) for i in PROBE_IDS)
@@ -1399,13 +1399,6 @@ def _pq_oracle() -> str:
     """
 
 
-import weakref
-
-_PQ_MODEL_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def _pq_train_cached(spark: SparkSession, sf_dir: str, e: DataFrame):
     """Train the 4 subspace codebooks ONCE per (session, corpus content)
     and memoize ``(codes, cents)``: the stacked ``kmeans_fixed_train``
@@ -1415,16 +1408,15 @@ def _pq_train_cached(spark: SparkSession, sf_dir: str, e: DataFrame):
     k-means, one update job per Lloyd round. Train-once / use-many is
     the production PQ shape: L21 (encode) and L22 (ADC search) share
     the model, exactly as a vector store shares its trained quantizer
-    across queries. Session-weak keying per the repo idempotence rule
-    (never id())."""
-    tag = cache_tag(sf_dir, "embeddings")
-    per_session = _PQ_MODEL_CACHE.setdefault(spark, {})
-    if tag not in per_session:
+    across queries (``catalog.session_memo``)."""
+
+    def build():
         codes, cents = kmeans_fixed_train(
             e, k=_PQ_K, iters=_PQ_ITERS, dim=_KM_DIM, parts=_PQ_M
         )
-        per_session[tag] = (codes.localCheckpoint(), cents)
-    return per_session[tag]
+        return codes.localCheckpoint(), cents
+
+    return session_memo(spark, build, "pq_model", sf_dir, "embeddings")
 
 
 @query("embed_pq_codes", oracle=_pq_oracle())

@@ -8,7 +8,6 @@ from __future__ import annotations
 import functools
 import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -538,9 +537,10 @@ def write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write customer to parquet, re-read, aggregate — the H-check proves
     the write→read cycle is lossless (CSV/JSON get the same H-checked
     treatment in scan_csv/scan_json above; tests/test_sources.py holds
-    the exact-row roundtrip test)."""
+    the exact-row roundtrip test). Every run overwrites the one parquet
+    dir kept per source content."""
     c = load_table(spark, sf_dir, "customer")
-    out = os.path.join(tempfile.mkdtemp(prefix="sss_roundtrip_"), "customer_pq")
+    out = cache_dir("sss_parquet_roundtrip", sf_dir, "customer")
     c.write.mode("overwrite").parquet(out)
     back = spark.read.schema(c.schema).parquet(out)
     return back.groupBy("c_mktsegment").agg(

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import cache_tag, load_table
+from ..catalog import load_table, session_memo
 from ..registry import query
 
 
@@ -653,27 +653,17 @@ def events_trend_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("tau_a"),
     )
 
-_HOURLY_SPINE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = None  # type: ignore[assignment]
-
-
 def _mk_hourly_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The hourly (event_type, h, v) spine in exact 1e-2 BIGINT units —
     ONE hash agg over events, localCheckpoint-materialized and memoized
     per (session, corpus content): E26 and E26b (and any future
     trend/seasonality key) iterate over the SAME spine, so the corpus
     scan + agg is shared setup, not the statistic under test (the
-    lsh_sym_edges device; keyed content-fingerprint + session-weakref
-    per the repo idempotence rule, never id())."""
-    global _HOURLY_SPINE_CACHE
-    if _HOURLY_SPINE_CACHE is None:
-        import weakref
+    lsh_sym_edges device, ``catalog.session_memo``)."""
 
-        _HOURLY_SPINE_CACHE = weakref.WeakKeyDictionary()
-    tag = cache_tag(sf_dir, "events")
-    per_session = _HOURLY_SPINE_CACHE.setdefault(spark, {})
-    if tag not in per_session:
+    def build():
         ev = load_table(spark, sf_dir, "events")
-        per_session[tag] = (
+        return (
             ev.groupBy(
                 "event_type", F.date_trunc("hour", F.col("ts")).alias("h")
             )
@@ -684,7 +674,8 @@ def _mk_hourly_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-    return per_session[tag]
+
+    return session_memo(spark, build, "hourly_spine", sf_dir, "events")
 
 
 @query(

@@ -805,8 +805,10 @@ def stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups of a window finalize in the same micro-batch (the one whose
     updated watermark passes the window end), so each batch ranks only
     complete windows. Batches append to a parquet sink (the production
-    shape) which is read back as the result."""
-    import tempfile
+    shape) which is read back as the result. The sink dir is one path
+    per source content, cleared before each run."""
+    import os
+    import shutil
 
     ev = _stream(spark, sf_dir)
     agg = (
@@ -814,7 +816,9 @@ def stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    out_dir = tempfile.mkdtemp(prefix="sss_topk_")
+    out_dir = cache_dir("sss_topksink", sf_dir, "events")
+    if os.path.isdir(out_dir):
+        shutil.rmtree(out_dir)
 
     from pyspark.sql import Window
 

@@ -1,12 +1,16 @@
 """Streaming-query runner: the one place a streaming DataFrame is started.
 
-Every stream in the engine goes through :func:`run_stream` (run to
-completion under ``availableNow``) or :func:`run_stream_drain` (custom
-Python sources, see its docstring). Both are thin entry points over one
-private core that owns the no-data-batch guard, the session-conf window
-(state partition count plus any extra confs, restored afterwards), the
-checkpoint (a fresh temp dir or a caller's fixed path), the start, the
-wait and the :data:`LAST_QUERY_PROGRESS` capture.
+Every stream in the engine, and every test stream that needs no
+wall-clock trigger or endless source, goes through :func:`run_stream`
+(run to completion under ``availableNow``) or :func:`run_stream_drain`
+(queries availableNow cannot finish, see its docstring). Both are thin
+entry points over one private core that owns the no-data-batch guard,
+the session-conf window (state partition count plus any extra confs,
+restored afterwards), the checkpoint, the start, the wait and the
+:data:`LAST_QUERY_PROGRESS` capture. The checkpoint is a caller's fixed
+path, which the runner never touches, or a fresh temp dir, which the
+runner removes once the query has stopped, whether the run succeeded or
+failed: no sink reads it.
 
 The default sink is an in-memory table, returned as a DataFrame — the
 test/driver surface. Callers with a production sink pass ``sink``, a
@@ -18,6 +22,7 @@ checkpoint is exercised in tests/test_streaming.py.
 
 from __future__ import annotations
 
+import shutil
 import tempfile
 import uuid
 
@@ -59,27 +64,31 @@ def require_no_data_batches(spark) -> None:
 def _run(df, sink, wait, *, trigger, output_mode, state_partitions, checkpoint, conf):
     """Start ``df`` through ``sink`` and ``wait`` on it inside the conf
     window; always stop the query and keep its progress, so a failed
-    run never leaves an earlier query's batches in LAST_QUERY_PROGRESS."""
+    run never leaves an earlier query's batches in LAST_QUERY_PROGRESS.
+    A checkpoint the runner made itself is removed after the stop: no
+    sink reads it, and a fixed ``checkpoint`` is never touched."""
     global LAST_QUERY_PROGRESS
     spark = df.sparkSession
     require_no_data_batches(spark)
     confs = {"spark.sql.shuffle.partitions": str(state_partitions), **(conf or {})}
-    with conf_guard(spark, confs):
-        q = sink(
-            df.writeStream.outputMode(output_mode)
-            .option(
-                "checkpointLocation",
-                checkpoint or tempfile.mkdtemp(prefix="sss_ckpt_"),
+    own = None if checkpoint else tempfile.mkdtemp(prefix="sss_ckpt_")
+    try:
+        with conf_guard(spark, confs):
+            q = sink(
+                df.writeStream.outputMode(output_mode)
+                .option("checkpointLocation", checkpoint or own)
+                .trigger(**trigger)
             )
-            .trigger(**trigger)
-        )
-        try:
-            wait(q)
-        finally:
-            # a timeout/exception path must not leak a running query (it
-            # would hold executor slots against every later query)
-            q.stop()
-            LAST_QUERY_PROGRESS = [dict(p) for p in q.recentProgress]
+            try:
+                wait(q)
+            finally:
+                # a timeout/exception path must not leak a running query
+                # (it would hold executor slots against every later query)
+                q.stop()
+                LAST_QUERY_PROGRESS = [dict(p) for p in q.recentProgress]
+    finally:
+        if own is not None:
+            shutil.rmtree(own, ignore_errors=True)
 
 
 def _memory_sink():
@@ -98,14 +107,18 @@ def run_stream_drain(
     """Run a streaming DataFrame until ``done(end_offset)`` says the
     source is exhausted, then stop and return the memory table.
 
-    Exists for custom Python micro-batch sources
-    (``sources/pyds.ParquetDirStreamDataSource``): the availableNow
-    trigger snapshots "latest" ONCE at start, but a Python source's
-    ``latestOffset`` is also its rate limiter (it advances per call), so
-    availableNow would consume exactly one micro-batch and declare
-    victory (measured). Instead: continuous trigger + poll the committed
-    end offset from query progress until the caller's predicate holds.
-    ``done`` receives the parsed ``endOffset`` dict of source 0.
+    Exists for queries availableNow cannot finish. A custom Python
+    micro-batch source (``sources/pyds.ParquetDirStreamDataSource``):
+    the availableNow trigger snapshots "latest" ONCE at start, but a
+    Python source's ``latestOffset`` is also its rate limiter (it
+    advances per call), so availableNow would consume exactly one
+    micro-batch and declare victory (measured). A
+    ``timeMode=ProcessingTime`` TWS query: Spark keeps scheduling
+    no-data batches for it, so availableNow never declares it drained.
+    Instead: continuous trigger + poll the committed end offset from
+    query progress until the caller's predicate holds. ``done``
+    receives the parsed ``endOffset`` dict of source 0 (a file source's
+    is ``{"logOffset": n}``, n counting its batches from 0).
     """
     import ast
     import json
@@ -165,8 +178,8 @@ def run_stream(
     (``lambda w: w.foreachBatch(f).start()``, ``lambda w:
     w.toTable(name)``), and the caller reads its own output back.
     ``checkpoint`` is a fixed checkpoint path (default: a fresh temp
-    dir); ``conf`` holds extra session confs for the run, restored
-    afterwards like the partition count.
+    dir, removed after the run); ``conf`` holds extra session confs for
+    the run, restored afterwards like the partition count.
 
     ``state_partitions`` caps the stateful-operator partition count for
     this query (picked up from the session conf at query start and then

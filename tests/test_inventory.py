@@ -276,52 +276,97 @@ def test_driver_window_is_r19_rotation():
     assert list(QUERIES)[:50] == expected
 
 
+# Tests that start their own stream, each because its subject is
+# something the runner does not offer.
+_OWN_STREAM_TESTS = {
+    # wall-clock processing-time triggers (1 s and 8 s)
+    ("test_streaming.py", "test_processing_time_trigger_equivalence"),
+    ("test_streaming.py", "test_tws_mapstate_ttl_expiry"),
+    ("test_streaming.py", "test_tws_processing_time_timer"),
+    # the socket and rate sources, which never run dry
+    ("test_sources.py", "test_socket_source_end_to_end"),
+    ("test_sources.py", "test_rate_source"),
+}
+
+
 def test_only_the_runner_starts_streams():
     """Every stream goes through streaming/runner.py: no other module of
-    the package may touch ``.writeStream`` or ``.awaitTermination``.
-    Checked on the AST, because docstrings mention writeStream."""
+    the package, and no test outside ``_OWN_STREAM_TESTS``, may touch
+    ``.writeStream`` or ``.awaitTermination``. Checked on the AST,
+    because docstrings mention writeStream."""
     import ast
     import pathlib
 
     import sparkstreamingstateful_spark as pkg
 
-    root = pathlib.Path(pkg.__file__).parent
-    runner = root / "streaming" / "runner.py"
+    repo = pathlib.Path(pkg.__file__).parent.parent
+    runner = repo / "sparkstreamingstateful_spark" / "streaming" / "runner.py"
+    paths = [
+        *sorted((repo / "sparkstreamingstateful_spark").rglob("*.py")),
+        *sorted((repo / "tests").rglob("*.py")),
+    ]
     hits = [
-        f"{path.relative_to(root)}:{node.lineno} .{node.attr}"
-        for path in sorted(root.rglob("*.py"))
+        f"{path.relative_to(repo)}:{node.lineno} .{node.attr}"
+        for path in paths
         if path != runner
-        for node in ast.walk(ast.parse(path.read_text()))
+        for top in ast.parse(path.read_text()).body
+        if (path.name, getattr(top, "name", None)) not in _OWN_STREAM_TESTS
+        for node in ast.walk(top)
         if isinstance(node, ast.Attribute)
         and node.attr in ("writeStream", "awaitTermination")
     ]
     assert not hits, f"streams started outside streaming/runner.py: {hits}"
 
 
-def test_only_the_catalog_builds_cache_paths():
-    """Every content-keyed cache takes its path from ``catalog.cache_dir``:
-    no other module of the package may call ``gettempdir``. Checked on
-    the AST, because docstrings mention it."""
+def _package_names_outside(owners):
+    """``path:line name`` for each use of a name in ``owners`` (attribute,
+    bare name or ``from`` import) by a package module not among that
+    name's owners. Checked on the AST, because docstrings mention them."""
     import ast
     import pathlib
 
     import sparkstreamingstateful_spark as pkg
 
     root = pathlib.Path(pkg.__file__).parent
-    catalog = root / "catalog.py"
-    hits = [
-        f"{path.relative_to(root)}:{node.lineno}"
-        for path in sorted(root.rglob("*.py"))
-        if path != catalog
-        for node in ast.walk(ast.parse(path.read_text()))
-        if (isinstance(node, ast.Attribute) and node.attr == "gettempdir")
-        or (isinstance(node, ast.Name) and node.id == "gettempdir")
-        or (
-            isinstance(node, ast.ImportFrom)
-            and any(a.name == "gettempdir" for a in node.names)
-        )
-    ]
-    assert not hits, f"gettempdir outside catalog.py: {hits}"
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        rel = str(path.relative_to(root))
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Attribute):
+                names = [node.attr]
+            elif isinstance(node, ast.Name):
+                names = [node.id]
+            elif isinstance(node, ast.ImportFrom):
+                names = [a.name for a in node.names]
+            else:
+                continue
+            hits += [
+                f"{rel}:{node.lineno} {n}"
+                for n in names
+                if n in owners and rel not in owners[n]
+            ]
+    return hits
+
+
+def test_only_the_catalog_builds_cache_paths():
+    """Every content-keyed cache takes its path from ``catalog.cache_dir``:
+    no other module of the package may call ``gettempdir``. And only the
+    runner, which removes its temp checkpoints again, may call
+    ``mkdtemp``: anywhere else it leaves a new dir behind on every run."""
+    hits = _package_names_outside(
+        {"gettempdir": {"catalog.py"}, "mkdtemp": {"streaming/runner.py"}}
+    )
+    assert not hits, f"temp dirs made outside catalog.py/runner.py: {hits}"
+
+
+def test_one_per_session_memo():
+    """Per-session memos go through ``catalog.session_memo``; the only
+    other ``WeakKeyDictionary`` is sqlsurface's record of the view set
+    each session has registered, which is state, not a memo."""
+    hits = _package_names_outside(
+        {"WeakKeyDictionary": {"catalog.py", "operators/sqlsurface.py"}}
+    )
+    assert not hits, f"hand-rolled per-session caches: {hits}"
 
 
 def test_only_the_feeder_writes_feeds():

@@ -7,14 +7,15 @@ tests/test_sources.py through the sources.streams wrapper.)"""
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
 from sparkstreamingstateful_spark import registry
 from sparkstreamingstateful_spark.catalog import load_table, read_stream_events
+from sparkstreamingstateful_spark.session import conf_guard
 from sparkstreamingstateful_spark.streaming.feeder import chunked_events_dir
+from sparkstreamingstateful_spark.streaming.runner import run_stream
 
 from .conftest import SF_UNIT
 
@@ -33,170 +34,60 @@ def test_late_data_dropped(spark):
 _CRASH = "deliberate crash between the batch-1 sink write and its commit"
 
 
-def _crash_after_batch_1(write_batch):
-    """Phase-1 foreachBatch of the restart tests: run ``write_batch``, and
-    after batch 1's output is written raise, so the query dies between
-    that sink write and the commit log — at the same boundary every run
-    (stopping the query once ``commits/`` shows up races the next batch)."""
+def _ls(ckpt, sub):
+    return sorted(f for f in os.listdir(os.path.join(ckpt, sub)) if f[0] != ".")
 
-    def crash(df, batch_id):
-        write_batch(df, batch_id)
-        if batch_id == 1:
+
+def _run_to_dir(df, ckpt, out, *, crash=False, output_mode="append"):
+    """The restart tests' one run: ``df`` through ``run_stream`` from the
+    fixed checkpoint ``ckpt`` into ``out/b<epoch>``. Each epoch
+    OVERWRITES its own dir, so a replayed epoch rewrites its output and
+    the sink stays exactly-once under at-least-once replay (with append,
+    a crash between the parquet commit and the checkpoint commit would
+    duplicate that epoch's rows). With ``crash`` the run raises right
+    after batch 1's sink write, so it dies between that write and the
+    commit log at the same boundary every run (stopping the query once
+    ``commits/`` shows up races the next batch): batch 1 planned, only
+    batch 0 committed."""
+
+    def write(batch_df, epoch):
+        batch_df.write.mode("overwrite").parquet(os.path.join(out, f"b{epoch}"))
+        if crash and epoch == 1:
             raise RuntimeError(_CRASH)
 
-    return crash
+    def run():
+        run_stream(
+            df,
+            output_mode=output_mode,
+            checkpoint=ckpt,
+            sink=lambda w: w.foreachBatch(write).start(),
+        )
+
+    if crash:
+        with pytest.raises(Exception, match=_CRASH):
+            run()
+        assert (_ls(ckpt, "offsets"), _ls(ckpt, "commits")) == (["0", "1"], ["0"])
+    else:
+        run()
 
 
-def _await_crash(q, ckpt):
-    """Phase 1 must end in the crash above: batch 1 planned, only batch 0
-    committed."""
-    with pytest.raises(Exception, match=_CRASH):
-        q.awaitTermination()
-
-    def ls(sub):
-        return sorted(f for f in os.listdir(os.path.join(ckpt, sub)) if f[0] != ".")
-
-    assert (ls("offsets"), ls("commits")) == (["0", "1"], ["0"])
-
-
-def test_foreachbatch_parquet_sink_and_recovery(spark):
+def test_foreachbatch_parquet_sink_and_recovery(spark, tmp_path):
     """S5 + ST11: foreachBatch→parquet with checkpointing; kill after the
     first batches, restart from the same checkpoint, assert exactly-once
     (no loss, no duplication) in the sink."""
     feed = chunked_events_dir(SF_UNIT, n_chunks=4, sentinels=False)
-    ckpt = tempfile.mkdtemp(prefix="sss_recov_ckpt_")
-    out = tempfile.mkdtemp(prefix="sss_recov_out_")
-
-    def write_batch(df, batch_id):
-        # overwrite, not append: exactly-once rests on a replayed batch
-        # id REWRITING its own dir — with append, a kill landing between
-        # the parquet commit and the checkpoint commit would duplicate
-        # that batch's rows on restart
-        df.write.mode("overwrite").parquet(os.path.join(out, f"b{batch_id}"))
-
-    def start(sink):
-        ev = read_stream_events(spark, feed)
-        return (
-            ev.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
+    ev = read_stream_events(spark, feed)
+    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
 
     # phase 1: crash after batch 1's sink write, before its commit
-    _await_crash(start(_crash_after_batch_1(write_batch)), ckpt)
-
+    _run_to_dir(ev, ckpt, out, crash=True)
     # phase 2: restart from the same checkpoint → finish the feed
-    q = start(write_batch)
-    q.awaitTermination()
+    _run_to_dir(ev, ckpt, out)
 
     sink = spark.read.parquet(os.path.join(out, "b*"))
     expected = load_table(spark, SF_UNIT, "events")
     assert sink.count() == expected.count()  # no loss, no duplication
     assert sink.select("event_id").distinct().count() == expected.count()
-
-
-def test_stateful_kill_restart_recovery(spark):
-    """ST11b: the STATEFUL path (applyInPandasWithState) must survive a
-    kill/restart from the same checkpoint — the state store recovers the
-    per-key aggregates, the remaining micro-batches resume, and the final
-    per-key state equals the batch twin. Replayed update-mode emissions are
-    identical rows, so the arg-max materialization is idempotent under
-    at-least-once batch replay."""
-    import json
-    import uuid
-
-    from sparkstreamingstateful_spark.streaming import stateful
-
-    feed = chunked_events_dir(SF_UNIT, n_chunks=4, sentinels=False)
-    ckpt = tempfile.mkdtemp(prefix="sss_strec_ckpt_")
-    out = tempfile.mkdtemp(prefix="sss_strec_out_")
-
-    def write_batch(df, batch_id):
-        # overwrite, not append: exactly-once rests on a replayed batch
-        # id REWRITING its own dir — with append, a kill landing between
-        # the parquet commit and the checkpoint commit would duplicate
-        # that batch's rows on restart
-        df.write.mode("overwrite").parquet(os.path.join(out, f"b{batch_id}"))
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-
-        def start(sink):
-            ev = read_stream_events(spark, feed)
-            updates = ev.groupBy("user_id").applyInPandasWithState(
-                stateful.running_agg_fn,
-                stateful.RUNNING_AGG_OUTPUT,
-                stateful.RUNNING_AGG_STATE,
-                "update",
-                "NoTimeout",
-            )
-            return (
-                updates.writeStream.foreachBatch(sink)
-                .outputMode("update")
-                .queryName("strec_" + uuid.uuid4().hex[:8])
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-
-        # phase 1: crash in batch 1, after batch 0 committed (state
-        # crossed a batch)
-        _await_crash(start(_crash_after_batch_1(write_batch)), ckpt)
-
-        # phase 2: restart from the same checkpoint → drain the feed
-        q = start(write_batch)
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-    def ckpt_listing() -> str:
-        # what each phase left behind: offsets/ and commits/, plus the
-        # feed files each offset batch was planned to read (the file
-        # source's per-batch log under sources/0)
-        def ls(sub):
-            d = os.path.join(ckpt, sub)
-            names = os.listdir(d) if os.path.isdir(d) else []
-            names = [f for f in names if not f.startswith(".")]
-            return sorted(names, key=lambda f: (len(f), f))
-
-        lines = [f"offsets/: {ls('offsets')}", f"commits/: {ls('commits')}"]
-        for b in ls("sources/0"):
-            with open(os.path.join(ckpt, "sources", "0", b)) as f:
-                entries = [json.loads(x) for x in f.read().splitlines()[1:] if x]
-            read = [os.path.basename(e["path"]) for e in entries]
-            lines.append(f"batch {b} read {read}")
-        return "\n".join(lines)
-
-    # all 4 micro-batches committed exactly once across both phases
-    commits = os.path.join(ckpt, "commits")
-    done = [f for f in os.listdir(commits) if not f.startswith(".")]
-    assert len(done) == 4, (
-        f"expected 4 committed batches, got {sorted(done)}\n{ckpt_listing()}"
-    )
-
-    sink = spark.read.parquet(os.path.join(out, "b*"))
-    final = (
-        sink.groupBy("user_id")
-        .agg(F.max(F.struct("n", "sum_value")).alias("s"))
-        .select(
-            "user_id",
-            F.col("s.n").alias("n"),
-            F.round("s.sum_value", 2).alias("sum_value"),
-        )
-    )
-    expected = (
-        load_table(spark, SF_UNIT, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-    )
-    got = sorted(map(tuple, final.collect()))
-    want = sorted(map(tuple, expected.collect()))
-    assert got == want, "recovered final state diverges from the batch twin"
 
 
 def test_events_ts_unit_duality(spark, tmp_path):
@@ -210,7 +101,6 @@ def test_events_ts_unit_duality(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from sparkstreamingstateful_spark.catalog import events_ts_unit
-    from sparkstreamingstateful_spark.streaming.runner import run_stream
 
     src = pq.read_table(os.path.join(SF_UNIT, "events.parquet")).slice(0, 2000)
     i = src.schema.get_field_index("ts")
@@ -256,7 +146,6 @@ def test_sessionize_survives_late_groups(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from sparkstreamingstateful_spark.streaming import stateful
-    from sparkstreamingstateful_spark.streaming.runner import run_stream
 
     src = pq.read_table(os.path.join(SF_UNIT, "events.parquet"))
     uid = src.column("user_id")
@@ -318,8 +207,6 @@ def test_sessionize_kill_restart_unsorted_10x(spark, tmp_path):
       keeps at-least-once replay exactly-once).
     * (user, sess_start) is never emitted twice, and the query
       completes on both paths."""
-    import uuid
-
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -343,48 +230,31 @@ def test_sessionize_kill_restart_unsorted_10x(spark, tmp_path):
     pq.write_table(pa.concat_tables(reps), str(d / "events.parquet"))
     feed = chunked_events_dir(str(d), n_chunks=5, sentinels=True)
 
+    sessions = (
+        read_stream_events(spark, feed)
+        .withWatermark("ts", "10 minutes")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            stateful.sessionize_fn,
+            stateful.SESSION_OUTPUT,
+            stateful.SESSION_STATE,
+            "append",
+            "EventTimeTimeout",
+        )
+    )
+
     def run_pipeline(kill: bool) -> list[tuple]:
-        ckpt = tempfile.mkdtemp(prefix="sss_sess10x_ckpt_")
-        out = tempfile.mkdtemp(prefix="sss_sess10x_out_")
-
-        def write_batch(df, batch_id):
-            # overwrite, not append: a replayed batch id rewrites its own
-            # dir, so the sink is exactly-once under at-least-once replay
-            df.write.mode("overwrite").parquet(os.path.join(out, f"b{batch_id}"))
-
-        def start(sink):
-            ev = read_stream_events(spark, feed)
-            sessions = (
-                ev.withWatermark("ts", "10 minutes")
-                .groupBy("user_id")
-                .applyInPandasWithState(
-                    stateful.sessionize_fn,
-                    stateful.SESSION_OUTPUT,
-                    stateful.SESSION_STATE,
-                    "append",
-                    "EventTimeTimeout",
-                )
-            )
-            return (
-                sessions.writeStream.foreachBatch(sink)
-                .outputMode("append")
-                .queryName("sess10x_" + uuid.uuid4().hex[:8])
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-
+        run_dir = tmp_path / ("killed" if kill else "straight")
+        ckpt, out = str(run_dir / "ckpt"), str(run_dir / "out")
         if kill:
-            _await_crash(start(_crash_after_batch_1(write_batch)), ckpt)
-        q = start(write_batch)
-        q.awaitTermination()
-        commits = os.path.join(ckpt, "commits")
-        done = [f for f in os.listdir(commits) if not f.startswith(".")]
+            _run_to_dir(sessions, ckpt, out, crash=True)
+        _run_to_dir(sessions, ckpt, out)
+        done = _ls(ckpt, "commits")
         # one batch per feed file (5 chunks, the last one carrying the
         # sentinel) + a flush batch
         n_batches = 5 + 1
         assert len(done) >= n_batches, (
-            f"expected >={n_batches} committed batches, got {sorted(done)}"
+            f"expected >={n_batches} committed batches, got {done}"
         )
         return sorted(
             map(
@@ -395,13 +265,8 @@ def test_sessionize_kill_restart_unsorted_10x(spark, tmp_path):
             )
         )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        straight = run_pipeline(kill=False)
-        recovered = run_pipeline(kill=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    straight = run_pipeline(kill=False)
+    recovered = run_pipeline(kill=True)
 
     assert recovered == straight, (
         "kill/restart changed the result: "
@@ -455,7 +320,6 @@ def test_windowed_agg_sentinel_after_restart(spark, tmp_path):
     file of its own.)"""
     import glob
     import shutil
-    import uuid
 
     import pyarrow.parquet as pq
 
@@ -469,30 +333,15 @@ def test_windowed_agg_sentinel_after_restart(spark, tmp_path):
     for f in data_files:
         shutil.copy2(f, feed / os.path.basename(f))
 
-    ckpt = tempfile.mkdtemp(prefix="sss_sentrest_ckpt_")
-    out = tempfile.mkdtemp(prefix="sss_sentrest_out_")
+    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
+    agg = (
+        read_stream_events(spark, str(feed))
+        .withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
 
-    def write_batch(df, batch_id):
-        df.write.mode("overwrite").parquet(os.path.join(out, f"b{batch_id}"))
-
-    def run_once():
-        ev = read_stream_events(spark, str(feed))
-        agg = (
-            ev.withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        q = (
-            agg.writeStream.foreachBatch(write_batch)
-            .outputMode("append")
-            .queryName("sentrest_" + uuid.uuid4().hex[:8])
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    run_once()  # drains data chunks; windows remain in state, unemitted
+    _run_to_dir(agg, ckpt, out)  # drains data chunks; windows stay in state
     emitted = glob.glob(os.path.join(out, "b*", "*.parquet"))
     early = (
         spark.read.parquet(os.path.join(out, "b*"))
@@ -504,7 +353,7 @@ def test_windowed_agg_sentinel_after_restart(spark, tmp_path):
 
     sentinel = feeder._sentinel_table(SF_UNIT, pq.read_schema(data_files[0]))
     pq.write_table(sentinel, str(feed / f"{len(data_files):04d}.parquet"))
-    run_once()  # restart: discovers sentinel, flush batch evicts state
+    _run_to_dir(agg, ckpt, out)  # restart: discovers sentinel, flush evicts
 
     res = (
         spark.read.parquet(os.path.join(out, "b*"))
@@ -604,17 +453,12 @@ def test_events_ts_unit_rejects_mixed_dir(tmp_path):
 def test_console_sink(spark):
     """S5: console sink runs (smoke)."""
     feed = chunked_events_dir(SF_UNIT, n_chunks=2, sentinels=False)
-    ev = read_stream_events(spark, feed)
-    q = (
-        ev.groupBy("event_type")
-        .count()
-        .writeStream.format("console")
-        .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp())
-        .trigger(availableNow=True)
-        .start()
+    counts = read_stream_events(spark, feed).groupBy("event_type").count()
+    run_stream(
+        counts,
+        output_mode="complete",
+        sink=lambda w: w.format("console").start(),
     )
-    q.awaitTermination()
 
 
 def test_progress_belongs_to_last_query(spark):
@@ -651,7 +495,6 @@ def test_runner_guards_hold_on_every_path(spark):
     run_stream and a custom-sink key both refuse before any query starts;
     a failing sink's error reaches the caller; and the partition count
     and extra confs held for the run are restored after that failure."""
-    from sparkstreamingstateful_spark.session import conf_guard
     from sparkstreamingstateful_spark.streaming import runner
 
     ev = read_stream_events(
@@ -686,6 +529,40 @@ def test_runner_guards_hold_on_every_path(spark):
         assert not spark.streams.active
     finally:
         spark.conf.unset(extra)
+
+
+def test_runner_removes_its_temp_checkpoint(spark, tmp_path, monkeypatch):
+    """A stream run without a fixed checkpoint leaves no ``sss_ckpt_*``
+    dir in the temp dir, whether it succeeds (memory or foreachBatch
+    sink) or its sink raises; the dir does exist while the query runs,
+    and the memory table stays readable after the removal."""
+    import contextlib
+    import glob
+    import tempfile
+
+    ev = read_stream_events(
+        spark, chunked_events_dir(SF_UNIT, n_chunks=2, sentinels=False)
+    )
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    pattern = str(tmp_path / "sss_ckpt_*")
+
+    res = run_stream(ev)
+    assert not glob.glob(pattern)
+    assert res.count() == load_table(spark, SF_UNIT, "events").count()
+
+    for fail in (False, True):
+        seen = []
+
+        def write(batch_df, epoch):
+            seen.extend(glob.glob(pattern))
+            if fail:
+                raise ValueError("sink failed on purpose")
+
+        raises = pytest.raises(Exception, match="sink failed on purpose")
+        with raises if fail else contextlib.nullcontext():
+            run_stream(ev, sink=lambda w: w.foreachBatch(write).start())
+        assert seen, "no temp checkpoint while the query ran"
+        assert not glob.glob(pattern), f"temp checkpoint left (fail={fail})"
 
 
 def test_dedup_watermarked_state_evicted(spark):
@@ -727,7 +604,6 @@ def test_left_join_nulls_require_watermark(spark):
     This pins the emission timing: missing rows are exactly a suffix of
     event time, never sprinkled."""
     from sparkstreamingstateful_spark.streaming.queries import _interval_join
-    from sparkstreamingstateful_spark.streaming.runner import run_stream
 
     def left_join(feed):
         joined = _interval_join(read_stream_events(spark, feed), "left_outer")
@@ -789,8 +665,6 @@ def _skew_stress(spark, tmp_path, make_updates, label):
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
-
-    from sparkstreamingstateful_spark.streaming.runner import run_stream
 
     src = pq.read_table(os.path.join(SF_UNIT, "events.parquet"))
     n = src.num_rows
@@ -857,21 +731,26 @@ def test_stateful_skew_stress(spark, tmp_path):
     _skew_stress(spark, tmp_path, updates, "applyInPandasWithState")
 
 
-def test_rocksdb_changelog_checkpointing(spark):
-    """SURVEY §4.2's at-scale state-backend posture: RocksDB CHANGELOG
-    checkpointing (per-batch delta upload instead of full snapshots) is
-    enabled session-wide (session.RUNTIME_CONFS), so every stateful
-    query here runs under it. This pins (a) the conf is actually active,
-    (b) a run writes .changelog files into the checkpoint's state dir,
-    and (c) a kill/restart from that checkpoint recovers the exact
-    per-key state — i.e. changelog REPLAY works, not just changelog
-    WRITE. The checkpoint files are renamed into place by the
-    FileSystem-based manager (session.DEFAULT_CONFS: no `readlink` fork
-    per rename), and both checksum layers survive it: Hadoop's
-    `.<name>.crc` sidecar on every checkpoint file, and Spark's own
-    `<name>.crc` state checksum next to each RocksDB changelog."""
+def test_rocksdb_changelog_checkpointing(spark, tmp_path):
+    """ST11b + SURVEY §4.2's at-scale state-backend posture: the STATEFUL
+    path (applyInPandasWithState) survives a kill/restart under RocksDB
+    CHANGELOG checkpointing (per-batch delta upload instead of full
+    snapshots), which is enabled session-wide (session.RUNTIME_CONFS), so
+    every stateful query here runs under it. This pins (a) the conf is
+    actually active, (b) the crashed phase already wrote .changelog files
+    into the checkpoint's state dir, and (c) the restart from that
+    checkpoint REPLAYS them: the remaining micro-batches resume, all 4
+    commit exactly once across both phases, and the final per-key state
+    equals the batch twin — changelog replay works, not just changelog
+    write. Replayed update-mode emissions are identical rows, so the
+    arg-max materialization is idempotent under at-least-once replay.
+    The checkpoint files are renamed into place by the FileSystem-based
+    manager (session.DEFAULT_CONFS: no `readlink` fork per rename), and
+    both checksum layers survive it: Hadoop's `.<name>.crc` sidecar on
+    every checkpoint file, and Spark's own `<name>.crc` state checksum
+    next to each RocksDB changelog."""
     import glob
-    import uuid
+    import json
 
     from sparkstreamingstateful_spark.streaming import stateful
 
@@ -886,50 +765,50 @@ def test_rocksdb_changelog_checkpointing(spark):
         "FileSystemBasedCheckpointFileManager"
     )
     feed = chunked_events_dir(SF_UNIT, n_chunks=4, sentinels=False)
-    ckpt = tempfile.mkdtemp(prefix="sss_chlog_ckpt_")
-    out = tempfile.mkdtemp(prefix="sss_chlog_out_")
-
-    def write_batch(df, batch_id):
-        df.write.mode("overwrite").parquet(os.path.join(out, f"b{batch_id}"))
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-
-        def start(sink):
-            ev = read_stream_events(spark, feed)
-            updates = ev.groupBy("user_id").applyInPandasWithState(
-                stateful.running_agg_fn,
-                stateful.RUNNING_AGG_OUTPUT,
-                stateful.RUNNING_AGG_STATE,
-                "update",
-                "NoTimeout",
-            )
-            return (
-                updates.writeStream.foreachBatch(sink)
-                .outputMode("update")
-                .queryName("chlog_" + uuid.uuid4().hex[:8])
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-
-        _await_crash(start(_crash_after_batch_1(write_batch)), ckpt)
-
-        # the kill-phase checkpoint must already hold changelog files —
-        # the restart below then REPLAYS them to rebuild state
-        changelogs = glob.glob(
-            os.path.join(ckpt, "state", "**", "*.changelog"), recursive=True
+    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
+    updates = (
+        read_stream_events(spark, feed)
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            stateful.running_agg_fn,
+            stateful.RUNNING_AGG_OUTPUT,
+            stateful.RUNNING_AGG_STATE,
+            "update",
+            "NoTimeout",
         )
-        assert changelogs, (
-            "no .changelog files under the checkpoint state dir — "
-            "changelog checkpointing did not engage"
-        )
+    )
 
-        q = start(write_batch)
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    # phase 1: crash in batch 1, after batch 0 committed (state crossed a
+    # batch); the checkpoint must already hold changelog files, which the
+    # restart below REPLAYS to rebuild state
+    _run_to_dir(updates, ckpt, out, crash=True, output_mode="update")
+    changelogs = glob.glob(
+        os.path.join(ckpt, "state", "**", "*.changelog"), recursive=True
+    )
+    assert changelogs, (
+        "no .changelog files under the checkpoint state dir — "
+        "changelog checkpointing did not engage"
+    )
+    # phase 2: restart from the same checkpoint → drain the feed
+    _run_to_dir(updates, ckpt, out, output_mode="update")
+
+    def ckpt_listing() -> str:
+        # what each phase left behind: offsets/ and commits/, plus the
+        # feed files each offset batch was planned to read (the file
+        # source's per-batch log under sources/0)
+        lines = [f"{sub}/: {_ls(ckpt, sub)}" for sub in ("offsets", "commits")]
+        for b in _ls(ckpt, "sources/0"):
+            with open(os.path.join(ckpt, "sources", "0", b)) as f:
+                entries = [json.loads(x) for x in f.read().splitlines()[1:] if x]
+            read = [os.path.basename(e["path"]) for e in entries]
+            lines.append(f"batch {b} read {read}")
+        return "\n".join(lines)
+
+    # all 4 micro-batches committed exactly once across both phases
+    done = _ls(ckpt, "commits")
+    assert len(done) == 4, (
+        f"expected 4 committed batches, got {done}\n{ckpt_listing()}"
+    )
 
     def ls(*sub):
         return set(os.listdir(os.path.join(ckpt, *sub)))
@@ -943,25 +822,30 @@ def test_rocksdb_changelog_checkpointing(spark):
         spark.read.parquet(os.path.join(out, "b*"))
         .groupBy("user_id")
         .agg(F.max(F.struct("n", "sum_value")).alias("s"))
-        .select("user_id", F.col("s.n").alias("n"))
+        .select(
+            "user_id",
+            F.col("s.n").alias("n"),
+            F.round("s.sum_value", 2).alias("sum_value"),
+        )
     )
-    want = (
+    expected = (
         load_table(spark, SF_UNIT, "events")
         .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.round(F.sum("value"), 2).alias("sum_value"),
+        )
     )
-    assert sorted(map(tuple, final.collect())) == sorted(map(tuple, want.collect()))
+    got = sorted(map(tuple, final.collect()))
+    want = sorted(map(tuple, expected.collect()))
+    assert got == want, "recovered final state diverges from the batch twin"
 
 
 def test_configure_keeps_session_checkpoint_manager(spark):
     """configure() sets the checkpoint manager only where the session
     has none: a deployment's own manager (say, an object-store one that
     avoids renames) is left as it is."""
-    from sparkstreamingstateful_spark.session import (
-        DEFAULT_CONFS,
-        conf_guard,
-        configure,
-    )
+    from sparkstreamingstateful_spark.session import DEFAULT_CONFS, configure
 
     key = "spark.sql.streaming.checkpointFileManagerClass"
     own = (
@@ -976,7 +860,7 @@ def test_configure_keeps_session_checkpoint_manager(spark):
         assert spark.conf.get(key) == DEFAULT_CONFS[key]
 
 
-def test_processing_time_trigger_equivalence(spark):
+def test_processing_time_trigger_equivalence(spark, tmp_path):
     """Trigger.ProcessingTime coverage (every registered key runs
     availableNow): the same windowed aggregation produced under a real
     processing-time trigger — micro-batches fired by wall clock while
@@ -991,14 +875,12 @@ def test_processing_time_trigger_equivalence(spark):
     ev = read_stream_events(spark, feed)
     agg = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     name = "pt_" + uuid.uuid4().hex[:8]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with conf_guard(spark, {"spark.sql.shuffle.partitions": "4"}):
         q = (
             agg.writeStream.format("memory")
             .queryName(name)
             .outputMode("complete")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="sss_pt_ckpt_"))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
             .trigger(processingTime="1 second")
             .start()
         )
@@ -1017,8 +899,6 @@ def test_processing_time_trigger_equivalence(spark):
         finally:
             q.stop()
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     got = sorted(map(tuple, spark.table(name).collect()))
     want = sorted(
         map(
@@ -1087,7 +967,7 @@ _TTL_PROBE_OUTPUT = (
 )
 
 
-def test_tws_mapstate_ttl_expiry(spark):
+def test_tws_mapstate_ttl_expiry(spark, tmp_path):
     """TTL-bounded TWS state (Spark 4 ``ttlDurationMs``, legal only under
     ``timeMode=ProcessingTime`` — EventTime raises, measured in r7):
     entries written in batch 1 with a 1 s TTL must be GONE when batch 2
@@ -1110,14 +990,12 @@ def test_tws_mapstate_ttl_expiry(spark):
         timeMode="ProcessingTime",
     )
     name = "ttl_" + uuid.uuid4().hex[:8]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with conf_guard(spark, {"spark.sql.shuffle.partitions": "4"}):
         q = (
             probes.writeStream.format("memory")
             .queryName(name)
             .outputMode("update")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="sss_ttl_ckpt_"))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
             .trigger(processingTime="8 seconds")
             .start()
         )
@@ -1137,8 +1015,6 @@ def test_tws_mapstate_ttl_expiry(spark):
         finally:
             q.stop()
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     rows = spark.table(name).collect()
     second = [r for r in rows if r.batch_no == 2]
     assert second, "no batch-2 probes recorded"
@@ -1172,9 +1048,9 @@ def test_tws_mapstate_no_ttl_retains(spark):
     completion — Spark keeps scheduling no-data micro-batches to advance
     processing time for the state machinery, so the trigger never
     declares the stream drained (measured: 885+ batches and counting).
-    Poll-then-stop, like the TTL test."""
-    import time
-    import uuid
+    ``run_stream_drain`` stops it once the second feed file (file-source
+    ``logOffset`` 1) has run."""
+    from sparkstreamingstateful_spark.streaming.runner import run_stream_drain
 
     feed = chunked_events_dir(SF_UNIT, n_chunks=2, sentinels=False)
     ev = read_stream_events(spark, feed)
@@ -1184,38 +1060,10 @@ def test_tws_mapstate_no_ttl_retains(spark):
         outputMode="Update",
         timeMode="ProcessingTime",
     )
-    name = "nottl_" + uuid.uuid4().hex[:8]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            probes.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option(
-                "checkpointLocation", tempfile.mkdtemp(prefix="sss_nottl_ckpt_")
-            )
-            .start()
-        )
-        try:
-            deadline = time.time() + 90
-            while time.time() < deadline:
-                if q.exception() is not None:
-                    raise q.exception()
-                if (
-                    spark.table(name).filter(F.col("batch_no") == 2).count()
-                    > 0
-                ):
-                    break
-                time.sleep(0.2)
-            else:
-                raise TimeoutError("second micro-batch never surfaced")
-        finally:
-            q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    second = spark.table(name).filter(F.col("batch_no") == 2).collect()
+    res = run_stream_drain(
+        probes, done=lambda end: end["logOffset"] >= 1, output_mode="update"
+    )
+    second = res.filter(F.col("batch_no") == 2).collect()
     assert second, "no batch-2 probes recorded"
     assert all(r.n_prior > 0 for r in second), (
         "un-TTL'd map entries vanished between batches"
@@ -1254,20 +1102,11 @@ def test_statestore_changefeed_and_snapshot(spark, tmp_path):
     feed = chunked_events_dir(SF_UNIT, n_chunks=3, sentinels=False)
     ev = read_stream_events(spark, feed).select("event_id")
     ckpt = str(tmp_path / "ckpt")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            ev.dropDuplicates(["event_id"])
-            .writeStream.format("noop")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_stream(
+        ev.dropDuplicates(["event_id"]),
+        checkpoint=ckpt,
+        sink=lambda w: w.format("noop").start(),
+    )
     n_ids = pq.read_table(os.path.join(SF_UNIT, "events.parquet"), columns=["event_id"]).num_rows
     feedr = (
         spark.read.format("statestore")
@@ -1378,14 +1217,12 @@ def test_tws_processing_time_timer(spark, tmp_path):
         timeMode="ProcessingTime",
     )
     name = "pttimer_" + uuid.uuid4().hex[:8]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with conf_guard(spark, {"spark.sql.shuffle.partitions": "4"}):
         q = (
             out.writeStream.format("memory")
             .queryName(name)
             .outputMode("update")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="sss_ptt_ckpt_"))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
             .trigger(processingTime="1 second")
             .start()
         )
@@ -1404,8 +1241,6 @@ def test_tws_processing_time_timer(spark, tmp_path):
         finally:
             q.stop()
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     fired = spark.table(name).filter(F.col("fired") == 1)
     assert fired.count() > 0
     # at most one firing per key: re-arming is gated on the armed flag
@@ -1443,6 +1278,8 @@ def test_streaming_query_listener_lifecycle(spark):
 
     from pyspark.sql.streaming import StreamingQueryListener
 
+    from sparkstreamingstateful_spark.streaming import runner
+
     seen = {"started": [], "progress": [], "terminated": []}
 
     class _Listener(StreamingQueryListener):
@@ -1463,18 +1300,13 @@ def test_streaming_query_listener_lifecycle(spark):
     spark.streams.addListener(listener)
     try:
         feed = chunked_events_dir(SF_UNIT, sentinels=False)
-        q = (
+        run_stream(
             read_stream_events(spark, feed)
             .groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .writeStream.format("memory")
-            .queryName("listener_probe_sink")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+            .agg(F.count(F.lit(1)).alias("n")),
+            output_mode="complete",
         )
-        q.awaitTermination()
-        qid = str(q.id)
+        qid = str(runner.LAST_QUERY_PROGRESS[0]["id"])
         deadline = time.time() + 20
         while time.time() < deadline and qid not in seen["terminated"]:
             time.sleep(0.2)
@@ -1523,14 +1355,7 @@ def test_join_side_watermarked_evicts(spark, tmp_path):
     feed = chunked_events_dir(SF_UNIT, sentinels=False)
     j = _interval_join(read_stream_events(spark, feed), "inner")
     ckpt = str(tmp_path / "wm_join_ck")
-    q = (
-        j.writeStream.format("noop")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(j, checkpoint=ckpt, sink=lambda w: w.format("noop").start())
     n_p = (
         load_table(spark, SF_UNIT, "events")
         .filter(F.col("event_type") == "purchase")
@@ -1603,7 +1428,7 @@ def _evolution_processor(schema, write_two: bool):
     return Evo()
 
 
-def _run_evolution_query(spark, feed, ckpt, proc, collected):
+def _run_evolution_query(spark, feed, ckpt, proc, collected, conf=None):
     from pyspark.sql import types as T
 
     out_schema = T.StructType(
@@ -1617,14 +1442,16 @@ def _run_evolution_query(spark, feed, ckpt, proc, collected):
     out = st.groupBy("user_id").transformWithStateInPandas(
         proc, outputStructType=out_schema, outputMode="Update", timeMode="None"
     )
-    q = (
-        out.writeStream.foreachBatch(lambda df, bid: collected.extend(df.collect()))
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    run_stream(
+        out,
+        output_mode="update",
+        state_partitions=2,
+        checkpoint=ckpt,
+        conf=conf,
+        sink=lambda w: w.foreachBatch(
+            lambda df, bid: collected.extend(df.collect())
+        ).start(),
     )
-    q.awaitTermination()
 
 
 def _evolution_fixture(tmp_path):
@@ -1660,17 +1487,10 @@ def test_tws_state_schema_evolution_default_encoding_rejects(spark, tmp_path):
         [T.StructField("n", T.LongType()), T.StructField("extra", T.DoubleType())]
     )
     got: list = []
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
-        _run_evolution_query(spark, feed, ckpt, _evolution_processor(s1, False), got)
-        pq.write_table(t, os.path.join(feed, "0001.parquet"))
-        with pytest.raises(Exception, match="STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"):
-            _run_evolution_query(
-                spark, feed, ckpt, _evolution_processor(s2, True), got
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _run_evolution_query(spark, feed, ckpt, _evolution_processor(s1, False), got)
+    pq.write_table(t, os.path.join(feed, "0001.parquet"))
+    with pytest.raises(Exception, match="STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"):
+        _run_evolution_query(spark, feed, ckpt, _evolution_processor(s2, True), got)
 
 
 def test_tws_state_schema_evolution_avro_accepts(spark, tmp_path):
@@ -1690,17 +1510,11 @@ def test_tws_state_schema_evolution_avro_accepts(spark, tmp_path):
         [T.StructField("n", T.LongType()), T.StructField("extra", T.DoubleType())]
     )
     got: list = []
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    spark.conf.set("spark.sql.streaming.stateStore.encodingFormat", "avro")
-    try:
-        _run_evolution_query(spark, feed, ckpt, _evolution_processor(s1, False), got)
-        got.clear()
-        pq.write_table(t, os.path.join(feed, "0001.parquet"))
-        _run_evolution_query(spark, feed, ckpt, _evolution_processor(s2, True), got)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.unset("spark.sql.streaming.stateStore.encodingFormat")
+    avro = {"spark.sql.streaming.stateStore.encodingFormat": "avro"}
+    _run_evolution_query(spark, feed, ckpt, _evolution_processor(s1, False), got, avro)
+    got.clear()
+    pq.write_table(t, os.path.join(feed, "0001.parquet"))
+    _run_evolution_query(spark, feed, ckpt, _evolution_processor(s2, True), got, avro)
     by_user = {r.user_id: r for r in got}
     # counts continue from the pre-evolution checkpoint: 2+2, 2+2, 1+1
     assert {u: r.n for u, r in by_user.items()} == {1: 4, 2: 4, 3: 2}
@@ -1772,15 +1586,11 @@ def test_state_metadata_lists_tws_variables(spark):
 
     ckpt = _sessionize_tws_ckpt(spark, SF_UNIT)
     lag = "spark.sql.streaming.stateStore.coordinatorReportSnapshotUploadLag"
-    prev = spark.conf.get(lag, "true")
-    spark.conf.set(lag, "false")
-    try:
+    with conf_guard(spark, {lag: "false"}):
         row = (
             spark.read.format("state-metadata").load(ckpt)
             .collect()[0]
         )
-    finally:
-        spark.conf.set(lag, prev)
     assert row.operatorName == "transformWithStateInPandasExec"
     props = _json.loads(row.operatorProperties)
     assert props["timeMode"] == "EventTime"
@@ -1835,16 +1645,12 @@ def test_tws_map_and_timer_readers(spark):
     # the sentinel's map/timer ARE state — present pre-filter
     ckpt = _profile_tws_ckpt(spark, SF_UNIT)
     lag = "spark.sql.streaming.stateStore.coordinatorReportSnapshotUploadLag"
-    prev = spark.conf.get(lag, "true")
-    spark.conf.set(lag, "false")
-    try:
+    with conf_guard(spark, {lag: "false"}):
         raw = (
             spark.read.format("statestore").option("path", ckpt)
             .option("readRegisteredTimers", "true").load()
             .select("key.user_id").collect()
         )
-    finally:
-        spark.conf.set(lag, prev)
     assert {r.user_id for r in raw} == users | {-1}
 
 
@@ -1882,15 +1688,11 @@ def test_state_metadata_lists_profile_map_and_timers(spark):
 
     ckpt = _profile_tws_ckpt(spark, SF_UNIT)
     lag = "spark.sql.streaming.stateStore.coordinatorReportSnapshotUploadLag"
-    prev = spark.conf.get(lag, "true")
-    spark.conf.set(lag, "false")
-    try:
+    with conf_guard(spark, {lag: "false"}):
         row = (
             spark.read.format("state-metadata").load(ckpt)
             .collect()[0]
         )
-    finally:
-        spark.conf.set(lag, prev)
     assert row.operatorName == "transformWithStateInPandasExec"
     props = _json.loads(row.operatorProperties)
     assert props["timeMode"] == "EventTime"
