@@ -731,41 +731,21 @@ def test_stateful_skew_stress(spark, tmp_path):
     _skew_stress(spark, tmp_path, updates, "applyInPandasWithState")
 
 
-def test_rocksdb_changelog_checkpointing(spark, tmp_path):
-    """ST11b + SURVEY §4.2's at-scale state-backend posture: the STATEFUL
-    path (applyInPandasWithState) survives a kill/restart under RocksDB
-    CHANGELOG checkpointing (per-batch delta upload instead of full
-    snapshots), which is enabled session-wide (session.RUNTIME_CONFS), so
-    every stateful query here runs under it. This pins (a) the conf is
-    actually active, (b) the crashed phase already wrote .changelog files
-    into the checkpoint's state dir, and (c) the restart from that
-    checkpoint REPLAYS them: the remaining micro-batches resume, all 4
-    commit exactly once across both phases, and the final per-key state
-    equals the batch twin — changelog replay works, not just changelog
-    write. Replayed update-mode emissions are identical rows, so the
-    arg-max materialization is idempotent under at-least-once replay.
-    The checkpoint files are renamed into place by the FileSystem-based
-    manager (session.DEFAULT_CONFS: no `readlink` fork per rename), and
-    both checksum layers survive it: Hadoop's `.<name>.crc` sidecar on
-    every checkpoint file, and Spark's own `<name>.crc` state checksum
-    next to each RocksDB changelog."""
+@pytest.fixture(scope="module")
+def running_agg_restart(spark, tmp_path_factory):
+    """One kill/restart of the STATEFUL path (applyInPandasWithState over
+    ``running_agg_fn``, 4 chunks), shared by the two tests below so
+    tier-1 runs this crash/restart stream pair once. Phase 1 crashes in
+    batch 1, after batch 0 committed (state crossed a batch); phase 2
+    restarts from the same checkpoint and drains the feed. Returns the
+    checkpoint and sink dirs and the ``.changelog`` files phase 1 left."""
     import glob
-    import json
 
     from sparkstreamingstateful_spark.streaming import stateful
 
-    assert (
-        spark.conf.get(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-        )
-        == "true"
-    )
-    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == (
-        "org.apache.spark.sql.execution.streaming.checkpointing."
-        "FileSystemBasedCheckpointFileManager"
-    )
     feed = chunked_events_dir(SF_UNIT, n_chunks=4, sentinels=False)
-    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
+    base = tmp_path_factory.mktemp("running_agg_restart")
+    ckpt, out = str(base / "ckpt"), str(base / "out")
     updates = (
         read_stream_events(spark, feed)
         .groupBy("user_id")
@@ -777,20 +757,20 @@ def test_rocksdb_changelog_checkpointing(spark, tmp_path):
             "NoTimeout",
         )
     )
-
-    # phase 1: crash in batch 1, after batch 0 committed (state crossed a
-    # batch); the checkpoint must already hold changelog files, which the
-    # restart below REPLAYS to rebuild state
     _run_to_dir(updates, ckpt, out, crash=True, output_mode="update")
     changelogs = glob.glob(
         os.path.join(ckpt, "state", "**", "*.changelog"), recursive=True
     )
-    assert changelogs, (
-        "no .changelog files under the checkpoint state dir — "
-        "changelog checkpointing did not engage"
-    )
-    # phase 2: restart from the same checkpoint → drain the feed
     _run_to_dir(updates, ckpt, out, output_mode="update")
+    return ckpt, out, changelogs
+
+
+def _assert_recovered(spark, ckpt, out):
+    """All 4 micro-batches committed exactly once across both phases, and
+    the final per-key ``(n, sum_value)`` equals the batch twin. Replayed
+    update-mode emissions are identical rows, so the arg-max
+    materialization is idempotent under at-least-once replay."""
+    import json
 
     def ckpt_listing() -> str:
         # what each phase left behind: offsets/ and commits/, plus the
@@ -804,18 +784,9 @@ def test_rocksdb_changelog_checkpointing(spark, tmp_path):
             lines.append(f"batch {b} read {read}")
         return "\n".join(lines)
 
-    # all 4 micro-batches committed exactly once across both phases
     done = _ls(ckpt, "commits")
     assert len(done) == 4, (
         f"expected 4 committed batches, got {done}\n{ckpt_listing()}"
-    )
-
-    def ls(*sub):
-        return set(os.listdir(os.path.join(ckpt, *sub)))
-
-    assert {"0", ".0.crc"} <= ls("offsets")
-    assert {"1.changelog", ".1.changelog.crc", "1.changelog.crc"} <= ls(
-        "state", "0", "0"
     )
 
     final = (
@@ -839,6 +810,55 @@ def test_rocksdb_changelog_checkpointing(spark, tmp_path):
     got = sorted(map(tuple, final.collect()))
     want = sorted(map(tuple, expected.collect()))
     assert got == want, "recovered final state diverges from the batch twin"
+
+
+def test_stateful_kill_restart_recovery(spark, running_agg_restart):
+    """ST11b: the STATEFUL path (applyInPandasWithState) survives a
+    kill/restart from the same checkpoint — the state store recovers the
+    per-key aggregates, the remaining micro-batches resume, and the final
+    per-key state equals the batch twin."""
+    ckpt, out, _ = running_agg_restart
+    _assert_recovered(spark, ckpt, out)
+
+
+def test_rocksdb_changelog_checkpointing(spark, running_agg_restart):
+    """SURVEY §4.2's at-scale state-backend posture: RocksDB CHANGELOG
+    checkpointing (per-batch delta upload instead of full snapshots) is
+    enabled session-wide (session.RUNTIME_CONFS), so every stateful query
+    here runs under it. On the shared kill/restart run this pins (a) the
+    conf is actually active, (b) the crashed phase already wrote
+    .changelog files into the checkpoint's state dir, and (c) the restart
+    from that checkpoint REPLAYS them and recovers the exact per-key
+    state — changelog replay works, not just changelog write. The
+    checkpoint files are renamed into place by the FileSystem-based
+    manager (session.DEFAULT_CONFS: no `readlink` fork per rename), and
+    both checksum layers survive it: Hadoop's `.<name>.crc` sidecar on
+    every checkpoint file, and Spark's own `<name>.crc` state checksum
+    next to each RocksDB changelog."""
+    assert (
+        spark.conf.get(
+            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+        )
+        == "true"
+    )
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    ckpt, out, changelogs = running_agg_restart
+    assert changelogs, (
+        "no .changelog files under the checkpoint state dir — "
+        "changelog checkpointing did not engage"
+    )
+
+    def ls(*sub):
+        return set(os.listdir(os.path.join(ckpt, *sub)))
+
+    assert {"0", ".0.crc"} <= ls("offsets")
+    assert {"1.changelog", ".1.changelog.crc", "1.changelog.crc"} <= ls(
+        "state", "0", "0"
+    )
+    _assert_recovered(spark, ckpt, out)
 
 
 def test_configure_keeps_session_checkpoint_manager(spark):
