@@ -332,6 +332,13 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return dfs
 
 
+def read_stream_feed(spark: SparkSession, schema, feed_dir: str) -> DataFrame:
+    """A feed dir (``streaming/feeder.py``) as a file stream: one file per
+    micro-batch, the one place that says so."""
+    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+    return reader.parquet(feed_dir)
+
+
 def read_stream_events(spark: SparkSession, events_dir: str) -> DataFrame:
     """Streaming file source over event parquet chunks (explicit physical
     schema — streaming sources cannot infer). ``events_dir`` is a directory
@@ -353,11 +360,7 @@ def read_stream_events(spark: SparkSession, events_dir: str) -> DataFrame:
     configure(spark)
     unit = events_ts_unit(events_dir)
     schema = SCHEMAS["events"] if unit == "us" else EVENTS_PHYSICAL_SCHEMA_NS
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
-    )
+    raw = read_stream_feed(spark, schema, events_dir)
     if unit == "ns":
         return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     # NTZ → LTZ is an identity cast under the UTC session timezone; event-time

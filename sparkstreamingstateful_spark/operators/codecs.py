@@ -31,7 +31,7 @@ import struct
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import cache_dir, fill_once, load_table
+from ..catalog import cache_dir, fill_once, load_table, read_stream_feed
 from ..compat import VENDOR_DIR
 from ..registry import query
 
@@ -205,11 +205,10 @@ def codec_protobuf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------- streaming decode
-def _events_columns(sf_dir: str) -> tuple[dict[str, list], int]:
-    """events.parquet as plain Python column lists plus its row count,
-    with ``ts`` as epoch micros (``ts_us``) under the catalog's unit
-    duality: raw int64 ts columns are NANOS, timestamp columns cast
-    exactly."""
+def _events_columns(sf_dir: str) -> dict[str, list]:
+    """events.parquet as plain Python column lists, with ``ts`` as epoch
+    micros (``ts_us``) under the catalog's unit duality: raw int64 ts
+    columns are NANOS, timestamp columns cast exactly."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -223,26 +222,27 @@ def _events_columns(sf_dir: str) -> tuple[dict[str, list], int]:
         c: t.column(c).to_pylist()
         for c in ("event_id", "user_id", "event_type", "value")
     }
-    return {**cols, "ts_us": ts_us}, t.num_rows
+    return {**cols, "ts_us": ts_us}
 
 
 def _proto_blob_feed(sf_dir: str) -> str:
     """Chunked protobuf-blob feed for the streaming decode key, written
-    by the feeder's one writer: the events table sliced into
-    feeder.DEFAULT_CHUNKS row-order chunks, each encoded driver-side into
+    by the feeder's one writer: the events table sliced at the feeder's
+    cut (``feeder.cut_bounds``), each chunk encoded driver-side into
     ONE delimited proto3 blob row — exactly the shape a Kafka topic hands
     a consumer (one binary value per record batch), replayed as one
     micro-batch per file."""
     import pyarrow as pa
 
-    from ..streaming.feeder import DEFAULT_CHUNKS, cached_feed
+    from ..streaming.feeder import cached_feed, cut_bounds, events_num_rows
+
+    bounds = cut_bounds(events_num_rows(sf_dir))
 
     def build() -> list[pa.Table]:
         wire = _load_wire()
-        cols, n = _events_columns(sf_dir)
+        cols = _events_columns(sf_dir)
         tables = []
-        for i in range(DEFAULT_CHUNKS):
-            lo, hi = i * n // DEFAULT_CHUNKS, (i + 1) * n // DEFAULT_CHUNKS
+        for lo, hi in bounds:
             chunk = {k: v[lo:hi] for k, v in cols.items()}
             blob = _encode_delimited(wire, chunk, hi - lo)
             tables.append(
@@ -255,7 +255,7 @@ def _proto_blob_feed(sf_dir: str) -> str:
             )
         return tables
 
-    return cached_feed("sss_protoblobs", sf_dir, "events", build)
+    return cached_feed(f"sss_protoblobs_k{len(bounds)}", sf_dir, "events", build)
 
 
 @query(
@@ -287,11 +287,7 @@ def stream_codec_protobuf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.runner import run_stream
 
     feed = _proto_blob_feed(sf_dir)
-    blobs = (
-        spark.readStream.schema("blob binary, n_msgs long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
+    blobs = read_stream_feed(spark, "blob binary, n_msgs long", feed)
     rows = blobs.mapInArrow(
         _decode_event_batches,
         "event_id long, user_id long, event_type string, value double, ts_us long",
@@ -466,15 +462,16 @@ def _decode_avro_batches(it):
 
 def _avro_layout(sf_dir: str) -> str:
     """events as a directory of null-codec Avro container files (one per
-    feeder chunk, multi-block), cached per content fingerprint."""
-    from ..streaming.feeder import DEFAULT_CHUNKS
+    chunk of the feeder's cut, multi-block), cached per content
+    fingerprint and K."""
+    from ..streaming.feeder import cut_bounds, events_num_rows
 
-    out = cache_dir("sss_avro", sf_dir, "events")
+    bounds = cut_bounds(events_num_rows(sf_dir))
+    out = cache_dir(f"sss_avro_k{len(bounds)}", sf_dir, "events")
 
     def fill() -> None:
-        cols, n = _events_columns(sf_dir)
-        for i in range(DEFAULT_CHUNKS):
-            lo, hi = i * n // DEFAULT_CHUNKS, (i + 1) * n // DEFAULT_CHUNKS
+        cols = _events_columns(sf_dir)
+        for i, (lo, hi) in enumerate(bounds):
             chunk = {k: v[lo:hi] for k, v in cols.items()}
             write_avro_container(
                 os.path.join(out, f"{i:04d}.avro"), chunk, hi - lo

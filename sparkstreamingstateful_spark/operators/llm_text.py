@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import SCHEMAS, load_table, session_memo
+from ..catalog import SCHEMAS, load_table, read_stream_feed, session_memo
 from ..registry import query
 
 
@@ -829,10 +829,8 @@ def stream_text_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.feeder import chunked_table_dir
     from ..streaming.runner import run_stream
 
-    feed = chunked_table_dir(sf_dir, "documents", n_chunks=3)
-    docs = spark.readStream.schema(SCHEMAS["documents"]).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(feed)
+    feed = chunked_table_dir(sf_dir, "documents")
+    docs = read_stream_feed(spark, SCHEMAS["documents"], feed)
     agg = (
         docs.select("lang", F.explode(F.split(F.lower("text"), " ")).alias("token"))
         .groupBy("lang", "token")

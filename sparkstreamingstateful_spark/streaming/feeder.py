@@ -2,8 +2,10 @@
 streaming file source replays them as K micro-batches
 (``maxFilesPerTrigger=1``), preserving global event-time order.
 
-Every feed is a ``catalog.fill_once`` cache under ``catalog.cache_dir``
-(keyed by the source table's content), written by ``cached_feed`` alone.
+This module alone decides the cut: K is ``DEFAULT_CHUNKS``, read when a
+feed is called, at the bounds of ``cut_bounds``. Every feed is a
+``catalog.fill_once`` cache under ``catalog.cache_dir`` (keyed by the
+source table's content and K), written by ``cached_feed`` alone.
 
 Variants:
 
@@ -44,12 +46,8 @@ from ..catalog import cache_dir, fill_once
 # The sentinel's event time: this many days past the last real event.
 SENTINEL_DAYS = 30
 
-# Default micro-batch count for every chunked feed. The state-store
-# changefeed / time-travel oracles (streaming/queries.py) predict per-batch
-# state attribution from the ``i * n // K`` chunk boundaries this module
-# cuts, so they interpolate THIS constant into their SQL — changing it
-# re-derives feeder and oracles together instead of silently skewing the
-# batch-id arithmetic (ADVICE r9).
+# K of every feed that does not pin its own, read at call time: no result
+# may depend on it (keys whose oracle names a batch pin ``n_chunks``).
 DEFAULT_CHUNKS = 3
 
 _MTIME_BASE = 1_600_000_000
@@ -125,10 +123,16 @@ def _sentinel_table(sf_dir: str, schema: pa.Schema) -> pa.Table:
     ).select(schema.names).cast(schema)
 
 
+def cut_bounds(n_rows: int, n_chunks: int | None = None) -> list[tuple[int, int]]:
+    """The one micro-batch cut: the ``[i * n // K, (i + 1) * n // K)`` row
+    ranges of ``n_rows`` rows, K = ``n_chunks`` or else ``DEFAULT_CHUNKS``."""
+    k = n_chunks or DEFAULT_CHUNKS
+    return [(i * n_rows // k, (i + 1) * n_rows // k) for i in range(k)]
+
+
 def _chunks(table: pa.Table, n_chunks: int) -> list[pa.Table]:
-    """``table`` cut at the ``i * n // n_chunks`` row boundaries."""
-    bounds = [i * table.num_rows // n_chunks for i in range(n_chunks + 1)]
-    return [table.slice(lo, hi - lo) for lo, hi in zip(bounds, bounds[1:])]
+    bounds = cut_bounds(table.num_rows, n_chunks)
+    return [table.slice(lo, hi - lo) for lo, hi in bounds]
 
 
 def cached_feed(
@@ -155,13 +159,15 @@ def cached_feed(
 
 def chunked_events_dir(
     sf_dir: str,
-    n_chunks: int = DEFAULT_CHUNKS,
+    n_chunks: int | None = None,
     *,
     sentinels: bool = True,
     replay: tuple[int, ...] = (),
     late_chunk: int | None = None,
 ) -> str:
-    """The events feed for the given variant."""
+    """The events feed for the given variant; ``replay=(-1,)`` is the last
+    chunk at any K."""
+    n_chunks = n_chunks or DEFAULT_CHUNKS
 
     def build() -> list[pa.Table]:
         table = pq.read_table(f"{sf_dir}/events.parquet")
@@ -183,20 +189,19 @@ def chunked_events_dir(
     return cached_feed(prefix, sf_dir, "events", build)
 
 
-def chunked_table_dir(sf_dir: str, table: str, n_chunks: int = DEFAULT_CHUNKS) -> str:
+def chunked_table_dir(sf_dir: str, table: str) -> str:
     """Chunk an arbitrary table into K parquet files (generic micro-batch
     feed for streams without event time — no sentinels needed)."""
+    k = DEFAULT_CHUNKS
     return cached_feed(
-        f"sss_feed_{table}_k{n_chunks}",
+        f"sss_feed_{table}_k{k}",
         sf_dir,
         table,
-        lambda: _chunks(pq.read_table(f"{sf_dir}/{table}.parquet"), n_chunks),
+        lambda: _chunks(pq.read_table(f"{sf_dir}/{table}.parquet"), k),
     )
 
 
-def chunked_events_split_dirs(
-    sf_dir: str, n_chunks: int = DEFAULT_CHUNKS
-) -> tuple[str, str]:
+def chunked_events_split_dirs(sf_dir: str) -> tuple[str, str]:
     """Two DISJOINT feeds (even / odd ``event_id``), each chunked and
     carrying its own sentinel in its last file — the substrate for the
     multi-source union topology (ST23). Each source needs its own
@@ -206,6 +211,7 @@ def chunked_events_split_dirs(
     windows never close (the multi-source twin of the filter-pushdown
     stall documented above). Both sentinels are built from the FULL
     table's max event time so the two sources advance in lockstep."""
+    k = DEFAULT_CHUNKS
 
     def feed(parity: int) -> str:
         def build() -> list[pa.Table]:
@@ -213,12 +219,12 @@ def chunked_events_split_dirs(
             mask = pa.compute.equal(
                 pa.compute.bit_wise_and(table.column("event_id"), 1), parity
             )
-            chunks = _chunks(table.filter(mask), n_chunks)
+            chunks = _chunks(table.filter(mask), k)
             chunks[-1] = pa.concat_tables(
                 [chunks[-1], _sentinel_table(sf_dir, table.schema)]
             )
             return chunks
 
-        return cached_feed(f"sss_feed2_p{parity}_k{n_chunks}", sf_dir, "events", build)
+        return cached_feed(f"sss_feed2_p{parity}_k{k}", sf_dir, "events", build)
 
     return feed(0), feed(1)

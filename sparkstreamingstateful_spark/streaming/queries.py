@@ -16,9 +16,10 @@ last data file and costs no batch of its own; it is reserved for
 append-mode watermark eviction (windows/sessions/late-drop), whose final
 state the no-data flush batch then evicts. Update-mode stateful queries,
 the stateless join, and the inner stream-stream join emit without it, and
-a watermark-free feed runs no flush batch. Three data chunks (≥2
-state-crossing micro-batches) prove cross-batch state everywhere except
-late-drop, which pins the 4-chunk layout its oracle encodes.
+a watermark-free feed runs no flush batch. Where a feed is cut is the
+feeder's decision, and no result may depend on it (the oracle tests run
+every key here at K = 1 and 7 too); late-drop and the dedup state
+checkpoint (``_STATE_K``) name batches in their oracles and pin their cut.
 """
 
 from __future__ import annotations
@@ -274,10 +275,10 @@ def stream_window_session_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exactly-once-style dedup of an at-least-once feed: chunk 1 is
-    delivered twice (feeder replay); keyed dropDuplicates restores
+    """Exactly-once-style dedup of an at-least-once feed: the last chunk
+    is delivered twice (feeder replay); keyed dropDuplicates restores
     exactly-once output = the original unique events."""
-    ev = _stream(spark, sf_dir, replay=(1,), sentinels=False)
+    ev = _stream(spark, sf_dir, replay=(-1,), sentinels=False)
     deduped = ev.dropDuplicates(["event_id"])
     res = run_stream(deduped, output_mode="append")
     return res.select("event_id", "user_id", "event_type", "value")
@@ -740,7 +741,7 @@ def stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     drains the state to just the sentinel row. Eviction is pinned by
     tests/test_streaming.py via the state-operator metrics in
     runner.LAST_QUERY_PROGRESS."""
-    ev = _stream(spark, sf_dir, replay=(2,))
+    ev = _stream(spark, sf_dir, replay=(-1,))
     deduped = ev.withWatermark("ts", "15 days").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
@@ -804,9 +805,10 @@ def stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     here because append-mode window finalization is watermark-driven: ALL
     groups of a window finalize in the same micro-batch (the one whose
     updated watermark passes the window end), so each batch ranks only
-    complete windows. Batches append to a parquet sink (the production
-    shape) which is read back as the result. The sink dir is one path
-    per source content, cleared before each run."""
+    complete windows. Each epoch overwrites its own ``b<epoch>`` parquet
+    dir (a replayed epoch cannot duplicate rows); ``b*`` is read back.
+    The sink dir is one path per source content, cleared before each run
+    (a run with fewer epochs must not read an earlier run's tail)."""
     import os
     import shutil
 
@@ -829,12 +831,12 @@ def stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             batch_df.withColumn("rk", rk)
             .filter(F.col("rk") <= 3)
-            .write.mode("append")
-            .parquet(out_dir)
+            .write.mode("overwrite")
+            .parquet(os.path.join(out_dir, f"b{batch_id}"))
         )
 
     run_stream(agg, sink=lambda w: w.foreachBatch(rank_batch).start())
-    res = spark.read.parquet(out_dir)
+    res = spark.read.parquet(os.path.join(out_dir, "b*"))
     return res.filter(F.col("event_type") != "__sentinel__").select(
         _ntz(F.col("w.start")).alias("win_start"), "event_type", "n", "rk"
     )
@@ -1159,11 +1161,10 @@ def stream_sink_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Completion follows ``catalog.fill_once``: the ``_DONE`` marker is
     written only after the stream completes, a dir without it is a
     partial attempt and is wiped (table dropped) so the rerun's fresh
-    checkpoint promotes cleanly; a complete dir
-    from an EARLIER session re-registers the external table instead of
-    re-running the stream. H-check proves the file-sink transaction log
-    (_spark_metadata) + catalog round-trip delivered every purchase
-    exactly once."""
+    checkpoint promotes cleanly; a complete dir re-points the table at
+    itself (never trust a registration: it may name another cache root).
+    H-check proves the file-sink transaction log (_spark_metadata) +
+    catalog round-trip delivered every purchase exactly once."""
     name, out = totable_sink_cache(sf_dir)
 
     def fill() -> None:
@@ -1175,8 +1176,9 @@ def stream_sink_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         run_stream(ev, sink=lambda w: w.option("path", out).toTable(name))
 
-    if not fill_once(out, fill) and not spark.catalog.tableExists(name):
-        # complete data dir cached from an earlier session — re-attach
+    if not fill_once(out, fill):
+        # complete data dir cached earlier: (re-)attach the table to it
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
         spark.sql(
             f"CREATE TABLE {name} (event_id BIGINT, user_id BIGINT, "
             f"value DOUBLE) USING parquet LOCATION '{out}'"
@@ -1400,12 +1402,17 @@ def _state_ckpt(
     return ckpt
 
 
+# The dedup state checkpoint's own cut: its readers' oracles name batch
+# ids, and 3 gives the time-travel read an intermediate batch.
+_STATE_K = 3
+
+
 def _dedup_state_ckpt(
     spark: SparkSession, sf_dir: str, *, changelog: bool = False
 ) -> str:
     """A completed keyed-dropDuplicates checkpoint for the state-store
-    reader keys (see _state_ckpt), one per changelog mode. Two flavors
-    exist because the two read paths need OPPOSITE RocksDB layouts:
+    reader keys (see _state_ckpt) over a ``_STATE_K``-chunk feed, one per
+    changelog mode. Two flavors exist because the two read paths need OPPOSITE RocksDB layouts:
     the SNAPSHOT read (S7) wants changelog checkpointing OFF
     (snapshot-per-version — a changelog-only version forces the reader
     into the coordinator-RPC replay path, see scan_state_store), while
@@ -1416,12 +1423,12 @@ def _dedup_state_ckpt(
 
     def dedup() -> DataFrame:
         return (
-            _stream(spark, sf_dir, sentinels=False)
+            _stream(spark, sf_dir, n_chunks=_STATE_K, sentinels=False)
             .select("event_id")
             .dropDuplicates(["event_id"])
         )
 
-    flavor = "cf_" if changelog else ""
+    flavor = f"{'cf_' if changelog else ''}k{_STATE_K}_"
     return _state_ckpt(
         spark, sf_dir, f"sss_statestore_{flavor}", dedup, changelog=changelog
     )
@@ -1441,27 +1448,11 @@ def _statestore_read(spark: SparkSession, ckpt: str, project, **options) -> Data
         return project(rd.load()).localCheckpoint(eager=True)
 
 
-# The S7b/S7c oracles predict per-batch state attribution from the feeder's
-# ``i * n // K`` chunk boundaries, so K MUST be the feeder's own default —
-# interpolating feeder.DEFAULT_CHUNKS keeps a chunking change from silently
-# skewing the batch-id arithmetic (ADVICE r9): both sides re-derive together.
-_FEED_K = feeder.DEFAULT_CHUNKS
-_BATCH_ID_CASE = " ".join(
-    f"WHEN e.event_id < {i} * b.n // {_FEED_K} THEN {i - 1}"
-    for i in range(1, _FEED_K)
-)
-# Time-travel target: a strictly intermediate batch (neither first nor
-# last) — the sharpest off-by-one pin; requires K >= 3, which the sanity
-# check below enforces alongside the CASE shape.
-_TT_BATCH = _FEED_K // 2
-assert _FEED_K >= 3, "state time-travel oracle needs an intermediate batch"
-
-
 @query(
     "scan_state_changefeed",
     oracle=f"""
     SELECT e.event_id,
-           CAST(CASE {_BATCH_ID_CASE} ELSE {_FEED_K - 1} END AS BIGINT)
+           CAST(((e.event_id + 1) * {_STATE_K} - 1) // b.n AS BIGINT)
                AS batch_id,
            'update' AS change_type
     FROM events e, (SELECT count(*) AS n FROM events) b
@@ -1475,12 +1466,11 @@ def scan_state_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (batch_id, change_type, key) rows. For keyed dedup each event_id is
     put exactly once, in the micro-batch that delivered its chunk, so
     the whole feed is SQL-predictable: the feeder slices the events
-    table into thirds IN ROW ORDER and the table's row order is
-    event_id 0..n-1 (measured at all three SFs, pinned by
-    test_changefeed_batch_attribution), so batch_id =
-    the chunk index of ``event_id`` against the ``i*n//3`` boundaries
-    and change_type = 'update' everywhere (no eviction: dedup without
-    watermark never deletes). The H-check therefore pins per-batch
+    table into ``_STATE_K`` chunks IN ROW ORDER and the table's row order
+    is event_id 0..n-1 (pinned by test_changefeed_batch_attribution), so
+    batch_id = the chunk index of ``event_id`` against the ``i * n // K``
+    bounds, ``((event_id + 1) * K - 1) // n``, and change_type = 'update'
+    everywhere (no eviction: dedup without watermark never deletes). The H-check therefore pins per-batch
     attribution and change typing exactly — a replayed batch, dropped
     delta file, or misnumbered version shifts batch_id; a spurious
     eviction surfaces as 'delete' rows. The checkpoint is a SEPARATE
@@ -1511,7 +1501,7 @@ def scan_state_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT e.event_id
     FROM events e, (SELECT count(*) AS n FROM events) b
-    WHERE e.event_id < {_TT_BATCH + 1} * b.n // {_FEED_K}
+    WHERE e.event_id < 2 * b.n // {_STATE_K}
     """,
 )
 def scan_state_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1521,7 +1511,7 @@ def scan_state_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads the transitions; this reads a past point). The read targets
     batch 1 — a strictly intermediate version, neither first nor last —
     over S7's cached snapshot-flavor checkpoint, so the expected state
-    is exactly the first TWO chunks' ids: event_id < 2n//3 (same
+    is exactly the first TWO chunks' ids: event_id < 2n//K (same
     row-order/boundary reasoning as S7b, pinned by
     test_changefeed_batch_attribution). The H-check fails if version
     selection is off by one in either direction (batch 0 would halve
@@ -1535,7 +1525,7 @@ def scan_state_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         ckpt,
         lambda st: st.select(F.col("key.event_id").alias("event_id")),
-        batchId=str(_TT_BATCH),
+        batchId="1",
     )
 
 
@@ -1613,7 +1603,7 @@ def scan_state_join_side(spark: SparkSession, sf_dir: str) -> DataFrame:
            'default' AS state_store_name,
            CAST(4 AS BIGINT) AS num_partitions,
            CAST(0 AS BIGINT) AS min_batch_id,
-           CAST({_FEED_K - 1} AS BIGINT) AS max_batch_id
+           CAST({_STATE_K - 1} AS BIGINT) AS max_batch_id
     """,
 )
 def scan_state_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1625,10 +1615,8 @@ def scan_state_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the checkpoint, under what ids/store names, across which batch
     range, at what partition count. The H-check pins the full metadata
     row as literals: operator 0 is the dedupe operator writing store
-    "default" across batches 0..{{K-1}} (one micro-batch per feeder
-    chunk — the bound interpolates feeder.DEFAULT_CHUNKS, same
-    re-derivation discipline as the S7b/S7c oracles) over the 4 state
-    partitions the setup stream pins. A replayed/missing batch, a
+    "default" across batches 0..K-1 (K = ``_STATE_K``, the checkpoint's
+    pinned cut) over the 4 state partitions the setup stream pins. A replayed/missing batch, a
     partition-count drift, or an operator-name change all shift the
     row. ``operatorProperties`` (JSON state-variable inventory, NULL
     for non-TWS operators) is S7f's concern and stays unprojected.

@@ -9,6 +9,7 @@ import decimal
 import math
 import os
 import sys
+import tempfile
 
 import duckdb
 import numpy as np
@@ -31,6 +32,16 @@ def spark():
     s = get_spark(app_name="sss-spark-tests", master="local[*]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def tmp_cache(tmp_path, monkeypatch):
+    """``tmp_path`` as the temp root for the test: every feed, sink dir and
+    state checkpoint under ``catalog.cache_dir``, and the runner's temp
+    checkpoints, are built there and go with it, instead of joining the
+    content-keyed caches that later runs reuse."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    return tmp_path
 
 
 def _duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -9,14 +9,35 @@ from __future__ import annotations
 import pytest
 
 from sparkstreamingstateful_spark import registry
+from sparkstreamingstateful_spark.streaming import feeder
 
 from .conftest import SF_UNIT, compare
 
 QUERIES, ORACLES = registry.collect()
 
+# Every stream and state key also runs with its feeds cut into 1 and 7
+# micro-batches: a streaming result must not depend on where the feed is
+# cut (prefix consistency). Keys whose result names a batch pin their cut.
+_STREAM_KEYS = [
+    k for k in sorted(ORACLES) if k.startswith(("stream_", "stateful_", "scan_state_"))
+]
 
-@pytest.mark.parametrize("key", sorted(ORACLES))
-def test_oracle_match(spark, duck, key):
+
+@pytest.mark.parametrize(
+    "key, cut",
+    [pytest.param(key, None, id=key) for key in sorted(ORACLES)]
+    + [
+        pytest.param(key, cut, id=f"{key}-K{cut}")
+        for cut in (1, 7)
+        for key in _STREAM_KEYS
+    ],
+)
+def test_oracle_match(spark, duck, request, key, cut):
+    if cut is not None:
+        # a fresh cache root, so every feed, sink dir and checkpoint of
+        # the case is built at this cut rather than served from the cache
+        request.getfixturevalue("tmp_cache")
+        request.getfixturevalue("monkeypatch").setattr(feeder, "DEFAULT_CHUNKS", cut)
     df = QUERIES[key](spark, SF_UNIT)
     compare(df, duck, ORACLES[key], name=key)
 
@@ -372,8 +393,10 @@ def test_one_per_session_memo():
 def test_only_the_feeder_writes_feeds():
     """Every micro-batch feed is written by ``feeder.cached_feed``: no
     other .py file of the package or tests/ may set file mtimes (the
-    replay order of a feed). Checked on the AST, because docstrings
-    mention it."""
+    replay order of a feed). Only the feeder names its cut,
+    ``DEFAULT_CHUNKS``, and only ``catalog.read_stream_feed`` holds the
+    ``"maxFilesPerTrigger"`` literal that makes one file one micro-batch.
+    Checked on the AST, because docstrings mention them."""
     import ast
     import pathlib
 
@@ -393,6 +416,22 @@ def test_only_the_feeder_writes_feeds():
         if isinstance(node, ast.Attribute) and node.attr == "utime"
     ]
     assert not hits, f"feed files written outside feeder.py: {hits}"
+
+    hits = _package_names_outside({"DEFAULT_CHUNKS": {"streaming/feeder.py"}})
+    assert not hits, f"the cut named outside feeder.py: {hits}"
+    readers = [
+        f"{path.relative_to(repo)}:{getattr(top, 'name', top.lineno)}"
+        for path in paths
+        if path.parent.name != "tests"
+        for top in ast.parse(path.read_text()).body
+        if any(
+            isinstance(node, ast.Constant) and node.value == "maxFilesPerTrigger"
+            for node in ast.walk(top)
+        )
+    ]
+    assert readers == ["sparkstreamingstateful_spark/catalog.py:read_stream_feed"], (
+        f"feeds read outside catalog.read_stream_feed: {readers}"
+    )
 
 
 def test_one_progress_parser():

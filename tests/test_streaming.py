@@ -90,6 +90,7 @@ def test_foreachbatch_parquet_sink_and_recovery(spark, tmp_path):
     assert sink.select("event_id").distinct().count() == expected.count()
 
 
+@pytest.mark.usefixtures("tmp_cache")
 def test_events_ts_unit_duality(spark, tmp_path):
     """The events loader must read BOTH physical ts generations —
     timestamp[ns] (legacy, long-nanos + div-1000 conversion) and
@@ -131,6 +132,7 @@ def test_events_ts_unit_duality(spark, tmp_path):
     assert len(stream["us"]) == src.num_rows
 
 
+@pytest.mark.usefixtures("tmp_cache")
 def test_sessionize_survives_late_groups(spark, tmp_path):
     """Robustness: a NON-time-ordered feed (each chunk spans the full time
     range — the shape of out-of-order file arrival on a real lake)
@@ -185,6 +187,7 @@ def test_sessionize_survives_late_groups(spark, tmp_path):
     assert len(keys) == len(set(keys)), "duplicate (user, sess_start) emission"
 
 
+@pytest.mark.usefixtures("tmp_cache")
 def test_sessionize_kill_restart_unsorted_10x(spark, tmp_path):
     """ST11c — the interaction the r4 scale probe left untested:
     checkpoint recovery UNDER out-of-order delivery at 10× volume.
@@ -379,6 +382,7 @@ def test_windowed_agg_sentinel_after_restart(spark, tmp_path):
     )
 
 
+@pytest.mark.usefixtures("tmp_cache")
 def test_feeder_raw_int64_nanos_ts(tmp_path):
     """An events file whose ts column is RAW int64 nanos (which
     catalog.events_ts_unit explicitly classifies as 'ns') must produce
@@ -473,6 +477,33 @@ def test_progress_belongs_to_last_query(spark):
     QUERIES["stream_topk_per_window"](spark, SF_UNIT)
     sinks = {p["sink"]["description"] for p in runner.LAST_QUERY_PROGRESS}
     assert sinks and all("ForeachBatch" in d for d in sinks), sinks
+
+
+def test_topk_sink_exactly_once_under_replay(spark, duck, monkeypatch):
+    """stream_topk_per_window's foreachBatch sink survives a replayed
+    epoch: with every epoch's sink write run twice, as a crash between
+    that write and the commit log makes the restart do, the read-back
+    still equals the oracle (an appending sink doubles every row)."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from .conftest import compare
+
+    foreach_batch = DataStreamWriter.foreachBatch
+
+    def each_epoch_twice(writer, fn):
+        def replayed(batch_df, epoch):
+            fn(batch_df, epoch)
+            fn(batch_df, epoch)
+
+        return foreach_batch(writer, replayed)
+
+    monkeypatch.setattr(DataStreamWriter, "foreachBatch", each_epoch_twice)
+    compare(
+        QUERIES["stream_topk_per_window"](spark, SF_UNIT),
+        duck,
+        registry.collect()[1]["stream_topk_per_window"],
+        name="topk_replayed",
+    )
 
 
 def test_bench_record_keeps_only_its_own_stream(spark):
@@ -713,6 +744,7 @@ def _skew_stress(spark, tmp_path, make_updates, label):
     )
 
 
+@pytest.mark.usefixtures("tmp_cache")
 def test_stateful_skew_stress(spark, tmp_path):
     """Hot-key stress for the applyInPandasWithState path (VERDICT r5
     item 7): the hot key serializes one partition's pandas work, not the
@@ -1267,6 +1299,7 @@ def test_tws_processing_time_timer(spark, tmp_path):
     assert fired.groupBy("user_id").count().filter(F.col("count") > 1).count() == 0
 
 
+@pytest.mark.usefixtures("tmp_cache")
 def test_tws_skew_stress(spark, tmp_path):
     """Hot-key stress for the NATIVE transformWithStateInPandas path
     (newly executable in r6): TWS pays a state-server round-trip per KEY
@@ -1342,9 +1375,10 @@ def test_streaming_query_listener_lifecycle(spark):
 
 def test_changefeed_batch_attribution():
     """scan_state_changefeed's oracle predicts each key's batch_id from
-    the i*n//3 chunk boundaries applied to event_id DIRECTLY — valid only
-    while events.parquet's physical row order is event_id 0..n-1 (the
-    feeder slices rows positionally). Pin that assumption so a testdata
+    the i*n//K chunk boundaries of its pinned cut (queries._STATE_K)
+    applied to event_id DIRECTLY — valid only while events.parquet's
+    physical row order is event_id 0..n-1 (the feeder slices rows
+    positionally). Pin that assumption so a testdata
     regeneration that reorders rows fails here loudly instead of as an
     opaque driver hash mismatch."""
     import pyarrow.parquet as pq
