@@ -16,7 +16,8 @@ also land inside the tail (omitted when the two ran on different core
 counts).
 
 Protocol (BASELINE.md): local[$SPARK_GRAFT_CPUS], AQE on, one warm-up of the
-flagship, then one timed run per registered query (action = noop-format
+flagship and one untimed run of each WARM_FIRST key (its cached fixture
+is setup), then one timed run per registered query (action = noop-format
 write: full physical plan executes, no rows cross Py4J — see
 measure_key()).
 
@@ -26,8 +27,8 @@ flat record per key built from Spark's own signals by perfbench.parsers:
 shuffle, spill, Python bytes, driver gap) from the event log, whose jobs
 carry the key as their tag, and for a key that ran a stream its
 ``runner.*``/``state.*`` numbers and per-batch ``trigger_ms`` from
-StreamingQueryProgress. scripts/key_probe.py measures through the same
-functions.
+StreamingQueryProgress. scripts/key_probe.py and scripts/scale_probe.py
+measure through the same functions.
 """
 
 from __future__ import annotations
@@ -95,15 +96,44 @@ def open_session(app_name: str):
         shutil.rmtree(log_dir)
 
 
-def warm_up(spark, queries, sf_dir: str) -> None:
-    """Warm the JVM, codegen and parquet footer caches, then wipe the
-    completion-marker-cached sink dirs (catalog.fill_once). Those exist
-    for the correctness gate's repeated executions; a benchmark must
-    never time the cached no-op re-read in their place (the exact
-    weakness VERDICT r6 flagged on the jsonl sink), so every run —
-    including runs 2 and 3 of the median-of-3 protocol — times the real
-    sink. A wipe that fails stops the run."""
+# The keys whose first run at a dir builds a cached fixture (a
+# catalog.fill_once layout, feed or state checkpoint) that outlives the
+# run: the pyds feed, the fragmented lineitem layout, and the state
+# checkpoints the scan_state_* keys read. That build is setup, not the
+# key under test, so warm_up runs it before any clock starts. The state
+# checkpoints stay out of sink_cache_paths: wiping them would put their
+# build back into every timed run.
+WARM_FIRST = frozenset({
+    "scan_python_datasource",
+    "stream_python_datasource",
+    "maintenance_rebalance",
+    "scan_state_store",
+    "scan_state_changefeed",
+    "scan_state_time_travel",
+    "scan_state_join_side",
+    "scan_state_metadata",
+    "scan_state_tws_variables",
+    "scan_state_tws_map",
+    "scan_state_tws_timers",
+})
+
+
+def warm_up(spark, queries, sf_dir: str, keys) -> None:
+    """Warm the JVM, codegen and parquet footer caches with the flagship,
+    run each of ``keys`` that is in WARM_FIRST once, untimed, so its
+    fixture exists at ``sf_dir``, then wipe the completion-marker-cached
+    sink dirs (catalog.fill_once). Those exist for the correctness gate's
+    repeated executions; a benchmark must never time the cached no-op
+    re-read in their place (the exact weakness VERDICT r6 flagged on the
+    jsonl sink), so every run — including runs 2 and 3 of the
+    median-of-3 protocol — times the real sink. A wipe that fails stops
+    the run."""
     queries["agg_hash_q1"](spark, sf_dir).collect()
+    for key in sorted(WARM_FIRST.intersection(keys)):
+        try:
+            queries[key](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        except Exception as exc:  # its timed run records the error
+            print(f"# warm-up error {key}: {exc}", file=sys.stderr)
     wipe_sink_caches(sf_dir)
 
 
@@ -228,7 +258,7 @@ def main() -> None:
         # item 2).
         prev = previous_table()
         cpus = spark.sparkContext.defaultParallelism
-        warm_up(spark, queries, sf_dir)
+        warm_up(spark, queries, sf_dir, queries)
         runs: dict[str, tuple[float, list | None]] = {}
         for key in sorted(queries):
             try:

@@ -50,7 +50,7 @@ def main() -> None:
     out: dict[str, dict] = {}
     runs: dict[str, tuple[float, list | None]] = {}
     with bench.open_session("sss-key-probe") as (spark, log_dir):
-        bench.warm_up(spark, queries, args.sf)
+        bench.warm_up(spark, queries, args.sf, keys)
         for k in keys:
             # Marker-cached sinks must re-run the real sink every time.
             for i in range(args.n):

@@ -23,35 +23,43 @@ data of the same shape", not noise:
 * ``lineitem``: replica i shifts l_orderkey — the Q1 agg reads ×K rows
   into the same 6 groups.
 
-Run:  python scripts/scale_probe.py [K ...]   (default: 3 10)
-Writes SCALING.md at the repo root with wall-clock + output-row tables.
-Wall-clock comparisons are within-session only (this VM drifts ±35%
-between sessions, so ratios are only meaningful against a same-session 1x).
+Run:  python scripts/scale_probe.py [K ...] [--keys a,b]   (default K: 3 10)
+
+Every (key, K) runs through bench.py's timed-run protocol at its dir
+(``bench.warm_up`` builds the setup keys' cached fixtures untimed, the sink
+caches are wiped, ``bench.measure_key`` times the noop write, so the full
+plan runs). The output row count comes from a ``DataFrame.observe`` on
+that same execution. One record per (key, K), tagged ``<key>@<K>x``,
+goes to stdout and to ``scaling_layers.json`` at the repo root:
+``wall_s``, ``rows``, ``engine.*``, and ``runner.*``/``state.*`` for a
+key that ran a stream. Wall-clock comparisons are within-session only
+(this VM drifts ±35% between sessions, so ratios are only meaningful
+against a same-session 1x).
 """
 
 from __future__ import annotations
 
+import json
 import os
-import re
-import shutil
 import sys
-import time
 
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
-from sparkstreamingstateful_spark import registry
-from sparkstreamingstateful_spark.catalog import (
+import bench  # noqa: E402  (exports PYTHONPATH for the Python workers)
+from pyspark.sql import Observation  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
+from sparkstreamingstateful_spark import registry  # noqa: E402
+from sparkstreamingstateful_spark.catalog import (  # noqa: E402
     TABLE_NAMES,
     cache_dir,
     fill_once,
     table_path,
 )
-from sparkstreamingstateful_spark.session import get_spark
-from sparkstreamingstateful_spark.streaming.queries import sink_cache_paths
 
 SRC = "/root/testdata/sf0.1"
 # (key, table it scales with) — batch keys whose cost is corpus-driven;
@@ -253,18 +261,12 @@ PROBES = [
     # (explode + hash agg + term window, one term shuffle), never K^2.
     ("text_inverted_index", "documents"),
     # r15: REBALANCE rewrite — one AQE-managed shuffle + sized write
-    # over the xK fragmented layout: t ~K (every byte moves once). The
-    # fragmented-layout fixture is warmed untimed and the sink cache is
-    # cleared before timing (main loop), so the probe times the real
-    # rebalance shuffle+write, not a fixture build or a marker-cache
-    # no-op.
+    # over the xK fragmented layout: t ~K (every byte moves once).
     ("maintenance_rebalance", "lineitem"),
-    # r16: TWS state-variable reader — setup (the sessionize TWS stream,
-    # content-cached per dir) pays the xK feed once; the READ is
-    # state-sized: users x sessions xK rows out, partition-parallel
-    # scans of one state version. scan_state_metadata is NOT probed:
-    # its read is O(operators) metadata files by construction and a
-    # probe would time the dedup-ckpt setup stream instead.
+    # r16: TWS state-variable reader — the READ is state-sized: users x
+    # sessions xK rows out, partition-parallel scans of one state
+    # version. scan_state_metadata is NOT probed: its read is
+    # O(operators) metadata files by construction.
     ("scan_state_tws_variables", "events(stream)"),
     # r16 late trio: CUSUM changepoint + ACF ride the memoized hourly
     # spine (hours x types, K-INDEPENDENT) — past the shared xK spine
@@ -277,30 +279,13 @@ PROBES = [
     ("events_cusum_changepoint", "events"),
     ("events_acf", "events"),
     ("text_collocations_lift", "documents"),
-    # r17: TWS MapState + registered-timer readers — setup (the
-    # never-snapshot profile stream, content-cached per dir) pays the
-    # xK feed once on the FIRST key (map); the MAP read is state-sized
-    # (users x types xK entry rows + users xK '*' rows), the TIMER read
-    # O(live keys) = users xK — both partition-parallel scans of one
-    # state version, corpus-free. Probe order matters: map runs first
-    # and absorbs the one-time checkpoint build (the r16
-    # scan_state_tws_variables narrative); timers then times the read
-    # alone.
+    # r17: TWS MapState + registered-timer readers — the MAP read is
+    # state-sized (users x types xK entry rows + users xK '*' rows), the
+    # TIMER read O(live keys) = users xK — both partition-parallel scans
+    # of one state version, corpus-free.
     ("scan_state_tws_map", "events(stream)"),
     ("scan_state_tws_timers", "events(stream)"),
 ]
-
-# keys whose first run at a given dir includes a ONE-TIME source-layout
-# build (content-fingerprint caches) — run once untimed so the probe
-# measures the operator, not the fixture write (maintenance_rebalance's
-# fixture is the fragmented lineitem layout). Sink dirs are never part
-# of that warm-up: every timed run starts with sink_cache_paths wiped,
-# so a write key times its real write, never a _DONE-marker no-op.
-WARM_FIRST = {
-    "scan_python_datasource",
-    "stream_python_datasource",
-    "maintenance_rebalance",
-}
 
 
 def _suffix_tokens(col: pa.ChunkedArray, tag: str) -> pa.Array:
@@ -482,6 +467,9 @@ def build_rj(k: int) -> str:
     return out
 
 
+BUILDERS = {"": build, "mp": build_bm25, "rj": build_rj}
+
+
 def main() -> None:
     args = sys.argv[1:]
     only: set[str] | None = None
@@ -491,85 +479,44 @@ def main() -> None:
         del args[i : i + 2]
     ks = [int(a) for a in args] or [3, 10]
     queries, _ = registry.collect()
-    spark = get_spark(app_name="sss-scale-probe")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    dirs = {1: SRC}
-    variant_dirs = {"mp": {1: SRC}, "rj": {1: SRC}}
-    for k in ks:
-        print(f"building {k}x ...", flush=True)
-        dirs[k] = build(k)
-        variant_dirs["mp"][k] = build_bm25(k)
-        variant_dirs["rj"][k] = build_rj(k)
-
-    # warm-up
-    queries["agg_hash_q1"](spark, SRC).write.format("noop").mode("overwrite").save()
-
     probes = [
-        (k, tbl) for k, tbl in PROBES
-        if only is None or k.partition(":")[0] in only
+        key for key, _ in PROBES if only is None or key.partition(":")[0] in only
     ]
-    results: dict[str, dict[int, tuple[float, int]]] = {}
-    for key, table in probes:
-        base, _, variant = key.partition(":")
-        kdirs = variant_dirs.get(variant, dirs)
-        results[key] = {}
-        for k, d in kdirs.items():
-            if base in WARM_FIRST:
-                queries[base](spark, d).count()
-            for p in sink_cache_paths(d):
-                if os.path.exists(p):
-                    shutil.rmtree(p)
-            t0 = time.perf_counter()
-            df = queries[base](spark, d)
-            n = df.count()
-            results[key][k] = (round(time.perf_counter() - t0, 2), n)
-            print(f"{key} @{k}x: {results[key][k]}", flush=True)
 
-    lines = [
-        "# SCALING — measured K× scale-up of the corpus-driven operators",
-        "",
-        f"Generated by `python scripts/scale_probe.py {' '.join(map(str, ks))}`"
-        " on sf0.1-derived data (see the script docstring for how each",
-        "table is replicated structure-preservingly). `rows` is the operator's",
-        "output size; `t` is wall-clock seconds on local[32]. Within-session",
-        "numbers only — cross-session wall-clock drifts ±35% on this VM.",
-        "",
-        "| key | " + " | ".join(f"t @{k}× | rows @{k}×" for k in dirs) + " |",
-        "|---|" + "---|" * (2 * len(dirs)),
-    ]
-    for key, table in probes:
-        cells = []
-        for k in dirs:
-            t, n = results[key][k]
-            cells.append(f"{t:.2f}")
-            cells.append(f"{n:,}")
-        lines.append(f"| `{key}` ({table}) | " + " | ".join(cells) + " |")
-    lines += [
-        "",
-        "Reading the table: scan/agg/window families should be ≈flat to",
-        "K× (plan depth independent of volume); the text similarity family",
-        "must show BOTH t and output rows growing ≈K× (the replica",
-        "construction guarantees the true pair set scales exactly K×, so",
-        "super-linear growth would expose an all-pairs shape);",
-        "embed_near_dup emits its full SRP candidate set by design, so its",
-        "rows grow with bucket occupancy (≈n²/2^sig_bits per band for",
-        "decorrelated vectors) and its t must track candidates — the",
-        "signature width is the occupancy knob at real scale. See the",
-        "committed SCALING.md for the hand-annotated analysis of one run.",
-        "",
-    ]
-    # Write to SCALING_raw.md — NOT SCALING.md, which is the committed
-    # hand-annotated analysis (30x spot-check narrative etc.) that a raw
-    # regeneration would silently clobber.
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "SCALING_raw.md" if only is None else "SCALING_raw_partial.md",
-    )
-    with open(out, "w") as f:
-        f.write("\n".join(lines))
-    print(f"wrote {out}")
-    spark.stop()
+    # (tag, key) pairs per dir: 1x is SRC for every variant
+    by_dir: dict[str, list[tuple[str, str]]] = {}
+    for k in [1, *ks]:
+        for variant, builder in BUILDERS.items():
+            keys = [p for p in probes if p.partition(":")[2] == variant]
+            if keys:
+                d = SRC if k == 1 else builder(k)
+                by_dir.setdefault(d, []).extend(
+                    (f"{p}@{k}x", p.partition(":")[0]) for p in keys
+                )
+
+    runs: dict[str, tuple[float, list | None]] = {}
+    rows: dict[str, int] = {}
+    with bench.open_session("sss-scale-probe") as (spark, log_dir):
+        for d, tagged in by_dir.items():
+            bench.warm_up(spark, queries, d, [key for _, key in tagged])
+            for tag, key in tagged:
+                bench.wipe_sink_caches(d)
+                obs = Observation(tag)
+
+                def observed(s, sf, fn=queries[key], obs=obs):
+                    return fn(s, sf).observe(obs, F.count(F.lit(1)).alias("rows"))
+
+                runs[tag] = bench.measure_key(spark, tag, observed, d)
+                rows[tag] = obs.get["rows"]
+                print(f"# {tag}: {runs[tag][0]} s, {rows[tag]} rows",
+                      file=sys.stderr, flush=True)
+        spark.stop()
+        layers = bench.layer_records(bench.read_event_log(log_dir), runs)
+    records = {tag: {"rows": rows[tag], **layers[tag]} for tag in runs}
+    for tag, rec in records.items():
+        print(json.dumps({tag: rec}))
+    with open(os.path.join(_REPO, "scaling_layers.json"), "w") as f:
+        json.dump(records, f, indent=1, sort_keys=True)
 
 
 if __name__ == "__main__":

@@ -292,21 +292,6 @@ def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pyds_documents_layout(spark: SparkSession, sf_dir: str) -> str:
-    """documents laid out once as a 4-file parquet directory (content-
-    fingerprint cached like the other layouts) — the multi-split substrate
-    for both the batch and streaming custom Python data source keys."""
-    out = cache_dir("sss_pyds_documents", sf_dir, "documents")
-    fill_once(
-        out,
-        lambda: load_table(spark, sf_dir, "documents")
-        .repartition(4)
-        .write.mode("overwrite")
-        .parquet(out),
-    )
-    return out
-
-
 @query(
     "scan_python_datasource",
     oracle="""
@@ -324,12 +309,13 @@ def scan_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     column pruning (``text`` never leaves the Arrow read), and filter
     pushdown (``n_chars >= 200`` is accepted by ``pushFilters`` and
     evaluated inside the reader; Spark drops it from its own plan, so
-    this H-check is what proves the pushdown contract is sound). The
-    documents table is laid out once as a 4-file parquet directory so
-    planning genuinely fans out over multiple splits."""
+    this H-check is what proves the pushdown contract is sound). It reads
+    the feeder's documents feed (``feeder.chunked_table_dir``, one file
+    per chunk), so planning fans out over multiple splits."""
     from ..sources import pyds
+    from ..streaming.feeder import chunked_table_dir
 
-    out = pyds_documents_layout(spark, sf_dir)
+    out = chunked_table_dir(sf_dir, "documents")
     pyds.register(spark)
     back = (
         spark.read.format("sss_pyparquet")

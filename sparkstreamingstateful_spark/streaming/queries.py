@@ -419,10 +419,8 @@ def stateful_running_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "NoTimeout",
     )
     res = run_stream(updates, output_mode="update", state_partitions=_parts(sf_dir))
-    final = (
-        res.filter(F.col("user_id") >= 0)
-        .groupBy("user_id")
-        .agg(F.max(F.struct("n", "sum_value")).alias("s"))
+    final = res.groupBy("user_id").agg(
+        F.max(F.struct("n", "sum_value")).alias("s")
     )
     return final.select(
         "user_id",
@@ -464,14 +462,10 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "NoTimeout",
     )
     res = run_stream(updates, output_mode="update", state_partitions=_parts(sf_dir))
-    final = (
-        res.filter(F.col("user_id") >= 0)
-        .groupBy("user_id")
-        .agg(
-            F.max(
-                F.struct("last_us", "last_eid", "last_type", "last_value", "n_changes")
-            ).alias("s")
-        )
+    final = res.groupBy("user_id").agg(
+        F.max(
+            F.struct("last_us", "last_eid", "last_type", "last_value", "n_changes")
+        ).alias("s")
     )
     return final.filter(F.col("s.last_type") != "error").select(
         "user_id",
@@ -553,7 +547,7 @@ def stateful_dedup_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "NoTimeout",
     )
     res = run_stream(firsts, output_mode="append", state_partitions=_parts(sf_dir))
-    return res.filter(F.col("user_id") >= 0).select("event_id", "user_id", "day")
+    return res.select("event_id", "user_id", "day")
 
 
 @query(
@@ -996,10 +990,8 @@ def stateful_running_agg_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     res = run_stream(updates, output_mode="update", state_partitions=_parts(sf_dir))
-    final = (
-        res.filter(F.col("user_id") >= 0)
-        .groupBy("user_id")
-        .agg(F.max(F.struct("n", "sum_value")).alias("s"))
+    final = res.groupBy("user_id").agg(
+        F.max(F.struct("n", "sum_value")).alias("s")
     )
     return final.select(
         "user_id",
@@ -1020,20 +1012,20 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom STREAMING connector via the Spark 4 Python data source API
     (S6g): the documents corpus served as a micro-batch stream by
     ``sources/pyds.ParquetDirStreamDataSource`` — driver-side offset
-    management over the layout's (file, row-group) split list, one split
-    per micro-batch, executor-side Arrow reads — aggregated with a
-    complete-mode count/sum per language. availableNow cannot drain a
-    Python source whose ``latestOffset`` doubles as the rate limiter
-    (one batch, then victory — measured), so the runner polls the
-    committed end offset until the split cursor covers the layout
-    (``run_stream_drain``). The H-check proves offset-sliced delivery is
-    exactly-once and complete: any dropped, re-read, or half-read split
-    would shift the per-language counts."""
-    from ..operators.scans import pyds_documents_layout
+    management over the (file, row-group) split list of the feeder's
+    documents feed (``feeder.chunked_table_dir``: one file, one split per
+    chunk), one split per micro-batch, executor-side Arrow reads —
+    aggregated with a complete-mode count/sum per language. availableNow
+    cannot drain a Python source whose ``latestOffset`` doubles as the
+    rate limiter (one batch, then victory — measured), so the runner
+    polls the committed end offset until the split cursor covers the
+    feed (``run_stream_drain``). The H-check proves offset-sliced
+    delivery is exactly-once and complete: any dropped, re-read, or
+    half-read split would shift the per-language counts."""
     from ..sources import pyds
     from .runner import run_stream_drain
 
-    out = pyds_documents_layout(spark, sf_dir)
+    out = feeder.chunked_table_dir(sf_dir, "documents")
     pyds.register(spark)
     # the source's own split rule — the drain predicate and the reader's
     # planning must count the same list or the drain misfires

@@ -81,3 +81,81 @@ def test_layer_records_from_recorded_signals(tmp_path):
     assert tws["engine.jobs"] == 1
     assert tws["runner.batches"] == len(progress["stateful_sessionize_tws"])
     assert len(tws["trigger_ms"]) == tws["runner.batches"]
+
+
+class _AnyDF:
+    """Stands in for a key's DataFrame: every attribute and call chains,
+    so ``.collect()`` and ``.write.format(...).mode(...).save()`` are
+    no-ops."""
+
+    def __getattr__(self, name):
+        return self
+
+    def __call__(self, *args, **kwargs):
+        return self
+
+
+def test_warm_up_builds_setup_fixtures_before_the_wipe(monkeypatch):
+    # warm_up runs the flagship, then exactly the measured keys that
+    # build a cached fixture, then wipes the sink caches; a measured key
+    # outside WARM_FIRST and a setup key that is not measured never run
+    calls = []
+
+    def recorder(key):
+        def fn(spark, sf_dir):
+            calls.append((key, sf_dir))
+            return _AnyDF()
+
+        return fn
+
+    setup = sorted(bench.WARM_FIRST)
+    queries = {
+        k: recorder(k) for k in ["agg_hash_q1", "stream_window_tumbling", *setup]
+    }
+    monkeypatch.setattr(
+        bench, "wipe_sink_caches", lambda sf_dir: calls.append(("wipe", sf_dir))
+    )
+    measured = ["stream_window_tumbling", setup[-1], setup[0]]
+    bench.warm_up(None, queries, "sf", measured)
+    assert calls == [
+        ("agg_hash_q1", "sf"),
+        (setup[0], "sf"),
+        (setup[-1], "sf"),
+        ("wipe", "sf"),
+    ]
+
+
+def test_warm_first_names_registered_keys():
+    # a renamed key must not silently drop out of the setup set, and
+    # every state-store reader's checkpoint build is setup
+    from sparkstreamingstateful_spark import registry
+
+    keys = set(registry.collect()[0])
+    assert bench.WARM_FIRST <= keys
+    assert {k for k in keys if k.startswith("scan_state_")} <= bench.WARM_FIRST
+
+
+def test_probes_time_only_through_bench():
+    # the probe scripts open bench's session and time keys through
+    # bench.measure_key alone: no session, clock or timed write of their own
+    import ast
+
+    scripts = Path(__file__).resolve().parents[1] / "scripts"
+    for name in ("scale_probe.py", "key_probe.py"):
+        tree = ast.parse((scripts / name).read_text())
+        attrs = {n.attr for n in ast.walk(tree) if isinstance(n, ast.Attribute)}
+        names = attrs | {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        imported = {
+            alias.name
+            for node in ast.walk(tree)
+            if isinstance(node, (ast.Import, ast.ImportFrom))
+            for alias in node.names
+        }
+        literals = {
+            node.value for node in ast.walk(tree) if isinstance(node, ast.Constant)
+        }
+        assert not names & {"get_spark", "perf_counter"}, name
+        assert not attrs & {"builder", "getOrCreate"}, name
+        assert not imported & {"time", "timeit", "get_spark"}, name
+        assert "noop" not in literals, name
+        assert {"open_session", "warm_up", "measure_key"} <= attrs, name

@@ -192,18 +192,22 @@ def test_stream_source_replay_deterministic(spark, pq_dir):
 
 
 def test_stream_source_microbatch_count(spark):
-    """The registered key must genuinely consume the layout as multiple
-    micro-batches (one per split), not one availableNow gulp."""
-    from sparkstreamingstateful_spark.streaming import runner
+    """The registered key must genuinely consume the feed as multiple
+    micro-batches (one per split), not one availableNow gulp: the feeder's
+    documents feed has one split per chunk, so the stream runs at the
+    feeder's cut."""
+    from sparkstreamingstateful_spark.streaming import feeder, runner
 
     res = QUERIES["stream_python_datasource"](spark, SF_UNIT)
     assert res.count() > 0
     data_batches = [
         p for p in runner.LAST_QUERY_PROGRESS if p.get("numInputRows", 0) > 0
     ]
-    assert len(data_batches) >= 4, (
-        f"expected ≥4 data micro-batches (4-file layout), "
-        f"saw {len(data_batches)}"
+    feed = feeder.chunked_table_dir(SF_UNIT, "documents")
+    assert len(pyds.list_splits(feed)) == feeder.DEFAULT_CHUNKS > 1
+    assert len(data_batches) == feeder.DEFAULT_CHUNKS, (
+        f"expected {feeder.DEFAULT_CHUNKS} data micro-batches (one per "
+        f"chunk), saw {len(data_batches)}"
     )
 
 
