@@ -162,6 +162,107 @@ def test_connected_components_long_chain(spark):
     )
 
 
+def _sym(spark, pairs):
+    p = spark.createDataFrame(pairs, "a long, b long")
+    return p.selectExpr("a AS src", "b AS dst").union(
+        p.selectExpr("b AS src", "a AS dst")
+    )
+
+
+def test_connected_components_rounds(spark, monkeypatch):
+    # One eager job per round: each round is one lazily built plan
+    # (neighbor-min, pointer jump, closing neighbor-min) materialized by a
+    # single localCheckpoint, and the loop stops as soon as the closing
+    # neighbor-min changes no label. So the near-dup graph's shapes —
+    # disjoint pairs, a triangle, a 3-node path, a star centred on its min
+    # id — converge with ONE checkpoint; a star centred on a larger id
+    # needs a second round (its leaves see the min only after the jump).
+    from sparkstreamingstateful_spark.operators.llm_text import (
+        connected_components,
+    )
+
+    cls = type(spark.range(0))
+    real = cls.localCheckpoint
+    calls = []
+
+    def spy(self, *a, **k):
+        calls.append(1)
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    # shape -> (undirected edges, checkpoints, labels); every shape but
+    # the disjoint pairs is one component with min id 0
+    shapes = {
+        "pairs": ([(0, 1), (2, 3), (4, 5)], 1, {0: 0, 1: 0, 2: 2, 3: 2, 4: 4, 5: 4}),
+        "triangle": ([(0, 1), (1, 2), (0, 2)], 1, dict.fromkeys(range(3), 0)),
+        "path": ([(0, 1), (1, 2)], 1, dict.fromkeys(range(3), 0)),
+        "star_min": ([(0, i) for i in range(1, 6)], 1, dict.fromkeys(range(6), 0)),
+        "star_big": ([(5, i) for i in range(5)], 2, dict.fromkeys(range(6), 0)),
+    }
+    for name, (pairs, rounds, want) in shapes.items():
+        sym = _sym(spark, pairs)
+        calls.clear()
+        labels = connected_components(sym)
+        assert len(calls) == rounds, (name, len(calls))
+        got = {r.node: r.label for r in labels.collect()}
+        assert got == want, name
+
+
+def test_connected_components_no_count_jobs():
+    # the round's change count rides on the checkpoint as an observed
+    # metric; a driver-side count/collect would add an eager job per round
+    import ast
+    import inspect
+
+    from sparkstreamingstateful_spark.operators import llm_text
+
+    for fn in (llm_text.connected_components, llm_text._neighbor_min):
+        tree = ast.parse(inspect.getsource(fn))
+        eager = [
+            n.func.attr
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr in {"count", "collect", "first", "take", "head", "toPandas"}
+        ]
+        assert not eager, (fn.__name__, eager)
+
+
+def test_connected_components_degenerate_graphs(spark):
+    # Empty and self-loop-only edge lists must return, not block: the loop
+    # reads its change count from an Observation, whose get() waits for
+    # the metric forever if the checkpoint never delivers it.
+    import threading
+
+    from sparkstreamingstateful_spark.operators.llm_text import (
+        connected_components,
+    )
+
+    empty = spark.createDataFrame([], "src long, dst long")
+    cases = {
+        "empty": (empty, set()),
+        "empty_checkpointed": (empty.localCheckpoint(), set()),
+        "self_loops": (
+            spark.createDataFrame([(1, 1), (5, 5), (9, 9)], "src long, dst long"),
+            {(1, 1), (5, 5), (9, 9)},
+        ),
+    }
+    for name, (sym, want) in cases.items():
+        out = {}
+
+        def run():
+            labels = connected_components(sym)
+            out["columns"] = labels.columns
+            out["rows"] = {(r.node, r.label) for r in labels.collect()}
+
+        t = threading.Thread(target=run, daemon=True)
+        t.start()
+        t.join(120)
+        assert not t.is_alive(), f"{name}: connected_components blocked"
+        assert out["columns"] == ["node", "label"], name
+        assert out["rows"] == want, name
+
+
 def test_partition_pruning(spark):
     # the day-range predicate must prune at the DIRECTORY level: the scan
     # carries PartitionFilters on `day`, and the pruned read lists only
