@@ -293,37 +293,16 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the frontier relaxation is one join + min-agg per round over
     the (tiny) LSH pair graph — the textbook Pregel/BSP BFS with the
-    frontier as a DataFrame; lineage is truncated each round
-    (localCheckpoint, T7 discipline) so plans stay flat."""
+    frontier as a DataFrame, run as bounded_weighted_sp at weight 1
+    (lineage truncated every other round, so plans stay flat)."""
     # session-memoized symmetrized edge list (shared with
     # dedup_cluster_cc and graph_pagerank_lsh — see lsh_sym_edges)
     sym = lsh_sym_edges(spark, sf_dir)
     labels = connected_components(sym)
     comp = labels.select("node", F.col("label").alias("component"))
-    dist = (
-        comp.filter(F.col("node") == F.col("component"))
-        .select("node", F.lit(0).cast("bigint").alias("dist"))
-        .localCheckpoint()
-    )
-    from ..session import conf_guard
-
-    # iteration shuffles sized to the pair graph, not the session default
-    # (the pagerank_fixed_point rationale: k eager rounds x 32 mostly-
-    # empty tasks is pure scheduler overhead on a near-dup-sized graph)
-    with conf_guard(spark, {"spark.sql.shuffle.partitions": "2"}):
-        for i in range(_BFS_MAX_HOPS):
-            stepped = (
-                sym.join(dist, sym.src == dist.node)
-                .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
-                .unionByName(dist)
-                .groupBy("node")
-                .agg(F.min("dist").alias("dist"))
-            )
-            # truncate lineage every other round: k chained join+agg
-            # plans are fine for Catalyst two-deep, costly eight-deep
-            if i % 2 == 1 or i == _BFS_MAX_HOPS - 1:
-                stepped = stepped.localCheckpoint()
-            dist = stepped
+    keepers = comp.filter(F.col("node") == F.col("component")).select("node")
+    unit = sym.select("src", "dst", F.lit(1).cast("bigint").alias("w"))
+    dist = bounded_weighted_sp(spark, unit, keepers, _BFS_MAX_HOPS)
     return comp.join(dist, "node", "left").select(
         "node",
         "component",
@@ -423,6 +402,9 @@ def bounded_weighted_sp(
     dist = seeds.withColumn(
         "dist", F.lit(0).cast("bigint")
     ).localCheckpoint()
+    # iteration shuffles sized to the pair graph, not the session default
+    # (the pagerank_fixed_point rationale: k eager rounds x 32 mostly-
+    # empty tasks is pure scheduler overhead on a near-dup-sized graph)
     with conf_guard(spark, {"spark.sql.shuffle.partitions": "2"}):
         for i in range(hops):
             stepped = (
@@ -435,6 +417,8 @@ def bounded_weighted_sp(
                 .groupBy("node")
                 .agg(F.min("dist").alias("dist"))
             )
+            # truncate lineage every other round: k chained join+agg
+            # plans are fine for Catalyst two-deep, costly eight-deep
             if i % 2 == 1 or i == hops - 1:
                 stepped = stepped.localCheckpoint()
             dist = stepped

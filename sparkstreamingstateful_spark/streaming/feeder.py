@@ -22,8 +22,19 @@ Variants:
   evicts/times-out all remaining real state: K chunks run K data
   batches plus that flush. Queries must NOT filter sentinels inside the
   streaming plan — Catalyst pushes such filters below the
-  EventTimeWatermark node and the watermark never advances (measured);
-  filter the materialized result instead.
+  EventTimeWatermark node and the watermark never advances (measured).
+
+  Which results can hold the sentinel: the final watermark is the
+  sentinel's own time minus the delay, so it never passes the
+  sentinel's window, session or event-time timeout, and no append-mode
+  window, session or timeout ever emits it — those queries need no
+  filter. Operators that emit a row without waiting for its window do
+  carry it into a result: outer-join matches (its self-match),
+  first-seen dedup, timers at a fixed deadline the watermark passes,
+  and state reads of its key. Only those strip it, from the
+  materialized result, by the sign of an id column (``user_id < 0``,
+  or the join's ``purchase_id``/``click_id``); the ``"__sentinel__"``
+  event type is named here alone.
 * ``replay=(i, ...)`` re-appends chunks after the originals — duplicate
   delivery for dedup tests (at-least-once source simulation).
 * ``late_chunk=i`` holds chunk i back until the end — out-of-order arrival
@@ -34,7 +45,6 @@ Variants:
 
 from __future__ import annotations
 
-import datetime
 import os
 from collections.abc import Callable, Sequence
 
@@ -68,21 +78,14 @@ def events_num_rows(sf_dir: str) -> int:
 def events_max_us(sf_dir: str) -> int:
     """Max real event time of ``sf_dir`` as integer epoch µs (truncated).
 
-    The feeds' sentinels and the streaming queries' cutoffs and timer
-    deadlines all read this one value. Read via a single-column pyarrow
-    scan — never a Spark batch action inside a streaming query function
-    (an extra full scan of events per query otherwise)."""
+    The feeds' sentinels and the streaming queries' timer deadlines all
+    read this one value. Read via a single-column pyarrow scan — never a
+    Spark batch action inside a streaming query function (an extra full
+    scan of events per query otherwise)."""
     if sf_dir not in _max_ts_us:
         ts = pq.read_table(f"{sf_dir}/events.parquet", columns=["ts"]).column("ts")
         _max_ts_us[sf_dir] = _to_us(pa.compute.max(ts), ts.type)
     return _max_ts_us[sf_dir]
-
-
-def events_max_ts(sf_dir: str) -> datetime.datetime:
-    """``events_max_us`` as a naive UTC datetime."""
-    return datetime.datetime(1970, 1, 1) + datetime.timedelta(
-        microseconds=events_max_us(sf_dir)
-    )
 
 
 def _to_us(scalar, ts_type) -> int:

@@ -5,7 +5,9 @@ Each query executes a real Structured Streaming pipeline through
 key's own sink read back; see package docstring) and returns the
 materialized result. Sentinel rows (user_id < 0, far-future event time —
 see feeder.py) flow through the streaming plan to drive watermark
-progression and are filtered from the *materialized* result, never inside
+progression. No append-mode window or session ever emits one; the few
+operators that can carry it into a result (feeder.py names them) strip it
+from the *materialized* result by the sign of an id column, never inside
 the streaming plan (a plan-level filter gets pushed below the watermark
 node and stalls it — measured in M5).
 
@@ -117,7 +119,7 @@ def stream_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_v_raw"))
     )
     res = run_stream(agg, output_mode="append")
-    return res.filter(F.col("event_type") != "__sentinel__").select(
+    return res.select(
         _ntz(F.col("w.start")).alias("win_start"),
         "event_type",
         "n",
@@ -136,7 +138,9 @@ def stream_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour windows sliding every 15 min: each event lands in 4 windows.
-    Oracle: the 4 phase-shifted 15-min bucketings, unioned via cross join."""
+    Oracle: the 4 phase-shifted 15-min bucketings, unioned via cross join.
+    The sentinel's 4 windows all end after the final watermark, so none
+    is emitted (feeder.py)."""
     ev = _stream(spark, sf_dir)
     agg = (
         ev.withWatermark("ts", WATERMARK)
@@ -144,12 +148,7 @@ def stream_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_raw"))
     )
     res = run_stream(agg, output_mode="append")
-    # sentinel windows: isolated far-future event(s) → windows with n=1
-    # at event time beyond all real data; strip by time bound. The cutoff
-    # comes from the feeder (single-column pyarrow scan, cached) — not a
-    # Spark batch action, which would rescan events once per query run.
-    max_real = feeder.events_max_ts(sf_dir)
-    return res.filter(_ntz(F.col("w.start")) <= F.lit(max_real).cast("timestamp_ntz")).select(
+    return res.select(
         _ntz(F.col("w.start")).alias("win_start"), F.col("n_raw").alias("n")
     )
 
@@ -196,7 +195,7 @@ def stream_window_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_v_raw"))
     )
     res = run_stream(agg, output_mode="append")
-    return res.filter(F.col("user_id") >= 0).select(
+    return res.select(
         "user_id",
         _ntz(F.col("w.start")).alias("sess_start"),
         "n_events",
@@ -260,7 +259,7 @@ def stream_window_session_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_v_raw"))
     )
     res = run_stream(agg, output_mode="append")
-    return res.filter(F.col("user_id") >= 0).select(
+    return res.select(
         "user_id",
         _ntz(F.col("w.start")).alias("sess_start"),
         "n_events",
@@ -517,7 +516,7 @@ def stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     res = run_stream(sessions, output_mode="append", state_partitions=_parts(sf_dir))
-    return res.filter(F.col("user_id") >= 0).select(
+    return res.select(
         "user_id",
         _ntz(F.expr("timestamp_micros(sess_start_us)")).alias("sess_start"),
         "n_events",
@@ -575,9 +574,7 @@ def stream_window_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
     )
     res = run_stream(agg, output_mode="append")
-    return res.filter(F.col("event_type") != "__sentinel__").select(
-        _ntz(F.col("w.start")).alias("win_start"), "event_type", "n"
-    )
+    return res.select(_ntz(F.col("w.start")).alias("win_start"), "event_type", "n")
 
 
 @query(
@@ -772,9 +769,7 @@ def stream_window_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.window(F.window_time("w15"), "1 hour").alias("w"), "event_type"
     ).agg(F.sum("n15").alias("n"))
     res = run_stream(hourly, output_mode="append")
-    return res.filter(F.col("event_type") != "__sentinel__").select(
-        _ntz(F.col("w.start")).alias("win_start"), "event_type", "n"
-    )
+    return res.select(_ntz(F.col("w.start")).alias("win_start"), "event_type", "n")
 
 
 @query(
@@ -831,7 +826,7 @@ def stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     run_stream(agg, sink=lambda w: w.foreachBatch(rank_batch).start())
     res = spark.read.parquet(os.path.join(out_dir, "b*"))
-    return res.filter(F.col("event_type") != "__sentinel__").select(
+    return res.select(
         _ntz(F.col("w.start")).alias("win_start"), "event_type", "n", "rk"
     )
 
@@ -892,7 +887,7 @@ def stateful_sessionize_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = run_stream(
         _sessionize_tws_frame(spark, sf_dir), state_partitions=_parts(sf_dir)
     )
-    return res.filter(F.col("user_id") >= 0).select(
+    return res.select(
         "user_id",
         _ntz(F.expr("timestamp_micros(sess_start_us)")).alias("sess_start"),
         "n_events",
@@ -1257,11 +1252,11 @@ def stream_sink_foreach(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed — foreach is the per-row slow path and a production plan
     shapes around that. Window starts are formatted to strings JVM-side
     (one codegen'd date_format, no Python datetime/tz handling in the
-    writer). The sentinel drives watermark finalization (feeder.py) and
-    is filtered from the READ-BACK batch, never in-plan; the `_DONE`
-    completion contract matches the jsonl sink. H-check proves the
-    per-(epoch, partition) promotion delivered every finalized window
-    exactly once."""
+    writer). The sentinel drives watermark finalization (feeder.py);
+    its own window never closes, so the writer never sees it and the
+    read-back needs no filter. The `_DONE` completion contract matches
+    the jsonl sink. H-check proves the per-(epoch, partition) promotion
+    delivered every finalized window exactly once."""
     out = foreach_sink_path(sf_dir)
 
     def fill() -> None:
@@ -1286,7 +1281,7 @@ def stream_sink_foreach(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = spark.read.schema(
         "win_start string, event_type string, n long, sum_v_raw double"
     ).json(out)
-    return back.filter(F.col("event_type") != "__sentinel__").select(
+    return back.select(
         F.to_timestamp("win_start").cast("timestamp_ntz").alias("win_start"),
         "event_type",
         "n",
@@ -1315,15 +1310,8 @@ def scan_state_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     serves ``snapshotStartBatchId``/``readChangeFeed`` time-travel and
     per-side stream-join state (``joinSide``), not exercised here.
 
-    The cache is keyed by the session's state-store PROVIDER config as
-    well as content: state files are provider-physical (HDFS-backed
-    delta/snapshot vs RocksDB SST+changelog) and the reader loads with
-    the CURRENT session's provider, so a checkpoint written under one
-    provider is unreadable under the other
-    (CANNOT_LOAD_STATE_STORE, measured: a plain-session HDFS-backed
-    checkpoint read from a RocksDB-configured session). Under RocksDB
-    the setup stream additionally pins changelog checkpointing OFF for
-    ITS OWN checkpoint (conf captured at query start; restored after):
+    The setup stream pins changelog checkpointing OFF for ITS OWN
+    checkpoint (conf captured at query start; restored after):
     reading a changelog-only version makes the RocksDB reader replay
     the changelog, upload the reconstructed snapshot, and REPORT the
     upload to the StateStoreCoordinator RPC endpoint — which a
@@ -1361,25 +1349,21 @@ def _state_ckpt(
     """Build (or reuse) a completed state checkpoint for the state-store
     reader keys: the streaming frame ``frame()`` (built only on a cache
     miss) runs to completion into the noop sink against the fixed
-    checkpoint ``catalog.cache_dir(<cache><provider>, ...)``, under the
-    ``_DONE`` contract of ``catalog.fill_once``, with ``parts`` state
-    partitions.
+    checkpoint ``catalog.cache_dir(cache, ...)``, under the ``_DONE``
+    contract of ``catalog.fill_once``, with ``parts`` state partitions.
 
-    The path carries the session's state-store PROVIDER because state
-    files are provider-physical and the reader loads with the current
-    provider (see scan_state_store); ``configure`` runs FIRST so the tag
-    reflects the provider the setup stream will actually run with (a
-    plain driver session is configured lazily by load_table — if a key
-    runs before any table load, an unconfigured conf.get would mis-tag
-    the cache dir). ``changelog`` pins RocksDB changelog checkpointing
-    for this checkpoint's stream (captured at query start); None keeps
-    the session's setting."""
+    State files are provider-physical and the reader loads with the
+    session's provider (an HDFS-backed checkpoint read under RocksDB
+    fails CANNOT_LOAD_STATE_STORE, measured), so ``configure`` runs
+    FIRST: it sets the RocksDB provider that the setup stream runs with
+    and that the read uses on a cache hit in a plain driver session that
+    has loaded no table yet. ``changelog`` pins RocksDB changelog
+    checkpointing for this checkpoint's stream (captured at query
+    start); None keeps the session's setting."""
     from ..session import configure
 
     configure(spark)
-    prov = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    ptag = "rocksdb" if "RocksDB" in str(prov) else "hdfs"
-    ckpt = cache_dir(f"{cache}{ptag}", sf_dir, "events")
+    ckpt = cache_dir(cache, sf_dir, "events")
     conf = None if changelog is None else {_CHANGELOG: str(changelog).lower()}
     fill_once(
         ckpt,
@@ -1420,7 +1404,7 @@ def _dedup_state_ckpt(
             .dropDuplicates(["event_id"])
         )
 
-    flavor = f"{'cf_' if changelog else ''}k{_STATE_K}_"
+    flavor = f"{'cf_' if changelog else ''}k{_STATE_K}"
     return _state_ckpt(
         spark, sf_dir, f"sss_statestore_{flavor}", dedup, changelog=changelog
     )
@@ -1563,7 +1547,7 @@ def scan_state_join_side(spark: SparkSession, sf_dir: str) -> DataFrame:
         return purchases.join(clicks, F.col("p_user") == F.col("c_user"))
 
     # changelog=None: the join checkpoint keeps the session's setting
-    ckpt = _state_ckpt(spark, sf_dir, "sss_statejoin_", joined, changelog=None)
+    ckpt = _state_ckpt(spark, sf_dir, "sss_statejoin", joined, changelog=None)
     left = _statestore_read(
         spark,
         ckpt,
@@ -1639,7 +1623,7 @@ def _sessionize_tws_ckpt(spark: SparkSession, sf_dir: str) -> str:
     return _state_ckpt(
         spark,
         sf_dir,
-        "sss_statestore_tws_",
+        "sss_statestore_tws",
         lambda: _sessionize_tws_frame(spark, sf_dir),
         parts=_parts(sf_dir),
     )
@@ -1778,7 +1762,7 @@ def _profile_tws_ckpt(spark: SparkSession, sf_dir: str) -> str:
     return _state_ckpt(
         spark,
         sf_dir,
-        "sss_statestore_twsmap_",
+        "sss_statestore_twsmap",
         lambda: _profile_tws_frame(spark, sf_dir, _profile_never_ms(sf_dir)),
         parts=_parts(sf_dir),
     )
@@ -1881,7 +1865,7 @@ def scan_state_tws_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     most timers, leaving a degenerate set — but on the never-snapshot
     profile checkpoint (_profile_tws_ckpt) every user that appeared
     registers exactly ONE timer at the fixed deadline
-    (events_max_ts + 365 days) and none can expire, so the H-check pins
+    (events_max_us + 365 days) and none can expire, so the H-check pins
     the full timer set: one row per distinct user at exactly that
     epoch-ms. The oracle re-derives the deadline from the same
     max-ts + offset arithmetic (_profile_never_ms floors µs→ms the way
@@ -1938,7 +1922,7 @@ def stream_union_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_v_raw"))
     )
     res = run_stream(agg, output_mode="append")
-    return res.filter(F.col("event_type") != "__sentinel__").select(
+    return res.select(
         _ntz(F.col("w.start")).alias("win_start"),
         "event_type",
         "n",

@@ -434,6 +434,25 @@ def test_only_the_feeder_writes_feeds():
     )
 
 
+def test_only_the_feeder_names_the_sentinel():
+    """The sentinel's ``"__sentinel__"`` event type is spelled in
+    ``streaming/feeder.py`` alone: a query that can emit the sentinel
+    strips it by the sign of an id column, and no append-mode window or
+    session can emit it (see the feeder docstring)."""
+    import pathlib
+
+    import sparkstreamingstateful_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    hits = [
+        str(path.relative_to(root))
+        for path in sorted(root.rglob("*.py"))
+        if path != root / "streaming" / "feeder.py"
+        and "__sentinel__" in path.read_text()
+    ]
+    assert not hits, f"sentinel named outside feeder.py: {hits}"
+
+
 def test_one_progress_parser():
     """StreamingQueryProgress is parsed in one place,
     ``perfbench.parsers.summarize_progress``: no .py file of bench.py,

@@ -461,12 +461,14 @@ def test_bfs_distance_chain_beyond_cap(spark):
     """graph_bfs_distance semantics pinned where the real corpus can't
     reach: a 12-node chain has keeper 0 (component min) and hop
     distances 0..11, so nodes past the 8-hop cap must surface the
-    sentinel 9 — exact distance below the cap, capped marker beyond."""
+    sentinel 9 — exact distance below the cap, capped marker beyond.
+    The relaxation is graph_bfs_distance's own: bounded_weighted_sp at
+    weight 1 from the component keepers."""
     from sparkstreamingstateful_spark.operators.graphs import (
         _BFS_MAX_HOPS,
+        bounded_weighted_sp,
         connected_components,
     )
-    from sparkstreamingstateful_spark.operators import graphs as G
     from pyspark.sql import functions as F
 
     chain = [(i, i + 1) for i in range(11)]
@@ -476,17 +478,9 @@ def test_bfs_distance_chain_beyond_cap(spark):
     ).select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
     labels = connected_components(sym)
     comp = labels.select("node", F.col("label").alias("component"))
-    dist = comp.filter(F.col("node") == F.col("component")).select(
-        "node", F.lit(0).cast("bigint").alias("dist")
-    )
-    for i in range(_BFS_MAX_HOPS):
-        dist = (
-            sym.join(dist, sym.src == dist.node)
-            .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
-            .unionByName(dist)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-        )
+    keepers = comp.filter(F.col("node") == F.col("component")).select("node")
+    unit = sym.select("src", "dst", F.lit(1).cast("bigint").alias("w"))
+    dist = bounded_weighted_sp(spark, unit, keepers, _BFS_MAX_HOPS)
     got = {
         r.node: r.dist_hops
         for r in comp.join(dist, "node", "left")
